@@ -13,21 +13,8 @@ import graft.core.Tables
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a 300+-query suite generates thousands of
-      // codegen units per pass, so by the time pass 2 of a query runs its
-      // compiled classes are long evicted and EVERY query re-pays Janino
-      // compilation in every pass. Scale-independent (any long-lived app
-      // running many distinct operators wants this); it caches compiled
-      // code, never results — every pass still computes from parquet.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.session(s"local[$cpus]", cpus)
     // untimed warmup: JIT + codegen + parquet-footer caches, so the first
     // measured query isn't charged for JVM startup
     try {

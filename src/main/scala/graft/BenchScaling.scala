@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-exponent audit: times the most expensive gates at successive
   * scale decades and reports the measured exponent
   * `ln(t_hi/t_lo) / ln(rows_hi/rows_lo)` against each query's DOCUMENTED
@@ -173,14 +171,8 @@ object BenchScaling {
 
   def main(args: Array[String]): Unit = {
     val sf1Dir = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.session(s"local[$cpus]", cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warmup
 
     val dirs = Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1", sf1Dir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.api.GraftEngine
 
 /** Command-line entry point mirroring the reference CLI's verbs
@@ -25,21 +24,8 @@ import graft.api.GraftEngine
 object Cli {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) { System.err.println("usage: see Cli scaladoc"); sys.exit(2) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a long-lived engine session runs many
-      // distinct operators (index + search verbs + maintenance), whose
-      // generated classes thrash a 100-entry compiled-class cache; size it
-      // to the operator count (same sizing as the harness mains). Caches
-      // compiled CODE only, never data or results.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_MASTER", "local[4]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     def engine(store: String) = GraftEngine(spark, store)
     def requireArgs(n: Int, usage: String): Unit =

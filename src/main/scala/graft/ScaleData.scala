@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes a ~10× "sf1" copy of the driver's sf0.1 testdata into a
@@ -30,13 +30,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("local[8]", 8)
 
     def replicate(t: String, keyCols: Seq[String]): DataFrame = {
       val base = spark.read.parquet(s"$src/$t.parquet")

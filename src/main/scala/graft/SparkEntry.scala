@@ -13,9 +13,36 @@ import graft.core.Tables
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** The smallest testdata scale, used for smoke checks and plan audits. */
+  val SmokeSfDir = "/root/testdata/sf0.001"
+
+  /** Flagship query on [[SmokeSfDir]]; the smoke check wants rows > 0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q1_agg")(spark, "/root/testdata/sf0.001")
+    queries("q1_agg")(spark, SmokeSfDir)
+
+  /** The one session builder every graft main and spec uses. `cores` sets
+    * the shuffle partition count; the master URL is the caller's (each
+    * main keeps its own env var and default). The codegen cache is raised
+    * from its default 100 entries because a long-lived session running
+    * hundreds of distinct operators (the gate suite, or an engine serving
+    * index + search + maintenance verbs) would otherwise evict and
+    * re-compile its generated classes on every pass; it caches code, never
+    * data or results. [[org.apache.spark.sql.graftx.GraftExtensions]] only
+    * registers SQL functions — it adds no optimizer rule, so plans are the
+    * same with or without it.
+    */
+  def session(master: String, cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, (SparkSession, String) => DataFrame](
     // §2.1/§2.4 baseline: partial-agg groupBy (map-side combine, single shuffle).

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,8 @@ object Verify {
     // optional third arg: comma-separated query-name prefixes to run a
     // subset (local iteration only; the driver always passes two args)
     val only: Option[Array[String]] = args.lift(2).map(_.split(','))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: the 300+-query sweep thrashes the 100-entry default
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = SparkEntry.session(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     // Zero-cancellation scan (r10 q176 flake class): every gate output is
     // re-read and swept for -0.0 cells (hard violation — the driver's hash

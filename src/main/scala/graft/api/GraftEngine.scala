@@ -330,10 +330,6 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     IndexStore.clearState(storeDir)
   }
 
-  /** Orphan + phantom maintenance pass (reference: qdrant.py:1937-2381).
-    * Uses the SAME well-formedness rule as the index pass, so a
-    * freshly-written store is a fixed point (cleanup removes 0).
-    */
   /** Interval-gated maintenance (the reference's cleanup timer policy,
     * watcher/handler.py — periodic, not per-event): runs [[cleanup]] only
     * if the persisted last-run stamp is older than `intervalHours`.
@@ -395,6 +391,10 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     }
   }
 
+  /** Orphan + phantom maintenance pass (reference: qdrant.py:1937-2381).
+    * Uses the SAME well-formedness rule as the index pass, so a
+    * freshly-written store is a fixed point (cleanup removes 0).
+    */
   def cleanup(): Long = {
     searchCache.clear()
     val all = chunks.cache()

@@ -2,7 +2,7 @@ package graft.core
 
 /** User-facing indexing configuration (reference: config/models.py:14-118
   * `IndexerConfig` — include/exclude patterns, file-size cap, embedding
-  * batch budgets, watch debounce). One immutable value threaded through
+  * batch budgets). One immutable value threaded through
   * scan → pipeline → watch instead of hardcoded constants, so a caller can
   * tune the engine per-project exactly like the reference's settings file.
   */
@@ -16,9 +16,7 @@ case class GraftConfig(
     /** Per-request token budget for remote embedders (voyage.py:183-186). */
     embedTokenBudget: Long = 30000L,
     /** Max texts per embedder request (embeddings/base.py batching cap). */
-    embedMaxBatchItems: Int = 128,
-    /** Watch debounce / micro-batch trigger seconds (watcher/debounce.py). */
-    debounceSeconds: Double = 2.0)
+    embedMaxBatchItems: Int = 128)
 
 object GraftConfig {
 

@@ -43,16 +43,4 @@ object Diff {
     */
   def orphanEdges(edges: DataFrame, nodes: DataFrame, edgeCol: String, nodeCol: String): DataFrame =
     edges.join(nodes, edges(edgeCol) === nodes(nodeCol), "left_anti")
-
-  /** Edges with both endpoints present (the inverse filter the reference
-    * applies before storing relations, indexer.py:496-520): semi-join on both
-    * endpoint sets.
-    */
-  def wellFormedEdges(
-      edges: DataFrame,
-      srcNodes: DataFrame, srcEdgeCol: String, srcNodeCol: String,
-      dstNodes: DataFrame, dstEdgeCol: String, dstNodeCol: String): DataFrame =
-    edges
-      .join(srcNodes, edges(srcEdgeCol) === srcNodes(srcNodeCol), "left_semi")
-      .join(dstNodes, edges(dstEdgeCol) === dstNodes(dstNodeCol), "left_semi")
 }

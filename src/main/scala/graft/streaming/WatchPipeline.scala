@@ -107,18 +107,6 @@ object WatchPipeline {
     start(events, storeDir, embedder, debounceMs, checkpointDir)
   }
 
-  /** Config-driven variant: debounce (micro-batch quiet period) and the
-    * scan surface both come from [[graft.core.GraftConfig]].
-    */
-  def initialIndexThenWatch(spark: SparkSession, projectDir: String,
-                            events: org.apache.spark.sql.Dataset[FileEvent],
-                            storeDir: String, checkpointDir: String,
-                            embedder: Embedder,
-                            config: graft.core.GraftConfig): StreamingQuery = {
-    IndexPipeline.index(spark, projectDir, storeDir, embedder, config)
-    start(events, storeDir, embedder, (config.debounceSeconds * 1000).toLong, checkpointDir, config)
-  }
-
   /** Wire a streaming Dataset[FileEvent] into the store. The trigger
     * interval IS the debounce quiet period.
     */

@@ -1,31 +1,15 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.PythonParser
 import graft.search.Bm25
 
-/** Extension points + persisted-model paths. Uses its own session because
-  * SQL-function injection happens at session build time.
+/** Extension points + persisted-model paths. The SQL functions come from
+  * [[org.apache.spark.sql.graftx.GraftExtensions]], which the shared
+  * session builder installs.
   */
-class ExtensionsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    // getOrCreate() would hand back another suite's session (no
-    // extensions); clearing active+default forces a fresh session on the
-    // shared context with the extensions applied
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("ExtensionsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
-      .getOrCreate()
-  }
+class ExtensionsSpec extends SparkSpec {
 
   test("injected SQL functions: cosine_similarity and sorted_intersect_size") {
     val cos = spark.sql(

@@ -4,19 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. One session per suite; small
-  * shuffle-partition count so tiny-data tests don't schedule 200 tasks.
+/** Shared local SparkSession for specs, from the same builder as every
+  * main. Small shuffle-partition count so tiny-data tests don't schedule
+  * 200 tasks.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
+  lazy val spark: SparkSession = {
+    // managed tables (Bucketing.writeBucketed) go to a per-JVM temp
+    // warehouse; SparkConf reads spark.* system properties at build time
+    sys.props.getOrElseUpdate("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+    SparkEntry.session("local[4]", 4)
+  }
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM; don't stop it here.

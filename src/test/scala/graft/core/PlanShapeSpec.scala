@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.{PlanDump, SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, Profile => PlanDump}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, RDDScanExec, SerializeFromObjectExec, SortExec, SparkPlan, TakeOrderedAndProjectExec, UnionExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
