@@ -296,7 +296,7 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
       0, 0, content, s"$name $name $content", graft.core.Ids.sha256Hex(content),
       "", "", hasImplementation = false)
     val df = embedder.embed(Seq(chunk).toDS().toDF(), "content")
-      .withColumn("pointId", expr("cast(conv(substring(sha2(chunkId, 256), 1, 15), 16, 10) as bigint)"))
+      .withColumn("pointId", graft.core.Ids.pointId(col("chunkId")))
     // partition-selective upsert (guide §6): a manual memory is ALWAYS a
     // metadata chunk, so only the chunkType=metadata partition changes —
     // read it pruned, rewrite it alone; implementation/relation partition

@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{conv, sha2, substring}
 
 /** Deterministic hashing/IDs (reference: storage/qdrant.py:1423-1430 —
   * `int(sha256(chunk_id)[:16], 16)`; we take 15 hex digits = 60 bits so the
@@ -51,6 +53,10 @@ object Ids {
   /** 60-bit positive long from the first 15 hex chars of sha256. */
   def pointId(chunkId: String): Long =
     top60(sha256Local.get().digest(chunkId.getBytes(StandardCharsets.UTF_8)))
+
+  /** [[pointId]] as a column expression — the same 60 bits, computed in SQL. */
+  def pointId(chunkId: Column): Column =
+    conv(substring(sha2(chunkId, 256), 1, 15), 16, 10).cast("bigint")
 
   /** 31-bit hash used by the deterministic embedder and dedup family —
     * must stay formula-identical to the SQL side

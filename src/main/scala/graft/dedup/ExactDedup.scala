@@ -14,8 +14,10 @@ import graft.search.Bm25
   *    reordered/repeated-word dups (bag-of-words duplicates).
   *
   * Scale shape: one groupBy per fingerprint — a single shuffle each, with
-  * map-side partial aggregation. Dedup-keep-first is `row_number() over
-  * (partition by hash order by id) = 1`, same single shuffle.
+  * map-side partial aggregation. Keep-first elects with the same shape,
+  * `groupBy(hash).agg(min(id))` plus a semi-join back ([[firstIds]]) — NOT
+  * a ranking window over the hash, which would put every copy of a hot
+  * boilerplate document in one task with no partial aggregation.
   */
 object ExactDedup {
 
@@ -38,10 +40,18 @@ object ExactDedup {
         countDistinct(col("h_exact")).as("n_exact"),
         countDistinct(col("h_wordset")).as("n_wordset"))
 
-  /** Keep the first row (lowest `idCol`) per exact content hash. */
-  def dedupKeepFirst(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(contentHash(col(textCol))).orderBy(col(idCol).asc)
-    docs.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-  }
+  /** The keep-first election: one `idCol` row per exact content hash,
+    * the lowest id among that hash's documents.
+    */
+  def firstIds(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.groupBy(contentHash(col(textCol)).as("_h")).agg(min(col(idCol)).as(idCol))
+      .select(col(idCol))
+
+  /** Keep the first row (lowest `idCol`) per exact content hash: a
+    * left-semi join on the [[firstIds]] election. Requires `idCol` to be
+    * unique and non-null — a duplicated elected id keeps every row that
+    * carries it, and a hash whose ids are all null keeps none.
+    */
+  def dedupKeepFirst(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.join(firstIds(docs, idCol, textCol), Seq(idCol), "left_semi")
 }

@@ -226,17 +226,6 @@ case class RemoteEmbedder(
     callWithRetry(Seq(EmbedBatching.truncateToTokens(text, maxTextTokens))).head
 }
 
-object RemoteEmbedder {
-  /** Build with the request budgets from [[graft.core.GraftConfig]] — the
-    * consumer of `embedTokenBudget` / `embedMaxBatchItems`.
-    */
-  def fromConfig(dim: Int, transport: Seq[String] => Seq[Seq[Double]],
-                 config: graft.core.GraftConfig): RemoteEmbedder =
-    RemoteEmbedder(dim, transport,
-      tokenBudget = config.embedTokenBudget,
-      maxBatchItems = config.embedMaxBatchItems)
-}
-
 /** Deterministic hash embedder (the engine-native analog of the reference
   * test fixture DummyEmbedder, tests/conftest.py:241-270 — but seeded by a
   * salted md5 instead of Python's salted `hash()`, so values are stable

@@ -147,6 +147,8 @@ object IndexPipeline {
       .select(col("relPath"), col("hash").as("prevHash"),
         col("size").as("prevSize"), col("mtime").as("prevMtime"))
     val joined = curMeta.join(prev, Seq("relPath"), "full_outer")
+    // an incremental pass probes this join before the merge re-reads it
+    if (incremental) joined.cache()
     val removed = joined.filter(col("size").isNull).select(col("relPath"))
     val unchangedState = joined
       .filter(col("size").isNotNull && col("prevHash").isNotNull &&
@@ -180,19 +182,37 @@ object IndexPipeline {
     // re-parsed; its state row still records the new mtime
     val toParse: Dataset[FileRow] = hashed.filter(h => !h.prevHash.contains(h.hash)).map(_.row)
 
+    val newState = unchangedState.unionByName(
+      hashed.map(h => FileState(h.row.relPath, h.hash, h.row.size, h.row.mtime)).toDF())
+    val replaced = toParse.map(_.relPath).toDF("relPath").union(removed)
+
+    // no-op early exit (reference `should_process=False`, SURVEY.md:608):
+    // an incremental pass with nothing to replace (no file removed, no hash
+    // changed) leaves the chunk store as it is — a written store is a
+    // cleanup fixed point, so the merge would rewrite the same rows — and
+    // rewrites file_state only if some candidate's size or mtime drifted
+    if (incremental) {
+      val probe = replaced.agg(count(lit(1))).crossJoin(candidates.agg(count(lit(1)))).head()
+      if (probe.getLong(0) == 0L) {
+        if (probe.getLong(1) > 0L) timed("state_write")(IndexStore.writeState(newState, storeDir))
+        hashed.unpersist(); joined.unpersist()
+        val store = IndexStore.readChunks(spark, storeDir)
+          .agg(count(lit(1)), count(when(col("chunkType") === "relation", 1))).head()
+        return IndexingResult("incremental", filesScanned, 0L, 0L, store.getLong(1), 0L,
+          store.getLong(0), Seq.empty)
+      }
+    }
+
     // --- parse + merge ---------------------------------------------------
     val results = SourceScan.parseAll(toParse).cache()
-    val replaced = toParse.map(_.relPath).toDF("relPath").union(removed)
 
     // filesParsed comes out of applyChanges' single parse-metadata
     // aggregate (one job materializes content read + hash + parse AND
     // the entity/error counts — was a separate count() barrier here)
     val res = applyChanges(spark, storeDir, results, replaced, incremental, embedder)
 
-    val newState = unchangedState.unionByName(
-      hashed.map(h => FileState(h.row.relPath, h.hash, h.row.size, h.row.mtime)).toDF())
     timed("state_write")(IndexStore.writeState(newState, storeDir))
-    hashed.unpersist(); results.unpersist()
+    hashed.unpersist(); results.unpersist(); joined.unpersist()
     res.copy(mode = if (incremental) "incremental" else "full",
       filesScanned = filesScanned)
   }
@@ -297,17 +317,16 @@ object IndexPipeline {
       .withColumn("dense", col("dense_ex")).drop("dense_ex")
 
     val embedded = embedder.embed(toEmbed, "content")
-      .withColumn("pointId", expr("cast(conv(substring(sha2(chunkId, 256), 1, 15), 16, 10) as bigint)"))
-    val reused = reusable
-      .withColumn("pointId", expr("cast(conv(substring(sha2(chunkId, 256), 1, 15), 16, 10) as bigint)"))
 
     // persist: the embed DAG must run ONCE — the stat counts and the store
     // write would otherwise each re-embed every new chunk (4x the work; with
     // a remote embedder, 4x the HTTP spend)
     val finalNew = embedded.withColumn("_fromEmbedder", lit(true))
-      .unionByName(reused.select(embedded.columns.toIndexedSeq.map(col): _*).withColumn("_fromEmbedder", lit(false)))
+      .unionByName(reusable.select(embedded.columns.toIndexedSeq.map(col): _*).withColumn("_fromEmbedder", lit(false)))
+      .withColumn("pointId", Ids.pointId(col("chunkId")))
       .persist()
-    val all = carriedClean.select(embedded.columns.toIndexedSeq.map(col): _*)
+    val storeCols = finalNew.columns.toIndexedSeq.filterNot(_ == "_fromEmbedder").map(col)
+    val all = carriedClean.select(storeCols: _*)
       .unionByName(finalNew.drop("_fromEmbedder"))
       .dropDuplicates("chunkId")
       .persist()

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.dedup.NgramNovelty
+import graft.dedup.{ExactDedup, NgramNovelty}
 import graft.functions.TextOps
 
 /** TRAINING-DATA CURATION FUNNEL — the standard filter chain a corpus
@@ -65,9 +65,8 @@ object CurationFunnel {
       .localCheckpoint(false)
     // keep-first election among stage-2 survivors only (same semantics as
     // filtering first): groupBy(hash).min — partial-agged, no window
-    val firsts = base.filter(col("_ok2"))
-      .groupBy(md5(col("text")).as("_h")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id")).withColumn("_elected", lit(true))
+    val firsts = ExactDedup.firstIds(base.filter(col("_ok2")), "doc_id", "text")
+      .withColumn("_elected", lit(true))
     val tagged = base.join(firsts, Seq("doc_id"), "left")
       .withColumn("_ok3", col("_ok2") && coalesce(col("_elected"), lit(false)))
       .localCheckpoint(false) // lazy: one corpus evaluation, cached at first use inside the single count action (r12)

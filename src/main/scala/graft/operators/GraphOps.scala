@@ -9,61 +9,27 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Multi-source BFS: (node, depth) for every node within `maxDepth`
-    * directed hops of a seed, depth = hop count from the NEAREST seed.
-    *
-    * Shape: iterative frontier expansion where each level is one semi-join
-    * (edges × frontier) + one anti-join (drop already-visited) — the
-    * frontier never leaves the cluster, unlike a collect-and-isin BFS, so
-    * a hub node with millions of neighbors costs a shuffle, not a driver
-    * OOM. `localCheckpoint` per level cuts the growing lineage (the
-    * DupClusters pointer-jumping pattern); the per-level `isEmpty` is the
-    * convergence probe. For an undirected walk, pass `edges` unioned with
-    * its own reversal.
-    */
   /** Fixed-iteration PageRank over a (src, dst) edge set:
     * `rank(v) = (1-d) + d * Σ_{u→v} rank(u)/outdeg(u)` (dangling mass
     * dropped — nodes with no out-edges contribute nothing, matching the
-    * classic formulation the oracle replays).
-    *
-    * Shape: the edge set is joined ONCE with out-degrees and checkpointed —
-    * every iteration then costs exactly one equi-join (ranks × edges on
-    * src, both hash-partitioned on the join key) and one partial-agg
-    * groupBy(dst). At cluster scale the edge table dominates; pre-bucketing
-    * it by src makes the per-iteration join shuffle-free on the big side,
-    * and ranks (one row per node) is the small side. `localCheckpoint`
-    * per iteration truncates the otherwise exponentially deep lineage.
+    * classic formulation the oracle replays). This is [[iterate]] with
+    * teleport mass 1.0 on every node; `x * 1.0 == x`, so ranks are
+    * bit-identical to the unweighted recurrence.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int, damping: Double = 0.85): DataFrame = {
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst")).distinct()
-    val deg = e.groupBy(col("_src")).agg(count(lit(1)).as("_deg"))
-    // lazy checkpoints (r12): the plan is truncated identically, but the
-    // fixed-iteration loop no longer pays a driver job barrier per round —
-    // everything materializes in one cascaded action at the sink
-    val ed = e.join(deg, "_src").localCheckpoint(false)
     val nodes = e.select(col("_src").as("node"))
-      .unionByName(e.select(col("_dst").as("node"))).distinct().localCheckpoint(false)
-    var ranks = nodes.withColumn("rank", lit(1.0))
-    for (_ <- 1 to iterations) {
-      val contribs = ed
-        .join(ranks.withColumnRenamed("node", "_src"), Seq("_src"))
-        .groupBy(col("_dst").as("node"))
-        .agg(sum(col("rank") / col("_deg")).as("_in"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("_in"), lit(0.0))).as("rank"))
-        .localCheckpoint(false)
-    }
-    ranks
+      .unionByName(e.select(col("_dst").as("node"))).distinct()
+      .withColumn("_s", lit(1.0)).localCheckpoint(false)
+    iterate(e, nodes, iterations, damping)
   }
 
   /** PERSONALIZED PageRank (Haveliwala 2002; Page et al.'s §6 biased
     * surfer): the teleport mass returns to the SEED set rather than
     * uniformly — rank becomes "importance as seen from these pages",
     * the crawl-frontier prioritization and topic-conditioned ranking
-    * primitive. Identical per-iteration plan shape to [[pageRank]] (one
-    * ranks×edges equi-join + one partial-agg groupBy(dst)); the only
+    * primitive. The same [[iterate]] body as [[pageRank]]; the only
     * change is the teleport vector, a broadcast-joined seed indicator —
     * seeds start with mass 1, everything else 0, so rank stays a sum of
     * seed-rooted walk weights.
@@ -72,8 +38,6 @@ object GraphOps {
                            seeds: DataFrame, iterations: Int,
                            damping: Double = 0.85): DataFrame = {
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst")).distinct()
-    val deg = e.groupBy(col("_src")).agg(count(lit(1)).as("_deg"))
-    val ed = e.join(deg, "_src").localCheckpoint(false) // lazy — see pageRank
     val seedSet = seeds.select(col(seeds.columns.head).as("node"))
       .distinct().withColumn("_s", lit(1.0))
     // node set = edge endpoints ∪ SEEDS: an isolated seed (a fresh
@@ -86,6 +50,27 @@ object GraphOps {
       .join(broadcast(seedSet), Seq("node"), "left")
       .withColumn("_s", coalesce(col("_s"), lit(0.0)))
       .localCheckpoint(false)
+    iterate(e, nodes, iterations, damping)
+  }
+
+  /** The one PageRank iteration body over `(node, _s)` teleport mass:
+    * `rank(v) = (1-d)·_s(v) + d · Σ_{u→v} rank(u)/outdeg(u)`, starting
+    * from `rank = _s`.
+    *
+    * Shape: the edge set is joined ONCE with out-degrees and checkpointed —
+    * every iteration then costs exactly one equi-join (ranks × edges on
+    * src, both hash-partitioned on the join key) and one partial-agg
+    * groupBy(dst). At cluster scale the edge table dominates; pre-bucketing
+    * it by src makes the per-iteration join shuffle-free on the big side,
+    * and ranks (one row per node) is the small side. `localCheckpoint`
+    * per iteration truncates the otherwise exponentially deep lineage;
+    * the checkpoints are lazy (r12), so the fixed-iteration loop pays no
+    * driver job barrier per round — everything materializes in one
+    * cascaded action at the sink.
+    */
+  private def iterate(e: DataFrame, nodes: DataFrame, iterations: Int, damping: Double): DataFrame = {
+    val deg = e.groupBy(col("_src")).agg(count(lit(1)).as("_deg"))
+    val ed = e.join(deg, "_src").localCheckpoint(false)
     var ranks = nodes.select(col("node"), col("_s").as("rank"))
     for (_ <- 1 to iterations) {
       val contribs = ed
@@ -101,6 +86,18 @@ object GraphOps {
     ranks
   }
 
+  /** Multi-source BFS: (node, depth) for every node within `maxDepth`
+    * directed hops of a seed, depth = hop count from the NEAREST seed.
+    *
+    * Shape: iterative frontier expansion where each level is one semi-join
+    * (edges × frontier) + one anti-join (drop already-visited) — the
+    * frontier never leaves the cluster, unlike a collect-and-isin BFS, so
+    * a hub node with millions of neighbors costs a shuffle, not a driver
+    * OOM. `localCheckpoint` per level cuts the growing lineage (the
+    * DupClusters pointer-jumping pattern); the per-level `isEmpty` is the
+    * convergence probe. For an undirected walk, pass `edges` unioned with
+    * its own reversal.
+    */
   def bfs(edges: DataFrame, srcCol: String, dstCol: String,
           seeds: DataFrame, maxDepth: Int): DataFrame = {
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))

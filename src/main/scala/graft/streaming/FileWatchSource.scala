@@ -77,55 +77,25 @@ object FileWatchSource {
     * instead of being re-read — so an idle poll costs one listing, not a
     * full-corpus read+hash (the FileStreamSource file-log cost class).
     *
-    * The walk applies the SAME surface rules as the batch scan
-    * ([[graft.ingest.SourceScan.listFiles]]): excluded directories are
-    * pruned with SKIP_SUBTREE (a node_modules churn never costs a hash),
-    * files must pass include/exclude globs, the parser registry, and the
-    * size cap — so a watch session can never index a file the batch scan
-    * would have skipped.
+    * The listing IS the batch scan ([[graft.ingest.SourceScan.listFiles]]
+    * with the same config): one walker and one compiled surface, so a
+    * watch session sees exactly the files an index of the same tree would
+    * list — dot directories included unless the config excludes them. A
+    * missing root is an empty snapshot; a file that vanishes between the
+    * listing and its read is skipped.
     */
   def snapshot(root: String, prev: Map[String, Entry] = Map.empty,
-               config: graft.core.GraftConfig = graft.core.GraftConfig()): Seq[Entry] = {
-    import java.nio.file.{FileVisitResult, SimpleFileVisitor}
-    import java.nio.file.attribute.BasicFileAttributes
-    val rootPath = Paths.get(root)
-    if (!Files.exists(rootPath)) return Seq.empty
-    val excludedDirs = config.excludes.filter(_.endsWith("/")).map(_.stripSuffix("/")).toSet
-    val out = scala.collection.mutable.ArrayBuffer[Entry]()
-    Files.walkFileTree(rootPath, new SimpleFileVisitor[Path] {
-      override def preVisitDirectory(dir: Path, attrs: BasicFileAttributes): FileVisitResult = {
-        val name = dir.getFileName.toString
-        if (dir != rootPath && (name.startsWith(".") || excludedDirs.contains(name)))
-          FileVisitResult.SKIP_SUBTREE
-        else FileVisitResult.CONTINUE
+               config: graft.core.GraftConfig = graft.core.GraftConfig()): Seq[Entry] =
+    if (!Files.exists(Paths.get(root))) Seq.empty
+    else graft.ingest.SourceScan.listFiles(root, config).flatMap { case (rel, size, mtime) =>
+      prev.get(rel) match {
+        case Some(e) if e.mtime == mtime && e.size == size => Some(e)
+        case _ => scala.util.Try {
+          val content = new String(Files.readAllBytes(Paths.get(root, rel)), StandardCharsets.UTF_8)
+          Entry(rel, graft.core.Ids.sha256Hex(content), mtime, size, content)
+        }.toOption // racing delete: skip
       }
-      override def visitFile(p: Path, attrs: BasicFileAttributes): FileVisitResult = {
-        if (attrs.isRegularFile) {
-          val rel = rootPath.relativize(p).toString.replace('\\', '/')
-          if (!rel.split('/').exists(_.startsWith(".")) &&
-              !graft.ingest.SourceScan.excluded(rel, config.excludes) &&
-              graft.ingest.SourceScan.included(rel, config.includes) &&
-              graft.ingest.ParserRegistry.canParse(rel) &&
-              attrs.size <= config.maxFileSize) {
-            try {
-              val mtime = attrs.lastModifiedTime.toMillis
-              val size = attrs.size
-              prev.get(rel) match {
-                case Some(e) if e.mtime == mtime && e.size == size => out += e
-                case _ =>
-                  val content = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-                  out += Entry(rel, graft.core.Ids.sha256Hex(content), mtime, size, content)
-              }
-            } catch { case _: Exception => () } // racing delete: skip
-          }
-        }
-        FileVisitResult.CONTINUE
-      }
-      override def visitFileFailed(p: Path, e: java.io.IOException): FileVisitResult =
-        FileVisitResult.CONTINUE // racing delete of a whole subtree: skip
-    })
-    out.toSeq.sortBy(_.relPath)
-  }
+    }
 
   /** created/modified/deleted events turning `from` into `to`, as METADATA
     * (relPath, eventType, ts, contentHash) — content is resolved from the

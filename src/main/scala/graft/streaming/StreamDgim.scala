@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** DGIM SLIDING-WINDOW COUNTING (Datar, Gionis, Indyk, Motwani 2002) —
   * "how many hits in the last N ticks, per key, forever" with
@@ -25,7 +24,7 @@ object StreamDgim {
     * (the StreamEwma tiebreak concern does not arise here — proven by the
     * StreamDgimSpec "tied timestamps replay identically across 10 runs"
     * case, which folds a dup-heavy input under varying partitionings).
-    * If Hit ever grows a payload field, add it to every sortBy below.
+    * If Hit ever grows a payload field, add it to the [[KeyedFold]] order.
     */
   case class Hit(key: String, time: Long)
 
@@ -65,33 +64,19 @@ object StreamDgim {
     if (s.sizes.isEmpty) 0L
     else s.sizes.init.sum + (s.sizes.last + 1) / 2
 
-  /** The ONE insert-then-estimate step both the streaming closure and
-    * the batch replay apply — parity by construction.
+  /** The ONE insert-then-estimate step every form applies through
+    * [[KeyedFold]] — parity by construction.
     */
-  private def step(s: DgimState, h: Hit, window: Long): (DgimState, Estimate) = {
+  private def step(window: Long)(s: DgimState, h: Hit): (DgimState, Estimate) = {
     val next = insert(s, h.time, window)
     (next, Estimate(h.key, h.time, estimate(next), next.sizes.length))
   }
 
+  private def keyed(window: Long) =
+    KeyedFold[Hit, DgimState, Estimate, Long](_.key, DgimState(Nil, Nil), _.time)(step(window))
+
   /** Per arriving hit: the DGIM estimate of hits in `(t−window, t]`. */
-  def counted(hits: Dataset[Hit], window: Long): Dataset[Estimate] = {
-    import hits.sparkSession.implicits._
-    hits
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[DgimState, Estimate](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[Hit], state: GroupState[DgimState]) =>
-          var s = state.getOption.getOrElse(DgimState(Nil, Nil))
-          val out = rows.toSeq.sortBy(_.time).map { h =>
-            val (next, e) = step(s, h, window)
-            s = next
-            e
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
+  def counted(hits: Dataset[Hit], window: Long): Dataset[Estimate] = keyed(window).streamed(hits)
 
   /** DISTRIBUTED batch replay of the same fold — the backfill shape, and
     * the q205 oracle surface: one `flatMapGroups` per key applying the
@@ -100,26 +85,8 @@ object StreamDgim {
     * horizon, not the corpus), so the replay shuffles once on the key and
     * folds in one pass.
     */
-  def batchCountedDs(hits: Dataset[Hit], window: Long): Dataset[Estimate] = {
-    import hits.sparkSession.implicits._
-    hits.groupByKey(_.key).flatMapGroups { (_: String, rows: Iterator[Hit]) =>
-      var s = DgimState(Nil, Nil)
-      rows.toSeq.sortBy(_.time).map { h =>
-        val (next, e) = step(s, h, window)
-        s = next
-        e
-      }.iterator
-    }
-  }
+  def batchCountedDs(hits: Dataset[Hit], window: Long): Dataset[Estimate] = keyed(window).replayed(hits)
 
   /** Batch replay of the same fold for parity testing and backfill. */
-  def batchCounted(hits: Seq[Hit], window: Long): Seq[Estimate] =
-    hits.groupBy(_.key).toSeq.flatMap { case (_, hs) =>
-      var s = DgimState(Nil, Nil)
-      hs.sortBy(_.time).map { h =>
-        val (next, e) = step(s, h, window)
-        s = next
-        e
-      }
-    }
+  def batchCounted(hits: Seq[Hit], window: Long): Seq[Estimate] = keyed(window).replayedSeq(hits)
 }

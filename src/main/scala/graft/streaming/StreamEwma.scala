@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** STREAMING EWMA FORECAST — the unbounded-feed twin of the batch
   * smoother (q186 / [[graft.operators.Ewma]]): per key, each arriving
@@ -42,8 +41,8 @@ object StreamEwma {
     if (s.nSeen == 0L) EwmaState(x, 1L)
     else EwmaState((x + s.ewma) / 2.0, s.nSeen + 1L)
 
-  /** The ONE forecast-then-fold step both the streaming closure and the
-    * batch replay apply — parity by construction, not by copy-paste.
+  /** The ONE forecast-then-fold step every form applies through
+    * [[KeyedFold]] — parity by construction, not by copy-paste.
     */
   private def step(s: EwmaState, b: BucketCount): (EwmaState, Forecasted) = {
     val x = b.n.toDouble
@@ -52,31 +51,17 @@ object StreamEwma {
     (next, Forecasted(b.key, b.bucket, b.n, fc, x - fc, next.ewma, next.nSeen))
   }
 
+  /** The (bucket, n) replay key is a TOTAL order over the row, so tied
+    * buckets fold identically whatever the shuffle delivered (r9 advice) —
+    * tied rows that differ in n fold smallest-n first.
+    */
+  private val keyed = KeyedFold[BucketCount, EwmaState, Forecasted, (Long, Long)](
+    _.key, EwmaState(0.0, 0L), b => (b.bucket, b.n))(step)
+
   /** Forecast-then-fold each bucket against its key's running average.
     * Update-mode output: one row per arriving bucket.
     */
-  def forecasted(buckets: Dataset[BucketCount]): Dataset[Forecasted] = {
-    import buckets.sparkSession.implicits._
-    buckets
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[EwmaState, Forecasted](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[BucketCount], state: GroupState[EwmaState]) =>
-          var s = state.getOption.getOrElse(EwmaState(0.0, 0L))
-          // order within the trigger so replay matches event order; the
-          // (bucket, n) key is a TOTAL order over the row, so tied buckets
-          // fold identically whatever the shuffle delivered (r9 advice) —
-          // tied rows that differ in n fold smallest-n first
-          val out = rows.toSeq.sortBy(b => (b.bucket, b.n)).map { b =>
-            val (next, r) = step(s, b)
-            s = next
-            r
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
+  def forecasted(buckets: Dataset[BucketCount]): Dataset[Forecasted] = keyed.streamed(buckets)
 
   /** DISTRIBUTED batch replay of the same fold — the backfill shape, and
     * the q204 oracle surface: one `flatMapGroups` per key applying the
@@ -86,26 +71,8 @@ object StreamEwma {
     * them in one pass — no window over the horizon, no recomputed
     * weights.
     */
-  def batchForecastedDs(buckets: Dataset[BucketCount]): Dataset[Forecasted] = {
-    import buckets.sparkSession.implicits._
-    buckets.groupByKey(_.key).flatMapGroups { (_: String, rows: Iterator[BucketCount]) =>
-      var s = EwmaState(0.0, 0L)
-      rows.toSeq.sortBy(b => (b.bucket, b.n)).map { b =>
-        val (next, r) = step(s, b)
-        s = next
-        r
-      }.iterator
-    }
-  }
+  def batchForecastedDs(buckets: Dataset[BucketCount]): Dataset[Forecasted] = keyed.replayed(buckets)
 
   /** Batch replay of the same fold for parity testing and backfill. */
-  def batchForecasted(buckets: Seq[BucketCount]): Seq[Forecasted] =
-    buckets.groupBy(_.key).toSeq.flatMap { case (_, bs) =>
-      var s = EwmaState(0.0, 0L)
-      bs.sortBy(b => (b.bucket, b.n)).map { b =>
-        val (next, r) = step(s, b)
-        s = next
-        r
-      }
-    }
+  def batchForecasted(buckets: Seq[BucketCount]): Seq[Forecasted] = keyed.replayedSeq(buckets)
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** STREAMING RATE-ANOMALY DETECTION — the unbounded-feed twin of the
   * batch z-score detector (q116_rate_anomaly): per key, each arriving
@@ -48,61 +47,36 @@ object StreamRateAnomaly {
       else (x - s.mean) / sd
     }
 
+  /** The ONE score-then-fold step every form applies through
+    * [[KeyedFold]]: the bucket is scored against the PRIOR baseline, then
+    * folded in.
+    */
+  private def step(s: RateState, b: BucketCount): (RateState, Scored) = {
+    val x = b.n.toDouble
+    (fold(s, x), Scored(b.key, b.bucket, b.n, score(s, x), s.mean, s.cnt))
+  }
+
+  /** Per-trigger arrival order is not guaranteed; buckets are ordered
+    * within the batch so replay matches event order.
+    */
+  private val keyed = KeyedFold[BucketCount, RateState, Scored, Long](
+    _.key, RateState(0L, 0.0, 0.0), _.bucket)(step)
+
   /** Score each bucket against the prior-history baseline of its key.
     * Update-mode output: one Scored row per arriving bucket.
     */
-  def scored(buckets: Dataset[BucketCount]): Dataset[Scored] = {
-    import buckets.sparkSession.implicits._
-    buckets
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[RateState, Scored](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[BucketCount], state: GroupState[RateState]) =>
-          var s = state.getOption.getOrElse(RateState(0L, 0.0, 0.0))
-          // per-trigger arrival order is not guaranteed; buckets are
-          // ordered within the batch so replay matches event order
-          val out = rows.toSeq.sortBy(_.bucket).map { b =>
-            val z = score(s, b.n.toDouble)
-            val r = Scored(key, b.bucket, b.n, z, s.mean, s.cnt)
-            s = fold(s, b.n.toDouble)
-            r
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
+  def scored(buckets: Dataset[BucketCount]): Dataset[Scored] = keyed.streamed(buckets)
 
   /** DISTRIBUTED batch replay of the same score-then-fold — the backfill
     * shape and the q233 oracle surface: one `flatMapGroups` per key
-    * applying the identical [[score]] / [[fold]] in bucket order. Buckets
-    * are unique per key by construction (they come out of a (key, bucket)
-    * groupBy), so the sort is a total order; each group holds that key's
-    * bucket series (bounded by the tick horizon, not the corpus), and the
-    * replay shuffles once on the key and folds in one pass.
+    * applying the identical [[step]] in bucket order. Buckets are unique
+    * per key by construction (they come out of a (key, bucket) groupBy),
+    * so the sort is a total order; each group holds that key's bucket
+    * series (bounded by the tick horizon, not the corpus), and the replay
+    * shuffles once on the key and folds in one pass.
     */
-  def batchScoredDs(buckets: Dataset[BucketCount]): Dataset[Scored] = {
-    import buckets.sparkSession.implicits._
-    buckets.groupByKey(_.key).flatMapGroups { (key: String, rows: Iterator[BucketCount]) =>
-      var s = RateState(0L, 0.0, 0.0)
-      rows.toSeq.sortBy(_.bucket).map { b =>
-        val z = score(s, b.n.toDouble)
-        val r = Scored(key, b.bucket, b.n, z, s.mean, s.cnt)
-        s = fold(s, b.n.toDouble)
-        r
-      }.iterator
-    }
-  }
+  def batchScoredDs(buckets: Dataset[BucketCount]): Dataset[Scored] = keyed.replayed(buckets)
 
   /** Batch replay of the same fold for parity testing and backfill. */
-  def batchScored(buckets: Seq[BucketCount]): Seq[Scored] =
-    buckets.groupBy(_.key).toSeq.flatMap { case (key, bs) =>
-      var s = RateState(0L, 0.0, 0.0)
-      bs.sortBy(_.bucket).map { b =>
-        val z = score(s, b.n.toDouble)
-        val r = Scored(key, b.bucket, b.n, z, s.mean, s.cnt)
-        s = fold(s, b.n.toDouble)
-        r
-      }
-    }
+  def batchScored(buckets: Seq[BucketCount]): Seq[Scored] = keyed.replayedSeq(buckets)
 }

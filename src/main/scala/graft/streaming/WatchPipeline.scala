@@ -41,31 +41,24 @@ object WatchPipeline {
     events.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** True iff the batch scan would have listed this event's file
-    * (SourceScan's include/exclude/size/parser rules) — the watcher-side
-    * event filter (reference: watcher/handler.py:102-147
-    * `_should_process_file`). Deletes are always in scope: a file that
-    * LEFT the surface (e.g. config change) must still cascade out.
-    */
-  private[streaming] def inScanSurface(e: FileEvent, config: graft.core.GraftConfig): Boolean =
-    e.eventType == "deleted" || (
-      graft.ingest.SourceScan.included(e.relPath, config.includes) &&
-      !graft.ingest.SourceScan.excluded(e.relPath, config.excludes) &&
-      ParserRegistry.canParse(e.relPath) &&
-      e.content.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= config.maxFileSize)
-
   /** Apply one micro-batch of events to the store — the exact batch-merge
     * code path (IndexPipeline.applyChanges), scoped to the touched files.
-    * Events are filtered to the config scan surface first, so a file under
+    * Events are filtered through the batch scan's compiled
+    * [[graft.ingest.SourceScan.Surface]] first (reference:
+    * watcher/handler.py:102-147 `_should_process_file`), so a file under
     * an excluded tree (or over the size cap) created mid-watch never
-    * reaches the parser — same surface as the batch scan.
+    * reaches the parser. Deletes are always in scope: a file that LEFT the
+    * surface (e.g. config change) must still cascade out.
     */
   def processBatch(spark: SparkSession, batch: Dataset[FileEvent], storeDir: String,
                    embedder: Embedder = DeterministicEmbedder(),
                    config: graft.core.GraftConfig = graft.core.GraftConfig()): IndexPipeline.IndexingResult = {
     import spark.implicits._
+    val surface = graft.ingest.SourceScan.Surface(config)
     val latest = coalesce(batch.toDF()).as[FileEvent]
-      .filter(e => inScanSurface(e, config)).cache()
+      .filter(e => e.eventType == "deleted" ||
+        surface.admits(e.relPath, e.content.getBytes(java.nio.charset.StandardCharsets.UTF_8).length))
+      .cache()
     val upserts = latest.filter(e => e.eventType == "created" || e.eventType == "modified")
     val parsed: Dataset[ParserResult] = upserts.map(e => ParserRegistry.parse(e.relPath, e.content))
     // every coalesced event path (upsert or delete) is replaced — as a join

@@ -1,6 +1,7 @@
 package graft.api
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -176,11 +177,22 @@ class EngineSpec extends SparkSpec {
     assert(engine.allEntityNames().count() >= 10)
   }
 
+  /** Chunk-store data files (relative name -> mtime): a rewrite renames them all. */
+  private def storeFiles(): Map[String, Long] = {
+    val dir = Paths.get(store, "chunks")
+    val files = Files.walk(dir)
+    try files.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString -> Files.getLastModifiedTime(p).toMillis).toMap
+    finally files.close()
+  }
+
   test("incremental: no changes -> nothing re-embedded; edit -> only that file") {
+    val before = storeFiles()
     val res1 = engine.index(root)
     assert(res1.mode == "incremental")
     assert(res1.filesParsed == 0)
     assert(res1.chunksWritten == 0)
+    assert(storeFiles() == before) // the no-op pass leaves the chunk store untouched
 
     // edit bar.py: remove the multiply call
     Files.writeString(Paths.get(root, "bar.py"),

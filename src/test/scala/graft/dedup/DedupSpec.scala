@@ -22,6 +22,9 @@ class DedupSpec extends SparkSpec {
     val kept = ExactDedup.dedupKeepFirst(docs, "doc_id", "text")
     assert(kept.count() == 4) // doc 2 dropped
     assert(!kept.collect().map(_.getLong(0)).contains(2L))
+    // keep-first elects with a partial-agged groupBy, not a window over the hash
+    assert(kept.queryExecution.optimizedPlan
+      .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]).isEmpty)
   }
 
   test("minhash: exact dups get identical signatures and est_jaccard 1.0") {
