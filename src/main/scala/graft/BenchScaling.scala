@@ -98,7 +98,6 @@ object BenchScaling {
     "q145_augment" -> (("documents", 1.0, false)),
     "q149_lexdiv" -> (("documents", 1.0, false)),
     "q191_kneser_ney" -> (("documents", 1.0, false)),
-    "q193_bootstrap_ci" -> (("documents", 1.0, false)),
     "q211_hll_overlap" -> (("documents", 1.0, false)),
     "q221_trending_mg" -> (("documents", 1.0, false)),
     // events — linear shapes, three decades via the replicated sf1
@@ -119,10 +118,8 @@ object BenchScaling {
     // ===== wave 3 (r10): the round-10 fold/graph/grid additions =====
     "q231_session_native" -> (("events", 1.0, true)),
     "q233_rate_replay" -> (("events", 1.0, true)),
-    "q252_page_hinkley" -> (("events", 1.0, true)),
     "q234_bucketed_join" -> (("lineitem", 1.0, true)), // incl. the layout write
     "q238_modularity" -> (("documents", 1.5, true)), // label-prop banded pairs; salted-docs sf1
-    "q239_energy_distance" -> (("documents", 1.0, false)), // O(grid) identity
     "q247_feature_mi" -> (("documents", 1.0, true)), // bounded 25x fan-out; salted-docs sf1
 
     // ===== wave 4 (r11): the q223-q259 stats/drift gates ≥0.6 s at sf0.1
@@ -132,22 +129,17 @@ object BenchScaling {
     "q225_power_iter" -> (("embeddings", 1.0, false)), // corpus once + 64^2 grid iters
     "q226_isotonic" -> (("documents", 1.0, false)), // PAV on the bounded bin grid
     "q232_enrich_replay" -> (("events", 1.0, true)), // stream-static equi-join replay
-    "q235_conformal" -> (("documents", 1.0, false)), // score quantile + one pass
     "q246_bloom_fpr" -> (("documents", 1.0, false)), // per-source bit-or fold
-    "q250_holm" -> (("documents", 1.0, false)), // m-row family grid after one agg
     "q253_capture_recapture" -> (("documents", 1.5, true)), // two banded detectors; salted-docs sf1
     "q259_mmd_rff" -> (("embeddings", 1.0, false)), // frozen RFF bank, one pass
 
     // ===== wave 5 (r11): the q260-q295 gates ≥0.6 s at sf0.1 =====
     "q263_kaplan_meier" -> (("events", 1.0, true)), // session grid cumsums
-    "q268_by_fdr" -> (("documents", 1.0, false)), // one agg + m-row rank grid
     "q270_ndcg" -> (("embeddings", 1.0, false)), // 3 fixed probes, k=10 folds
     "q271_dedup_weights" -> (("documents", 1.5, true)), // q36 banded components; salted-docs sf1
     "q273_log_rank" -> (("events", 1.0, true)), // sessionize + duration grid
     "q274_nelson_aalen" -> (("events", 1.0, true)), // same grid, hazard fold
-    "q276_cochran_q" -> (("events", 1.0, true)), // dense (user,day)×3 grid
     "q277_ordinal_assoc" -> (("documents", 1.5, false)), // bounded bin-grid pair join
-    "q278_krippendorff" -> (("documents", 1.0, false)), // one agg + distinct-m grid
     "q281_zipf_slope" -> (("documents", 1.0, false)), // token agg + top-100 grid
     "q284_mood_median" -> (("documents", 1.0, false)), // median + densified chi2 grid
     "q301_hodges_lehmann" -> (("documents", 2.0, false)), // value-GRID product (documented quadratic-in-grid, not corpus)

@@ -38,7 +38,7 @@ object Cli {
         val r = engine(store).index(project)
         println(s"mode=${r.mode} files=${r.filesScanned} parsed=${r.filesParsed} " +
           s"entities=${r.entities} relations=${r.relations} " +
-          s"written=${r.chunksWritten} carried=${r.chunksCarried} errors=${r.errors.length}")
+          s"written=${r.chunksWritten} carried=${r.chunksCarried} errors=${r.errorsTotal}")
       case "search" | "search-all" =>
         requireArgs(3, s"$cmd <storeDir> <query> [mode] [limit]")
         val store = args(1); val query = args(2)

@@ -131,12 +131,16 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
 
   /** The CLI's unified "all" search (reference: cli_full.py:976-1072,
     * 1010-1026): run the regular search AND a chat-history-only search,
-    * merge, re-sort by score, re-limit.
+    * merge, re-sort by the mode's score column, re-limit.
     */
   def searchAll(query: String, mode: String = "semantic", limit: Int = 10): DataFrame = {
     val regular = searchSimilar(query, mode, limit = limit)
     val chat = searchSimilar(query, mode, entityTypes = Seq("chat_history"), limit = limit)
-    val scoreCol = if (mode == "hybrid") "rrf_score" else "score"
+    val scoreCol = mode match {
+      case "hybrid" => "rrf_score"
+      case "diversified" => "mmr_score"
+      case _ => "score"
+    }
     regular.unionByName(chat, allowMissingColumns = true)
       .dropDuplicates("chunkId")
       .orderBy(col(scoreCol).desc, col("chunkId").asc)

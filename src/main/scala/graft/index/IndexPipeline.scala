@@ -53,7 +53,15 @@ object IndexPipeline {
       /** Chunks that actually went through the embedder (chunksWritten minus
         * embeddings reused via content-hash / entity-level carry).
         */
-      chunksEmbedded: Long = 0L)
+      chunksEmbedded: Long = 0L,
+      /** Every parse error of the batch; `errors` is a sample of at most
+        * [[ErrorSampleCap]] of them, so `errorsTotal > errors.size` means
+        * the sample was truncated.
+        */
+      errorsTotal: Long = 0L)
+
+  /** Most parse-error messages an [[IndexingResult]] carries. */
+  val ErrorSampleCap = 1000
 
   /** Scan-metadata row joined against the recorded file state — the unit of
     * the mtime/size prefilter. NB `private[index]`, not `private`: encoder
@@ -241,18 +249,32 @@ object IndexPipeline {
     // ONE parse-metadata action (guide §5: the driver serialized three
     // jobs here — errors.collect(), entities.count(), and index()'s
     // results.count() — each a full barrier over the same cached batch).
-    // The error list is additionally CAPPED: collecting every parse error
-    // of a pathological corpus would hold an unbounded Seq on the driver;
-    // 1000 is far above any real batch (every gate/test corpus is ≤ a
-    // handful) so the reported list and its length stay exact there.
+    // The error sample is CAPPED per partition before the aggregate, so a
+    // pathological corpus buffers at most ErrorSampleCap messages per
+    // partition (a bare collect_list would buffer every one before the
+    // slice); the total is counted in full. Below the cap (every gate/test
+    // corpus) the sample is the exact list.
     val metaRow = timed("parse")(results
       .select(size(col("entities")).as("_ne"), col("errors"))
-      .agg(count(lit(1)).as("files"),
-        coalesce(sum(col("_ne")), lit(0L)).as("ents"),
-        slice(flatten(collect_list(col("errors"))), 1, 1000).as("errs"))
+      .as[(Int, Seq[String])]
+      .mapPartitions { rows =>
+        var files, ents, total = 0L
+        val sample = Vector.newBuilder[String]
+        var kept = 0
+        rows.foreach { case (ne, errs) =>
+          files += 1; ents += ne; total += errs.size
+          errs.iterator.take(ErrorSampleCap - kept).foreach { e => sample += e; kept += 1 }
+        }
+        Iterator((files, ents, total, sample.result()))
+      }
+      .toDF("files", "ents", "total", "errs")
+      .agg(coalesce(sum(col("files")), lit(0L)),
+        coalesce(sum(col("ents")), lit(0L)),
+        coalesce(sum(col("total")), lit(0L)),
+        slice(flatten(collect_list(col("errs"))), 1, ErrorSampleCap))
       .head())
     val filesParsed = metaRow.getLong(0)
-    val errors = metaRow.getSeq[String](2).toSeq
+    val errors = metaRow.getSeq[String](3).toSeq
     val entities = results.flatMap(_.entities.map(e => (e.filePath, e.name, e.entityType)))
       .toDF("filePath", "name", "entityType")
     val nEntities = metaRow.getLong(1)
@@ -351,7 +373,8 @@ object IndexPipeline {
     timed("store_write")(IndexStore.writeChunks(all, storeDir))
     newChunksRaw.unpersist(); names.unpersist(); all.unpersist(); finalNew.unpersist()
     IndexingResult(if (incremental) "incremental" else "full",
-      0, filesParsed, nEntities, nRelations, chunksWritten, chunksCarried, errors, chunksEmbedded)
+      0, filesParsed, nEntities, nRelations, chunksWritten, chunksCarried, errors, chunksEmbedded,
+      metaRow.getLong(2))
   }
 
   /** Phantom-CALLS detection (reference: storage/qdrant.py:2325-2381):

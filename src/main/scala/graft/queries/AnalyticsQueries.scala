@@ -8,10 +8,10 @@ import graft.core.Tables
   * TextRank keyphrases (q184), readability (q185), EWMA smoothing
   * (q186), fill-in-the-middle augmentation (q187), Benford audit
   * (q188), l-diversity (q189), A/B hypothesis tests (q190), Kneser-Ney
-  * LM (q191), Markov attribution (q192), bootstrap CIs (q193),
-  * quantile normalization (q194), association rules (q195),
-  * Jaro-Winkler linkage (q196), weekday seasonality (q197), Theil-Sen
-  * (q198), CUSUM changepoints (q199), and Mann-Whitney U (q200).
+  * LM (q191), Markov attribution (q192), quantile normalization
+  * (q194), association rules (q195), Jaro-Winkler linkage (q196),
+  * Theil-Sen (q198), CUSUM changepoints (q199), and Mann-Whitney U
+  * (q200).
   *
   * Numeric discipline throughout: counts stay integer, distinct counts
   * are exact, float formulas are written in the SAME shape on both
@@ -155,13 +155,6 @@ object AnalyticsQueries {
       graft.operators.MarkovAttribution.removalEffects(s, trans)
     }),
 
-    // Deterministic bootstrap CI of mean event value per type (30
-    // hash-weighted replicas, 2nd/29th order-statistic envelope).
-    "q193_bootstrap_ci" -> ((s, dir) =>
-      graft.operators.Bootstrap.meanCi(Tables.events(s, dir),
-          "event_type", "event_id", "value")
-        .orderBy(col("event_type"))),
-
     // Cross-source quantile normalization of document length onto the
     // pooled corpus distribution, integer-exact positions.
     "q194_quantile_norm" -> ((s, dir) =>
@@ -184,12 +177,6 @@ object AnalyticsQueries {
       graft.dedup.JaroLinkage.report(Tables.part(s, dir),
           "p_partkey", "p_name", col("p_brand"))
         .orderBy(col("block"))),
-
-    // Detrended weekday seasonality (7-day centered MA, integer devs).
-    "q197_weekday_seasonal" -> ((s, dir) =>
-      graft.operators.SeasonalDecompose.weekday(Tables.events(s, dir),
-          "event_type", "ts")
-        .orderBy(col("event_type"), col("dow"))),
 
     // Theil-Sen robust slope: median pairwise slope over the day grid.
     "q198_theil_sen" -> ((s, dir) =>
@@ -595,18 +582,6 @@ object AnalyticsQueries {
         "source", "x", "y")
         .orderBy(col("source"))),
 
-    // Benjamini-Hochberg FDR over the per-source "en share vs rest"
-    // z-test family — the multiple-testing correction a per-slice data
-    // audit needs before flagging slices. p-values via the A-S 7.1.26
-    // polynomial (identical literal shape both engines), rounded BEFORE
-    // the step-up comparison.
-    "q224_bh_fdr" -> ((s, dir) =>
-      graft.operators.MultipleTesting.bhFdr(
-        Tables.documents(s, dir)
-          .select(col("source"), when(col("lang") === "en", 1L).otherwise(0L).as("hit")),
-        "source", "hit", alpha = 0.05)
-        .orderBy(col("source"))),
-
     // Leading principal component of the embedding corpus (power
     // iteration, 3 unrolled steps) — the all-but-the-top / whitening
     // direction (Mu-Viswanath 2018). Corpus touched ONCE for the d²
@@ -632,17 +607,6 @@ object AnalyticsQueries {
             .as("ess_ratio"))
         .orderBy(col("source"))),
 
-    // Cochran-Armitage trend test: does click propensity trend across
-    // the ordered user cohorts 0<1<2? The dose-response companion to
-    // q212's two-proportion z. Integer sufficient statistics from ONE
-    // partial agg; closed form at the edge.
-    "q228_cochran_armitage" -> ((s, dir) =>
-      graft.operators.MultipleTesting.cochranArmitage(
-        Tables.events(s, dir)
-          .select((col("user_id") % 3).as("dose"),
-            when(col("event_type") === "click", 1L).otherwise(0L).as("hit")),
-        "dose", "hit")),
-
     // Class-balanced loss weights per language (Cui et al. 2019
     // "effective number of samples"): w_c = (1−β)/(1−β^{n_c}), β=0.999,
     // normalized to mean 1 over classes — the reweighting a skewed
@@ -659,134 +623,10 @@ object AnalyticsQueries {
         .orderBy(col("lang"))
     }),
 
-    // Split-conformal acceptance threshold per source (Vovk 2005): the
-    // ⌈(n+1)(1−α)⌉-th smallest calibration n_chars guarantees ≥90%
-    // coverage on the exchangeable test half. Rank k is integer-exact;
-    // threshold is a passthrough; coverage divides once at the edge.
-    "q235_conformal" -> ((s, dir) => {
-      // split by the q35 hash bucket, NOT doc_id parity — source is a
-      // function of doc_id in the testdata, so a parity split would give
-      // cal and test disjoint sources (an empty inner join)
-      val docs = Tables.documents(s, dir)
-        .select(col("source"), col("doc_id"), col("n_chars"),
-          graft.functions.Splits.hashBucket(col("doc_id"), 100).as("b"))
-      graft.operators.Conformal.splitThreshold(
-        docs.filter(col("b") < 50), docs.filter(col("b") >= 50),
-        "source", "doc_id", "n_chars", 1L, 10L)
-        .orderBy(col("source"))
-    }),
-
-    // McNemar's paired test: do the two langid heuristics (the-rule vs
-    // ascii-ratio rule) have different error rates on the SAME docs?
-    // Discordant counts are integers from one agg; χ²=(b−c)²/(b+c);
-    // p = 2·P(Z>√χ²) via the shared A-S polynomial.
-    "q236_mcnemar" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val truth = col("lang") === "en"
-      val ruleA = lower(col("text")).contains(" the ")
-      val ruleB = length(regexp_replace(col("text"), "[^\\x00-\\x7F]", "")) *
-        20 >= length(col("text")) * 19
-      graft.operators.Agreement.mcnemar(d, ruleA === truth, ruleB === truth)
-    }),
-
-    // Cohen's κ between the same two heuristics treated as independent
-    // annotators: κ = 2(ad−bc)/((a+b)(b+d)+(a+c)(c+d)) — integer
-    // numerator AND denominator, one division at the edge.
-    "q237_cohen_kappa" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val ruleA = lower(col("text")).contains(" the ")
-      val ruleB = length(regexp_replace(col("text"), "[^\\x00-\\x7F]", "")) *
-        20 >= length(col("text")) * 19
-      graft.operators.Agreement.cohenKappa(d, ruleA, ruleB)
-    }),
-
-    // Two-sample energy distance (Székely-Rizzo) between en and non-en
-    // length distributions — exact O(grid) via the adjacent-gap identity
-    // instead of the naive O(n²) pairwise sums; all three sums integer.
-    "q239_energy_distance" -> ((s, dir) =>
-      graft.operators.EnergyDistance.twoSample(
-        Tables.documents(s, dir), "n_chars", col("lang") === "en")),
-
-    // Fleiss' κ across THREE heuristic raters (the-rule, ascii-rule,
-    // length-rule) voting en/other per doc: P̄ and P̄e from the integer
-    // sums Σn_ij², Σc_j² — one corpus agg + one bounded category agg.
-    "q240_fleiss_kappa" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val ruleA = lower(col("text")).contains(" the ")
-      val ruleB = length(regexp_replace(col("text"), "[^\\x00-\\x7F]", "")) *
-        20 >= length(col("text")) * 19
-      val ruleC = col("n_chars") >= 800
-      val votes = d.select(col("doc_id"),
-        (ruleA.cast("long") + ruleB.cast("long") + ruleC.cast("long"))
-          .as("en_cnt"))
-      val counts = votes
-        .select(col("doc_id"), lit("en").as("category"),
-          col("en_cnt").as("cnt"))
-        .unionAll(votes.select(col("doc_id"), lit("other").as("category"),
-          (lit(3L) - col("en_cnt")).as("cnt")))
-      graft.operators.Agreement.fleissKappa(counts, "doc_id", "category",
-        "cnt", 3L)
-    }),
-
-    // Neyman allocation of a 100-doc labeling budget across sources:
-    // n_h ∝ N_h·S_h with integer micro-weights and a pure-integer
-    // largest-remainder rounding — no float sum over strata anywhere.
-    "q241_neyman_alloc" -> ((s, dir) =>
-      graft.operators.Allocation.neyman(
-        Tables.documents(s, dir), "source", "n_chars", 100L)
-        .orderBy(col("source"))),
-
-    // Information gain of five cheap heuristics about lang='en' — the
-    // feature-audit before wiring rules into a curation funnel. One 2×2
-    // integer row per feature; all entropy math in-row.
-    "q242_info_gain" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      graft.operators.InfoGain.binaryGain(d, Seq(
-        "the_rule" -> lower(col("text")).contains(" the "),
-        "ascii_rule" -> (length(regexp_replace(col("text"),
-          "[^\\x00-\\x7F]", "")) * 20 >= length(col("text")) * 19),
-        "len800" -> (col("n_chars") >= 800),
-        "http_rule" -> col("text").contains("http"),
-        "de_rule" -> lower(col("text")).contains(" de ")),
-        col("lang") === "en")
-    }),
-
-    // Delete-one-source jackknife influence on the corpus en-share:
-    // which crawl moves the headline number. Integer totals broadcast;
-    // every leave-one-out estimate computed in-row.
-    "q243_jackknife_source" -> ((s, dir) =>
-      graft.operators.Jackknife.deleteOneGroup(
-        Tables.documents(s, dir), "source", col("lang") === "en")),
-
-    // CUPED variance reduction: per-user pre-period activity (before the
-    // corpus midpoint) as covariate for post-period activity. θ and ρ²
-    // from six integer sums; squares taken in the double domain.
-    "q244_cuped" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(unix_micros(col("ts")).as("us"),
-        col("user_id"))
-      val mid = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-        .selectExpr("(mn + mx) div 2 AS mid")
-      val perUser = ev.crossJoin(broadcast(mid))
-        .groupBy(col("user_id"))
-        .agg(sum(when(col("us") < col("mid"), 1L).otherwise(0L)).as("x"),
-          sum(when(col("us") >= col("mid"), 1L).otherwise(0L)).as("y"))
-      graft.operators.Cuped.adjustmentStats(perUser, "x", "y")
-    }),
-
-    // Post-hoc power + MDE of the user_id%2 A/B on click rate — the
-    // "could this experiment even see the lift" sizing check. Four
-    // integers, shared z-quantile literals, the A-S tail both ways.
-    "q245_power_calc" -> ((s, dir) =>
-      graft.operators.MultipleTesting.twoPropPower(
-        Tables.events(s, dir)
-          .select(pmod(col("user_id"), lit(2)).cast("long").as("grp"),
-            when(col("event_type") === "click", 1L).otherwise(0L).as("hit")),
-        "grp", "hit")),
-
-    // Pairwise mutual information between the five q242 heuristics — the
-    // rule-REDUNDANCY audit (q242 ranks rules against the label; this
-    // says which rules duplicate each other). 10 bounded pairs via a
-    // doc-keyed self-join of the stacked rules (fan-out 25 per doc);
+    // Pairwise mutual information between five quality heuristics — the
+    // rule-REDUNDANCY audit (which rules duplicate each other). 10
+    // bounded pairs via a doc-keyed self-join of the stacked rules
+    // (fan-out 25 per doc);
     // MI = Σ p·ln(p·n/(rt·ct)) computed IN-ROW from the 2×2 integers.
     "q247_feature_mi" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
@@ -824,33 +664,6 @@ object AnalyticsQueries {
         .orderBy(col("fa"), col("fb"))
     }),
 
-    // Cliff's delta ordinal effect size between en and non-en length
-    // distributions — integer GT/LT/tie counts from the same distinct-
-    // value grid as q239, one division at the edge.
-    "q248_cliffs_delta" -> ((s, dir) =>
-      graft.operators.EnergyDistance.cliffsDelta(
-        Tables.documents(s, dir), "n_chars", col("lang") === "en")),
-
-    // TOST equivalence on the user_id%2 click-rate A/B at margin ±0.02:
-    // the "provably no meaningful difference" claim, not just a failed
-    // significance test. Both one-sided A-S tails; round-before-compare.
-    "q249_tost" -> ((s, dir) =>
-      graft.operators.MultipleTesting.tostEquivalence(
-        Tables.events(s, dir)
-          .select(pmod(col("user_id"), lit(2)).cast("long").as("grp"),
-            when(col("event_type") === "click", 1L).otherwise(0L).as("hit")),
-        "grp", "hit", margin = 0.02, alpha = 0.05)),
-
-    // Holm-Bonferroni step-down over the q224 per-source z family — the
-    // FWER-controlling sibling of BH-FDR; selection on rounded values.
-    "q250_holm" -> ((s, dir) =>
-      graft.operators.MultipleTesting.holm(
-        Tables.documents(s, dir)
-          .select(col("source"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("hit")),
-        "source", "hit", alpha = 0.05)
-        .orderBy(col("source"))),
-
     // Source-concentration audit: HHI and the effective number of
     // sources. HHI = Σn_h²/N² keeps the cross-strata sum INTEGER (a
     // float share sum would be partition-order dependent).
@@ -867,8 +680,8 @@ object AnalyticsQueries {
 
     // Embedding-space drift via MMD with random Fourier features
     // (Gretton 2012 / Rahimi-Recht 2007): did the label-0 embedding
-    // population move relative to the rest — q239's distributional twin
-    // for the VECTOR space, O(n·D·d) with no pairwise kernel. The frozen
+    // population move relative to the rest — a distributional two-sample
+    // test for the VECTOR space, O(n·D·d) with no pairwise kernel. The frozen
     // (w, b) bank is injected as identical decimal literals into both
     // engines; features are rounded to 6dp before the group sums, which
     // makes those sums exact in double and partition-order-independent.
@@ -995,27 +808,8 @@ object AnalyticsQueries {
         .orderBy(col("key"), col("t"))
     }),
 
-    // Page-Hinkley drift detector replayed per event_type over daily
-    // counts (the q233 fold discipline): running mean from an INTEGER
-    // sum, m/min-m state, PH = m − min m, alarm on the ROUNDED statistic.
-    "q252_page_hinkley" -> ((s, dir) => {
-      import s.implicits._
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("event_type").as("key"), col("bucket"), col("n"))
-        .as[graft.operators.PageHinkley.BucketCount]
-      graft.operators.PageHinkley.detectDs(buckets, delta = 0.5).toDF()
-        .select(col("key"), col("bucket"), col("n"),
-          round(col("m"), 6).as("m"), round(col("ph"), 6).as("ph"),
-          (round(col("ph"), 6) > 20.0).as("alarm"),
-          col("nSeen").as("n_seen"))
-        .orderBy(col("key"), col("bucket"))
-    }),
-
-    // ===== r11 wave: k-sample tests, survival, stratified OR, FDR under
-    // dependence, mixture temperature =====
+    // ===== r11 wave: k-sample tests, survival, stratified OR, mixture
+    // temperature =====
 
     // Kaplan-Meier survival curve of SESSION durations (seconds, 30-min
     // gap sessions — the q9 sessionization): a session whose last event
@@ -1071,16 +865,6 @@ object AnalyticsQueries {
           .select(col("event_type"), round(col("value") * 1000, 0).cast("long").as("mv")),
         "event_type", "mv")),
 
-    // Benjamini-Yekutieli step-up on the q224 per-source z family — FDR
-    // control under arbitrary dependence; the harmonic factor accumulates
-    // on the ordered rank window.
-    "q268_by_fdr" -> ((s, dir) =>
-      graft.operators.MultipleTesting.byFdr(
-        Tables.documents(s, dir)
-          .select(col("source"), when(col("lang") === "en", 1L).otherwise(0L).as("hit")),
-        "source", "hit", alpha = 0.05)
-        .orderBy(col("source"))),
-
     // Mantel-Haenszel pooled odds ratio across day-of-week strata —
     // the confounder-adjusted companion to the q256 Simpson audit.
     "q269_mantel_haenszel" -> ((s, dir) =>
@@ -1114,8 +898,8 @@ object AnalyticsQueries {
         .orderBy(col("source"))
     }),
 
-    // ===== r11 wave 2: survival comparison, exact/matched categorical
-    // tests, ordinal-association panel =====
+    // ===== r11 wave 2: survival comparison, exact categorical test,
+    // ordinal-association panel =====
 
     // Two-group log-rank test on the q263 session durations, split by
     // user parity: "do the two user cohorts retain sessions equally".
@@ -1165,28 +949,6 @@ object AnalyticsQueries {
           when(col("source") === "src7", 1L).otherwise(0L).as("y")),
         "x", "y")),
 
-    // Cochran's Q across k=3 matched binary treatments: for each
-    // (user, day) subject, did the user click / purchase / error that
-    // day — "do the three action types fire at the same per-day rate".
-    // The dense subject×condition grid is built here (absent = 0); every
-    // sufficient statistic in the operator is an exact integer sum.
-    "q276_cochran_q" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-        .select((col("user_id") * 100000L
-          + expr("unix_date(to_date(ts))")).as("subj"), col("event_type"))
-      val conds = Seq("click", "purchase", "error")
-      val subjects = ev.select(col("subj")).distinct()
-      val grid = subjects.crossJoin(broadcast(conds.toDF("cond")))
-      val hits = ev.filter(col("event_type").isin(conds: _*))
-        .select(col("subj"), col("event_type").as("cond")).distinct()
-        .withColumn("h", lit(1L))
-      graft.operators.Agreement.cochranQ(
-        grid.join(hits, Seq("subj", "cond"), "left")
-          .withColumn("h", coalesce(col("h"), lit(0L))),
-        "subj", "cond", "h")
-    }),
-
     // Ordinal-association panel (Goodman-Kruskal γ, Somers' D both
     // directions, Stuart τ-c) per source over the SAME length×token bin
     // grid as q210's τ-b — the tie-sensitivity spectrum on a grid where
@@ -1201,54 +963,7 @@ object AnalyticsQueries {
         .orderBy(col("source"))
     }),
 
-    // Krippendorff's α with VARIABLE raters per item — the q240 Fleiss
-    // panel, but the length-rule rater abstains on short docs
-    // (n_chars < 400), which Fleiss' fixed-r cannot model. The one
-    // rational-per-item division is regrouped onto the bounded
-    // distinct-m grid (operators/Agreement.scala krippendorffAlpha).
-    "q278_krippendorff" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val ruleA = lower(col("text")).contains(" the ")
-      val ruleB = length(regexp_replace(col("text"), "[^\\x00-\\x7F]", "")) *
-        20 >= length(col("text")) * 19
-      val ruleC = col("n_chars") >= 800
-      val votes = d.select(col("doc_id"),
-        (ruleA.cast("long") + ruleB.cast("long")
-          + when(col("n_chars") >= 400, ruleC.cast("long")).otherwise(0L))
-          .as("en_cnt"),
-        (lit(2L) + (col("n_chars") >= 400).cast("long")).as("m"))
-      val counts = votes
-        .select(col("doc_id"), lit("en").as("category"),
-          col("en_cnt").as("cnt"))
-        .unionAll(votes.select(col("doc_id"), lit("other").as("category"),
-          (col("m") - col("en_cnt")).as("cnt")))
-      graft.operators.Agreement.krippendorffAlpha(counts, "doc_id",
-        "category", "cnt")
-    }),
-
-    // Sample ACF of the daily event-count series at lags 1..7: per-lag
-    // sufficient statistics are integer sums from a day+lag equi-join;
-    // the ratio is one double formula per LAG with every cross-term
-    // cast to double before multiplying (operators/Autocorr.scala).
-    "q279_acf" -> ((s, dir) =>
-      graft.operators.Autocorr.acf(
-        Tables.events(s, dir)
-          .groupBy(expr("unix_date(to_date(ts))").as("day"))
-          .agg(count(lit(1)).as("x")),
-        "day", "x", 7)),
-
-    // Ljung-Box portmanteau over those 7 lags — "is the daily volume
-    // white noise". Folds the ROUNDED r_l² on the ordered bounded lag
-    // grid; χ²(7, 0.95) = 14.067140 is a shared literal.
-    "q280_ljung_box" -> ((s, dir) =>
-      graft.operators.Autocorr.ljungBox(
-        Tables.events(s, dir)
-          .groupBy(expr("unix_date(to_date(ts))").as("day"))
-          .agg(count(lit(1)).as("x")),
-        "day", "x", 7, crit = 14.06714)),
-
-    // ===== r11 wave 4: robust k-sample, trend/randomness tests, ordered
-    // alternatives =====
+    // ===== r11 wave 4: robust k-sample, trend test =====
 
     // Mood's median test of doc length across sources — the
     // weakest-assumption location test (q267's ANOVA assumes normal
@@ -1269,35 +984,6 @@ object AnalyticsQueries {
           .groupBy(expr("unix_date(to_date(ts))").as("day"))
           .agg(count(lit(1)).as("x")),
         "day", "x")),
-
-    // Wald-Wolfowitz runs test on the same series — sign-pattern
-    // randomness, the complement of q279's linear ACF.
-    "q286_runs_test" -> ((s, dir) =>
-      graft.operators.Autocorr.runsTest(
-        Tables.events(s, dir)
-          .groupBy(expr("unix_date(to_date(ts))").as("day"))
-          .agg(count(lit(1)).as("x")),
-        "day", "x")),
-
-    // Page's L for the ORDERED alternative view ≤ click ≤ purchase per
-    // user (funnel depth): more powerful than q276's any-difference
-    // Cochran Q when the order is known. Dense user×condition grid;
-    // within-user midranks from the bounded k² pair comparison (2L
-    // stays an exact integer).
-    "q287_page_trend" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-      val conds = Seq(("view", 1L), ("click", 2L), ("purchase", 3L))
-      val users = ev.select(col("user_id")).distinct()
-      val grid = users.crossJoin(broadcast(conds.toDF("cond", "c")))
-      val counts = ev.filter(col("event_type").isin(conds.map(_._1): _*))
-        .groupBy(col("user_id"), col("event_type").as("cond"))
-        .agg(count(lit(1)).as("v"))
-      graft.operators.PageTrend.pageL(
-        grid.join(counts, Seq("user_id", "cond"), "left")
-          .withColumn("v", coalesce(col("v"), lit(0L))),
-        "user_id", "c", "v")
-    }),
 
     // Link prediction over the q183 synthetic follow graph: top-20
     // non-adjacent pairs by Adamic-Adar, with common-neighbor/Jaccard/
@@ -1338,54 +1024,7 @@ object AnalyticsQueries {
         "source", "x", "y", "doc_id")
         .orderBy(col("source"))),
 
-    // ===== r11 wave 6: concordance, serial correlation, inequality,
-    // survey estimation =====
-
-    // Kendall's W: do three corpus metrics (total chars, total tokens,
-    // en-doc count) agree on how they ORDER the 20 sources. Midranks
-    // from per-rater distinct-value grids — every cross-group sum is an
-    // exact ¼-multiple, order-free.
-    "q291_kendall_w" -> ((s, dir) => {
-      val m = Tables.documents(s, dir).groupBy(col("source")).agg(
-        sum(col("n_chars")).as("va"),
-        sum(graft.functions.TextOps.wsTokenCount(col("text")).cast("long")).as("vb"),
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("vc"))
-      val long = m.select(lit("chars").as("rater"), col("source").as("item"),
-          col("va").as("v"))
-        .unionAll(m.select(lit("tokens").as("rater"), col("source").as("item"),
-          col("vb").as("v")))
-        .unionAll(m.select(lit("enshare").as("rater"), col("source").as("item"),
-          col("vc").as("v")))
-      graft.operators.Concordance.kendallW(long, "rater", "item", "v")
-    }),
-
-    // Friedman's χ² over the q287 user×event-type grid — the unordered
-    // within-block rank test (Page's L is its ordered sharpening,
-    // Cochran's Q its binary reduction).
-    "q292_friedman" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-      val conds = Seq("view", "click", "purchase")
-      val users = ev.select(col("user_id")).distinct()
-      val grid = users.crossJoin(broadcast(conds.toDF("cond")))
-      val counts = ev.filter(col("event_type").isin(conds: _*))
-        .groupBy(col("user_id"), col("event_type").as("cond"))
-        .agg(count(lit(1)).as("v"))
-      graft.operators.Concordance.friedman(
-        grid.join(counts, Seq("user_id", "cond"), "left")
-          .withColumn("v", coalesce(col("v"), lit(0L))),
-        "user_id", "cond", "v")
-    }),
-
-    // Durbin-Watson over the daily event-count series — the one-number
-    // serial-correlation read (≈2 white noise); every sufficient
-    // statistic an exact integer since demeaning cancels inside Δ.
-    "q293_durbin_watson" -> ((s, dir) =>
-      graft.operators.Autocorr.durbinWatson(
-        Tables.events(s, dir)
-          .groupBy(expr("unix_date(to_date(ts))").as("day"))
-          .agg(count(lit(1)).as("x")),
-        "day", "x")),
+    // ===== r11 wave 6: inequality, survey estimation =====
 
     // Inequality panel per source (Theil, Atkinson ε=1, Hoover) —
     // completing the q202 Gini / q251 HHI concentration family with
@@ -1399,41 +1038,13 @@ object AnalyticsQueries {
     // Post-stratified mean of doc length under equal LANGUAGE weights
     // (languages are genuinely unequal — en ≈ 2.5× the others, so the
     // reweight moves the mean and deff > 1) + the Kish design effect
-    // pricing it — Neyman's (q241) after-the-fact companion.
+    // pricing it.
     "q295_post_stratified" -> ((s, dir) =>
       graft.operators.PostStratify.equalWeight(
         Tables.documents(s, dir).select(col("lang"), col("n_chars")),
         "lang", "n_chars")),
 
-    // ===== r11 wave 7: Bayesian decision, balance audit, sensitivity =====
-
-    // Bayesian A/B on click-through by user parity: posterior
-    // P(p₁ > p₀) under Beta(1,1) priors via fixed 512-point midpoint
-    // grid integration (documented convention; q275-style max-centred
-    // log-weights). The decision-ready companion to q190/q212/q245.
-    "q296_bayes_ab" -> ((s, dir) =>
-      graft.operators.BayesAb.betaBinomial(
-        Tables.events(s, dir).select(
-          pmod(col("user_id"), lit(2)).as("variant"),
-          when(col("event_type") === "click", 1L).otherwise(0L).as("hit")),
-        "variant", "hit")),
-
-    // Covariate-balance audit of the user-parity split: SMD + variance
-    // ratio per covariate (milli-quantized value, hour, day-of-week) —
-    // the pre-analysis check that the "random" split balanced the
-    // confounders (the q244 CUPED / q256 Simpson design-side sibling).
-    "q297_balance_smd" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("g", pmod(col("user_id"), lit(2)))
-      val longf = ev.filter(col("value").isNotNull)
-        .select(lit("value_milli").as("cov"), col("g"),
-          round(col("value") * 1000, 0).cast("long").as("v"))
-        .unionAll(ev.select(lit("hour").as("cov"), col("g"),
-          hour(col("ts")).cast("long").as("v")))
-        .unionAll(ev.select(lit("dow").as("cov"), col("g"),
-          dayofweek(col("ts")).cast("long").as("v")))
-      graft.operators.Balance.smdPanel(longf, "cov", "g", "v")
-    }),
+    // ===== r11 wave 7: sensitivity =====
 
     // E-value sensitivity for the purchase-rate risk ratio by user
     // parity — "how strong a hidden confounder would explain this
@@ -1493,8 +1104,8 @@ object AnalyticsQueries {
     // carry no text signal, so a lang target would only measure
     // prevalence). The threshold-free PR-curve eval completing the
     // classifier family (q25/q29 fixed-threshold confusions, q174
-    // lang-ID eval, q237 calibration). Integer cumsums on the ordered
-    // score grid; AP folds on the same grid.
+    // lang-ID eval). Integer cumsums on the ordered score grid; AP folds
+    // on the same grid.
     "q304_avg_precision" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
         .select(
@@ -1759,39 +1370,6 @@ object AnalyticsQueries {
       prolog + chain("b", "tb") + removals + "\n" + finals + "\nORDER BY channel"
     },
 
-    "q193_bootstrap_ci" ->
-      """WITH h AS (
-        |  SELECT event_type, value, event_id,
-        |         CAST(('0x' || substr(md5(event_id || ':0'), 1, 15)) AS BIGINT) AS h0,
-        |         CAST(('0x' || substr(md5(event_id || ':1'), 1, 15)) AS BIGINT) AS h1
-        |  FROM events
-        |), r AS (
-        |  SELECT event_type, value, h0, h1, unnest(generate_series(0, 29)) AS b
-        |  FROM h
-        |), ww AS (
-        |  SELECT event_type, value, b,
-        |         ((CASE WHEN b < 15 THEN h0 ELSE h1 END
-        |           // (1::BIGINT << ((b % 15) * 2))) % 2)
-        |         + ((CASE WHEN b < 15 THEN h0 ELSE h1 END
-        |           // (1::BIGINT << ((b % 15) * 2 + 1))) % 2) AS w
-        |  FROM r
-        |),
-        |mb AS (SELECT event_type, b,
-        |       CASE WHEN sum(w) > 0 THEN sum(w * value) / sum(w) END AS mb
-        |       FROM ww GROUP BY 1, 2),
-        |mb2 AS (SELECT * FROM mb WHERE mb IS NOT NULL),
-        |rk AS (SELECT event_type, b, mb,
-        |       row_number() OVER (PARTITION BY event_type ORDER BY mb, b) AS rn,
-        |       count(*) OVER (PARTITION BY event_type) AS cnt FROM mb2),
-        |ci AS (SELECT event_type,
-        |       round(min(CASE WHEN rn = 2 THEN mb END), 4) AS ci_lo,
-        |       round(min(CASE WHEN rn = cnt - 1 THEN mb END), 4) AS ci_hi
-        |       FROM rk GROUP BY 1),
-        |base AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |         round(avg(value), 4) AS mean_v FROM events GROUP BY 1)
-        |SELECT base.event_type, base.n, base.mean_v, ci.ci_lo, ci.ci_hi
-        |FROM base JOIN ci USING (event_type) ORDER BY event_type""".stripMargin,
-
     "q194_quantile_norm" ->
       """WITH rws AS (SELECT source, doc_id, n_chars FROM documents),
         |tot AS (SELECT count(*) AS n_all FROM rws),
@@ -1862,24 +1440,6 @@ object AnalyticsQueries {
         |       CAST(sum(CASE WHEN jw >= 0.95 THEN 1 ELSE 0 END) AS BIGINT) AS n_match_hi,
         |       max(jw) AS max_jw
         |FROM s GROUP BY block ORDER BY block""".stripMargin,
-
-    "q197_weekday_seasonal" ->
-      """WITH d AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day, count(*) AS x
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT event_type, day, x,
-        |         sum(x) OVER w AS s7, count(*) OVER w AS n7
-        |  FROM d
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |               RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |)
-        |SELECT event_type, CAST(day % 7 AS BIGINT) AS dow,
-        |       CAST(count(*) AS BIGINT) AS n_days,
-        |       round(CAST(sum(7 * x - s7) AS DOUBLE) / (7.0 * count(*)), 4) AS seasonal_dev,
-        |       round(CAST(sum(x) AS DOUBLE) / count(*), 4) AS mean_x
-        |FROM t WHERE n7 = 7
-        |GROUP BY 1, 2 ORDER BY event_type, dow""".stripMargin,
 
     "q198_theil_sen" ->
       """WITH d AS (
@@ -2252,39 +1812,6 @@ object AnalyticsQueries {
         |       END AS rho
         |FROM s ORDER BY source""".stripMargin,
 
-    // z from integer sufficient statistics; Abramowitz-Stegun 7.1.26
-    // two-sided p (identical literal shape), rounded BEFORE the BH
-    // step-up comparison; rank ties broken by source name
-    "q224_bh_fdr" ->
-      """WITH g AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT sum(n) AS nn, sum(k) AS kk FROM g),
-        |z AS (
-        |  SELECT source, n, k,
-        |         CASE WHEN kk > 0 AND kk < nn AND nn - n > 0 THEN
-        |           (CAST(k AS DOUBLE) / n - CAST(kk - k AS DOUBLE) / (nn - n))
-        |             / sqrt((CAST(kk AS DOUBLE) / nn) * (1.0 - CAST(kk AS DOUBLE) / nn)
-        |                    * (1.0 / n + 1.0 / (nn - n))) END AS z
-        |  FROM g, t),
-        |p AS (
-        |  SELECT source, n, k, z,
-        |         coalesce(round(2.0 * (exp(-abs(z) * abs(z) / 2.0) / 2.5066282746310002
-        |           * (tt * (0.319381530 + tt * (-0.356563782 + tt * (1.781477937
-        |              + tt * (-1.821255978 + tt * 1.330274429)))))), 6), 1.0) AS p
-        |  FROM (SELECT *, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM z)),
-        |r AS (SELECT *, CAST(row_number() OVER (ORDER BY p, source) AS BIGINT) AS i,
-        |             CAST(count(*) OVER () AS BIGINT) AS m
-        |      FROM p),
-        |c AS (SELECT *, round(i * 0.05 / m, 6) AS bh_cut,
-        |             p <= round(i * 0.05 / m, 6) AS under
-        |      FROM r),
-        |km AS (SELECT max(CASE WHEN under THEN i END) AS kmax FROM c)
-        |SELECT source, n, k, round(z, 4) AS z, p, i AS p_rank, bh_cut,
-        |       (kmax IS NOT NULL AND i <= kmax) AS rejected
-        |FROM c, km ORDER BY source""".stripMargin,
-
     // covariance cells via the q214 in-row fan-out; 3 power steps
     // unrolled CTE-for-CTE; sign fixed on dim 1; Rayleigh λ at the edge
     "q225_power_iter" ->
@@ -2327,24 +1854,6 @@ object AnalyticsQueries {
         |       round(CAST(sw AS DOUBLE) * sw / sww / n, 6) AS ess_ratio
         |FROM g ORDER BY source""".stripMargin,
 
-    // integer sufficient statistics; the identical closed form at the edge
-    "q228_cochran_armitage" ->
-      """WITH g AS (
-        |  SELECT user_id % 3 AS d, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM events GROUP BY 1),
-        |a AS (SELECT sum(n) AS nn, sum(k) AS kk, sum(d * k) AS swk,
-        |             sum(d * n) AS swn, sum(d * d * n) AS swwn,
-        |             CAST(count(*) AS BIGINT) AS levels
-        |      FROM g)
-        |SELECT CAST(nn AS BIGINT) AS n, CAST(kk AS BIGINT) AS k, levels,
-        |       round(CAST(kk AS DOUBLE) / nn, 6) AS pbar,
-        |       round((CAST(swk AS DOUBLE) - CAST(swn AS DOUBLE) * kk / nn)
-        |             / sqrt((CAST(kk AS DOUBLE) / nn) * (1.0 - CAST(kk AS DOUBLE) / nn)
-        |                    * (CAST(swwn AS DOUBLE) - CAST(swn AS DOUBLE) * swn / nn)), 4)
-        |         AS z_trend
-        |FROM a""".stripMargin,
-
     // pow at the edge; normalization to mean 1 over classes
     "q230_cb_weights" ->
       """WITH g AS (
@@ -2355,251 +1864,6 @@ object AnalyticsQueries {
         |SELECT lang, n, round(w, 6) AS w_raw,
         |       round(w * c / sw, 6) AS w_norm
         |FROM g, t ORDER BY lang""".stripMargin,
-
-    // k = ceil((n+1)*9/10) in pure integer arithmetic; threshold is the
-    // k-th order statistic (NULL = +inf when the calibration half is too
-    // small for the level, and then every test row is covered)
-    "q235_conformal" ->
-      """WITH lb AS (SELECT source, doc_id, n_chars,
-        |                    CAST(('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT) % 100 AS b
-        |             FROM documents),
-        |cal AS (SELECT source, doc_id, n_chars FROM lb WHERE b < 50),
-        |tst AS (SELECT source, doc_id, n_chars FROM lb WHERE b >= 50),
-        |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n_cal,
-        |              CAST(((count(*) + 1) * 9 + 9) // 10 AS BIGINT) AS k
-        |       FROM cal GROUP BY 1),
-        |rk AS (SELECT source, n_chars,
-        |              row_number() OVER (PARTITION BY source
-        |                                 ORDER BY n_chars, doc_id) AS rn
-        |       FROM cal),
-        |thr AS (SELECT sz.source, sz.n_cal, sz.k, rk.n_chars AS threshold
-        |        FROM sz LEFT JOIN rk ON rk.source = sz.source AND rk.rn = sz.k)
-        |SELECT t.source, max(th.n_cal) AS n_cal, max(th.k) AS k,
-        |       CAST(max(th.threshold) AS BIGINT) AS threshold,
-        |       CAST(count(*) AS BIGINT) AS n_test,
-        |       CAST(sum(CASE WHEN th.threshold IS NULL
-        |                       OR t.n_chars <= th.threshold
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-        |       round(CAST(sum(CASE WHEN th.threshold IS NULL
-        |                             OR t.n_chars <= th.threshold
-        |                           THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / count(*), 4) AS coverage
-        |FROM tst t JOIN thr th ON th.source = t.source
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the two heuristics and the A-S tail rendered with the q212 shapes;
-    // DuckDB regexp_replace needs the 'g' flag to match Spark's
-    // replace-all default
-    "q236_mcnemar" ->
-      """WITH r AS (
-        |  SELECT (lang = 'en') AS truth,
-        |         contains(lower(text), ' the ') AS ra,
-        |         length(regexp_replace(text, '[^\x00-\x7F]', '', 'g')) * 20
-        |           >= length(text) * 19 AS rb
-        |  FROM documents),
-        |g AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN (ra = truth) AND (rb = truth) THEN 1 ELSE 0 END) AS BIGINT) AS both_ok,
-        |         CAST(sum(CASE WHEN (ra = truth) AND NOT (rb = truth) THEN 1 ELSE 0 END) AS BIGINT) AS a_only,
-        |         CAST(sum(CASE WHEN NOT (ra = truth) AND (rb = truth) THEN 1 ELSE 0 END) AS BIGINT) AS b_only,
-        |         CAST(sum(CASE WHEN NOT (ra = truth) AND NOT (rb = truth) THEN 1 ELSE 0 END) AS BIGINT) AS both_wrong
-        |  FROM r),
-        |c AS (SELECT *, CASE WHEN a_only + b_only = 0 THEN 0.0
-        |                     ELSE CAST((a_only - b_only) * (a_only - b_only) AS DOUBLE)
-        |                          / (a_only + b_only) END AS chi2raw
-        |      FROM g),
-        |z AS (SELECT *, sqrt(chi2raw) AS zz,
-        |             1.0 / (1.0 + 0.2316419 * sqrt(chi2raw)) AS tt FROM c)
-        |SELECT n, both_ok, a_only, b_only, both_wrong,
-        |       round(chi2raw, 6) AS chi2,
-        |       CASE WHEN a_only + b_only = 0 THEN 1.0
-        |            ELSE round(2.0 * (exp(-zz * zz / 2.0) / 2.5066282746310002
-        |              * (tt * (0.319381530 + tt * (-0.356563782 + tt * (1.781477937
-        |                 + tt * (-1.821255978 + tt * 1.330274429)))))), 6) END AS p
-        |FROM z""".stripMargin,
-
-    "q237_cohen_kappa" ->
-      """WITH r AS (
-        |  SELECT contains(lower(text), ' the ') AS ra,
-        |         length(regexp_replace(text, '[^\x00-\x7F]', '', 'g')) * 20
-        |           >= length(text) * 19 AS rb
-        |  FROM documents),
-        |g AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN ra AND rb THEN 1 ELSE 0 END) AS BIGINT) AS a,
-        |         CAST(sum(CASE WHEN ra AND NOT rb THEN 1 ELSE 0 END) AS BIGINT) AS b,
-        |         CAST(sum(CASE WHEN NOT ra AND rb THEN 1 ELSE 0 END) AS BIGINT) AS c,
-        |         CAST(sum(CASE WHEN NOT ra AND NOT rb THEN 1 ELSE 0 END) AS BIGINT) AS d
-        |  FROM r)
-        |SELECT n, a, b, c, d,
-        |       round(CAST(a + d AS DOUBLE) / n, 6) AS po,
-        |       round(CAST((a + b) * (a + c) + (c + d) * (b + d) AS DOUBLE)
-        |             / (n * n), 6) AS pe,
-        |       CASE WHEN (a + b) * (b + d) + (a + c) * (c + d) = 0 THEN 0.0
-        |            ELSE round(CAST(2 * (a * d - b * c) AS DOUBLE)
-        |                       / ((a + b) * (b + d) + (a + c) * (c + d)), 6)
-        |            END AS kappa
-        |FROM g""".stripMargin,
-
-    // adjacent-gap identity over the distinct-value grid — every pair
-    // straddling gap t contributes gap once: Nleft(t) * Nright(t)
-    "q239_energy_distance" ->
-      """WITH grid AS (
-        |  SELECT n_chars AS v,
-        |         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS cx,
-        |         CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS BIGINT) AS cy
-        |  FROM documents GROUP BY 1),
-        |c AS (
-        |  SELECT v, cx, cy,
-        |         sum(cx) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lx,
-        |         sum(cy) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ly,
-        |         sum(cx) OVER () AS nx, sum(cy) OVER () AS ny,
-        |         lead(v) OVER (ORDER BY v) - v AS gap
-        |  FROM grid),
-        |s AS (
-        |  SELECT CAST(max(nx) AS BIGINT) AS n_x, CAST(max(ny) AS BIGINT) AS n_y,
-        |         CAST(sum(gap * lx * (nx - lx)) AS BIGINT) AS s_xx,
-        |         CAST(sum(gap * ly * (ny - ly)) AS BIGINT) AS s_yy,
-        |         CAST(sum(gap * (lx + ly) * (nx + ny - lx - ly)) AS BIGINT) AS s_comb
-        |  FROM c WHERE gap IS NOT NULL)
-        |SELECT n_x, n_y, s_xx, s_yy, s_comb - s_xx - s_yy AS s_xy,
-        |       round(CAST(s_comb - s_xx - s_yy AS DOUBLE) / (n_x * n_y), 6) AS e_xy,
-        |       round(2.0 * s_xx / (n_x * n_x), 6) AS e_xx,
-        |       round(2.0 * s_yy / (n_y * n_y), 6) AS e_yy,
-        |       round(2.0 * (s_comb - s_xx - s_yy) / (n_x * n_y)
-        |             - 2.0 * s_xx / (n_x * n_x)
-        |             - 2.0 * s_yy / (n_y * n_y), 6) AS d2
-        |FROM s""".stripMargin,
-
-    // integer micro-weights then pure-integer largest-remainder rounding
-    "q241_neyman_alloc" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(n_chars) AS BIGINT) AS sx,
-        |                  CAST(sum(n_chars * n_chars) AS BIGINT) AS sxx
-        |           FROM documents GROUP BY 1),
-        |w AS (SELECT source, n,
-        |             CAST(round(n * (CASE WHEN n > 1
-        |                 THEN sqrt((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n)
-        |                           / (n - 1))
-        |                 ELSE 0.0 END) * 1e6, 0) AS BIGINT) AS w_int
-        |      FROM g),
-        |t AS (SELECT CAST(sum(w_int) AS BIGINT) AS w_tot FROM w),
-        |q AS (SELECT source, n, w_int,
-        |             CAST(CASE WHEN w_tot > 0 THEN (100 * w_int) // w_tot END AS BIGINT) AS floor_alloc,
-        |             CAST(CASE WHEN w_tot > 0 THEN (100 * w_int) % w_tot END AS BIGINT) AS rem
-        |      FROM w, t),
-        |r AS (SELECT *, CAST(row_number() OVER (ORDER BY rem DESC, source) AS BIGINT) AS rrank,
-        |             CAST(100 - sum(floor_alloc) OVER () AS BIGINT) AS leftover
-        |      FROM q)
-        |SELECT source, n, w_int, floor_alloc, rem,
-        |       CAST(floor_alloc + CASE WHEN rrank <= leftover THEN 1 ELSE 0 END AS BIGINT) AS n_alloc
-        |FROM r ORDER BY source""".stripMargin,
-
-    // per-feature 2x2 integer cells; all entropy terms in fixed order
-    "q242_info_gain" ->
-      """WITH f AS (
-        |  SELECT 'the_rule' AS feature, contains(lower(text), ' the ') AS f, (lang = 'en') AS y FROM documents
-        |  UNION ALL
-        |  SELECT 'ascii_rule', length(regexp_replace(text, '[^\x00-\x7F]', '', 'g')) * 20 >= length(text) * 19, (lang = 'en') FROM documents
-        |  UNION ALL
-        |  SELECT 'len800', n_chars >= 800, (lang = 'en') FROM documents
-        |  UNION ALL
-        |  SELECT 'http_rule', contains(text, 'http'), (lang = 'en') FROM documents
-        |  UNION ALL
-        |  SELECT 'de_rule', contains(lower(text), ' de '), (lang = 'en') FROM documents),
-        |cc AS (SELECT feature,
-        |              CAST(sum(CASE WHEN f AND y THEN 1 ELSE 0 END) AS BIGINT) AS a,
-        |              CAST(sum(CASE WHEN f AND NOT y THEN 1 ELSE 0 END) AS BIGINT) AS b,
-        |              CAST(sum(CASE WHEN NOT f AND y THEN 1 ELSE 0 END) AS BIGINT) AS c,
-        |              CAST(sum(CASE WHEN NOT f AND NOT y THEN 1 ELSE 0 END) AS BIGINT) AS d
-        |       FROM f GROUP BY 1),
-        |e AS (SELECT *, a + b + c + d AS n, a + b AS nf, c + d AS nn FROM cc),
-        |h AS (SELECT *,
-        |        CASE WHEN a + c > 0 THEN -(CAST(a + c AS DOUBLE) / n) * ln(CAST(a + c AS DOUBLE) / n) ELSE 0.0 END
-        |      + CASE WHEN b + d > 0 THEN -(CAST(b + d AS DOUBLE) / n) * ln(CAST(b + d AS DOUBLE) / n) ELSE 0.0 END AS hy,
-        |        CASE WHEN nf > 0 THEN (CAST(nf AS DOUBLE) / n)
-        |          * (CASE WHEN a > 0 THEN -(CAST(a AS DOUBLE) / nf) * ln(CAST(a AS DOUBLE) / nf) ELSE 0.0 END
-        |           + CASE WHEN b > 0 THEN -(CAST(b AS DOUBLE) / nf) * ln(CAST(b AS DOUBLE) / nf) ELSE 0.0 END)
-        |          ELSE 0.0 END
-        |      + CASE WHEN nn > 0 THEN (CAST(nn AS DOUBLE) / n)
-        |          * (CASE WHEN c > 0 THEN -(CAST(c AS DOUBLE) / nn) * ln(CAST(c AS DOUBLE) / nn) ELSE 0.0 END
-        |           + CASE WHEN d > 0 THEN -(CAST(d AS DOUBLE) / nn) * ln(CAST(d AS DOUBLE) / nn) ELSE 0.0 END)
-        |          ELSE 0.0 END AS hcond
-        |      FROM e)
-        |SELECT feature, a, b, c, d, round(hy, 6) AS h_label,
-        |       round(hy - hcond, 6) AS info_gain
-        |FROM h ORDER BY feature""".stripMargin,
-
-    "q243_jackknife_source" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_h,
-        |                  CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS k_h
-        |           FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_h) AS BIGINT) AS nn, CAST(sum(k_h) AS BIGINT) AS kk FROM g)
-        |SELECT source, n_h, k_h,
-        |       round(CAST(kk AS DOUBLE) / nn, 6) AS theta,
-        |       CASE WHEN nn > n_h THEN round(CAST(kk - k_h AS DOUBLE) / (nn - n_h), 6) END AS theta_del,
-        |       CASE WHEN nn > n_h THEN round(CAST(kk AS DOUBLE) / nn
-        |                                     - CAST(kk - k_h AS DOUBLE) / (nn - n_h), 6) END AS influence
-        |FROM g, t ORDER BY source""".stripMargin,
-
-    // six integer sums; rho2 squared in the double domain (the gate's
-    // overflow guard), identical products -> identical doubles
-    "q244_cuped" ->
-      """WITH b AS (SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid FROM events),
-        |u AS (SELECT user_id,
-        |             CAST(sum(CASE WHEN epoch_us(ts) < mid THEN 1 ELSE 0 END) AS BIGINT) AS x,
-        |             CAST(sum(CASE WHEN epoch_us(ts) >= mid THEN 1 ELSE 0 END) AS BIGINT) AS y
-        |      FROM events, b GROUP BY 1),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |             CAST(sum(x * y) AS BIGINT) AS sxy,
-        |             CAST(sum(x * x) AS BIGINT) AS sxx,
-        |             CAST(sum(y * y) AS BIGINT) AS syy
-        |      FROM u)
-        |SELECT n, sx, sy, sxy, sxx, syy,
-        |       CASE WHEN n * sxx - sx * sx > 0
-        |            THEN round(CAST(n * sxy - sx * sy AS DOUBLE) / (n * sxx - sx * sx), 6) END AS theta,
-        |       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-        |            THEN round(CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE)
-        |                       / (CAST(n * sxx - sx * sx AS DOUBLE) * CAST(n * syy - sy * sy AS DOUBLE)), 6)
-        |            END AS rho2
-        |FROM s""".stripMargin,
-
-    // the A-S tail both ways (Φ via 1−SF / SF with abs: bit-equal to the
-    // gate's sign-flip form); z quantiles as shared decimal literals
-    "q245_power_calc" ->
-      """WITH e AS (SELECT user_id % 2 AS grp,
-        |                  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS hit
-        |           FROM events),
-        |g AS (SELECT CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |             CAST(sum(CASE WHEN grp = 0 AND hit = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-        |             CAST(sum(CASE WHEN grp <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |             CAST(sum(CASE WHEN grp <> 0 AND hit = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k2
-        |      FROM e),
-        |x AS (SELECT *, CAST(k1 AS DOUBLE) / n1 AS p1d, CAST(k2 AS DOUBLE) / n2 AS p2d FROM g),
-        |y AS (SELECT *, sqrt(p1d * (1.0 - p1d) / n1 + p2d * (1.0 - p2d) / n2) AS se FROM x),
-        |z AS (SELECT *, abs(p1d - p2d) / se - 1.959963984540054 AS t1,
-        |             -(abs(p1d - p2d) / se) - 1.959963984540054 AS t2
-        |      FROM y),
-        |w AS (SELECT *, 1.0 / (1.0 + 0.2316419 * abs(t1)) AS u1,
-        |             1.0 / (1.0 + 0.2316419 * abs(t2)) AS u2
-        |      FROM z),
-        |v AS (SELECT *,
-        |        exp(-t1 * t1 / 2.0) / 2.5066282746310002
-        |          * (u1 * (0.319381530 + u1 * (-0.356563782 + u1 * (1.781477937
-        |             + u1 * (-1.821255978 + u1 * 1.330274429))))) AS sf1,
-        |        exp(-t2 * t2 / 2.0) / 2.5066282746310002
-        |          * (u2 * (0.319381530 + u2 * (-0.356563782 + u2 * (1.781477937
-        |             + u2 * (-1.821255978 + u2 * 1.330274429))))) AS sf2
-        |      FROM w)
-        |SELECT n1, k1, n2, k2, round(p1d, 6) AS p1, round(p2d, 6) AS p2,
-        |       round(se, 6) AS se,
-        |       CASE WHEN se > 0 THEN
-        |         round((CASE WHEN t1 >= 0 THEN 1.0 - sf1 ELSE sf1 END)
-        |               + (CASE WHEN t2 >= 0 THEN 1.0 - sf2 ELSE sf2 END), 6) END AS power,
-        |       CASE WHEN se > 0 THEN
-        |         round((1.959963984540054 + 0.8416212335729143) * se, 6) END AS mde80
-        |FROM v""".stripMargin,
 
     // MI terms in the same in-row order as the gate: a, b, c, d
     "q247_feature_mi" ->
@@ -2629,93 +1893,6 @@ object AnalyticsQueries {
         |  + CASE WHEN c > 0 THEN (CAST(c AS DOUBLE) / n) * ln(CAST(c AS DOUBLE) * n / ((c + d) * (a + c))) ELSE 0.0 END
         |  + CASE WHEN d > 0 THEN (CAST(d AS DOUBLE) / n) * ln(CAST(d AS DOUBLE) * n / ((c + d) * (b + d))) ELSE 0.0 END, 6) AS mi
         |FROM e ORDER BY fa, fb""".stripMargin,
-
-    // same grid as q239; GT/LT/tie counts integer, one division
-    "q248_cliffs_delta" ->
-      """WITH grid AS (
-        |  SELECT n_chars AS v,
-        |         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS cx,
-        |         CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS BIGINT) AS cy
-        |  FROM documents GROUP BY 1),
-        |c AS (
-        |  SELECT v, cx, cy,
-        |         sum(cx) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lx,
-        |         sum(cx) OVER () AS nx, sum(cy) OVER () AS ny
-        |  FROM grid)
-        |SELECT CAST(max(nx) AS BIGINT) AS n_x, CAST(max(ny) AS BIGINT) AS n_y,
-        |       CAST(sum(cy * (nx - lx)) AS BIGINT) AS gt,
-        |       CAST(sum(cy * (lx - cx)) AS BIGINT) AS lt,
-        |       CAST(sum(cy * cx) AS BIGINT) AS ties,
-        |       round(CAST(sum(cy * (nx - lx)) - sum(cy * (lx - cx)) AS DOUBLE)
-        |             / (max(nx) * max(ny)), 6) AS delta
-        |FROM c""".stripMargin,
-
-    // both one-sided A-S tails; signed SF via the sign-split (1-SF(-z)
-    // below zero); equivalence decided on the rounded p
-    "q249_tost" ->
-      """WITH e AS (SELECT user_id % 2 AS grp,
-        |                  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS hit
-        |           FROM events),
-        |g AS (SELECT CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |             CAST(sum(CASE WHEN grp = 0 AND hit = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-        |             CAST(sum(CASE WHEN grp <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |             CAST(sum(CASE WHEN grp <> 0 AND hit = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k2
-        |      FROM e),
-        |x AS (SELECT *, CAST(k1 AS DOUBLE) / n1 - CAST(k2 AS DOUBLE) / n2 AS d,
-        |             sqrt((CAST(k1 AS DOUBLE) / n1) * (1.0 - CAST(k1 AS DOUBLE) / n1) / n1
-        |                  + (CAST(k2 AS DOUBLE) / n2) * (1.0 - CAST(k2 AS DOUBLE) / n2) / n2) AS se
-        |      FROM g),
-        |z AS (SELECT *, (d + 0.02) / se AS z1, (0.02 - d) / se AS z2 FROM x),
-        |w AS (SELECT *, 1.0 / (1.0 + 0.2316419 * abs(z1)) AS u1,
-        |             1.0 / (1.0 + 0.2316419 * abs(z2)) AS u2
-        |      FROM z),
-        |v AS (SELECT *,
-        |        exp(-z1 * z1 / 2.0) / 2.5066282746310002
-        |          * (u1 * (0.319381530 + u1 * (-0.356563782 + u1 * (1.781477937
-        |             + u1 * (-1.821255978 + u1 * 1.330274429))))) AS sf1,
-        |        exp(-z2 * z2 / 2.0) / 2.5066282746310002
-        |          * (u2 * (0.319381530 + u2 * (-0.356563782 + u2 * (1.781477937
-        |             + u2 * (-1.821255978 + u2 * 1.330274429))))) AS sf2
-        |      FROM w),
-        |q AS (SELECT *,
-        |        CASE WHEN se > 0 THEN
-        |          round(greatest(CASE WHEN z1 >= 0 THEN sf1 ELSE 1.0 - sf1 END,
-        |                         CASE WHEN z2 >= 0 THEN sf2 ELSE 1.0 - sf2 END), 6) END AS p_tost
-        |      FROM v)
-        |SELECT n1, k1, n2, k2, round(d, 6) AS d, round(se, 6) AS se,
-        |       p_tost, p_tost <= 0.05 AS equivalent
-        |FROM q""".stripMargin,
-
-    // the q224 family with the step-down cut alpha/(m-i+1); rejection
-    // runs to the first failure
-    "q250_holm" ->
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |           FROM documents GROUP BY 1),
-        |t AS (SELECT sum(n) AS nn, sum(k) AS kk FROM g),
-        |z AS (
-        |  SELECT source, n, k,
-        |         CASE WHEN kk > 0 AND kk < nn AND nn - n > 0 THEN
-        |           (CAST(k AS DOUBLE) / n - CAST(kk - k AS DOUBLE) / (nn - n))
-        |             / sqrt((CAST(kk AS DOUBLE) / nn) * (1.0 - CAST(kk AS DOUBLE) / nn)
-        |                    * (1.0 / n + 1.0 / (nn - n))) END AS z
-        |  FROM g, t),
-        |p AS (
-        |  SELECT source, n, k, z,
-        |         coalesce(round(2.0 * (exp(-abs(z) * abs(z) / 2.0) / 2.5066282746310002
-        |           * (tt * (0.319381530 + tt * (-0.356563782 + tt * (1.781477937
-        |              + tt * (-1.821255978 + tt * 1.330274429)))))), 6), 1.0) AS p
-        |  FROM (SELECT *, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM z)),
-        |r AS (SELECT *, CAST(row_number() OVER (ORDER BY p, source) AS BIGINT) AS i,
-        |             CAST(count(*) OVER () AS BIGINT) AS m
-        |      FROM p),
-        |c AS (SELECT *, round(0.05 / (m - i + 1), 6) AS holm_cut,
-        |             p <= round(0.05 / (m - i + 1), 6) AS under
-        |      FROM r),
-        |kf AS (SELECT min(CASE WHEN NOT under THEN i END) AS kfail FROM c)
-        |SELECT source, n, k, round(z, 4) AS z, p, i AS p_rank, holm_cut,
-        |       (kfail IS NULL OR i < kfail) AS rejected
-        |FROM c, kf ORDER BY source""".stripMargin,
 
     "q251_hhi" ->
       """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_h FROM documents GROUP BY 1),
@@ -2844,41 +2021,6 @@ object AnalyticsQueries {
         |       round((s_between_raw - CAST(sx_all AS DOUBLE) * sx_all / nn)
         |             / (sxx_all - CAST(sx_all AS DOUBLE) * sx_all / nn), 6) AS eta_sq
         |FROM fin""".stripMargin,
-
-    // the q224 family under the BY harmonic correction; c(m) accumulates
-    // on the ordered rank window
-    "q268_by_fdr" ->
-      """WITH g AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT sum(n) AS nn, sum(k) AS kk FROM g),
-        |z AS (
-        |  SELECT source, n, k,
-        |         CASE WHEN kk > 0 AND kk < nn AND nn - n > 0 THEN
-        |           (CAST(k AS DOUBLE) / n - CAST(kk - k AS DOUBLE) / (nn - n))
-        |             / sqrt((CAST(kk AS DOUBLE) / nn) * (1.0 - CAST(kk AS DOUBLE) / nn)
-        |                    * (1.0 / n + 1.0 / (nn - n))) END AS z
-        |  FROM g, t),
-        |p AS (
-        |  SELECT source, n, k, z,
-        |         coalesce(round(2.0 * (exp(-abs(z) * abs(z) / 2.0) / 2.5066282746310002
-        |           * (tt * (0.319381530 + tt * (-0.356563782 + tt * (1.781477937
-        |              + tt * (-1.821255978 + tt * 1.330274429)))))), 6), 1.0) AS p
-        |  FROM (SELECT *, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM z)),
-        |r AS (SELECT *, CAST(row_number() OVER (ORDER BY p, source) AS BIGINT) AS i,
-        |             CAST(count(*) OVER () AS BIGINT) AS m
-        |      FROM p),
-        |h AS (SELECT *, sum(1.0 / i) OVER (ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS h_i FROM r),
-        |h2 AS (SELECT *, max(h_i) OVER () AS c_m FROM h),
-        |c AS (SELECT *, round(i * 0.05 / (m * c_m), 6) AS by_cut,
-        |             p <= round(i * 0.05 / (m * c_m), 6) AS under
-        |      FROM h2),
-        |km AS (SELECT max(CASE WHEN under THEN i END) AS kmax FROM c)
-        |SELECT source, n, k, round(z, 4) AS z, p, i AS p_rank,
-        |       round(c_m, 6) AS c_m, by_cut,
-        |       (kmax IS NOT NULL AND i <= kmax) AS rejected
-        |FROM c, km ORDER BY source""".stripMargin,
 
     // DuckDB dayofweek is 0-based; Spark 1-based — shift (the q256 rule).
     // a·d/n and b·c/n terms fold on the ordered stratum window.
@@ -3033,30 +2175,6 @@ object AnalyticsQueries {
         |               / (CAST(r1 - a_obs AS DOUBLE) * (c1 - a_obs)), 6) END AS odds_ratio
         |FROM fin""".stripMargin,
 
-    // dense (user,day)×condition grid; every sufficient statistic is an
-    // exact integer sum — no float fold anywhere
-    "q276_cochran_q" ->
-      """WITH ev AS (SELECT user_id * 100000 + (CAST(ts AS DATE) - DATE '1970-01-01') AS subj,
-        |                   event_type
-        |            FROM events),
-        |subjects AS (SELECT DISTINCT subj FROM ev),
-        |conds AS (SELECT unnest(['click', 'purchase', 'error']) AS cond),
-        |grid AS (SELECT subj, cond FROM subjects CROSS JOIN conds),
-        |hits AS (SELECT DISTINCT subj, event_type AS cond, 1 AS h FROM ev
-        |         WHERE event_type IN ('click', 'purchase', 'error')),
-        |d AS (SELECT g.subj AS u, g.cond AS c, coalesce(h.h, 0) AS h
-        |      FROM grid g LEFT JOIN hits h ON g.subj = h.subj AND g.cond = h.cond),
-        |ct AS (SELECT c, sum(h) AS t FROM d GROUP BY c),
-        |ctt AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(t) AS BIGINT) AS st,
-        |               CAST(sum(t * t) AS BIGINT) AS stt FROM ct),
-        |rt AS (SELECT u, sum(h) AS r FROM d GROUP BY u),
-        |rtt AS (SELECT CAST(count(*) AS BIGINT) AS n_subjects, CAST(sum(r) AS BIGINT) AS sr,
-        |               CAST(sum(r * r) AS BIGINT) AS srr FROM rt)
-        |SELECT k, n_subjects, k - 1 AS dof,
-        |       CASE WHEN k * sr - srr > 0 THEN
-        |         round(CAST((k - 1) * (k * stt - st * st) AS DOUBLE) / (k * sr - srr), 6) END AS q_stat
-        |FROM ctt, rtt""".stripMargin,
-
     // the q210 cell grid and pair join; four tie-treatment ratios at the
     // edge, each sign-pinned with + 0.0
     "q277_ordinal_assoc" ->
@@ -3095,91 +2213,6 @@ object AnalyticsQueries {
         |         round(2.0 * least(rx, ry) * s
         |               / (CAST(n AS DOUBLE) * n * (least(rx, ry) - 1)), 6) + 0.0 END AS tau_c
         |FROM j ORDER BY source""".stripMargin,
-
-    // the q240 rater panel with an abstaining third rater; D_o regrouped
-    // on the bounded distinct-m grid, D_e numerator pure integer
-    "q278_krippendorff" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |         (CASE WHEN contains(lower(text), ' the ') THEN 1 ELSE 0 END
-        |          + CASE WHEN length(regexp_replace(text, '[^\x00-\x7F]', '', 'g')) * 20
-        |                      >= length(text) * 19 THEN 1 ELSE 0 END
-        |          + CASE WHEN n_chars >= 400 AND n_chars >= 800 THEN 1 ELSE 0 END)::BIGINT AS en_cnt,
-        |         (2 + CASE WHEN n_chars >= 400 THEN 1 ELSE 0 END)::BIGINT AS m
-        |  FROM documents),
-        |counts AS (
-        |  SELECT doc_id, 'en' AS cat, en_cnt AS cnt, m FROM r
-        |  UNION ALL
-        |  SELECT doc_id, 'other' AS cat, m - en_cnt AS cnt, m FROM r),
-        |perm AS (SELECT m AS m_i, sum(cnt * (m - cnt)) AS s_m FROM counts GROUP BY 1),
-        |don AS (SELECT acc AS do_num FROM (
-        |          SELECT m_i, sum(CAST(s_m AS DOUBLE) / (m_i - 1))
-        |                        OVER (ORDER BY m_i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS acc
-        |          FROM perm) ORDER BY m_i DESC LIMIT 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_items, CAST(sum(m) AS BIGINT) AS n_tot FROM r),
-        |de AS (SELECT CAST(sum(n_c * (n_tot - n_c)) AS BIGINT) AS de_num
-        |       FROM (SELECT cat, sum(cnt) AS n_c FROM counts GROUP BY 1), tot)
-        |SELECT n_items, n_tot,
-        |       CASE WHEN de_num > 0 THEN
-        |         round(1.0 - do_num * (n_tot - 1) / de_num, 6) + 0.0 END AS alpha
-        |FROM tot, don, de""".stripMargin,
-
-    // integer Σxy/Σx sums from the day+lag equi-join; every cross-term
-    // cast to double BEFORE multiplying, identically on both engines
-    "q279_acf" ->
-      """WITH g AS (SELECT CAST(ts AS DATE) - DATE '1970-01-01' AS day,
-        |                  CAST(count(*) AS BIGINT) AS x
-        |           FROM events GROUP BY 1),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
-        |             CAST(sum(x * x) AS BIGINT) AS sxx FROM g),
-        |lags AS (SELECT unnest(generate_series(1, 7)) AS lag),
-        |p AS (SELECT l.lag, CAST(count(*) AS BIGINT) AS np,
-        |             CAST(sum(a.x * b.x) AS BIGINT) AS sxy,
-        |             CAST(sum(a.x) AS BIGINT) AS s1, CAST(sum(b.x) AS BIGINT) AS s2
-        |      FROM lags l CROSS JOIN g a JOIN g b ON b.day = a.day + l.lag
-        |      GROUP BY l.lag)
-        |SELECT CAST(lag AS BIGINT) AS lag, np AS n_pairs,
-        |       CASE WHEN CAST(sxx AS DOUBLE) * n * n - CAST(sx AS DOUBLE) * sx * n > 0 THEN
-        |         round((CAST(sxy AS DOUBLE) * n * n
-        |                - CAST(sx AS DOUBLE) * n * (s1 + s2)
-        |                + CAST(np AS DOUBLE) * sx * sx)
-        |               / (CAST(sxx AS DOUBLE) * n * n - CAST(sx AS DOUBLE) * sx * n), 6)
-        |           + 0.0 END AS r
-        |FROM p, t ORDER BY lag""".stripMargin,
-
-    // the q279 r_l, ROUNDED, squared on the ordered bounded lag grid;
-    // chi2(7, .95) literal shared with the gate
-    "q280_ljung_box" ->
-      """WITH g AS (SELECT CAST(ts AS DATE) - DATE '1970-01-01' AS day,
-        |                  CAST(count(*) AS BIGINT) AS x
-        |           FROM events GROUP BY 1),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
-        |             CAST(sum(x * x) AS BIGINT) AS sxx FROM g),
-        |lags AS (SELECT unnest(generate_series(1, 7)) AS lag),
-        |p AS (SELECT l.lag, CAST(count(*) AS BIGINT) AS np,
-        |             CAST(sum(a.x * b.x) AS BIGINT) AS sxy,
-        |             CAST(sum(a.x) AS BIGINT) AS s1, CAST(sum(b.x) AS BIGINT) AS s2
-        |      FROM lags l CROSS JOIN g a JOIN g b ON b.day = a.day + l.lag
-        |      GROUP BY l.lag),
-        |rr AS (SELECT lag,
-        |              CASE WHEN CAST(sxx AS DOUBLE) * n * n - CAST(sx AS DOUBLE) * sx * n > 0 THEN
-        |                round((CAST(sxy AS DOUBLE) * n * n
-        |                       - CAST(sx AS DOUBLE) * n * (s1 + s2)
-        |                       + CAST(np AS DOUBLE) * sx * sx)
-        |                      / (CAST(sxx AS DOUBLE) * n * n - CAST(sx AS DOUBLE) * sx * n), 6)
-        |                  + 0.0 END AS r,
-        |              n
-        |       FROM p, t),
-        |acc AS (SELECT lag, n,
-        |               sum(r * r / (n - lag))
-        |                 OVER (ORDER BY lag ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS qacc
-        |        FROM rr),
-        |fin AS (SELECT * FROM acc ORDER BY lag DESC LIMIT 1)
-        |SELECT n, CAST(lag AS BIGINT) AS max_lag,
-        |       round(CAST(n AS DOUBLE) * (n + 2) * qacc, 6) AS q_lb,
-        |       14.06714 AS crit,
-        |       round(CAST(n AS DOUBLE) * (n + 2) * qacc, 6) > 14.06714 AS reject_white_noise
-        |FROM fin""".stripMargin,
 
     // global type-7 median flag, then the q201 densified chi2 grid
     "q284_mood_median" ->
@@ -3233,58 +2266,6 @@ object AnalyticsQueries {
         |            WHEN z < -1.959964 THEN 'decreasing'
         |            WHEN z IS NOT NULL THEN 'no_trend' END AS trend
         |FROM z""".stripMargin,
-
-    // above/below the global median, one lag pass on the ordered day
-    // grid; exact integer null-moment pieces
-    "q286_runs_test" ->
-      """WITH g AS (SELECT CAST(ts AS DATE) - DATE '1970-01-01' AS day,
-        |                  CAST(count(*) AS BIGINT) AS x
-        |           FROM events GROUP BY 1),
-        |med AS (SELECT quantile_cont(x, 0.5) AS median FROM g),
-        |signed AS (SELECT day, CASE WHEN x > median THEN 1
-        |                            WHEN x < median THEN -1 ELSE 0 END AS s
-        |           FROM g, med),
-        |nz AS (SELECT day, s FROM signed WHERE s <> 0),
-        |runs AS (SELECT CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |                CAST(sum(CASE WHEN s = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |                CAST(sum(CASE WHEN prev IS NULL OR prev <> s THEN 1 ELSE 0 END) AS BIGINT) AS r
-        |         FROM (SELECT s, lag(s) OVER (ORDER BY day) AS prev FROM nz)),
-        |rep AS (SELECT n1, n2, r, median, n1 + n2 AS m,
-        |               2 * n1 * n2 * (2 * n1 * n2 - n1 - n2) AS var_num,
-        |               (n1 + n2) * (n1 + n2) * (n1 + n2 - 1) AS var_den
-        |        FROM runs, med)
-        |SELECT n1, n2, r, median,
-        |       CASE WHEN m > 0 THEN round(1.0 + 2.0 * n1 * n2 / m, 6) END AS e_r,
-        |       CASE WHEN var_num > 0 THEN
-        |         round((r - (1.0 + 2.0 * n1 * n2 / m))
-        |               / sqrt(CAST(var_num AS DOUBLE) / var_den), 6) + 0.0 END AS z
-        |FROM rep""".stripMargin,
-
-    // dense user×condition grid; within-user midranks from the bounded
-    // k² pair comparison (2L exact integer); closed-form null moments
-    "q287_page_trend" ->
-      """WITH conds AS (SELECT * FROM (VALUES ('view', 1), ('click', 2), ('purchase', 3)) AS t(cond, c)),
-        |users AS (SELECT DISTINCT user_id FROM events),
-        |grid AS (SELECT user_id, cond, c FROM users CROSS JOIN conds),
-        |counts AS (SELECT user_id, event_type AS cond, CAST(count(*) AS BIGINT) AS v
-        |           FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        |           GROUP BY 1, 2),
-        |d AS (SELECT g.user_id AS u, CAST(g.c AS BIGINT) AS c, coalesce(ct.v, 0) AS v
-        |      FROM grid g LEFT JOIN counts ct ON g.user_id = ct.user_id AND g.cond = ct.cond),
-        |r2 AS (SELECT a.u, a.c,
-        |              2 + 2 * sum(CASE WHEN b.v < a.v THEN 1 ELSE 0 END)
-        |                + sum(CASE WHEN b.v = a.v THEN 1 ELSE 0 END) AS r2
-        |       FROM d a JOIN d b ON a.u = b.u AND a.c <> b.c
-        |       GROUP BY a.u, a.c),
-        |sums AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS n, CAST(max(c) AS BIGINT) AS k,
-        |                CAST(sum(c * r2) AS BIGINT) AS l2 FROM r2)
-        |SELECT n AS n_subjects, k, CAST(l2 AS DOUBLE) / 2.0 AS l,
-        |       CASE WHEN n > 0 AND k > 1 THEN
-        |         round((CAST(l2 AS DOUBLE) / 2.0
-        |                - CAST(n AS DOUBLE) * k * (k + 1) * (k + 1) / 4.0)
-        |               / sqrt(CAST(n AS DOUBLE) * k * k * (k + 1) * (k * k - 1) / 144.0), 6)
-        |           + 0.0 END AS z
-        |FROM sums""".stripMargin,
 
     // the q183 symmetric graph; shared-neighbor candidates, anti-join
     // against existing edges, AA fold on the bounded degree grid
@@ -3371,82 +2352,6 @@ object AnalyticsQueries {
         |         round(1.0 - CAST(dn.n AS DOUBLE) * sd / dnm, 6) + 0.0 END AS xi
         |FROM dn JOIN sd USING (g) ORDER BY source""".stripMargin,
 
-    // per-rater midrank grids; all cross-group sums exact ¼-multiples
-    "q291_kendall_w" ->
-      """WITH m AS (SELECT source,
-        |             CAST(sum(n_chars) AS BIGINT) AS va,
-        |             CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-        |                 t -> len(t) > 0))) AS BIGINT) AS vb,
-        |             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS vc
-        |           FROM documents GROUP BY 1),
-        |d AS (SELECT 'chars' AS rater, source AS item, va AS v FROM m
-        |      UNION ALL SELECT 'tokens', source, vb FROM m
-        |      UNION ALL SELECT 'enshare', source, vc FROM m),
-        |cells AS (SELECT rater, v, count(*) AS t FROM d GROUP BY 1, 2),
-        |ranks AS (SELECT rater, v, CAST(cum - t AS DOUBLE) + CAST(t + 1 AS DOUBLE) / 2.0 AS r
-        |          FROM (SELECT rater, v, t,
-        |                       sum(t) OVER (PARTITION BY rater ORDER BY v
-        |                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |                FROM cells)),
-        |pi AS (SELECT item, sum(r) AS ri, count(*) AS mm
-        |       FROM d JOIN ranks USING (rater, v) GROUP BY item),
-        |ties AS (SELECT CAST(sum(t * t * t - t) AS BIGINT) AS tsum FROM cells),
-        |sums AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(max(mm) AS BIGINT) AS m,
-        |                sum(ri * ri) AS srr, sum(ri) AS sr FROM pi)
-        |SELECT m, n,
-        |       CASE WHEN n > 1 AND CAST(m AS DOUBLE) * m * (n * n * n - n) - m * tsum > 0 THEN
-        |         round(12.0 * (srr - sr * sr / n)
-        |               / (CAST(m AS DOUBLE) * m * (n * n * n - n) - m * tsum), 6) END AS w,
-        |       CASE WHEN n > 1 AND CAST(m AS DOUBLE) * m * (n * n * n - n) - m * tsum > 0 THEN
-        |         round(m * (n - 1) * (12.0 * (srr - sr * sr / n)
-        |               / (CAST(m AS DOUBLE) * m * (n * n * n - n) - m * tsum)), 6) END AS chi2
-        |FROM sums, ties""".stripMargin,
-
-    // within-subject midrank grids; the q265 tie-factor pattern
-    "q292_friedman" ->
-      """WITH conds AS (SELECT unnest(['view', 'click', 'purchase']) AS cond),
-        |users AS (SELECT DISTINCT user_id FROM events),
-        |grid AS (SELECT user_id, cond FROM users CROSS JOIN conds),
-        |counts AS (SELECT user_id, event_type AS cond, CAST(count(*) AS BIGINT) AS v
-        |           FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        |           GROUP BY 1, 2),
-        |d AS (SELECT g.user_id AS u, g.cond AS c, coalesce(ct.v, 0) AS v
-        |      FROM grid g LEFT JOIN counts ct ON g.user_id = ct.user_id AND g.cond = ct.cond),
-        |cells AS (SELECT u, v, count(*) AS t FROM d GROUP BY 1, 2),
-        |ranks AS (SELECT u, v, CAST(cum - t AS DOUBLE) + CAST(t + 1 AS DOUBLE) / 2.0 AS r
-        |          FROM (SELECT u, v, t,
-        |                       sum(t) OVER (PARTITION BY u ORDER BY v
-        |                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |                FROM cells)),
-        |pc AS (SELECT c, sum(r) AS rj, count(*) AS n
-        |       FROM d JOIN ranks USING (u, v) GROUP BY c),
-        |ties AS (SELECT CAST(sum(t * t * t - t) AS BIGINT) AS tsum FROM cells),
-        |sums AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(max(n) AS BIGINT) AS n,
-        |                sum(rj * rj) AS srr FROM pc)
-        |SELECT n, k,
-        |       round(12.0 / (n * k * (k + 1)) * srr - 3.0 * n * (k + 1), 6) AS chi2_f,
-        |       CASE WHEN 1.0 - CAST(tsum AS DOUBLE) / (n * k * (k * k * k - k)) > 0 THEN
-        |         round((12.0 / (n * k * (k + 1)) * srr - 3.0 * n * (k + 1))
-        |               / (1.0 - CAST(tsum AS DOUBLE) / (n * k * (k * k * k - k))), 6)
-        |       END AS chi2_f_tie
-        |FROM sums, ties""".stripMargin,
-
-    // demeaning cancels inside the difference — all integers
-    "q293_durbin_watson" ->
-      """WITH g AS (SELECT CAST(ts AS DATE) - DATE '1970-01-01' AS day,
-        |                  CAST(count(*) AS BIGINT) AS x
-        |           FROM events GROUP BY 1),
-        |l AS (SELECT x, x - lag(x) OVER (ORDER BY day) AS dx FROM g),
-        |sums AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
-        |                CAST(sum(x * x) AS BIGINT) AS sxx,
-        |                CAST(sum(dx * dx) AS BIGINT) AS sdd
-        |         FROM l)
-        |SELECT n, sdd AS sum_sq_diff,
-        |       CASE WHEN CAST(sxx AS DOUBLE) * n - CAST(sx AS DOUBLE) * sx > 0 THEN
-        |         round(CAST(sdd AS DOUBLE) * n
-        |               / (CAST(sxx AS DOUBLE) * n - CAST(sx AS DOUBLE) * sx), 6) END AS dw
-        |FROM sums""".stripMargin,
-
     // distinct-value grid per source; ln/abs folds on the ordered
     // per-slice window; perfectly equal slices sign-pinned to +0.0
     "q294_inequality" ->
@@ -3488,73 +2393,6 @@ object AnalyticsQueries {
         |       round(mean_acc / k, 6) AS mean_post,
         |       round(CAST(n AS DOUBLE) * sww / (sw * sw), 6) AS deff_kish
         |FROM fin""".stripMargin,
-
-    // fixed 512-point midpoint grid; max-centred log-weights; exclusive
-    // cross-CDF convention mirrored exactly
-    "q296_bayes_ab" ->
-      """WITH e AS (SELECT user_id % 2 AS g,
-        |                  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
-        |           FROM events),
-        |tot AS (SELECT CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |               CAST(sum(CASE WHEN g = 0 THEN y ELSE 0 END) AS BIGINT) AS k0,
-        |               CAST(sum(CASE WHEN g <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |               CAST(sum(CASE WHEN g <> 0 THEN y ELSE 0 END) AS BIGINT) AS k1
-        |        FROM e),
-        |grid AS (SELECT n0, k0, n1, k1, unnest(generate_series(1, 512)) AS j FROM tot),
-        |g2 AS (SELECT *, (CAST(j AS DOUBLE) - 0.5) / 512 AS p FROM grid),
-        |g3 AS (SELECT *, k0 * ln(p) + (n0 - k0) * ln(1.0 - p) AS lw0,
-        |              k1 * ln(p) + (n1 - k1) * ln(1.0 - p) AS lw1
-        |       FROM g2),
-        |ctr AS (SELECT max(lw0) AS m0, max(lw1) AS m1 FROM g3),
-        |g4 AS (SELECT g3.*, exp(lw0 - m0) AS w0, exp(lw1 - m1) AS w1 FROM g3, ctr),
-        |g5 AS (SELECT *, sum(w0) OVER w AS s0, sum(w1) OVER w AS s1
-        |       FROM g4 WINDOW w AS (ORDER BY j ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |acc AS (SELECT *, sum(w1 * (s0 - w0)) OVER w AS num
-        |        FROM g5 WINDOW w AS (ORDER BY j ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |fin AS (SELECT * FROM acc ORDER BY j DESC LIMIT 1)
-        |SELECT n0, k0, n1, k1,
-        |       round(CAST(k0 + 1 AS DOUBLE) / (n0 + 2), 6) AS mean0,
-        |       round(CAST(k1 + 1 AS DOUBLE) / (n1 + 2), 6) AS mean1,
-        |       round(CAST(k1 + 1 AS DOUBLE) / (n1 + 2)
-        |             - CAST(k0 + 1 AS DOUBLE) / (n0 + 2), 6) + 0.0 AS lift,
-        |       round(num / (s0 * s1), 6) AS p_beats
-        |FROM fin""".stripMargin,
-
-    // one partial agg over the bounded covariate×arm grid; closed-form
-    // SMD/ratio at the edge (DuckDB dayofweek is 0-based — shift)
-    "q297_balance_smd" ->
-      """WITH longf AS (
-        |  SELECT 'value_milli' AS cov, user_id % 2 AS g,
-        |         CAST(round(value * 1000, 0) AS BIGINT) AS v
-        |  FROM events WHERE value IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'hour', user_id % 2, CAST(extract(hour FROM ts) AS BIGINT) FROM events
-        |  UNION ALL
-        |  SELECT 'dow', user_id % 2, CAST(dayofweek(ts) + 1 AS BIGINT) FROM events),
-        |cells AS (SELECT cov,
-        |                 CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |                 CAST(sum(CASE WHEN g = 0 THEN v ELSE 0 END) AS BIGINT) AS sx0,
-        |                 CAST(sum(CASE WHEN g = 0 THEN v * v ELSE 0 END) AS BIGINT) AS sxx0,
-        |                 CAST(sum(CASE WHEN g <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |                 CAST(sum(CASE WHEN g <> 0 THEN v ELSE 0 END) AS BIGINT) AS sx1,
-        |                 CAST(sum(CASE WHEN g <> 0 THEN v * v ELSE 0 END) AS BIGINT) AS sxx1
-        |          FROM longf GROUP BY cov)
-        |SELECT cov AS covariate, n0, n1,
-        |       CASE WHEN n0 > 0 THEN round(CAST(sx0 AS DOUBLE) / n0, 6) END AS mean0,
-        |       CASE WHEN n1 > 0 THEN round(CAST(sx1 AS DOUBLE) / n1, 6) END AS mean1,
-        |       CASE WHEN n0 > 1 AND n1 > 1 AND
-        |                 ((sxx0 - CAST(sx0 AS DOUBLE) * sx0 / n0) / (n0 - 1)
-        |                  + (sxx1 - CAST(sx1 AS DOUBLE) * sx1 / n1) / (n1 - 1)) > 0 THEN
-        |         round((CAST(sx1 AS DOUBLE) / n1 - CAST(sx0 AS DOUBLE) / n0)
-        |               / sqrt(((sxx1 - CAST(sx1 AS DOUBLE) * sx1 / n1) / (n1 - 1)
-        |                       + (sxx0 - CAST(sx0 AS DOUBLE) * sx0 / n0) / (n0 - 1)) / 2.0), 6)
-        |           + 0.0 END AS smd,
-        |       CASE WHEN n0 > 1 AND n1 > 1 AND
-        |                 (sxx0 - CAST(sx0 AS DOUBLE) * sx0 / n0) / (n0 - 1) > 0 THEN
-        |         round(((sxx1 - CAST(sx1 AS DOUBLE) * sx1 / n1) / (n1 - 1))
-        |               / ((sxx0 - CAST(sx0 AS DOUBLE) * sx0 / n0) / (n0 - 1)), 6)
-        |       END AS var_ratio
-        |FROM cells ORDER BY covariate""".stripMargin,
 
     // integer 2x2 cells; RR / log-RR SE / both E's closed-form
     "q298_e_value" ->
@@ -3828,67 +2666,7 @@ object AnalyticsQueries {
         |  FROM f JOIN s ON s.key = f.key AND s.rn = f.rn + 1
         |)
         |SELECT key, t, n, admitted, rejected, tokens AS tokens_after
-        |FROM f WHERE rn >= 1 ORDER BY key, t""".stripMargin,
-
-    // the PH fold replayed with the gate's exact operation order:
-    // mean = (sx+n)/(cnt+1) with an INTEGER numerator; m' = m + (n -
-    // mean - 0.5); min m carried; PH = m - min m
-    "q252_page_hinkley" ->
-      """WITH RECURSIVE
-        |d AS (SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-        |             CAST(count(*) AS BIGINT) AS n
-        |      FROM events GROUP BY 1, 2),
-        |s AS (SELECT key, bucket, n,
-        |             row_number() OVER (PARTITION BY key ORDER BY bucket) AS rn
-        |      FROM d),
-        |f AS (
-        |  SELECT key, 0::BIGINT AS rn, 0::BIGINT AS cnt, 0::BIGINT AS sx,
-        |         CAST(0 AS DOUBLE) AS m, CAST(0 AS DOUBLE) AS minm,
-        |         0::BIGINT AS bucket, 0::BIGINT AS n
-        |  FROM (SELECT DISTINCT key FROM s)
-        |  UNION ALL
-        |  SELECT s.key, s.rn, f.cnt + 1, f.sx + s.n,
-        |         f.m + (s.n - CAST(f.sx + s.n AS DOUBLE) / (f.cnt + 1) - 0.5),
-        |         least(f.minm,
-        |               f.m + (s.n - CAST(f.sx + s.n AS DOUBLE) / (f.cnt + 1) - 0.5)),
-        |         s.bucket, s.n
-        |  FROM f JOIN s ON s.key = f.key AND s.rn = f.rn + 1
-        |)
-        |SELECT key, bucket, n, round(m, 6) AS m, round(m - minm, 6) AS ph,
-        |       round(m - minm, 6) > 20.0 AS alarm, rn AS n_seen
-        |FROM f WHERE rn >= 1 ORDER BY key, bucket""".stripMargin,
-
-    // κ from the ROUNDED P̄/P̄e (the ladder rule: round before compare)
-    "q240_fleiss_kappa" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |         (CASE WHEN contains(lower(text), ' the ') THEN 1 ELSE 0 END
-        |          + CASE WHEN length(regexp_replace(text, '[^\x00-\x7F]', '', 'g')) * 20
-        |                      >= length(text) * 19 THEN 1 ELSE 0 END
-        |          + CASE WHEN n_chars >= 800 THEN 1 ELSE 0 END)::BIGINT AS en_cnt
-        |  FROM documents),
-        |counts AS (
-        |  SELECT doc_id, 'en' AS category, en_cnt AS cnt FROM r
-        |  UNION ALL
-        |  SELECT doc_id, 'other' AS category, 3 - en_cnt AS cnt FROM r),
-        |sums AS (
-        |  SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_items,
-        |         CAST(sum(cnt * cnt) AS BIGINT) AS sq_sum
-        |  FROM counts),
-        |pc AS (
-        |  SELECT CAST(sum(cj * cj) AS BIGINT) AS cj_sq_sum
-        |  FROM (SELECT category, sum(cnt) AS cj FROM counts GROUP BY 1)),
-        |k AS (
-        |  SELECT n_items, 3::BIGINT AS raters, sq_sum, cj_sq_sum,
-        |         round(CAST(sq_sum - n_items * 3 AS DOUBLE)
-        |               / (n_items * 3 * 2), 6) AS p_bar,
-        |         round(CAST(cj_sq_sum AS DOUBLE)
-        |               / ((n_items * 3) * (n_items * 3)), 6) AS pe_bar
-        |  FROM sums, pc)
-        |SELECT n_items, raters, sq_sum, cj_sq_sum, p_bar, pe_bar,
-        |       CASE WHEN pe_bar = 1.0 THEN 0.0
-        |            ELSE round((p_bar - pe_bar) / (1.0 - pe_bar), 6) END AS kappa
-        |FROM k""".stripMargin
+        |FROM f WHERE rn >= 1 ORDER BY key, t""".stripMargin
   )
 
   /** The q215 oracle with the SPRT constants rendered from the SAME

@@ -396,4 +396,20 @@ class EngineSpec extends SparkSpec {
     assert(c.getOrElseUpdate(1)(-1) == 10) // 1 survived with its original value
     assert(c.hits == 2 && c.misses == 5)
   }
+
+  test("searchAll: every mode merges regular and chat hits into one page ranked by its own score") {
+    engine.addManualMemory("chat-add",
+      "we discussed how add returns the sum of two numbers", "chat_history")
+    val scoreCol = Map("semantic" -> "score", "keyword" -> "score",
+      "hybrid" -> "rrf_score", "diversified" -> "mmr_score")
+    scoreCol.foreach { case (mode, sc) =>
+      val rows = engine.searchAll("add two numbers", mode, limit = 3).collect()
+      assert(rows.nonEmpty && rows.length <= 3, s"$mode: ${rows.length} rows")
+      val ids = rows.map(_.getAs[String]("chunkId"))
+      assert(ids.distinct.length == ids.length, s"$mode: duplicate chunkIds ${ids.toSeq}")
+      val scores = rows.map(_.getAs[Double](sc))
+      assert(scores.toSeq == scores.toSeq.sorted(Ordering[Double].reverse),
+        s"$mode: not sorted by $sc: ${scores.toSeq}")
+    }
+  }
 }
