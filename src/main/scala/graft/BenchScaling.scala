@@ -134,18 +134,12 @@ object BenchScaling {
     "q259_mmd_rff" -> (("embeddings", 1.0, false)), // frozen RFF bank, one pass
 
     // ===== wave 5 (r11): the q260-q295 gates ≥0.6 s at sf0.1 =====
-    "q263_kaplan_meier" -> (("events", 1.0, true)), // session grid cumsums
     "q270_ndcg" -> (("embeddings", 1.0, false)), // 3 fixed probes, k=10 folds
     "q271_dedup_weights" -> (("documents", 1.5, true)), // q36 banded components; salted-docs sf1
-    "q273_log_rank" -> (("events", 1.0, true)), // sessionize + duration grid
-    "q274_nelson_aalen" -> (("events", 1.0, true)), // same grid, hazard fold
     "q277_ordinal_assoc" -> (("documents", 1.5, false)), // bounded bin-grid pair join
     "q281_zipf_slope" -> (("documents", 1.0, false)), // token agg + top-100 grid
-    "q284_mood_median" -> (("documents", 1.0, false)), // median + densified chi2 grid
-    "q301_hodges_lehmann" -> (("documents", 2.0, false)), // value-GRID product (documented quadratic-in-grid, not corpus)
 
     // ===== wave 6 (r12): close the q302-q304 audit gap (VERDICT r11 #3)
-    "q302_vargha_delaney" -> (("documents", 1.0, false)), // distinct-grid midranks, one agg
     "q303_cube" -> (("lineitem", 1.0, true)), // ONE Expand + partial agg, all 4 grouping sets
     "q304_avg_precision" -> (("documents", 1.0, false)), // score-grid integer cumsums, PR fold
     "q306_ivf_recluster" -> (("embeddings", 1.0, false)) // broadcast-k argmax passes + one mean fold

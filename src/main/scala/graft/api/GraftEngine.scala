@@ -321,12 +321,15 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     */
   def clearCollection(preserveManual: Boolean = true): Unit = {
     searchCache.clear()
-    if (!preserveManual) {
-      IndexStore.overwrite(chunks.limit(0), IndexStore.chunksPath(storeDir), Seq("chunkType"))
-    } else {
-      val manual = chunks.filter(col("filePath") === "" && col("chunkType") =!= "relation")
-      IndexStore.writeChunks(manual, storeDir)
-    }
+    val manual =
+      if (preserveManual && IndexStore.exists(storeDir))
+        Some(chunks.filter(col("filePath") === "" && col("chunkType") =!= "relation"))
+          .filterNot(_.isEmpty)
+      else None
+    // an empty partitioned write leaves a `_SUCCESS`-only directory that no
+    // read or re-index can infer a schema from: with nothing to keep, drop
+    // the chunk table so the store reads as never written
+    manual.fold(IndexStore.dropChunks(storeDir))(IndexStore.writeChunks(_, storeDir))
     // stale incremental state would make the next index diff against files
     // whose chunks were just deleted and parse nothing — drop it so the
     // next index is a full pass (manual chunks survive it: applyChanges

@@ -35,7 +35,7 @@ object Benford {
     // densify to all 9 digits: an UNOBSERVED digit still contributes its
     // full (0 − n·p)²/(n·p) = n·p to the group's χ² — dropping it
     // under-reports exactly on the truncated/fabricated distributions
-    // the audit exists to catch (the Contingency structural-zero rule)
+    // the audit exists to catch
     val digits = totals.sparkSession.range(1, 10)
       .select(col("id").cast("int").as("digit"))
     val counts = totals

@@ -165,9 +165,13 @@ object IndexStore {
     * next index diff against files whose chunks were just deleted and
     * parse nothing.
     */
-  def clearState(root: String): Unit = {
-    deleteRecursive(Paths.get(statePath(root)))
-    deleteRecursive(Paths.get(statePath(root) + "_old"))
-    deleteRecursive(Paths.get(statePath(root) + "_tmp"))
-  }
+  def clearState(root: String): Unit = dropTable(statePath(root))
+
+  /** Drop the chunk table: [[exists]] is false afterwards, as for a store
+    * that was never written.
+    */
+  def dropChunks(root: String): Unit = dropTable(chunksPath(root))
+
+  private def dropTable(path: String): Unit =
+    Seq("", "_old", "_tmp").foreach(s => deleteRecursive(Paths.get(path + s)))
 }

@@ -53,3 +53,14 @@ object Ewma {
         round(sum(col("x")).cast("double") / count(lit(1)), 4).as("mean_x"))
   }
 }
+
+/** The per-key daily-count grid: the epoch-day bucketing [[Ewma]]
+  * collapses onto before any window.
+  */
+private object DayGrid {
+  /** `(keyCol, day, x)` — integer epoch-day (µs div 86400000000) counts. */
+  def of(events: DataFrame, keyCol: String, tsCol: String): DataFrame =
+    events.groupBy(col(keyCol),
+        expr(s"unix_micros(`$tsCol`) div 86400000000").as("day"))
+      .agg(count(lit(1)).as("x"))
+}

@@ -74,7 +74,7 @@ object RankTests {
     * Scale discipline: concordant/discordant pairs come from a self-join
     * of the (group, xb, yb) CELL GRID, never of raw rows — callers bin
     * the metrics first, so the grid (and the pair term) is bounded by the
-    * bin domain, not the corpus (the q198 day-grid argument). Everything
+    * bin domain, not the corpus. Everything
     * is int64 until τ's one division at the edge; the counts themselves
     * are gate-hashable integers.
     */

@@ -9,9 +9,8 @@ import graft.core.Tables
   * (q186), fill-in-the-middle augmentation (q187), Benford audit
   * (q188), l-diversity (q189), A/B hypothesis tests (q190), Kneser-Ney
   * LM (q191), Markov attribution (q192), quantile normalization
-  * (q194), association rules (q195), Jaro-Winkler linkage (q196),
-  * Theil-Sen (q198), CUSUM changepoints (q199), and Mann-Whitney U
-  * (q200).
+  * (q194), association rules (q195), Jaro-Winkler linkage (q196) and
+  * Mann-Whitney U (q200).
   *
   * Numeric discipline throughout: counts stay integer, distinct counts
   * are exact, float formulas are written in the SAME shape on both
@@ -178,41 +177,17 @@ object AnalyticsQueries {
           "p_partkey", "p_name", col("p_brand"))
         .orderBy(col("block"))),
 
-    // Theil-Sen robust slope: median pairwise slope over the day grid.
-    "q198_theil_sen" -> ((s, dir) =>
-      graft.operators.RobustStats.theilSen(Tables.events(s, dir),
-          "event_type", "ts")
-        .orderBy(col("event_type"))),
-
-    // CUSUM changepoint: integer n·prefix−k·total peak per event type.
-    "q199_changepoint" -> ((s, dir) =>
-      graft.operators.RobustStats.cusumChangepoint(Tables.events(s, dir),
-          "event_type", "ts")
-        .orderBy(col("event_type"))),
-
     // Mann-Whitney U between user-parity variants on event value.
     "q200_mann_whitney" -> ((s, dir) =>
       graft.operators.RankTests.mannWhitney(
         Tables.events(s, dir).withColumn("g", col("user_id") % 2),
         "g", "value")),
 
-    // Chi-square independence: event mix (type) × user-parity variant.
-    "q201_chi2_indep" -> ((s, dir) =>
-      graft.operators.Contingency.chiSquare(
-        Tables.events(s, dir).withColumn("variant", col("user_id") % 2),
-        "event_type", "variant")),
-
-    // Gini concentration of document length per source.
-    "q202_gini" -> ((s, dir) =>
-      graft.operators.Gini.coefficient(Tables.documents(s, dir),
-          "source", "n_chars")
-        .orderBy(col("source"))),
-
     // Kendall τ-b rank correlation between doc length and token count per
     // source (the monotone-association twin of q79's Pearson r). Metrics
     // are BINNED first (n_chars÷64, tokens÷16) so the concordance pair
     // join runs over the bounded cell grid, never raw doc pairs — the
-    // q198/q200 grid discipline. Integer C/D/n counts hash exactly; τ is
+    // q200 grid discipline. Integer C/D/n counts hash exactly; τ is
     // one division at the edge.
     "q210_kendall_tau" -> ((s, dir) => {
       val binned = Tables.documents(s, dir)
@@ -808,72 +783,7 @@ object AnalyticsQueries {
         .orderBy(col("key"), col("t"))
     }),
 
-    // ===== r11 wave: k-sample tests, survival, stratified OR, mixture
-    // temperature =====
-
-    // Kaplan-Meier survival curve of SESSION durations (seconds, 30-min
-    // gap sessions — the q9 sessionization): a session whose last event
-    // lies within one gap of the corpus end may still be open and is
-    // right-CENSORED; every other session's end is observed. Integer grid
-    // cumsums; the survival product folds on the ordered duration grid
-    // (operators/Survival.scala). User lifetimes would be degenerate here
-    // (every synthetic user stays active to the corpus end — zero deaths).
-    "q263_kaplan_meier" -> ((s, dir) => {
-      val sess = graft.streaming.Sessionize.sessionSummaries(
-          Tables.events(s, dir), "user_id", "ts", "event_id", 1800L)
-        .select(expr("unix_micros(sess_start)").as("s_us"),
-          expr("unix_micros(sess_end)").as("e_us"))
-      val span = Tables.events(s, dir)
-        .agg(max(expr("unix_micros(ts)")).as("t1"))
-      val subjects = sess.crossJoin(broadcast(span))
-        .select(expr("(e_us - s_us) div 1000000").as("dur"),
-          when(col("e_us") < col("t1") - lit(1800L * 1000000L), 1L)
-            .otherwise(0L).as("ev"))
-      graft.operators.Survival.kaplanMeier(subjects, "dur", "ev")
-    }),
-
-    // Two-sample Kolmogorov-Smirnov: doc-length distribution, en vs rest.
-    // The sup gap stays an integer cross-multiple until the output edge.
-    "q264_ks_test" -> ((s, dir) =>
-      graft.operators.KSample.ksTwoSample(
-        Tables.documents(s, dir)
-          .select(when(col("lang") === "en", 0L).otherwise(1L).as("side"),
-            col("n_chars")),
-        "side", "n_chars")),
-
-    // Kruskal-Wallis H across sources on doc length (global ½-multiple
-    // midranks, tie-corrected) — the k-sample companion to q200's
-    // Mann-Whitney.
-    "q265_kruskal_wallis" -> ((s, dir) =>
-      graft.operators.KSample.kruskalWallis(
-        Tables.documents(s, dir).select(col("source"), col("n_chars")),
-        "source", "n_chars")),
-
-    // Brown-Forsythe median-based variance homogeneity across sources —
-    // "do slices differ in SPREAD, not just level" (the prerequisite
-    // check before pooling variances in q190-style t tests).
-    "q266_brown_forsythe" -> ((s, dir) =>
-      graft.operators.KSample.brownForsythe(
-        Tables.documents(s, dir).select(col("source"), col("n_chars")),
-        "source", "n_chars")),
-
-    // One-way ANOVA F on milli-quantized event values across event types
-    // (integer sufficient statistics; quantize-then-sum, the q111 rule).
-    "q267_anova_f" -> ((s, dir) =>
-      graft.operators.KSample.anovaF(
-        Tables.events(s, dir).filter(col("value").isNotNull)
-          .select(col("event_type"), round(col("value") * 1000, 0).cast("long").as("mv")),
-        "event_type", "mv")),
-
-    // Mantel-Haenszel pooled odds ratio across day-of-week strata —
-    // the confounder-adjusted companion to the q256 Simpson audit.
-    "q269_mantel_haenszel" -> ((s, dir) =>
-      graft.operators.Contingency.mantelHaenszel(
-        Tables.events(s, dir).select(
-          dayofweek(col("ts")).cast("long").as("dow"),
-          pmod(col("user_id"), lit(2)).as("v"),
-          when(col("event_type") === "click", 1L).otherwise(0L).as("hit")),
-        "dow", "v", "hit")),
+    // ===== r11 wave: mixture temperature =====
 
     // Temperature-scaled source mixing weights p_s^α / Σ p_s^α (α = 0.7,
     // the mT5/multilingual sampling rule): the knob between proportional
@@ -898,56 +808,7 @@ object AnalyticsQueries {
         .orderBy(col("source"))
     }),
 
-    // ===== r11 wave 2: survival comparison, exact categorical test,
-    // ordinal-association panel =====
-
-    // Two-group log-rank test on the q263 session durations, split by
-    // user parity: "do the two user cohorts retain sessions equally".
-    // O₁ is integer; E₁/V fold on the ordered duration grid
-    // (operators/Survival.scala logRank).
-    "q273_log_rank" -> ((s, dir) => {
-      val sess = graft.streaming.Sessionize.sessionSummaries(
-          Tables.events(s, dir), "user_id", "ts", "event_id", 1800L)
-        .select(pmod(col("user_id"), lit(2)).cast("long").as("g"),
-          expr("unix_micros(sess_start)").as("s_us"),
-          expr("unix_micros(sess_end)").as("e_us"))
-      val span = Tables.events(s, dir)
-        .agg(max(expr("unix_micros(ts)")).as("t1"))
-      val subjects = sess.crossJoin(broadcast(span))
-        .select(col("g"), expr("(e_us - s_us) div 1000000").as("dur"),
-          when(col("e_us") < col("t1") - lit(1800L * 1000000L), 1L)
-            .otherwise(0L).as("ev"))
-      graft.operators.Survival.logRank(subjects, "dur", "ev", "g")
-    }),
-
-    // Nelson-Aalen cumulative hazard + Breslow survival over the SAME
-    // censored session durations as q263 — the hazard-scale read of the
-    // same curve (KM multiplies survival fractions, NA sums hazards).
-    "q274_nelson_aalen" -> ((s, dir) => {
-      val sess = graft.streaming.Sessionize.sessionSummaries(
-          Tables.events(s, dir), "user_id", "ts", "event_id", 1800L)
-        .select(expr("unix_micros(sess_start)").as("s_us"),
-          expr("unix_micros(sess_end)").as("e_us"))
-      val span = Tables.events(s, dir)
-        .agg(max(expr("unix_micros(ts)")).as("t1"))
-      val subjects = sess.crossJoin(broadcast(span))
-        .select(expr("(e_us - s_us) div 1000000").as("dur"),
-          when(col("e_us") < col("t1") - lit(1800L * 1000000L), 1L)
-            .otherwise(0L).as("ev"))
-      graft.operators.Survival.nelsonAalen(subjects, "dur", "ev")
-    }),
-
-    // Fisher's EXACT independence test on the small-margin 2×2
-    // "is English over-represented in src7": the factorial-free
-    // hypergeometric fold on the bounded support grid (the margin is
-    // 1/20 of the corpus — exactly the small-cell regime where q201's
-    // χ² approximation is untrustworthy).
-    "q275_fisher_exact" -> ((s, dir) =>
-      graft.operators.Contingency.fisherExact(
-        Tables.documents(s, dir).select(
-          when(col("lang") === "en", 1L).otherwise(0L).as("x"),
-          when(col("source") === "src7", 1L).otherwise(0L).as("y")),
-        "x", "y")),
+    // ===== r11 wave 2: ordinal-association panel =====
 
     // Ordinal-association panel (Goodman-Kruskal γ, Somers' D both
     // directions, Stuart τ-c) per source over the SAME length×token bin
@@ -963,27 +824,7 @@ object AnalyticsQueries {
         .orderBy(col("source"))
     }),
 
-    // ===== r11 wave 4: robust k-sample, trend test =====
-
-    // Mood's median test of doc length across sources — the
-    // weakest-assumption location test (q267's ANOVA assumes normal
-    // spread, q265's KW assumes shift): above/not-above the global
-    // type-7 median, χ² on the densified k×2 grid.
-    "q284_mood_median" -> ((s, dir) =>
-      graft.operators.KSample.moodMedian(
-        Tables.documents(s, dir).select(col("source"), col("n_chars")),
-        "source", "n_chars")),
-
-    // Mann-Kendall trend over the daily event-count series — the
-    // nonparametric drift alarm whose slope companion is q198's
-    // Theil-Sen. Pair join on the calendar-bounded day grid; S and the
-    // tie-corrected variance numerator exact integers.
-    "q285_mann_kendall" -> ((s, dir) =>
-      graft.operators.MannKendall.test(
-        Tables.events(s, dir)
-          .groupBy(expr("unix_date(to_date(ts))").as("day"))
-          .agg(count(lit(1)).as("x")),
-        "day", "x")),
+    // ===== r11 wave 4: link prediction =====
 
     // Link prediction over the q183 synthetic follow graph: top-20
     // non-adjacent pairs by Adamic-Adar, with common-neighbor/Jaccard/
@@ -1000,17 +841,6 @@ object AnalyticsQueries {
         e1.unionByName(e2).distinct(), "src", "dst", 20)
     }),
 
-    // Two-sample Cramér-von Mises on doc length, en vs rest — the
-    // whole-distribution companion of q264's sup-only KS (a mid-scale
-    // hump KS misses, CvM sees). Integer cross-multiple gaps squared in
-    // double; the weighted sum folds on the ordered value grid.
-    "q289_cvm" -> ((s, dir) =>
-      graft.operators.KSample.cramerVonMises(
-        Tables.documents(s, dir)
-          .select(when(col("lang") === "en", 0L).otherwise(1L).as("side"),
-            col("n_chars")),
-        "side", "n_chars")),
-
     // Chatterjee's ξ per source between doc length and token count —
     // the any-functional-dependence coefficient completing the
     // correlation family (q79 Pearson, q223 Spearman, q210 Kendall).
@@ -1024,79 +854,7 @@ object AnalyticsQueries {
         "source", "x", "y", "doc_id")
         .orderBy(col("source"))),
 
-    // ===== r11 wave 6: inequality, survey estimation =====
-
-    // Inequality panel per source (Theil, Atkinson ε=1, Hoover) —
-    // completing the q202 Gini / q251 HHI concentration family with
-    // top-, bottom-, and mass-transfer-sensitive indices.
-    "q294_inequality" -> ((s, dir) =>
-      graft.operators.Inequality.panel(
-        Tables.documents(s, dir).select(col("source"), col("n_chars")),
-        "source", "n_chars")
-        .orderBy(col("source"))),
-
-    // Post-stratified mean of doc length under equal LANGUAGE weights
-    // (languages are genuinely unequal — en ≈ 2.5× the others, so the
-    // reweight moves the mean and deff > 1) + the Kish design effect
-    // pricing it.
-    "q295_post_stratified" -> ((s, dir) =>
-      graft.operators.PostStratify.equalWeight(
-        Tables.documents(s, dir).select(col("lang"), col("n_chars")),
-        "lang", "n_chars")),
-
-    // ===== r11 wave 7: sensitivity =====
-
-    // E-value sensitivity for the purchase-rate risk ratio by user
-    // parity — "how strong a hidden confounder would explain this
-    // away"; the q269 Mantel-Haenszel / q256 Simpson companion.
-    "q298_e_value" -> ((s, dir) =>
-      graft.operators.Contingency.eValue(
-        Tables.events(s, dir).select(
-          pmod(col("user_id"), lit(2)).as("x"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L).as("y")),
-        "x", "y")),
-
-    // Ansari-Bradley SCALE test on doc length, en vs rest — completes
-    // the two-sample EDF trio (q264 KS sup, q289 CvM mass) with the
-    // rank-from-both-ends dispersion read; exact integer score-block
-    // range sums on the value grid, parity-branched null moments.
-    "q299_ansari_bradley" -> ((s, dir) =>
-      graft.operators.KSample.ansariBradley(
-        Tables.documents(s, dir)
-          .select(when(col("lang") === "en", 0L).otherwise(1L).as("side"),
-            col("n_chars")),
-        "side", "n_chars")),
-
-    // Trimmed + winsorized mean of doc length per source (10% per
-    // tail) — the robust-location panel: integer overlap sums on the
-    // per-slice value grid, no raw-row sort anywhere.
-    "q300_robust_location" -> ((s, dir) =>
-      graft.operators.RobustLocation.panel(
-        Tables.documents(s, dir).select(col("source"), col("n_chars")),
-        "source", "n_chars", trimPct = 10)
-        .orderBy(col("source"))),
-
-    // Hodges-Lehmann shift: the robust "how much longer are en docs"
-    // effect size (median of pairwise differences), collapsing the pair
-    // product onto the value-grid product — the size companion to
-    // q200's Mann-Whitney p-value.
-    "q301_hodges_lehmann" -> ((s, dir) =>
-      graft.operators.KSample.hodgesLehmann(
-        Tables.documents(s, dir)
-          .select(when(col("lang") === "en", 0L).otherwise(1L).as("side"),
-            col("n_chars")),
-        "side", "n_chars")),
-
-    // Vargha-Delaney Â₁₂ — the common-language effect size P(X₁>X₀)+½P(=)
-    // with the published magnitude labels (decided on rounded values):
-    // the benchmark-comparison standard for "does it matter", next to
-    // q301's "by how much".
-    "q302_vargha_delaney" -> ((s, dir) =>
-      graft.operators.KSample.varghaDelaney(
-        Tables.documents(s, dir)
-          .select(when(col("lang") === "en", 0L).otherwise(1L).as("side"),
-            col("n_chars")),
-        "side", "n_chars")),
+    // ===== r11 wave 7: ranking evaluation =====
 
     // Average precision + best-F1 of the binned token count ranking the
     // "long doc" label (n_chars ≥ 400, the upper ~30% of the corpus) — a
@@ -1441,47 +1199,6 @@ object AnalyticsQueries {
         |       max(jw) AS max_jw
         |FROM s GROUP BY block ORDER BY block""".stripMargin,
 
-    "q198_theil_sen" ->
-      """WITH d AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day, count(*) AS x
-        |  FROM events GROUP BY 1, 2
-        |), p AS (
-        |  SELECT a.event_type, a.day AS d1, b.day AS d2,
-        |         CAST(b.x - a.x AS DOUBLE) / (b.day - a.day) AS slope
-        |  FROM d a JOIN d b ON a.event_type = b.event_type AND a.day < b.day
-        |), r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY slope, d1, d2) AS rn,
-        |         count(*) OVER (PARTITION BY event_type) AS np
-        |  FROM p
-        |)
-        |SELECT event_type, CAST(max(np) AS BIGINT) AS n_pairs,
-        |       round(avg(slope), 6) AS slope_ts
-        |FROM r WHERE rn = (np + 1) // 2 OR rn = (np + 2) // 2
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q199_changepoint" ->
-      """WITH d AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day, count(*) AS x
-        |  FROM events GROUP BY 1, 2
-        |), s AS (
-        |  SELECT event_type, day,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY day) AS k,
-        |         sum(x) OVER (PARTITION BY event_type ORDER BY day
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix,
-        |         count(*) OVER (PARTITION BY event_type) AS n,
-        |         sum(x) OVER (PARTITION BY event_type) AS total
-        |  FROM d
-        |), sc AS (
-        |  SELECT *, abs(n * prefix - k * total) AS absd,
-        |         row_number() OVER (PARTITION BY event_type
-        |           ORDER BY abs(n * prefix - k * total) DESC, day) AS rn
-        |  FROM s
-        |)
-        |SELECT event_type, CAST(n AS BIGINT) AS n_days, CAST(day AS BIGINT) AS cp_day,
-        |       CAST(k AS BIGINT) AS cp_index, CAST(absd AS BIGINT) AS cusum_peak,
-        |       round(CAST(absd AS DOUBLE) / (CAST(n AS DOUBLE) * total), 6) AS peak_share
-        |FROM sc WHERE rn = 1 ORDER BY event_type""".stripMargin,
-
     "q200_mann_whitney" ->
       """WITH r AS (SELECT CAST(user_id % 2 AS INT) AS g, value AS v FROM events),
         |grid AS (
@@ -1515,57 +1232,6 @@ object AnalyticsQueries {
         |         round((r1 - CAST(n1 AS DOUBLE) * (n1 + 1) / 2)
         |               / (CAST(nTot - n1 AS DOUBLE) * n1), 4) END AS effect
         |FROM v""".stripMargin,
-
-    "q201_chi2_indep" ->
-      """WITH cells AS (
-        |  SELECT event_type AS r, user_id % 2 AS c, count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), rm AS (SELECT r, sum(n) AS nr FROM cells GROUP BY 1),
-        |cm AS (SELECT c, sum(n) AS nc FROM cells GROUP BY 1),
-        |tot AS (SELECT sum(n) AS nn, count(DISTINCT r) AS nrows,
-        |        count(DISTINCT c) AS ncols FROM cells),
-        |dense AS (
-        |  SELECT rm.r, cm.c, rm.nr, cm.nc, coalesce(cells.n, 0) AS n
-        |  FROM rm CROSS JOIN cm LEFT JOIN cells USING (r, c)
-        |),
-        |sc AS (
-        |  SELECT tot.nrows, tot.ncols, tot.nn,
-        |         pow(dense.n - CAST(dense.nr AS DOUBLE) * dense.nc / tot.nn, 2)
-        |           / (CAST(dense.nr AS DOUBLE) * dense.nc / tot.nn) AS part
-        |  FROM dense CROSS JOIN tot
-        |)
-        |SELECT CAST(nrows AS BIGINT) AS nrows, CAST(ncols AS BIGINT) AS ncols,
-        |       CAST(nn AS BIGINT) AS n,
-        |       CASE WHEN least(nrows, ncols) > 1 THEN round(sum(part), 4) END AS chi2,
-        |       CAST((nrows - 1) * (ncols - 1) AS BIGINT) AS dof,
-        |       CASE WHEN least(nrows, ncols) > 1 THEN
-        |         round(sqrt(sum(part) / (nn * (least(nrows, ncols) - 1))), 4) END AS cramers_v
-        |FROM sc GROUP BY nrows, ncols, nn""".stripMargin,
-
-    "q202_gini" ->
-      """WITH grid AS (
-        |  SELECT source, CAST(n_chars AS BIGINT) AS v, count(*) AS c
-        |  FROM documents GROUP BY 1, 2
-        |), rk AS (
-        |  SELECT source, v, c,
-        |         coalesce(sum(c) OVER (PARTITION BY source ORDER BY v
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumBefore
-        |  FROM grid
-        |), a AS (
-        |  SELECT source, sum(c) AS n, sum(c * v) AS t,
-        |         sum(v * (c * cumBefore + c * (c + 1) // 2)) AS s
-        |  FROM rk GROUP BY 1
-        |), bh AS (
-        |  SELECT rk.source,
-        |         sum(greatest(0, least(rk.c, a.n // 2 - rk.cumBefore)) * rk.v) AS bh
-        |  FROM rk JOIN a USING (source) GROUP BY 1
-        |)
-        |SELECT a.source, CAST(a.n AS BIGINT) AS n_items, CAST(a.t AS BIGINT) AS total,
-        |       CASE WHEN a.t > 0 AND a.n > 0 THEN
-        |         round(2.0 * a.s / (CAST(a.n AS DOUBLE) * a.t)
-        |               - CAST(a.n + 1 AS DOUBLE) / a.n, 6) END AS gini,
-        |       CASE WHEN a.t > 0 THEN round(CAST(bh.bh AS DOUBLE) / a.t, 6) END AS bottom_half_share
-        |FROM a JOIN bh USING (source) ORDER BY a.source""".stripMargin,
 
     // same binned cell grid, same pair join, same integer counts
     "q210_kendall_tau" ->
@@ -1908,145 +1574,6 @@ object AnalyticsQueries {
     // rendered from the SAME frozen (w, b) Scala doubles the gate uses
     "q259_mmd_rff" -> graft.search.MmdRff.oracleSql("label = 0"),
 
-    // KM product-limit on the ordered duration grid; the -infinity
-    // branch is pinned explicitly (Spark log(0) is NULL, DuckDB -inf)
-    "q263_kaplan_meier" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sess AS (
-        |  SELECT user_id, ts,
-        |         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) - 1 AS session_id
-        |  FROM flagged
-        |), summ AS (
-        |  SELECT epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
-        |  FROM sess GROUP BY user_id, session_id
-        |), span AS (SELECT max(epoch_us(ts)) AS t1 FROM events),
-        |subjects AS (
-        |  SELECT (e_us - s_us) // 1000000 AS dur,
-        |         CASE WHEN e_us < t1 - 1800000000 THEN 1 ELSE 0 END AS ev
-        |  FROM summ, span),
-        |cells AS (SELECT dur AS t, sum(ev) AS d, sum(1 - ev) AS c, count(*) AS alln
-        |          FROM subjects GROUP BY dur),
-        |tot AS (SELECT sum(alln) AS nn FROM cells),
-        |g AS (SELECT t, d, c, alln, nn,
-        |             sum(alln) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lt
-        |      FROM cells, tot),
-        |g2 AS (SELECT t, d, c, nn - lt + alln AS n_risk FROM g),
-        |g3 AS (SELECT t, n_risk, d, c,
-        |        exp(sum(CASE WHEN d > 0 AND n_risk > d
-        |                       THEN ln(CAST(n_risk - d AS DOUBLE) / n_risk)
-        |                     WHEN d > 0 THEN CAST('-infinity' AS DOUBLE)
-        |                     ELSE 0.0 END)
-        |            OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS surv
-        |      FROM g2)
-        |SELECT CAST(t AS BIGINT) AS t, CAST(n_risk AS BIGINT) AS n_risk,
-        |       CAST(d AS BIGINT) AS d, CAST(c AS BIGINT) AS c,
-        |       round(surv, 6) AS survival
-        |FROM g3 WHERE d > 0 ORDER BY t""".stripMargin,
-
-    // sup EDF gap as an integer cross-multiple until the edge
-    "q264_ks_test" ->
-      """WITH d AS (SELECT CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS s, n_chars AS v FROM documents),
-        |cells AS (SELECT v, sum(CASE WHEN s = 0 THEN 1 ELSE 0 END) AS c0,
-        |                 sum(CASE WHEN s <> 0 THEN 1 ELSE 0 END) AS c1
-        |          FROM d GROUP BY v),
-        |grid AS (SELECT v, sum(c0) OVER w AS f0, sum(c1) OVER w AS f1 FROM cells
-        |         WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |tot AS (SELECT max(f0) AS n0, max(f1) AS n1 FROM grid),
-        |m AS (SELECT max(abs(f0 * n1 - f1 * n0)) AS d_num, max(n0) AS n0x, max(n1) AS n1x
-        |      FROM grid, tot)
-        |SELECT CAST(n0x AS BIGINT) AS n1, CAST(n1x AS BIGINT) AS n2,
-        |       CAST(d_num AS BIGINT) AS d_num,
-        |       round(CAST(d_num AS DOUBLE) / (n0x * n1x), 6) AS ks_d,
-        |       round(1.358 * sqrt(CAST(n0x + n1x AS DOUBLE) / (n0x * n1x)), 6) AS crit_05,
-        |       round(CAST(d_num AS DOUBLE) / (n0x * n1x), 6)
-        |         > round(1.358 * sqrt(CAST(n0x + n1x AS DOUBLE) / (n0x * n1x)), 6) AS reject
-        |FROM m""".stripMargin,
-
-    // global ½-multiple midranks; Σ R²/n on the ordered group window
-    "q265_kruskal_wallis" ->
-      """WITH d AS (SELECT source AS g, n_chars AS v FROM documents),
-        |cells AS (SELECT v, count(*) AS t FROM d GROUP BY v),
-        |ranks AS (SELECT v, CAST(cum - t AS DOUBLE) + CAST(t + 1 AS DOUBLE) / 2.0 AS r
-        |          FROM (SELECT v, t, sum(t) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |                FROM cells)),
-        |pg AS (SELECT g, count(*) AS n_g, sum(r) AS r_g FROM d JOIN ranks USING (v) GROUP BY g),
-        |ties AS (SELECT sum(t * t * t - t) AS tie3 FROM cells),
-        |acc AS (SELECT g, sum(n_g) OVER w AS nn, count(*) OVER w AS k,
-        |               sum(r_g * r_g / n_g) OVER w AS s_rr
-        |        FROM pg WINDOW w AS (ORDER BY g ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |fin AS (SELECT * FROM acc ORDER BY g DESC LIMIT 1)
-        |SELECT CAST(nn AS BIGINT) AS n, CAST(k AS BIGINT) AS groups,
-        |       round(12.0 / (nn * (nn + 1)) * s_rr - 3.0 * (nn + 1), 6) AS h,
-        |       round((12.0 / (nn * (nn + 1)) * s_rr - 3.0 * (nn + 1))
-        |             / (1.0 - CAST(tie3 AS DOUBLE) / (nn * nn * nn - nn)), 6) AS h_tie_corrected
-        |FROM fin, ties""".stripMargin,
-
-    // z = |x − type-7 median| is a ½-multiple: sums exact; ratio terms on
-    // the ordered group window
-    "q266_brown_forsythe" ->
-      """WITH d AS (SELECT source AS g, CAST(n_chars AS BIGINT) AS v FROM documents),
-        |med AS (SELECT g, quantile_cont(v, 0.5) AS med FROM d GROUP BY g),
-        |z AS (SELECT d.g, abs(v - med) AS z FROM d JOIN med ON d.g = med.g),
-        |pg AS (SELECT g, count(*) AS n_g, sum(z) AS sz, sum(z * z) AS szz FROM z GROUP BY g),
-        |acc AS (SELECT g, sum(n_g) OVER w AS nn, count(*) OVER w AS k,
-        |               sum(sz) OVER w AS sz_all,
-        |               sum(sz * sz / n_g) OVER w AS s_between_raw,
-        |               sum(szz - sz * sz / n_g) OVER w AS ssw
-        |        FROM pg WINDOW w AS (ORDER BY g ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |fin AS (SELECT * FROM acc ORDER BY g DESC LIMIT 1)
-        |SELECT CAST(nn AS BIGINT) AS n, CAST(k AS BIGINT) AS groups,
-        |       round(((s_between_raw - sz_all * sz_all / nn) / (k - 1))
-        |             / (ssw / (nn - k)), 6) AS w_stat
-        |FROM fin""".stripMargin,
-
-    // integer Σx/Σx² per group; only Σ sx²/n rides the ordered window
-    "q267_anova_f" ->
-      """WITH d AS (SELECT event_type AS g, CAST(round(value * 1000, 0) AS BIGINT) AS v
-        |           FROM events WHERE value IS NOT NULL),
-        |pg AS (SELECT g, count(*) AS n_g, sum(v) AS sx, sum(v * v) AS sxx FROM d GROUP BY g),
-        |acc AS (SELECT g, sum(n_g) OVER w AS nn, count(*) OVER w AS k,
-        |               sum(sx) OVER w AS sx_all, sum(sxx) OVER w AS sxx_all,
-        |               sum(CAST(sx AS DOUBLE) * sx / n_g) OVER w AS s_between_raw
-        |        FROM pg WINDOW w AS (ORDER BY g ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |fin AS (SELECT * FROM acc ORDER BY g DESC LIMIT 1)
-        |SELECT CAST(nn AS BIGINT) AS n, CAST(k AS BIGINT) AS groups,
-        |       round(((s_between_raw - CAST(sx_all AS DOUBLE) * sx_all / nn) / (k - 1))
-        |             / ((sxx_all - s_between_raw) / (nn - k)), 6) AS f_stat,
-        |       round((s_between_raw - CAST(sx_all AS DOUBLE) * sx_all / nn)
-        |             / (sxx_all - CAST(sx_all AS DOUBLE) * sx_all / nn), 6) AS eta_sq
-        |FROM fin""".stripMargin,
-
-    // DuckDB dayofweek is 0-based; Spark 1-based — shift (the q256 rule).
-    // a·d/n and b·c/n terms fold on the ordered stratum window.
-    "q269_mantel_haenszel" ->
-      """WITH e AS (SELECT dayofweek(ts) + 1 AS stratum, user_id % 2 AS x,
-        |                  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
-        |           FROM events),
-        |cells AS (SELECT stratum,
-        |                 sum(CASE WHEN x = 1 AND y = 1 THEN 1 ELSE 0 END) AS a,
-        |                 sum(CASE WHEN x = 1 AND y = 0 THEN 1 ELSE 0 END) AS b,
-        |                 sum(CASE WHEN x = 0 AND y = 1 THEN 1 ELSE 0 END) AS c,
-        |                 sum(CASE WHEN x = 0 AND y = 0 THEN 1 ELSE 0 END) AS d
-        |          FROM e GROUP BY stratum),
-        |acc AS (SELECT *,
-        |               sum(CAST(a AS DOUBLE) * d / (a + b + c + d)) OVER w AS num,
-        |               sum(CAST(b AS DOUBLE) * c / (a + b + c + d)) OVER w AS den
-        |        FROM cells WINDOW w AS (ORDER BY stratum ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |pooled AS (SELECT CASE WHEN den > 0 THEN round(num / den, 6) END AS or_mh
-        |           FROM acc ORDER BY stratum DESC LIMIT 1)
-        |SELECT CAST(stratum AS BIGINT) AS stratum, CAST(a AS BIGINT) AS a,
-        |       CAST(b AS BIGINT) AS b, CAST(c AS BIGINT) AS c, CAST(d AS BIGINT) AS d,
-        |       CASE WHEN b * c > 0 THEN
-        |         round(CAST(a AS DOUBLE) * d / (CAST(b AS DOUBLE) * c), 6) END AS or_stratum,
-        |       or_mh
-        |FROM acc, pooled ORDER BY stratum""".stripMargin,
-
     // p^α = exp(α·ln p), identical literal shape; normalizer on the
     // ordered source window
     "q272_mixture_temperature" ->
@@ -2058,122 +1585,6 @@ object AnalyticsQueries {
         |c AS (SELECT *, max(z) OVER () AS z_all FROM b)
         |SELECT source, n_docs, round(p, 6) AS p_raw, round(w / z_all, 6) AS p_temp
         |FROM c ORDER BY source""".stripMargin,
-
-    // the q263 session-duration grid split by user parity; O1 integer,
-    // E1/V fold on the ordered duration window
-    "q273_log_rank" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sess AS (
-        |  SELECT user_id, ts,
-        |         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) - 1 AS session_id
-        |  FROM flagged
-        |), summ AS (
-        |  SELECT user_id % 2 AS g, epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
-        |  FROM sess GROUP BY user_id, session_id
-        |), span AS (SELECT max(epoch_us(ts)) AS t1 FROM events),
-        |subjects AS (
-        |  SELECT g, (e_us - s_us) // 1000000 AS dur,
-        |         CASE WHEN e_us < t1 - 1800000000 THEN 1 ELSE 0 END AS ev
-        |  FROM summ, span),
-        |cells AS (SELECT dur AS t, sum(ev) AS d,
-        |                 sum(CASE WHEN g = 1 THEN ev ELSE 0 END) AS d1,
-        |                 count(*) AS alln,
-        |                 sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS a1
-        |          FROM subjects GROUP BY dur),
-        |tot AS (SELECT sum(alln) AS nn, sum(a1) AS nn1 FROM cells),
-        |g1 AS (SELECT t, d, d1, alln, a1, nn, nn1,
-        |              sum(alln) OVER w AS lt, sum(a1) OVER w AS lt1
-        |       FROM cells, tot
-        |       WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |g2 AS (SELECT *, nn - lt + alln AS n_risk, nn1 - lt1 + a1 AS n1_risk FROM g1),
-        |g3 AS (SELECT t, nn, nn1,
-        |              sum(d1) OVER w AS o1,
-        |              sum(CAST(d AS DOUBLE) * n1_risk / n_risk) OVER w AS e1,
-        |              sum(CASE WHEN n_risk > 1 THEN
-        |                    CAST(d AS DOUBLE) * n1_risk * (n_risk - n1_risk) * (n_risk - d)
-        |                      / (CAST(n_risk AS DOUBLE) * n_risk * (n_risk - 1))
-        |                  ELSE 0.0 END) OVER w AS v
-        |       FROM g2
-        |       WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |fin AS (SELECT * FROM g3 ORDER BY t DESC LIMIT 1)
-        |SELECT CAST(nn AS BIGINT) AS n, CAST(nn1 AS BIGINT) AS n1,
-        |       CAST(o1 AS BIGINT) AS o1, round(e1, 6) AS e1, round(v, 6) AS v,
-        |       CASE WHEN v > 0 THEN round((o1 - e1) / sqrt(v), 6) + 0.0 END AS z,
-        |       CASE WHEN v > 0 THEN round(pow(o1 - e1, 2) / v, 6) END AS chi2
-        |FROM fin""".stripMargin,
-
-    // same censored-duration grid as q263; the hazard increments fold on
-    // the ordered grid, Breslow survival is exp(-H) of the raw cumsum
-    "q274_nelson_aalen" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sess AS (
-        |  SELECT user_id, ts,
-        |         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) - 1 AS session_id
-        |  FROM flagged
-        |), summ AS (
-        |  SELECT epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
-        |  FROM sess GROUP BY user_id, session_id
-        |), span AS (SELECT max(epoch_us(ts)) AS t1 FROM events),
-        |subjects AS (
-        |  SELECT (e_us - s_us) // 1000000 AS dur,
-        |         CASE WHEN e_us < t1 - 1800000000 THEN 1 ELSE 0 END AS ev
-        |  FROM summ, span),
-        |cells AS (SELECT dur AS t, sum(ev) AS d, count(*) AS alln
-        |          FROM subjects GROUP BY dur),
-        |tot AS (SELECT sum(alln) AS nn FROM cells),
-        |g AS (SELECT t, d, alln, nn,
-        |             sum(alln) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lt
-        |      FROM cells, tot),
-        |g2 AS (SELECT t, d, nn - lt + alln AS n_risk FROM g),
-        |g3 AS (SELECT t, n_risk, d,
-        |             sum(CAST(d AS DOUBLE) / n_risk)
-        |               OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS haz
-        |      FROM g2)
-        |SELECT CAST(t AS BIGINT) AS t, CAST(n_risk AS BIGINT) AS n_risk,
-        |       CAST(d AS BIGINT) AS d,
-        |       round(haz, 6) AS na_hazard, round(exp(-haz), 6) AS breslow_surv
-        |FROM g3 WHERE d > 0 ORDER BY t""".stripMargin,
-
-    // factorial-free hypergeometric: the log-weight accumulates step
-    // ratios on the ordered bounded support grid, centred on max(w)
-    "q275_fisher_exact" ->
-      """WITH tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |                    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS r1,
-        |                    CAST(sum(CASE WHEN source = 'src7' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |                    CAST(sum(CASE WHEN lang = 'en' AND source = 'src7' THEN 1 ELSE 0 END) AS BIGINT) AS a_obs
-        |             FROM documents),
-        |t2 AS (SELECT *, greatest(CAST(0 AS BIGINT), r1 + c1 - n) AS lo, least(r1, c1) AS hi FROM tot),
-        |grid AS (SELECT n, r1, c1, a_obs, lo, unnest(generate_series(lo, hi)) AS a FROM t2),
-        |lwt AS (SELECT *, sum(CASE WHEN a = lo THEN 0.0
-        |                           ELSE ln(CAST((r1 - a + 1) * (c1 - a + 1) AS DOUBLE))
-        |                              - ln(CAST(a * (n - r1 - c1 + a) AS DOUBLE)) END)
-        |                    OVER (ORDER BY a ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lw
-        |        FROM grid),
-        |ctr AS (SELECT max(lw) AS m, max(CASE WHEN a = a_obs THEN lw END) AS w_obs FROM lwt),
-        |acc AS (SELECT a, n, r1, c1, a_obs,
-        |               sum(exp(lw - m)) OVER w AS s_all,
-        |               sum(CASE WHEN lw <= w_obs + 1e-7 THEN exp(lw - m) ELSE 0.0 END) OVER w AS s_tail
-        |        FROM lwt, ctr
-        |        WINDOW w AS (ORDER BY a ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |fin AS (SELECT * FROM acc ORDER BY a DESC LIMIT 1)
-        |SELECT n, r1, c1, a_obs AS a,
-        |       round(s_tail / s_all, 6) AS p_two_sided,
-        |       CASE WHEN (r1 - a_obs) * (c1 - a_obs) > 0 THEN
-        |         round(CAST(a_obs AS DOUBLE) * (n - r1 - c1 + a_obs)
-        |               / (CAST(r1 - a_obs AS DOUBLE) * (c1 - a_obs)), 6) END AS odds_ratio
-        |FROM fin""".stripMargin,
 
     // the q210 cell grid and pair join; four tie-treatment ratios at the
     // edge, each sign-pinned with + 0.0
@@ -2214,59 +1625,6 @@ object AnalyticsQueries {
         |               / (CAST(n AS DOUBLE) * n * (least(rx, ry) - 1)), 6) + 0.0 END AS tau_c
         |FROM j ORDER BY source""".stripMargin,
 
-    // global type-7 median flag, then the q201 densified chi2 grid
-    "q284_mood_median" ->
-      """WITH d AS (SELECT source AS g, CAST(n_chars AS BIGINT) AS v FROM documents),
-        |med AS (SELECT quantile_cont(v, 0.5) AS median FROM d),
-        |f AS (SELECT g AS r, CASE WHEN v > median THEN 1 ELSE 0 END AS c FROM d, med),
-        |cells AS (SELECT r, c, count(*) AS n FROM f GROUP BY 1, 2),
-        |rm AS (SELECT r, sum(n) AS nr FROM cells GROUP BY 1),
-        |cm AS (SELECT c, sum(n) AS nc FROM cells GROUP BY 1),
-        |tot AS (SELECT sum(n) AS nn, count(DISTINCT r) AS nrows,
-        |        count(DISTINCT c) AS ncols FROM cells),
-        |dense AS (
-        |  SELECT rm.r, cm.c, rm.nr, cm.nc, coalesce(cells.n, 0) AS n
-        |  FROM rm CROSS JOIN cm LEFT JOIN cells USING (r, c)),
-        |sc AS (
-        |  SELECT tot.nrows, tot.ncols, tot.nn,
-        |         pow(dense.n - CAST(dense.nr AS DOUBLE) * dense.nc / tot.nn, 2)
-        |           / (CAST(dense.nr AS DOUBLE) * dense.nc / tot.nn) AS part
-        |  FROM dense CROSS JOIN tot)
-        |SELECT CAST(nrows AS BIGINT) AS groups, CAST(nn AS BIGINT) AS n, median,
-        |       CASE WHEN least(nrows, ncols) > 1 THEN round(sum(part), 4) END AS chi2,
-        |       CAST((nrows - 1) * (ncols - 1) AS BIGINT) AS dof,
-        |       CASE WHEN least(nrows, ncols) > 1 THEN
-        |         round(sqrt(sum(part) / (nn * (least(nrows, ncols) - 1))), 4) END AS cramers_v
-        |FROM sc, med GROUP BY nrows, ncols, nn, median""".stripMargin,
-
-    // S and the tie-corrected variance numerator exact integers on the
-    // calendar-bounded day-pair grid; continuity-corrected z at the edge
-    "q285_mann_kendall" ->
-      """WITH g AS (SELECT CAST(ts AS DATE) - DATE '1970-01-01' AS day,
-        |                  CAST(count(*) AS BIGINT) AS x
-        |           FROM events GROUP BY 1),
-        |s AS (SELECT CAST(sum(CASE WHEN b.x > a.x THEN 1
-        |                           WHEN b.x < a.x THEN -1 ELSE 0 END) AS BIGINT) AS s
-        |      FROM g a JOIN g b ON a.day < b.day),
-        |t AS (SELECT CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tsum,
-        |             CAST(sum(t) AS BIGINT) AS n
-        |      FROM (SELECT x, count(*) AS t FROM g GROUP BY 1)),
-        |rep AS (SELECT s, tsum, n, n * (n - 1) * (2 * n + 5) - tsum AS var_num FROM s, t),
-        |z AS (SELECT *,
-        |        CASE WHEN var_num > 0 AND s > 0 THEN
-        |               round(CAST(s - 1 AS DOUBLE) / sqrt(CAST(var_num AS DOUBLE) / 18.0), 6)
-        |             WHEN var_num > 0 AND s < 0 THEN
-        |               round(CAST(s + 1 AS DOUBLE) / sqrt(CAST(var_num AS DOUBLE) / 18.0), 6)
-        |             WHEN var_num > 0 THEN 0.0 END AS z
-        |      FROM rep)
-        |SELECT n, s,
-        |       CASE WHEN var_num > 0 THEN round(CAST(var_num AS DOUBLE) / 18.0, 6) END AS var_s,
-        |       z,
-        |       CASE WHEN z > 1.959964 THEN 'increasing'
-        |            WHEN z < -1.959964 THEN 'decreasing'
-        |            WHEN z IS NOT NULL THEN 'no_trend' END AS trend
-        |FROM z""".stripMargin,
-
     // the q183 symmetric graph; shared-neighbor candidates, anti-join
     // against existing edges, AA fold on the bounded degree grid
     "q288_link_predict" ->
@@ -2302,28 +1660,6 @@ object AnalyticsQueries {
         |       FROM fin f2 JOIN deg du ON f2.u = du.node JOIN deg dw2 ON f2.w = dw2.node)
         |SELECT * FROM sc ORDER BY adamic_adar DESC, u, w LIMIT 20""".stripMargin,
 
-    // the q264 value grid; integer cross-multiple gap squared in double,
-    // weighted fold on the ordered grid; 0.461 asymptotic 5% literal
-    "q289_cvm" ->
-      """WITH d AS (SELECT CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS s, n_chars AS v FROM documents),
-        |cells AS (SELECT v, sum(CASE WHEN s = 0 THEN 1 ELSE 0 END) AS c0,
-        |                 sum(CASE WHEN s <> 0 THEN 1 ELSE 0 END) AS c1
-        |          FROM d GROUP BY v),
-        |grid AS (SELECT v, c0 + c1 AS t, sum(c0) OVER w AS f0, sum(c1) OVER w AS f1 FROM cells
-        |         WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |tot AS (SELECT max(f0) AS n0, max(f1) AS n1 FROM grid),
-        |acc AS (SELECT v, n0, n1,
-        |               sum(CAST(t AS DOUBLE) * CAST(f0 * n1 - f1 * n0 AS DOUBLE)
-        |                   * CAST(f0 * n1 - f1 * n0 AS DOUBLE))
-        |                 OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS acc
-        |        FROM grid, tot),
-        |fin AS (SELECT * FROM acc ORDER BY v DESC LIMIT 1)
-        |SELECT CAST(n0 AS BIGINT) AS n1, CAST(n1 AS BIGINT) AS n2,
-        |       round(acc / ((CAST(n0 + n1 AS DOUBLE) * (n0 + n1)) * n0 * n1), 6) AS t_cvm,
-        |       0.461 AS crit_05,
-        |       round(acc / ((CAST(n0 + n1 AS DOUBLE) * (n0 + n1)) * n0 * n1), 6) > 0.461 AS reject
-        |FROM fin""".stripMargin,
-
     // integer rank walk sorted by (x, doc_id); den/sd exact integers;
     // n·Σd cast to double before multiplying
     "q290_chatterjee_xi" ->
@@ -2351,185 +1687,6 @@ object AnalyticsQueries {
         |       CASE WHEN dnm > 0 THEN
         |         round(1.0 - CAST(dn.n AS DOUBLE) * sd / dnm, 6) + 0.0 END AS xi
         |FROM dn JOIN sd USING (g) ORDER BY source""".stripMargin,
-
-    // distinct-value grid per source; ln/abs folds on the ordered
-    // per-slice window; perfectly equal slices sign-pinned to +0.0
-    "q294_inequality" ->
-      """WITH d AS (SELECT source AS g, CAST(n_chars AS BIGINT) AS v
-        |           FROM documents WHERE n_chars > 0),
-        |cells AS (SELECT g, v, count(*) AS t FROM d GROUP BY 1, 2),
-        |tot AS (SELECT g, CAST(sum(t) AS BIGINT) AS n, CAST(sum(t * v) AS BIGINT) AS sx
-        |        FROM cells GROUP BY g),
-        |tot2 AS (SELECT g, n, sx, CAST(sx AS DOUBLE) / n AS mu FROM tot),
-        |acc AS (SELECT c.g, c.v, n, sx, mu,
-        |               sum(t * (v / mu) * ln(v / mu)) OVER w AS theil_acc,
-        |               sum(t * ln(CAST(v AS DOUBLE))) OVER w AS ln_acc,
-        |               sum(t * abs(v - mu)) OVER w AS abs_acc
-        |        FROM cells c JOIN tot2 USING (g)
-        |        WINDOW w AS (PARTITION BY c.g ORDER BY c.v
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |fin AS (SELECT *, row_number() OVER (PARTITION BY g ORDER BY v DESC) AS rn FROM acc)
-        |SELECT g AS source, n, round(mu, 6) AS mean,
-        |       round(theil_acc / n, 6) + 0.0 AS theil,
-        |       round(1.0 - exp(ln_acc / n) / mu, 6) + 0.0 AS atkinson_1,
-        |       round(abs_acc / (2.0 * sx), 6) + 0.0 AS hoover
-        |FROM fin WHERE rn = 1 ORDER BY source""".stripMargin,
-
-    // per-stratum integer sums; mean/weight terms fold on the ordered
-    // stratum window; Kish deff closed-form
-    "q295_post_stratified" ->
-      """WITH d AS (SELECT lang AS h, CAST(n_chars AS BIGINT) AS v FROM documents),
-        |strata AS (SELECT h, CAST(count(*) AS BIGINT) AS n_h, CAST(sum(v) AS BIGINT) AS sx_h
-        |           FROM d GROUP BY 1),
-        |acc AS (SELECT h, count(*) OVER w AS k, sum(n_h) OVER w AS n, sum(sx_h) OVER w AS sx,
-        |               sum(CAST(sx_h AS DOUBLE) / n_h) OVER w AS mean_acc,
-        |               sum(CAST(n_h AS DOUBLE) * (1.0 / n_h)) OVER w AS sw,
-        |               sum(CAST(n_h AS DOUBLE) * (1.0 / n_h) * (1.0 / n_h)) OVER w AS sww
-        |        FROM strata
-        |        WINDOW w AS (ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |fin AS (SELECT * FROM acc ORDER BY h DESC LIMIT 1)
-        |SELECT CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n,
-        |       round(CAST(sx AS DOUBLE) / n, 6) AS mean_raw,
-        |       round(mean_acc / k, 6) AS mean_post,
-        |       round(CAST(n AS DOUBLE) * sww / (sw * sw), 6) AS deff_kish
-        |FROM fin""".stripMargin,
-
-    // integer 2x2 cells; RR / log-RR SE / both E's closed-form
-    "q298_e_value" ->
-      """WITH e AS (SELECT user_id % 2 AS x,
-        |                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |           FROM events),
-        |tot AS (SELECT CAST(sum(CASE WHEN x = 1 THEN y ELSE 0 END) AS BIGINT) AS a,
-        |               CAST(sum(CASE WHEN x = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |               CAST(sum(CASE WHEN x = 0 THEN y ELSE 0 END) AS BIGINT) AS c,
-        |               CAST(sum(CASE WHEN x = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0
-        |        FROM e),
-        |t2 AS (SELECT *,
-        |         CAST(a AS DOUBLE) * n0 / (CAST(c AS DOUBLE) * n1) AS rr,
-        |         sqrt(1.0 / a - 1.0 / n1 + 1.0 / c - 1.0 / n0) AS se,
-        |         (a > 0 AND c > 0 AND n1 > a AND n0 > c) AS ok
-        |       FROM tot),
-        |t3 AS (SELECT *,
-        |         exp(ln(rr) - 1.959964 * se) AS rr_lo_raw,
-        |         exp(ln(rr) + 1.959964 * se) AS rr_hi_raw,
-        |         CASE WHEN rr >= 1 THEN rr ELSE 1.0 / rr END AS rr_star
-        |       FROM t2),
-        |t4 AS (SELECT *,
-        |         CASE WHEN rr >= 1 THEN rr_lo_raw ELSE 1.0 / rr_hi_raw END AS bound
-        |       FROM t3)
-        |SELECT a, n1, c, n0,
-        |       CASE WHEN ok THEN round(rr, 6) END AS rr,
-        |       CASE WHEN ok THEN round(rr_lo_raw, 6) END AS rr_lo,
-        |       CASE WHEN ok THEN round(rr_hi_raw, 6) END AS rr_hi,
-        |       CASE WHEN ok THEN round(rr_star + sqrt(rr_star * (rr_star - 1)), 6) END AS e_value,
-        |       CASE WHEN ok THEN
-        |         CASE WHEN bound > 1 THEN round(bound + sqrt(bound * (bound - 1)), 6)
-        |              ELSE 1.0 END
-        |       END AS e_value_ci
-        |FROM t4""".stripMargin,
-
-    // integer score-block range sums on the value grid; parity-branched
-    // exact null moments mirrored on both engines
-    "q299_ansari_bradley" ->
-      """WITH d AS (SELECT CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS s, n_chars AS v FROM documents),
-        |cells AS (SELECT v, sum(CASE WHEN s = 0 THEN 1 ELSE 0 END) AS c0,
-        |                 sum(CASE WHEN s <> 0 THEN 1 ELSE 0 END) AS c1,
-        |                 count(*) AS t
-        |          FROM d GROUP BY v),
-        |grid AS (SELECT *, sum(t) OVER w AS cum FROM cells
-        |         WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |tot AS (SELECT max(cum) AS nn, sum(c0) AS n0, sum(c1) AS n1 FROM grid),
-        |sc AS (SELECT g.v, g.c0, g.t, nn, n0, n1,
-        |              g.cum - g.t + 1 AS lo, g.cum AS hi,
-        |              (nn + 1) // 2 AS mfloor
-        |       FROM grid g, tot),
-        |sc2 AS (SELECT *, least(hi, mfloor) AS atop, greatest(lo, mfloor + 1) AS bbot FROM sc),
-        |sc3 AS (SELECT *,
-        |          CASE WHEN lo <= atop THEN (atop * (atop + 1) - (lo - 1) * lo) // 2 ELSE 0 END
-        |          + CASE WHEN bbot <= hi THEN (hi - bbot + 1) * (nn + 1)
-        |                   - ((hi * (hi + 1) - (bbot - 1) * bbot) // 2) ELSE 0 END AS ss
-        |        FROM sc2),
-        |acc AS (SELECT *, sum(CAST(c0 * ss AS DOUBLE) / t)
-        |                    OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ab
-        |        FROM sc3),
-        |fin AS (SELECT * FROM acc ORDER BY v DESC LIMIT 1),
-        |rep AS (SELECT CAST(n0 AS BIGINT) AS n0x, CAST(n1 AS BIGINT) AS n1x, nn, ab,
-        |               CASE WHEN nn % 2 = 0 THEN CAST(n0 AS DOUBLE) * (nn + 2) / 4.0
-        |                    ELSE CAST(n0 AS DOUBLE) * (nn + 1) * (nn + 1) / (4.0 * nn) END AS e_ab,
-        |               CASE WHEN nn % 2 = 0 THEN
-        |                      CAST(n0 AS DOUBLE) * n1 * (nn + 2) * (nn - 2) / (48.0 * (nn - 1))
-        |                    ELSE CAST(n0 AS DOUBLE) * n1 * (nn + 1) * (3 + nn * nn)
-        |                         / (48.0 * nn * nn) END AS var_ab
-        |        FROM fin)
-        |SELECT n0x AS n1, n1x AS n2, round(ab, 6) AS ab, round(e_ab, 6) AS e_ab,
-        |       CASE WHEN var_ab > 0 THEN round((ab - e_ab) / sqrt(var_ab), 6) + 0.0 END AS z
-        |FROM rep""".stripMargin,
-
-    // integer overlap sums on the per-slice value grid; cut values are
-    // conditional-min grid lookups
-    "q300_robust_location" ->
-      """WITH d AS (SELECT source AS g, CAST(n_chars AS BIGINT) AS v FROM documents),
-        |cells AS (SELECT g, v, count(*) AS t FROM d GROUP BY 1, 2),
-        |grid AS (SELECT *, sum(t) OVER gw AS cum FROM cells
-        |         WINDOW gw AS (PARTITION BY g ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |g2 AS (SELECT *, max(cum) OVER (PARTITION BY g) AS n FROM grid),
-        |g3 AS (SELECT *, n * 10 // 100 AS k, cum - t + 1 AS lo FROM g2),
-        |g4 AS (SELECT *, greatest(CAST(0 AS BIGINT),
-        |                          least(cum, n - k) - greatest(lo, k + 1) + 1) AS overlap
-        |       FROM g3),
-        |agg AS (SELECT g, CAST(max(n) AS BIGINT) AS n, CAST(max(k) AS BIGINT) AS k_trim,
-        |               CAST(sum(v * t) AS BIGINT) AS sx,
-        |               CAST(sum(v * overlap) AS BIGINT) AS core_sum,
-        |               CAST(min(CASE WHEN cum >= k + 1 THEN v END) AS BIGINT) AS v_low,
-        |               CAST(min(CASE WHEN cum >= n - k THEN v END) AS BIGINT) AS v_high
-        |        FROM g4 GROUP BY g)
-        |SELECT g AS source, n, k_trim,
-        |       round(CAST(sx AS DOUBLE) / n, 6) AS mean_raw,
-        |       CASE WHEN n - 2 * k_trim > 0 THEN
-        |         round(CAST(core_sum AS DOUBLE) / (n - 2 * k_trim), 6) END AS trimmed_mean,
-        |       round(CAST(core_sum + k_trim * v_low + k_trim * v_high AS DOUBLE) / n, 6) AS winsorized_mean
-        |FROM agg ORDER BY source""".stripMargin,
-
-    // pairwise differences collapsed to the value-grid product; weighted
-    // median via integer cum lookups, type-7 middle-pair average
-    "q301_hodges_lehmann" ->
-      """WITH d AS (SELECT CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS s, n_chars AS v FROM documents),
-        |c0 AS (SELECT v AS v0, count(*) AS c0 FROM d WHERE s = 0 GROUP BY 1),
-        |c1 AS (SELECT v AS v1, count(*) AS c1 FROM d WHERE s <> 0 GROUP BY 1),
-        |diffs AS (SELECT v1 - v0 AS diff, sum(c0 * c1) AS wgt FROM c0 CROSS JOIN c1 GROUP BY 1),
-        |grid AS (SELECT diff, sum(wgt) OVER (ORDER BY diff
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM diffs),
-        |tot AS (SELECT max(cum) AS nw FROM grid),
-        |ks AS (SELECT nw, (nw + 1) // 2 AS k1, (nw + 2) // 2 AS k2 FROM tot),
-        |agg AS (SELECT CAST(max(nw) AS BIGINT) AS n_pairs,
-        |               min(CASE WHEN cum >= k1 THEN diff END) AS d1,
-        |               min(CASE WHEN cum >= k2 THEN diff END) AS d2
-        |        FROM grid, ks)
-        |SELECT n_pairs, round(CAST(d1 + d2 AS DOUBLE) / 2.0, 6) + 0.0 AS hl_shift
-        |FROM agg""".stripMargin,
-
-    // pooled midranks (exact ½-multiples); Â and its label from the same
-    // closed form; labels decided on the ROUNDED value
-    "q302_vargha_delaney" ->
-      """WITH d AS (SELECT CASE WHEN lang = 'en' THEN 0 ELSE 1 END AS s, n_chars AS v FROM documents),
-        |cells AS (SELECT v, sum(CASE WHEN s = 0 THEN 1 ELSE 0 END) AS c0,
-        |                 sum(CASE WHEN s <> 0 THEN 1 ELSE 0 END) AS c1,
-        |                 count(*) AS t
-        |          FROM d GROUP BY v),
-        |g AS (SELECT *, sum(t) OVER (ORDER BY v
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM cells),
-        |r AS (SELECT *, CAST(cum - t AS DOUBLE) + CAST(t + 1 AS DOUBLE) / 2.0 AS r FROM g),
-        |sums AS (SELECT CAST(sum(c0) AS BIGINT) AS cnt0, CAST(sum(c1) AS BIGINT) AS cnt1,
-        |                sum(r * c1) AS r1sum FROM r),
-        |sc AS (SELECT cnt0, cnt1,
-        |              round((r1sum / cnt1 - CAST(cnt1 + 1 AS DOUBLE) / 2.0) / cnt0, 6) AS a12
-        |       FROM sums)
-        |SELECT cnt0 AS n1, cnt1 AS n2, a12,
-        |       CASE WHEN abs(a12 - 0.5) < 0.06 THEN 'negligible'
-        |            WHEN abs(a12 - 0.5) < 0.14 THEN 'small'
-        |            WHEN abs(a12 - 0.5) < 0.21 THEN 'medium'
-        |            ELSE 'large' END AS magnitude
-        |FROM sc""".stripMargin,
 
     // integer cumsums on the ordered distinct-score grid; F1 is one
     // integer ratio per row (argmax ties break to the highest score)

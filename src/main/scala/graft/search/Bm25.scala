@@ -1,19 +1,20 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** BM25 sparse retrieval as pure DataFrame jobs (SURVEY.md §2.3: corpus fit →
-  * vocab/df/idf model tables; §2.4: explode-join-agg scorer).
+  * vocab/df/idf model table; §2.4: explode-join-agg scorer). [[search]] is
+  * the one scorer: it derives df and the corpus stats inside each query's
+  * plan, so there is no persisted model to go stale.
   *
   * Parameters mirror the reference (embeddings/bm25.py:35-38):
   * k1=1.2, b=0.75, robertson IDF ln((N-df+0.5)/(df+0.5)).
   *
   * Scale shape:
   *  - fit: one explode + two aggregations; the term-df table is tiny
-  *    relative to the corpus (vocabulary-sized) and is broadcast into the
-  *    scorer. Corpus stats (N, avgdl) are a 1-row cross join.
+  *    relative to the corpus (vocabulary-sized). Corpus N is a 1-row
+  *    cross join.
   *  - score: the per-(doc, term) tf table shuffles once on doc; the query
   *    terms are a literal `isin` filter pushed below the join, so at 100 TB
   *    only postings of the query's terms are ever shuffled.
@@ -38,7 +39,7 @@ object Bm25 {
   def tokenizeScala(text: String): Array[String] =
     TokenPattern.split(text.toLowerCase).filter(_.length > 1)
 
-  /** The BM25 term contribution, shared by every scoring path. */
+  /** The BM25 term contribution of one (doc, term) posting. */
   def contrib(idf: Column, tf: Column, dl: Column, avgdl: Column): Column =
     idf * (tf * lit(K1 + 1.0)) /
       (tf + lit(K1) * (lit(1.0 - B) + lit(B) * dl / avgdl))
@@ -67,43 +68,6 @@ object Bm25 {
       .crossJoin(broadcast(n))
       .withColumn("idf", log((col("_n").cast("double") - col("df") + 0.5) / (col("df") + 0.5)))
       .drop("_n")
-  }
-
-  /** Persist the fitted model as store tables (`bm25_model`: term/df/idf;
-    * `bm25_stats`: N, avgdl) — the reference's pickled bm25s cache
-    * (embeddings/bm25.py:100-161) as queryable tables. Refresh policy:
-    * refit periodically (stale-model tolerance is acceptable, same as the
-    * reference's sha256-keyed pickle cache); scoring against a slightly
-    * stale vocabulary only misses terms newer than the last refit.
-    */
-  def fitAndSave(docs: DataFrame, idCol: String, textCol: String, storeDir: String): Unit = {
-    import graft.index.IndexStore
-    val model = fit(docs, idCol, textCol)
-    IndexStore.overwrite(model, s"$storeDir/bm25_model")
-    val stats = docs.agg(
-      count(lit(1)).as("n"),
-      avg(size(tokens(col(textCol)))).as("avgdl"))
-    IndexStore.overwrite(stats, s"$storeDir/bm25_stats")
-  }
-
-  /** Score with a PERSISTED model (no refit): the incremental-search path.
-    * Terms absent from the stored vocabulary are ignored (reference
-    * behavior: unseen query tokens get no postings).
-    */
-  def searchWithModel(docs: DataFrame, idCol: String, textCol: String,
-                      storeDir: String, queryTerms: Seq[String], k: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val model = spark.read.parquet(s"$storeDir/bm25_model").select(col("term"), col("idf"))
-    val stats = spark.read.parquet(s"$storeDir/bm25_stats")
-    docTerms(docs, idCol, textCol)
-      .filter(col("term").isin(queryTerms: _*))
-      .join(broadcast(model), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib", contrib(col("idf"), col("tf"), col("dl"), col("avgdl")))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib")).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
   }
 
   /** BM25 score of every matching doc for `queryTerms`; returns

@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.ingest.PythonParser
-import graft.search.Bm25
 
-/** Extension points + persisted-model paths. The SQL functions come from
+/** Extension points and parser extensions. The SQL functions come from
   * [[org.apache.spark.sql.graftx.GraftExtensions]], which the shared
   * session builder installs.
   */
@@ -79,28 +77,6 @@ class ExtensionsSpec extends SparkSpec {
     // idempotent on already-composed text
     val again = spark.sql("SELECT nfc_normalize('café') AS n").head().getString(0)
     assert(again == "café")
-  }
-
-  test("bm25 model persistence: fitAndSave then searchWithModel on a stale corpus") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("graft_bm25").toString
-    val docs = Seq((1L, "spark join stream"), (2L, "spark filter"), (3L, "window sort"))
-      .toDF("doc_id", "text")
-    Bm25.fitAndSave(docs, "doc_id", "text", store)
-    val model = spark.read.parquet(s"$store/bm25_model")
-    assert(model.columns.toSet == Set("term", "df", "idf"))
-    assert(model.count() == 6)
-    // search with the persisted model matches a fresh fit+search
-    val viaModel = Bm25.searchWithModel(docs, "doc_id", "text", store, Seq("spark"), 10)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val fresh = Bm25.search(docs, "doc_id", "text", Seq("spark"), 10)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(viaModel.keySet == fresh.keySet)
-    viaModel.foreach { case (k, v) => assert(math.abs(v - fresh(k)) < 1e-12) }
-    // a NEW doc scores against the stale vocabulary without refit
-    val docs2 = docs.union(Seq((4L, "spark spark spark")).toDF("doc_id", "text"))
-    val stale = Bm25.searchWithModel(docs2, "doc_id", "text", store, Seq("spark"), 10)
-    assert(stale.collect().map(_.getLong(0)).contains(4L))
   }
 
   test("python file-operation relations typed by op") {

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,14 +17,17 @@ class ReadmeSyncSpec extends AnyFunSuite {
 
   /** Gate numbers deleted with their experiment-statistics operators
     * (bootstrap, seasonality, FDR control, rater agreement, serial
-    * correlation, A/B variance reduction and their kin; none reached by an
-    * engine verb). Gate names key the CORRECTNESS/BENCH artifacts and
-    * PLANS.md, so the survivors keep their numbers and these stay retired,
-    * never reused.
+    * correlation, A/B variance reduction, k-sample tests, survival
+    * curves, contingency tests, robust location, inequality indices and
+    * their kin; none reached by an engine verb). Gate names key the
+    * CORRECTNESS/BENCH artifacts and PLANS.md, so the survivors keep their
+    * numbers and these stay retired, never reused.
     */
-  private val Retired: Set[Int] = Set(193, 197, 224, 228, 235, 236, 237,
-    239, 240, 241, 242, 243, 244, 245, 248, 249, 250, 252, 268, 276, 278,
-    279, 280, 286, 287, 291, 292, 293, 296, 297)
+  private val Retired: Set[Int] = Set(193, 197, 198, 199, 201, 202, 224,
+    228, 235, 236, 237, 239, 240, 241, 242, 243, 244, 245, 248, 249, 250,
+    252, 263, 264, 265, 266, 267, 268, 269, 273, 274, 275, 276, 278, 279,
+    280, 284, 285, 286, 287, 289, 291, 292, 293, 294, 295, 296, 297, 298,
+    299, 300, 301, 302)
 
   private lazy val numbers: Seq[Int] =
     SparkEntry.queries.keys.toSeq.map(_.drop(1).takeWhile(_.isDigit).toInt)
@@ -70,6 +74,36 @@ class ReadmeSyncSpec extends AnyFunSuite {
       .getOrElse(fail("README no longer states the machine-asserted plan count"))
     assert(claimed.group(1).toInt == actual,
       s"README claims ${claimed.group(1)} plan assertions; PlanShapeSpec has $actual")
+  }
+
+  // a deleted operator's table row would otherwise outlive its code
+  test("README tables name only modules and specs that exist") {
+    def sources(root: Path): String = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => new String(Files.readAllBytes(f), "UTF-8")).mkString("\n")
+      finally walk.close()
+    }
+    val main = Paths.get("src/main/scala/graft")
+    val pkgs = {
+      val l = Files.list(main)
+      try l.iterator().asScala.filter(Files.isDirectory(_))
+        .map(_.getFileName.toString).toSet
+      finally l.close()
+    }
+    val pkgSource = pkgs.map(p => p -> sources(main.resolve(p))).toMap
+    val rows = readme.linesIterator.filter(_.startsWith("|")).toSeq
+    val modules = rows.flatMap(raw"`([a-z]+)\.([A-Z]\w*)".r.findAllMatchIn(_))
+      .map(m => (m.group(1), m.group(2))).filter(m => pkgs(m._1)).distinct
+    assert(modules.nonEmpty, "README tables name no <pkg>.<Object> modules")
+    val noModule = modules.filterNot { case (p, o) =>
+      raw"\b(object|class|trait)\s+$o\b".r.findFirstIn(pkgSource(p)).isDefined }
+    assert(noModule.isEmpty, s"README names modules absent from src/main: $noModule")
+    val testSource = sources(Paths.get("src/test"))
+    val specs = rows.flatMap(r =>
+      raw"\b[A-Z]\w*Spec\b".r.findAllIn(r.stripSuffix("|").split('|').last)).distinct
+    val noSpec = specs.filterNot(s => raw"\bclass\s+$s\b".r.findFirstIn(testSource).isDefined)
+    assert(noSpec.isEmpty, s"README names specs absent from src/test: $noSpec")
   }
 
   test("query names are contiguous q1..qN with no gaps or dupes") {

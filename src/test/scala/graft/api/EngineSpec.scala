@@ -412,4 +412,26 @@ class EngineSpec extends SparkSpec {
         s"$mode: not sorted by $sc: ${scores.toSeq}")
     }
   }
+
+  test("clearCollection with nothing to keep: the next index rebuilds the store like a fresh one") {
+    val tree = Files.createTempDirectory("graft_clear_tree").toString
+    Files.writeString(Paths.get(tree, "planted.py"),
+      """def quokka_ledger_sync(rows):
+        |    '''Reconcile the quokka ledger rows.'''
+        |    return len(rows)
+        |""".stripMargin)
+    val fresh = GraftEngine(spark, Files.createTempDirectory("graft_clear_fresh").toString)
+      .index(tree)
+    assert(fresh.mode == "full")
+    // preserveManual = true with no manual memory keeps nothing either
+    for (preserveManual <- Seq(false, true)) {
+      val e = GraftEngine(spark, Files.createTempDirectory("graft_clear").toString)
+      e.index(tree)
+      e.clearCollection(preserveManual)
+      assert(e.index(tree) == fresh, s"preserveManual=$preserveManual")
+      val hits = e.searchSimilar("quokka ledger", "keyword", limit = 3)
+        .select("entityName").collect().map(_.getString(0))
+      assert(hits.contains("quokka_ledger_sync"), s"preserveManual=$preserveManual: ${hits.toSeq}")
+    }
+  }
 }

@@ -380,46 +380,4 @@ class PlanShapeSpec extends SparkSpec {
     assert(count(ns) { case _: BaseJoinExec => () } >= 3,
       "neighbor self-join + anti-join + two degree attachments")
   }
-
-  test("q285_mann_kendall: the quadratic pair join consumes the DAY GRID, not raw events") {
-    val ns = nodes("q285_mann_kendall")
-    val quads = ns.collect {
-      case c: CartesianProductExec => c: SparkPlan
-      case b: BroadcastNestedLoopJoinExec => b: SparkPlan
-    }
-    // the day-pair join + the 1-row ties attachment
-    assert(quads.size <= 2, s"day-pair join + ties attachment only, got ${quads.size}")
-    // EVERY quadratic join must consume aggregated (bounded) inputs on
-    // both sides — never a raw corpus scan
-    quads.foreach { q =>
-      q.children.map(PlanDump.flatten).foreach { side =>
-        assert(side.exists(_.getClass.getSimpleName.contains("Aggregate")),
-          "each side of a non-equi join must be an aggregate (bounded grid)")
-      }
-    }
-  }
-
-  test("q273_log_rank: sessionize + grid folds, zero pair joins") {
-    val ns = nodes("q273_log_rank")
-    assert(count(ns) { case _: CartesianProductExec => () } == 0)
-    // 1-row attachments only (corpus span, grid totals, AQE splits) —
-    // every BNLJ side must be an aggregate, never a raw scan
-    val bnl = ns.collect { case b: BroadcastNestedLoopJoinExec => b }
-    assert(bnl.size <= 3)
-    bnl.foreach { q =>
-      q.children.map(PlanDump.flatten).foreach { side =>
-        assert(side.exists(n => n.getClass.getSimpleName.contains("Aggregate")
-            || n.getClass.getSimpleName.contains("Window")),
-          "BNLJ sides must be aggregates/grid folds, not raw scans")
-      }
-    }
-    assert(count(ns) { case _: SortMergeJoinExec => () } == 0)
-  }
-
-  test("q275_fisher_exact: the support grid is metadata-sized — scalar BNLJs only") {
-    val ns = nodes("q275_fisher_exact")
-    assert(count(ns) { case _: CartesianProductExec => () } == 0)
-    // tot→grid explode + the max/w_obs centring attachment are 1-row sides
-    assert(count(ns) { case _: BroadcastNestedLoopJoinExec => () } <= 2)
-  }
 }
