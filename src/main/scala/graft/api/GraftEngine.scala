@@ -108,13 +108,13 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
 
   /** Result-memoized search (reference: `storage/base.py:249-330`
     * `CachingVectorStore`, an opt-in decorator — searchSimilar itself stays
-    * pure/lazy). A repeat of the same (query, mode, filters, limit,
-    * threshold) replays the collected top-k rows without touching the
-    * cluster; any mutation through THIS engine clears the memo, mirroring
-    * the reference's clear-on-upsert/delete policy.
+    * pure/lazy). A repeat of the same (store version, query, mode, filters,
+    * limit, threshold) replays the collected top-k rows without touching
+    * the cluster, so a commit by any writer is a miss; a mutation through
+    * THIS engine also clears the memo (the reference's clear-on-write).
     */
   @transient lazy val searchCache =
-    new graft.search.SearchCache[(String, String, Seq[String], Int, Double),
+    new graft.search.SearchCache[(Long, String, String, Seq[String], Int, Double),
       (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])](1000)
 
   def searchSimilarCached(query: String, mode: String = "semantic",
@@ -122,7 +122,8 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
                           limit: Int = 10,
                           threshold: Double = Double.NegativeInfinity): DataFrame = {
     val (schema, rows) =
-      searchCache.getOrElseUpdate((query, mode, entityTypes.toList, limit, threshold)) {
+      searchCache.getOrElseUpdate(
+        (IndexStore.version(storeDir), query, mode, entityTypes.toList, limit, threshold)) {
         val df = searchSimilar(query, mode, entityTypes, limit, threshold)
         (df.schema, df.collect())
       }
@@ -301,18 +302,14 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
       "", "", hasImplementation = false)
     val df = embedder.embed(Seq(chunk).toDS().toDF(), "content")
       .withColumn("pointId", graft.core.Ids.pointId(col("chunkId")))
-    // partition-selective upsert (guide §6): a manual memory is ALWAYS a
-    // metadata chunk, so only the chunkType=metadata partition changes —
-    // read it pruned, rewrite it alone; implementation/relation partition
-    // files are untouched (the old path re-read and rewrote the whole
-    // store for one row)
-    val existing = chunks
-    val dataCols = existing.columns.toIndexedSeq.filterNot(_ == "chunkType")
-    val meta = existing.filter(col("chunkType") === "metadata")
-      .filter(col("chunkId") =!= chunkId)
-      .select(dataCols.map(col): _*)
-      .unionByName(df.select(dataCols.map(col): _*))
-    IndexStore.replaceTypePartition(meta, storeDir, "metadata")
+    // always a metadata chunk: the commit replaces only the metadata files;
+    // implementation and relation files carry over by reference
+    IndexStore.update(storeDir) { snap =>
+      val old = snap.partition("metadata")
+      val meta = if (old.isEmpty) df
+        else snap.chunks(spark, old).filter(col("chunkId") =!= chunkId).unionByName(df)
+      (Some(snap.files.diff(old) ++ IndexStore.writeChunks(meta, storeDir)), ())
+    }
   }
 
   /** Clear auto-generated points, optionally preserving manual memories
@@ -321,20 +318,14 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     */
   def clearCollection(preserveManual: Boolean = true): Unit = {
     searchCache.clear()
-    val manual =
-      if (preserveManual && IndexStore.exists(storeDir))
-        Some(chunks.filter(col("filePath") === "" && col("chunkType") =!= "relation"))
-          .filterNot(_.isEmpty)
-      else None
-    // an empty partitioned write leaves a `_SUCCESS`-only directory that no
-    // read or re-index can infer a schema from: with nothing to keep, drop
-    // the chunk table so the store reads as never written
-    manual.fold(IndexStore.dropChunks(storeDir))(IndexStore.writeChunks(_, storeDir))
-    // stale incremental state would make the next index diff against files
-    // whose chunks were just deleted and parse nothing — drop it so the
-    // next index is a full pass (manual chunks survive it: applyChanges
-    // carries file-less chunks in full mode too)
-    IndexStore.clearState(storeDir)
+    // one commit: the manual chunks (or none) and no file_state, so the next
+    // index is a full pass (which carries file-less chunks), not a diff
+    // against files whose chunks were just deleted that parses nothing
+    IndexStore.update(storeDir) { snap =>
+      val manual = if (preserveManual && snap.exists) IndexStore.writeChunks(snap.chunks(spark)
+        .filter(col("filePath") === "" && col("chunkType") =!= "relation"), storeDir) else Nil
+      (if (snap.files.isEmpty) None else Some(manual), ())
+    }
   }
 
   /** Interval-gated maintenance (the reference's cleanup timer policy,
@@ -355,16 +346,13 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     if (nowMs - lastRun < intervalMs) None
     else {
       // two processes sharing the store (batch CLI + watch) can both read a
-      // stale stamp: an OS-level advisory lock (FileChannel.tryLock) is the
-      // mutex — the loser skips, so concurrent cleanups can't race each
-      // other's copy-on-write swap. The OS releases the lock when its
-      // holder dies, so a crashed holder leaves NO stale state to break —
-      // the previous delete-then-create stale-break had a TOCTOU window
-      // where two processes could each "break" the lock (the second delete
-      // removing the first's fresh lock) and run concurrently. The .lock
-      // file itself is a permanent zero-byte sentinel, never deleted:
-      // unlinking after release races a concurrent acquirer that holds the
-      // now-unlinked inode while a third process creates a fresh file.
+      // stale stamp: an OS-level advisory lock (FileChannel.tryLock) makes
+      // the loser skip, so no two run the same cleanup (commits need no
+      // lock: a loser replays, IndexStore.update). The OS releases the lock
+      // with its holder, so a crash leaves nothing stale to break (a
+      // delete-then-create break lets two processes each "break" it). The
+      // zero-byte .lock file is never deleted: unlinking after release races
+      // an acquirer holding the unlinked inode while another creates a new one.
       Files.createDirectories(stamp.getParent)
       val held: Option[java.nio.channels.FileChannel] =
         scala.util.Try(java.nio.channels.FileChannel.open(lock,
@@ -404,20 +392,21 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     */
   def cleanup(): Long = {
     searchCache.clear()
-    val all = chunks.cache()
-    val names = all.filter(col("chunkType") =!= "relation")
-      .select(col("entityName")).distinct()
-    val rel = all.filter(col("chunkType") === "relation")
-    val keep = IndexPipeline.keepWellFormedRelations(rel, names)
-    // anti-join, not collect+isin: the phantom set is unbounded at scale and
-    // an isin literal list would blow up the plan on the driver
-    val keepClean = keep.join(IndexPipeline.phantomCalls(all), Seq("chunkId"), "left_anti")
-    val removed = rel.count() - keepClean.count()
-    if (removed > 0) {
-      val result = all.filter(col("chunkType") =!= "relation").unionByName(keepClean)
-      IndexStore.writeChunks(result, storeDir)
+    IndexStore.update(storeDir) { snap =>
+      val all = snap.chunks(spark).cache()
+      val names = all.filter(col("chunkType") =!= "relation")
+        .select(col("entityName")).distinct()
+      val rel = all.filter(col("chunkType") === "relation")
+      val keep = IndexPipeline.keepWellFormedRelations(rel, names)
+      // anti-join, not collect+isin: the phantom set is unbounded at scale and
+      // an isin literal list would blow up the plan on the driver
+      val keepClean = keep.join(IndexPipeline.phantomCalls(all), Seq("chunkId"), "left_anti")
+      val removed = rel.count() - keepClean.count()
+      // only the relation files are replaced; the others carry over
+      val files = if (removed == 0) None else Some(snap.files.diff(snap.partition("relation")) ++
+        IndexStore.writeChunks(keepClean.select(all.columns.toIndexedSeq.map(col): _*), storeDir))
+      all.unpersist()
+      (files, removed)
     }
-    all.unpersist()
-    removed
   }
 }

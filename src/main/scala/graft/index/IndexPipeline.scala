@@ -138,98 +138,97 @@ object IndexPipeline {
     val filesScanned = files.size.toLong
     val curMeta = spark.createDataset(files).toDF("relPath", "size", "mtime")
 
-    val prevState = IndexStore.readState(spark, storeDir)
-    val incremental = prevState.isDefined && IndexStore.exists(storeDir)
+    // one commit for the chunk files and the file_state files together
+    IndexStore.update(storeDir) { snap =>
+      val prevState = snap.state(spark)
+      val incremental = prevState.isDefined && snap.exists
+      // --- incremental diff (reference: indexer.py:886-1021) ---------------
+      // mtime/size prefilter (indexer.py:898-987): a file whose recorded
+      // size+mtime are unchanged is NOT read or hashed at all — only
+      // candidates (new paths, or size/mtime drift) pay the content read,
+      // which is the 15x incremental win on a large tree. Deliberate
+      // tradeoff (same as the reference): an edit that preserves BOTH byte
+      // size and ms-mtime (cp -p of a same-length version) is invisible
+      // until the file is touched again. All set logic is joins; no path
+      // list round-trips through the driver, so a mass-touch (branch
+      // switch) stays distributed.
+      val prev = (if (incremental) prevState.get else spark.emptyDataset[FileState].toDF())
+        .select(col("relPath"), col("hash").as("prevHash"),
+          col("size").as("prevSize"), col("mtime").as("prevMtime"))
+      val joined = curMeta.join(prev, Seq("relPath"), "full_outer")
+      // an incremental pass probes this join before the merge re-reads it
+      if (incremental) joined.cache()
+      val removed = joined.filter(col("size").isNull).select(col("relPath"))
+      val unchangedState = joined
+        .filter(col("size").isNotNull && col("prevHash").isNotNull &&
+          col("size") === col("prevSize") && col("mtime") === col("prevMtime"))
+        .select(col("relPath"), col("prevHash").as("hash"), col("size"), col("mtime"))
+      val candidates = joined
+        .filter(col("size").isNotNull &&
+          (col("prevHash").isNull || col("size") =!= col("prevSize") || col("mtime") =!= col("prevMtime")))
+        .select(col("relPath"), col("size"), col("mtime"), col("prevHash"))
+        .as[CandidateMeta]
 
-    // --- incremental diff (reference: indexer.py:886-1021) ---------------
-    // mtime/size prefilter (indexer.py:898-987): a file whose recorded
-    // size+mtime are unchanged is NOT read or hashed at all — only
-    // candidates (new paths, or size/mtime drift) pay the content read,
-    // which is the 15x incremental win on a large tree. Deliberate
-    // tradeoff (same as the reference): an edit that preserves BOTH byte
-    // size and ms-mtime (cp -p of a same-length version) is invisible
-    // until the file is touched again. All set logic is joins; no path
-    // list round-trips through the driver, so a mass-touch (branch
-    // switch) stays distributed.
-    val prev = (if (incremental) prevState.get else spark.emptyDataset[FileState].toDF())
-      .select(col("relPath"), col("hash").as("prevHash"),
-        col("size").as("prevSize"), col("mtime").as("prevMtime"))
-    val joined = curMeta.join(prev, Seq("relPath"), "full_outer")
-    // an incremental pass probes this join before the merge re-reads it
-    if (incremental) joined.cache()
-    val removed = joined.filter(col("size").isNull).select(col("relPath"))
-    val unchangedState = joined
-      .filter(col("size").isNotNull && col("prevHash").isNotNull &&
-        col("size") === col("prevSize") && col("mtime") === col("prevMtime"))
-      .select(col("relPath"), col("prevHash").as("hash"), col("size"), col("mtime"))
-    val candidates = joined
-      .filter(col("size").isNotNull &&
-        (col("prevHash").isNull || col("size") =!= col("prevSize") || col("mtime") =!= col("prevMtime")))
-      .select(col("relPath"), col("size"), col("mtime"), col("prevHash"))
-      .as[CandidateMeta]
+      // content read + hash, executor-side, candidates only; cached so the
+      // parse pass and the state write share one read. A file that vanishes
+      // or turns unreadable between the driver walk and this read is SKIPPED
+      // (not a job abort): it gets no state row, so the next run re-examines
+      // it — deleted files then cascade through the removed path.
+      val rootPath = projectDir
+      val hashed = candidates.mapPartitions { it =>
+        it.flatMap { c =>
+          scala.util.Try {
+            val content = new String(
+              java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(rootPath, c.relPath)),
+              java.nio.charset.StandardCharsets.UTF_8)
+            HashedCandidate(FileRow(s"$rootPath/${c.relPath}", c.relPath, c.size, c.mtime, content),
+              Ids.sha256Hex(content), c.prevHash)
+          }.toOption
+        }
+      }.cache()
 
-    // content read + hash, executor-side, candidates only; cached so the
-    // parse pass and the state write share one read. A file that vanishes
-    // or turns unreadable between the driver walk and this read is SKIPPED
-    // (not a job abort): it gets no state row, so the next run re-examines
-    // it — deleted files then cascade through the removed path.
-    val rootPath = projectDir
-    val hashed = candidates.mapPartitions { it =>
-      it.flatMap { c =>
-        scala.util.Try {
-          val content = new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(rootPath, c.relPath)),
-            java.nio.charset.StandardCharsets.UTF_8)
-          HashedCandidate(FileRow(s"$rootPath/${c.relPath}", c.relPath, c.size, c.mtime, content),
-            Ids.sha256Hex(content), c.prevHash)
-        }.toOption
-      }
-    }.cache()
+      // a touched-but-identical file (mtime drift, same hash) is not
+      // re-parsed; its state row still records the new mtime
+      val toParse: Dataset[FileRow] = hashed.filter(h => !h.prevHash.contains(h.hash)).map(_.row)
 
-    // a touched-but-identical file (mtime drift, same hash) is not
-    // re-parsed; its state row still records the new mtime
-    val toParse: Dataset[FileRow] = hashed.filter(h => !h.prevHash.contains(h.hash)).map(_.row)
+      val newState = unchangedState.unionByName(
+        hashed.map(h => FileState(h.row.relPath, h.hash, h.row.size, h.row.mtime)).toDF())
+      val replaced = toParse.map(_.relPath).toDF("relPath").union(removed)
 
-    val newState = unchangedState.unionByName(
-      hashed.map(h => FileState(h.row.relPath, h.hash, h.row.size, h.row.mtime)).toDF())
-    val replaced = toParse.map(_.relPath).toDF("relPath").union(removed)
-
-    // no-op early exit (reference `should_process=False`, SURVEY.md:608):
-    // an incremental pass with nothing to replace (no file removed, no hash
-    // changed) leaves the chunk store as it is — a written store is a
-    // cleanup fixed point, so the merge would rewrite the same rows — and
-    // rewrites file_state only if some candidate's size or mtime drifted
-    if (incremental) {
-      val probe = replaced.agg(count(lit(1))).crossJoin(candidates.agg(count(lit(1)))).head()
-      if (probe.getLong(0) == 0L) {
-        if (probe.getLong(1) > 0L) timed("state_write")(IndexStore.writeState(newState, storeDir))
+      // no-op early exit (reference `should_process=False`, SURVEY.md:608):
+      // an incremental pass with nothing to replace (no file removed, no hash
+      // changed) leaves the chunk store as it is — a written store is a
+      // cleanup fixed point, so the merge would rewrite the same rows — and
+      // commits new file_state only if some candidate's size or mtime drifted
+      val probe = if (incremental)
+        Some(replaced.agg(count(lit(1))).crossJoin(candidates.agg(count(lit(1)))).head()) else None
+      if (probe.exists(_.getLong(0) == 0L)) {
+        val stateOnly = if (probe.get.getLong(1) == 0L) None
+          else Some(snap.chunkFiles ++ timed("state_write")(IndexStore.writeState(newState, storeDir)))
         hashed.unpersist(); joined.unpersist()
-        val store = IndexStore.readChunks(spark, storeDir)
+        val store = snap.chunks(spark)
           .agg(count(lit(1)), count(when(col("chunkType") === "relation", 1))).head()
-        return IndexingResult("incremental", filesScanned, 0L, 0L, store.getLong(1), 0L,
-          store.getLong(0), Seq.empty)
+        (stateOnly, IndexingResult("incremental", filesScanned, 0L, 0L, store.getLong(1), 0L,
+          store.getLong(0), Seq.empty))
+      } else {
+        // --- parse + merge: filesParsed comes out of applyChanges' single
+        // parse-metadata aggregate (one job: content read + hash + parse)
+        val results = SourceScan.parseAll(toParse).cache()
+        val (res, chunkFiles) = applyChanges(spark, snap, results, replaced, incremental, embedder)
+        val stateFiles = timed("state_write")(IndexStore.writeState(newState, storeDir))
+        hashed.unpersist(); results.unpersist(); joined.unpersist()
+        (Some(chunkFiles ++ stateFiles), res.copy(mode = if (incremental) "incremental" else "full",
+          filesScanned = filesScanned))
       }
     }
-
-    // --- parse + merge ---------------------------------------------------
-    val results = SourceScan.parseAll(toParse).cache()
-
-    // filesParsed comes out of applyChanges' single parse-metadata
-    // aggregate (one job materializes content read + hash + parse AND
-    // the entity/error counts — was a separate count() barrier here)
-    val res = applyChanges(spark, storeDir, results, replaced, incremental, embedder)
-
-    timed("state_write")(IndexStore.writeState(newState, storeDir))
-    hashed.unpersist(); results.unpersist(); joined.unpersist()
-    res.copy(mode = if (incremental) "incremental" else "full",
-      filesScanned = filesScanned)
   }
 
   /** Merge a batch of parse results into the store: drop replaced/deleted
     * files' chunks, entity-aware relation filter, content-hash dedup,
-    * embed what's new, copy-on-write swap. Shared by the batch indexer and
-    * the streaming `foreachBatch` path (SURVEY.md §3.3 "same batch
-    * pipeline").
+    * embed what's new, write the new chunk files, whose store-relative paths
+    * come back for the caller to commit over `base`. Shared by the batch
+    * indexer and the streaming `foreachBatch` path (SURVEY.md §3.3 "same
+    * batch pipeline").
     *
     * `replaced` is a single-column (`relPath`) DataFrame of re-parsed +
     * deleted paths — a join input, never a driver-side literal list.
@@ -241,9 +240,9 @@ object IndexPipeline {
     * vector instead of re-embedding. Only genuinely new/changed entities
     * pay the embedder.
     */
-  def applyChanges(spark: SparkSession, storeDir: String,
+  def applyChanges(spark: SparkSession, base: IndexStore.Snapshot,
                    results: Dataset[ParserResult], replaced: DataFrame,
-                   incremental: Boolean, embedder: Embedder): IndexingResult = {
+                   incremental: Boolean, embedder: Embedder): (IndexingResult, Seq[String]) = {
     import spark.implicits._
 
     // ONE parse-metadata action (guide §5: the driver serialized three
@@ -287,15 +286,15 @@ object IndexPipeline {
     val replacedFiles = replaced.select(col("relPath").as("filePath"))
     val (carried: DataFrame, replacedOld: DataFrame) =
       if (incremental) {
-        val existing = IndexStore.readChunks(spark, storeDir)
+        val existing = base.chunks(spark)
         (existing.join(replacedFiles, Seq("filePath"), "left_anti"),
           existing.join(replacedFiles, Seq("filePath"), "left_semi"))
-      } else if (IndexStore.exists(storeDir)) {
+      } else if (base.exists) {
         // full re-index over an existing store (e.g. after clear-collection):
         // file-derived chunks are all rebuilt, but MANUAL memories have no
         // file provenance and must survive — the reference's upsert-into-
         // existing-collection semantics (storage/qdrant.py:1303-1401)
-        val existing = IndexStore.readChunks(spark, storeDir)
+        val existing = base.chunks(spark)
         (existing.filter(col("filePath") === "" && col("chunkType") =!= "relation"),
           emptyChunks)
       } else (emptyChunks, emptyChunks)
@@ -370,11 +369,11 @@ object IndexPipeline {
     val nRelations = statRow.getLong(3)
     val chunksCarried = statRow.getLong(2) - chunksWritten
 
-    timed("store_write")(IndexStore.writeChunks(all, storeDir))
+    val files = timed("store_write")(IndexStore.writeChunks(all, base.root))
     newChunksRaw.unpersist(); names.unpersist(); all.unpersist(); finalNew.unpersist()
-    IndexingResult(if (incremental) "incremental" else "full",
+    (IndexingResult(if (incremental) "incremental" else "full",
       0, filesParsed, nEntities, nRelations, chunksWritten, chunksCarried, errors, chunksEmbedded,
-      metaRow.getLong(2))
+      metaRow.getLong(2)), files)
   }
 
   /** Phantom-CALLS detection (reference: storage/qdrant.py:2325-2381):

@@ -1,8 +1,11 @@
 package graft.index
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths, StandardOpenOption}
+import java.util.UUID
+import scala.jdk.CollectionConverters._
 import scala.util.Try
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet-backed chunk store (the Qdrant-collection analog, SURVEY.md
@@ -14,164 +17,170 @@ import org.apache.spark.sql.functions._
   * boost" re-expressed as storage layout); `{root}/file_state` drives
   * incremental diffs.
   *
-  * Writes are copy-on-write table swaps (write `_tmp`, atomic dir move) —
-  * the parquet stand-in for a Delta MERGE; on a cluster deployment the same
-  * pipeline writes `MERGE INTO` keyed on the deterministic `pointId`
-  * (idempotent upsert, reference storage/qdrant.py:1423-1430).
+  * Versions: data files are immutable once written. A writer stages its
+  * files with Spark, moves them into their table directory and [[commit]]s
+  * `{root}/_log/<v>`, the store-relative paths of every live file, one per
+  * line. Reads resolve the newest entry and read exactly the files it
+  * lists, so a crash at any step leaves the whole old version or the whole
+  * new one, and a store with no `_log` reads as absent. Writers race
+  * optimistically ([[update]]), the shape of the Delta Lake log (Armbrust
+  * et al., VLDB 2020); on a cluster deployment the same pipeline writes
+  * `MERGE INTO` keyed on the deterministic `pointId` (idempotent upsert,
+  * reference storage/qdrant.py:1423-1430).
   */
 object IndexStore {
 
-  def chunksPath(root: String) = s"$root/chunks"
-  def statePath(root: String) = s"$root/file_state"
+  /** Log entries [[vacuum]] keeps; files only older entries list go. */
+  val RetainedVersions = 10
+  /** Replays of a writer that keeps losing the commit race. */
+  val MaxReplays = 8
 
-  /** Crash recovery for the two-rename swap: if a crash landed between
-    * `move(path -> old)` and `move(tmp -> path)`, the data lives in
-    * `<path>_old` — restore it instead of silently treating the store as
-    * absent (which would full-reindex and lose manual memories).
-    */
-  private def recover(path: String): Unit = {
-    val p = Paths.get(path); val old = Paths.get(path + "_old")
-    if (!Files.exists(p) && Files.exists(old)) Files.move(old, p)
-    // partition-level swap leftovers ([[replaceTypePartition]]):
-    // <path>_pold_<pt> holds the previous chunkType=<pt> partition when a
-    // crash hit the window between its two moves — restore it unless the
-    // new partition landed.
-    val parent = p.getParent
-    if (parent != null && Files.exists(parent)) {
-      val prefix = p.getFileName.toString + "_pold_"
-      import scala.jdk.CollectionConverters._
-      val l = Files.list(parent)
-      try l.iterator().asScala.toVector
-        .filter(_.getFileName.toString.startsWith(prefix)).foreach { o =>
-          val pt = o.getFileName.toString.stripPrefix(prefix)
-          val part = p.resolve(s"chunkType=$pt")
-          if (!Files.exists(part)) { Files.createDirectories(p); Files.move(o, part) }
-          else deleteRecursive(o)
-        }
-      finally l.close()
-    }
+  /** One committed version; version 0 with no files is the absent store. */
+  case class Snapshot(root: String, version: Long, files: Seq[String]) {
+    def chunkFiles: Seq[String] = files.filter(_.startsWith("chunks/"))
+    def stateFiles: Seq[String] = files.filter(_.startsWith("file_state/"))
+    def partition(pt: String): Seq[String] = files.filter(_.startsWith(s"chunks/chunkType=$pt/"))
+    def exists: Boolean = chunkFiles.nonEmpty
+    def chunks(spark: SparkSession, fs: Seq[String] = chunkFiles): DataFrame = read(spark, "chunks", fs)
+    def state(spark: SparkSession): Option[DataFrame] =
+      if (stateFiles.isEmpty) None else Some(read(spark, "file_state", stateFiles))
+    /** The table directory narrowed to `fs` by their unique names: one
+      * listing, where over 32 paths would start a Spark job to list them.
+      */
+    private def read(spark: SparkSession, table: String, fs: Seq[String]): DataFrame =
+      spark.read.option("pathGlobFilter", fs.map(f => f.substring(f.lastIndexOf('/') + 1))
+        .mkString("{", ",", "}")).parquet(s"$root/$table")
   }
 
-  def exists(root: String): Boolean = {
-    recover(chunksPath(root))
-    Files.exists(Paths.get(chunksPath(root)))
+  private def logDir(root: String): Path = Paths.get(root, "_log")
+
+  private def versions(root: String): Vector[Long] =
+    walk(logDir(root), 1).flatMap(_.getFileName.toString.toLongOption).sorted
+
+  def version(root: String): Long = versions(root).lastOption.getOrElse(0L)
+
+  private def entry(root: String, v: Long): Vector[String] =
+    Files.readAllLines(logDir(root).resolve(v.toString), UTF_8).asScala.toVector.filter(_.nonEmpty)
+
+  def snapshot(root: String): Snapshot = {
+    val v = version(root)
+    // an entry vacuumed between the listing and the read: resolve again
+    try Snapshot(root, v, if (v == 0L) Vector.empty else entry(root, v))
+    catch { case _: NoSuchFileException => snapshot(root) }
   }
 
-  def readChunks(spark: SparkSession, root: String): DataFrame = {
-    recover(chunksPath(root))
-    spark.read.parquet(chunksPath(root))
-  }
+  def readChunks(spark: SparkSession, root: String): DataFrame = snapshot(root).chunks(spark)
 
-  def readState(spark: SparkSession, root: String): Option[DataFrame] = {
-    recover(statePath(root))
-    if (Files.exists(Paths.get(statePath(root)))) Some(spark.read.parquet(statePath(root)))
-    else None
-  }
-
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
+  /** `p` and what lies under it, `depth` levels down; empty when absent. */
+  private def walk(p: Path, depth: Int = Int.MaxValue): Vector[Path] =
+    if (!Files.exists(p)) Vector.empty
+    else {
+      val w = Files.walk(p, depth) // must be closed: each walk holds open DirectoryStreams
+      try w.iterator().asScala.toVector finally w.close()
     }
 
-  /** Copy-on-write overwrite: write to `<path>_tmp`, swap, drop old. */
-  def overwrite(df: DataFrame, path: String, partitionCols: Seq[String] = Seq.empty): Unit = {
-    recover(path) // heal a half-finished previous swap before reading lineage
-    val tmp = path + "_tmp"
-    val old = path + "_old"
-    deleteRecursive(Paths.get(tmp))
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
-    deleteRecursive(Paths.get(old))
-    if (Files.exists(Paths.get(path))) Files.move(Paths.get(path), Paths.get(old))
-    Files.move(Paths.get(tmp), Paths.get(path))
-    deleteRecursive(Paths.get(old))
-  }
+  private def deleteRecursive(p: Path): Unit = walk(p).reverse.foreach(f => Files.deleteIfExists(f))
 
-  def writeChunks(df: DataFrame, root: String): Unit = {
-    Files.createDirectories(Paths.get(root))
-    overwrite(df, chunksPath(root), Seq("chunkType"))
-  }
-
-  /** Partition-selective COW rewrite (guide §6): replace ONLY the
-    * `chunkType=<pt>` partition of the chunk store with `df` — which must
-    * NOT carry the chunkType column (partition values are directory-
-    * encoded). A single-partition upsert (addManualMemory's one metadata
-    * chunk) rewrites that partition's bytes instead of the whole store,
-    * and the read side prunes to the same partition. Staging dirs live
-    * OUTSIDE the table directory: a `chunkType=metadata_tmp` sibling
-    * would register as a phantom partition value during discovery. Crash
-    * recovery mirrors the table-level swap ([[recover]] heals
-    * `chunks_pold_<pt>` leftovers).
+  /** Write `df` into a fresh `_staging/<uuid>` (appending into the table
+    * would make concurrent jobs share `_temporary/0`) and move its parquet
+    * files into `table` under fresh names: unique across partitions too, as
+    * [[Snapshot]] reads filter by name. Returns their store-relative paths.
     */
-  def replaceTypePartition(df: DataFrame, root: String, pt: String): Unit = {
-    recover(chunksPath(root))
-    val part = Paths.get(chunksPath(root), s"chunkType=$pt")
-    val tmp = Paths.get(chunksPath(root) + s"_ptmp_$pt")
-    val old = Paths.get(chunksPath(root) + s"_pold_$pt")
-    deleteRecursive(tmp)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    deleteRecursive(old)
-    if (Files.exists(part)) Files.move(part, old)
-    Files.createDirectories(part.getParent)
-    Files.move(tmp, part)
-    deleteRecursive(old)
+  private def stage(df: DataFrame, root: String, table: String, partitionCols: String*): Seq[String] = {
+    val staging = Paths.get(root, "_staging", UUID.randomUUID().toString)
+    df.write.partitionBy(partitionCols: _*).parquet(staging.toString)
+    val moved = walk(staging).filter(_.getFileName.toString.endsWith(".parquet")).map { f =>
+      val rel = s"$table/${staging.relativize(f).resolveSibling(s"part-${UUID.randomUUID()}.parquet")}"
+      val dst = Paths.get(root, rel)
+      Files.createDirectories(dst.getParent)
+      Files.move(f, dst)
+      val crc = f.resolveSibling(s".${f.getFileName}.crc") // its checksum moves along
+      if (Files.exists(crc)) Files.move(crc, dst.resolveSibling(s".${dst.getFileName}.crc"))
+      rel
+    }
+    deleteRecursive(staging)
+    moved
   }
 
-  def writeState(df: DataFrame, root: String): Unit = {
-    Files.createDirectories(Paths.get(root))
-    overwrite(df, statePath(root))
-  }
+  def writeChunks(df: DataFrame, root: String): Seq[String] = stage(df, root, "chunks", "chunkType")
 
-  /** Small-file compaction for the chunk store — the q69 bin-packing plan
-    * EXECUTED: rewrite the table so data files approach `targetBytes`
-    * instead of mirroring upsert history (every incremental merge adds
-    * task-sized files; thousands of upserts would otherwise decay scan
-    * performance into open-file overhead). Output file count =
-    * ceil(totalBytes / targetBytes); `repartitionByRange(chunkType,
-    * chunkId)` hands each writer a contiguous slice of one partition, so
-    * files land near the target and stay clustered by the progressive-
-    * disclosure partition column. Same COW swap as every other write —
-    * readers never see a half-compacted table. Returns (filesBefore,
-    * filesAfter).
+  def writeState(df: DataFrame, root: String): Seq[String] = stage(df, root, "file_state")
+
+  /** The one write to `_log`: publish `files` as version `v`. The list is
+    * written whole to a staging file and linked in as `_log/<v>`; the link
+    * fails when the entry exists, so exactly one writer wins `v`, and no
+    * reader sees a half-written entry (one created in place would be
+    * empty between its create and its write). False when `v` was taken.
     */
-  def compact(spark: SparkSession, root: String, targetBytes: Long = 128L << 20): (Int, Int) = {
-    recover(chunksPath(root))
-    def parquetFiles(p: Path): Seq[Path] = {
-      import scala.jdk.CollectionConverters._
-      if (!Files.exists(p)) Seq.empty
-      else {
-        val walk = Files.walk(p) // must be closed: each walk holds open DirectoryStreams
-        try walk.iterator().asScala.filter(f => f.toString.endsWith(".parquet")).toVector
-        finally walk.close()
+  private[index] def commit(root: String, v: Long, files: Seq[String]): Boolean = {
+    val tmp = Paths.get(root, "_staging", s"${UUID.randomUUID()}.log")
+    Files.createDirectories(tmp.getParent)
+    Files.createDirectories(logDir(root))
+    Files.write(tmp, files.map(_ + "\n").mkString.getBytes(UTF_8), StandardOpenOption.CREATE_NEW)
+    try { Files.createLink(logDir(root).resolve(v.toString), tmp); true }
+    catch { case _: FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
+  }
+
+  /** Optimistic concurrency: run `body` against the newest version and
+    * commit the file list it returns (`None` commits nothing) as the next
+    * one. A writer that loses the race deletes the files it added and
+    * replays against the new newest version, at most [[MaxReplays]] times.
+    */
+  def update[A](root: String)(body: Snapshot => (Option[Seq[String]], A)): A = {
+    @annotation.tailrec def attempt(n: Int): A = {
+      val base = snapshot(root)
+      body(base) match {
+        case (None, out) => out
+        // a failed vacuum only leaves garbage for the next one
+        case (Some(files), out) if commit(root, base.version + 1, files) => Try(vacuum(root)); out
+        case (Some(files), _) =>
+          files.diff(base.files).foreach(f => Files.deleteIfExists(Paths.get(root, f)))
+          if (n >= MaxReplays) throw new java.util.ConcurrentModificationException(
+            s"$root: lost the commit race ${n + 1} times")
+          attempt(n + 1)
       }
     }
-    val dir = Paths.get(chunksPath(root))
-    val before = parquetFiles(dir)
-    if (before.isEmpty) return (0, 0) // absent/empty store: nothing to rewrite
-    val total = before.map(Files.size).sum
-    val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    // steady state of scheduled maintenance: already at (or under) the
-    // target layout — skip the full-table rewrite entirely
-    if (before.size <= nOut) return (before.size, before.size)
-    val df = spark.read.parquet(chunksPath(root))
-      .repartitionByRange(nOut, col("chunkType"), col("chunkId"))
-    overwrite(df, chunksPath(root), Seq("chunkType"))
-    (before.size, parquetFiles(dir).size)
+    attempt(0)
   }
 
-  /** Drop the incremental file_state so the NEXT index is a full pass.
-    * Called by clear-collection: leaving stale state behind would make the
-    * next index diff against files whose chunks were just deleted and
-    * parse nothing.
+  /** Keep the newest [[RetainedVersions]] entries. A data file or staging
+    * directory goes only when no kept entry lists it AND it is older than
+    * the oldest kept entry: a writer whose uncommitted files that could
+    * touch pinned a base at most newest − K, so its commit conflicts anyway.
     */
-  def clearState(root: String): Unit = dropTable(statePath(root))
+  private def vacuum(root: String): Unit = {
+    val vs = versions(root)
+    val (old, kept) = vs.splitAt(vs.size - RetainedVersions)
+    old.foreach(v => Files.deleteIfExists(logDir(root).resolve(v.toString)))
+    val cutoff = Files.getLastModifiedTime(logDir(root).resolve(kept.head.toString))
+    val live = kept.flatMap(entry(root, _)).toSet
+    def stale(p: Path) = walk(p).map(Files.getLastModifiedTime(_)).max.compareTo(cutoff) < 0
+    // a data file `<n>`, or its checksum `.<n>.crc`, that no kept entry lists
+    def unlisted(f: Path) = !live(Paths.get(root).relativize(
+      f.resolveSibling(f.getFileName.toString.stripPrefix(".").stripSuffix(".crc"))).toString)
+    Seq("chunks", "file_state").flatMap(t => walk(Paths.get(root, t)))
+      .filter(f => Files.isRegularFile(f) && unlisted(f) && stale(f)).foreach(f => Files.deleteIfExists(f))
+    walk(Paths.get(root, "_staging"), 1).drop(1).filter(stale).foreach(deleteRecursive)
+  }
 
-  /** Drop the chunk table: [[exists]] is false afterwards, as for a store
-    * that was never written.
+  /** Small-file compaction — the q69 bin-packing plan EXECUTED: rewrite
+    * the live chunk files (task-sized upsert files decay scans into
+    * open-file overhead) as ceil(totalBytes / targetBytes) files, each a
+    * `repartitionByRange(chunkType, chunkId)` slice of one partition.
+    * Returns the live version's chunk-file counts (before, after).
     */
-  def dropChunks(root: String): Unit = dropTable(chunksPath(root))
-
-  private def dropTable(path: String): Unit =
-    Seq("", "_old", "_tmp").foreach(s => deleteRecursive(Paths.get(path + s)))
+  def compact(spark: SparkSession, root: String, targetBytes: Long = 128L << 20): (Int, Int) =
+    update(root) { snap =>
+      val before = snap.chunkFiles
+      val total = before.map(f => Files.size(Paths.get(root, f))).sum
+      val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
+      // absent store, or already at (or under) the target layout: no rewrite
+      if (before.size <= nOut) (None, (before.size, before.size))
+      else {
+        val after = writeChunks(snap.chunks(spark)
+          .repartitionByRange(nOut, col("chunkType"), col("chunkId")), root)
+        (Some(after ++ snap.stateFiles), (before.size, after.size))
+      }
+    }
 }

@@ -8,9 +8,10 @@ package graft.search
   * already handles; what the reference caches is the final top-k RESULT of
   * a repeated query. Those results are `limit`-bounded (tens of rows), so
   * holding them on the driver is safe at any corpus scale — the cache cost
-  * is O(entries × limit), independent of table size. Like the reference's,
-  * this is a per-process cache: a writer in another process is invisible
-  * until the owning engine mutates (or the entry is evicted).
+  * is O(entries × limit), independent of table size. Unlike the
+  * reference's, it sees writers in other processes: the engine keys every
+  * entry on the store version, so after any commit older entries are never
+  * hit again and age out of the LRU.
   */
 final class SearchCache[K, V](maxSize: Int) {
 

@@ -64,9 +64,6 @@ object WatchPipeline {
     // every coalesced event path (upsert or delete) is replaced — as a join
     // input, not a driver-side Set, same as the batch diff path
     val replaced = latest.map(_.relPath).toDF("relPath")
-    val incremental = IndexStore.exists(storeDir)
-    val res = IndexPipeline.applyChanges(spark, storeDir, parsed, replaced, incremental, embedder)
-
     // maintain file_state so a later batch index stays incremental. Size
     // must be the UTF-8 BYTE length (what the batch walk's attrs.size
     // reports), not the string's char count — a mismatch would turn every
@@ -74,10 +71,14 @@ object WatchPipeline {
     // ts carries the file's mtime (FileWatchSource emits e.mtime as ts).
     val newStates = upserts.map(e => FileState(e.relPath, graft.core.Ids.sha256Hex(e.content),
       e.content.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong, e.ts))
-    val prev = IndexStore.readState(spark, storeDir)
-      .getOrElse(spark.emptyDataset[FileState].toDF())
-    val state = prev.join(replaced, Seq("relPath"), "left_anti").unionByName(newStates.toDF())
-    IndexStore.writeState(state, storeDir)
+    // one commit for the batch's chunk files and file_state files
+    val res = IndexStore.update(storeDir) { snap =>
+      val (r, chunkFiles) =
+        IndexPipeline.applyChanges(spark, snap, parsed, replaced, snap.exists, embedder)
+      val state = snap.state(spark).getOrElse(spark.emptyDataset[FileState].toDF())
+        .join(replaced, Seq("relPath"), "left_anti").unionByName(newStates.toDF())
+      (Some(chunkFiles ++ IndexStore.writeState(state, storeDir)), r)
+    }
     latest.unpersist()
     res
   }

@@ -413,6 +413,31 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("search-result cache keys on the store version: a second engine's write is seen") {
+    val other = GraftEngine(spark, store)
+    val q = "platypus ledger reconciliation"
+    def names() = engine.searchSimilarCached(q, "keyword", limit = 5)
+      .select("entityName").collect().map(_.getString(0)).toSeq
+    assert(!names().contains("platypus-runbook"))
+    other.addManualMemory("platypus-runbook", "how the platypus ledger reconciliation runs")
+    assert(names().contains("platypus-runbook"), "the memo served a result older than the store")
+  }
+
+  test("addManualMemory on a fresh store: keyword search finds it; the first index keeps it") {
+    val tree = Files.createTempDirectory("graft_manual_tree").toString
+    Files.writeString(Paths.get(tree, "planted.py"),
+      "def numbat_sync(rows):\n    '''Sync the numbat rows.'''\n    return rows\n")
+    val e = GraftEngine(spark, Files.createTempDirectory("graft_manual_fresh").toString)
+    e.addManualMemory("numbat-notes", "The numbat migration runs before the schema bump")
+    val hits = e.searchSimilar("numbat migration", "keyword", limit = 3)
+      .select("entityName").collect().map(_.getString(0))
+    assert(hits.contains("numbat-notes"), hits.toSeq)
+    assert(e.index(tree).mode == "full")
+    val names = e.chunks.filter(col("chunkType") === "metadata")
+      .select("entityName").collect().map(_.getString(0)).toSet
+    assert(Set("numbat-notes", "numbat_sync").subsetOf(names), names)
+  }
+
   test("clearCollection with nothing to keep: the next index rebuilds the store like a fresh one") {
     val tree = Files.createTempDirectory("graft_clear_tree").toString
     Files.writeString(Paths.get(tree, "planted.py"),

@@ -17,8 +17,8 @@ class IndexPipelineSpec extends SparkSpec {
 
   private def apply(results: org.apache.spark.sql.Dataset[ParserResult]) =
     IndexPipeline.applyChanges(spark,
-      Files.createTempDirectory("graft_errs").toString, results,
-      Seq.empty[String].toDF("relPath"), incremental = false, DeterministicEmbedder())
+      IndexStore.snapshot(Files.createTempDirectory("graft_errs").toString), results,
+      Seq.empty[String].toDF("relPath"), incremental = false, DeterministicEmbedder())._1
 
   test("1,001 parse errors: the total is exact and the sample stops at the cap") {
     // one partition exercises the per-partition cap, four the final slice

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.index.IndexStore
 import graft.streaming.WatchPipeline.FileEvent
 
 class StreamingSpec extends SparkSpec {
@@ -31,7 +32,7 @@ class StreamingSpec extends SparkSpec {
     ).toDS
     val r1 = WatchPipeline.processBatch(spark, b1, store)
     assert(r1.chunksWritten > 0)
-    val names1 = spark.read.parquet(s"$store/chunks")
+    val names1 = IndexStore.readChunks(spark, store)
       .filter(col("chunkType") === "metadata").select("entityName")
       .collect().map(_.getString(0)).toSet
     assert(names1.contains("hello") && names1.contains("other"))
@@ -40,7 +41,7 @@ class StreamingSpec extends SparkSpec {
     val b2 = Seq(FileEvent("m.py", "modified", 2L,
       "def greet():\n    '''Say hi.'''\n    return 'hi'\n")).toDS
     WatchPipeline.processBatch(spark, b2, store)
-    val chunks2 = spark.read.parquet(s"$store/chunks")
+    val chunks2 = IndexStore.readChunks(spark, store)
     val names2 = chunks2.filter(col("chunkType") === "metadata")
       .select("entityName").collect().map(_.getString(0)).toSet
     assert(names2.contains("greet") && !names2.contains("hello"))
@@ -51,7 +52,7 @@ class StreamingSpec extends SparkSpec {
     // delete n.py: its chunks cascade away
     val b3 = Seq(FileEvent("n.py", "deleted", 3L, "")).toDS
     WatchPipeline.processBatch(spark, b3, store)
-    val names3 = spark.read.parquet(s"$store/chunks")
+    val names3 = IndexStore.readChunks(spark, store)
       .filter(col("chunkType") === "metadata").select("entityName")
       .collect().map(_.getString(0)).toSet
     assert(!names3.contains("other"))
@@ -68,7 +69,7 @@ class StreamingSpec extends SparkSpec {
       FileEvent("huge.py", "created", 1L, "# " + "x" * 200 + "\n")
     ).toDS
     WatchPipeline.processBatch(spark, b1, store4, config = cfg)
-    val names1 = spark.read.parquet(s"$store4/chunks")
+    val names1 = IndexStore.readChunks(spark, store4)
       .filter(col("chunkType") === "metadata").select("entityName")
       .collect().map(_.getString(0)).toSet
     assert(names1.contains("app"))
@@ -78,7 +79,7 @@ class StreamingSpec extends SparkSpec {
     val b2 = Seq(FileEvent("app.py", "deleted", 2L, "")).toDS
     WatchPipeline.processBatch(spark, b2, store4,
       config = cfg.copy(excludes = cfg.excludes :+ "app.py"))
-    val names2 = spark.read.parquet(s"$store4/chunks")
+    val names2 = IndexStore.readChunks(spark, store4)
       .filter(col("chunkType") === "metadata").select("entityName")
       .collect().map(_.getString(0)).toSet
     assert(!names2.contains("app"))
@@ -93,7 +94,7 @@ class StreamingSpec extends SparkSpec {
     try {
       mem.addData(FileEvent("s.py", "created", 1L, "def stream_fn():\n    return 42\n"))
       q.processAllAvailable()
-      val names = spark.read.parquet(s"$store2/chunks")
+      val names = IndexStore.readChunks(spark, store2)
         .filter(col("chunkType") === "metadata").select("entityName")
         .collect().map(_.getString(0)).toSet
       assert(names.contains("stream_fn"))
@@ -112,14 +113,14 @@ class StreamingSpec extends SparkSpec {
       checkpointDir = ckpt, debounceMs = 100L)
     try {
       // initial index ran before any event
-      val names0 = spark.read.parquet(s"$store3/chunks")
+      val names0 = IndexStore.readChunks(spark, store3)
         .filter(col("chunkType") === "metadata").select("entityName")
         .collect().map(_.getString(0)).toSet
       assert(names0.contains("base_fn"))
       // stream adds incrementally on top
       mem.addData(FileEvent("added.py", "created", 1L, "def added_fn():\n    return 2\n"))
       q.processAllAvailable()
-      val names1 = spark.read.parquet(s"$store3/chunks")
+      val names1 = IndexStore.readChunks(spark, store3)
         .filter(col("chunkType") === "metadata").select("entityName")
         .collect().map(_.getString(0)).toSet
       assert(names1.contains("base_fn") && names1.contains("added_fn"))
