@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.index.{DeterministicEmbedder, Embedder, IndexPipeline, IndexStore}
@@ -11,10 +11,14 @@ import graft.search.{Bm25, Hybrid}
   * diversified), readGraph,
   * getImplementation, entitiesForFile, clearCollection.
   *
-  * Query shape at scale: every search first prunes to the `metadata`
-  * chunk-type partition (progressive disclosure as partition pruning), then
-  * scores inside whole-stage codegen and reduces via
-  * TakeOrderedAndProject. Graph reads are joins on the relation partition.
+  * Query shape: searches and `readGraph` answer from the engine's
+  * [[graft.search.SearchSnapshot]] of the newest store version, its
+  * `metadata` and `relation` partitions held on the driver, loaded by one
+  * Spark job per version and served with none. A store too large to hold
+  * keeps the Spark path: every search prunes to the `metadata` partition
+  * (progressive disclosure as partition pruning), scores inside whole-stage
+  * codegen and reduces via TakeOrderedAndProject; graph reads are joins on
+  * the relation partition. The other reads stay on Spark.
   */
 case class GraftEngine(spark: SparkSession, storeDir: String,
                        embedder: Embedder = DeterministicEmbedder(),
@@ -29,12 +33,26 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
 
   private def metadataChunks: DataFrame = chunks.filter(col("chunkType") === "metadata")
 
+  @transient private lazy val snapshots = new graft.search.SearchSnapshot.Holder
+
+  /** The in-process snapshot of the newest version, None for an absent
+    * store or one too large to hold.
+    */
+  private def snapshot: Option[graft.search.SearchSnapshot] =
+    snapshots(spark, IndexStore.snapshot(storeDir))
+
   /** Dense / sparse / hybrid top-k over metadata chunks
     * (reference: storage/qdrant.py:692-1044).
     */
   def searchSimilar(query: String, mode: String = "semantic",
                     entityTypes: Seq[String] = Seq.empty,
-                    limit: Int = 10, threshold: Double = Double.NegativeInfinity): DataFrame = {
+                    limit: Int = 10, threshold: Double = Double.NegativeInfinity): DataFrame =
+    snapshot.fold(searchSimilarSpark(query, mode, entityTypes, limit, threshold))(
+      _.search(spark, embedder, query, mode, entityTypes, limit, threshold))
+
+  /** [[searchSimilar]] as a Spark plan: the path of a store too large to hold. */
+  private[graft] def searchSimilarSpark(query: String, mode: String, entityTypes: Seq[String],
+                                        limit: Int, threshold: Double): DataFrame = {
     val base0 = metadataChunks
     val base = if (entityTypes.nonEmpty) base0.filter(col("entityType").isin(entityTypes: _*)) else base0
 
@@ -107,11 +125,12 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
   }
 
   /** Result-memoized search (reference: `storage/base.py:249-330`
-    * `CachingVectorStore`, an opt-in decorator — searchSimilar itself stays
-    * pure/lazy). A repeat of the same (store version, query, mode, filters,
-    * limit, threshold) replays the collected top-k rows without touching
-    * the cluster, so a commit by any writer is a miss; a mutation through
-    * THIS engine also clears the memo (the reference's clear-on-write).
+    * `CachingVectorStore`, an opt-in decorator — searchSimilar itself keeps
+    * no answers, only the version's snapshot it scores against). A repeat
+    * of the same (store version, query, mode, filters, limit, threshold)
+    * replays the collected top-k rows without scoring again, so a commit by
+    * any writer is a miss; a mutation through THIS engine also clears the
+    * memo (the reference's clear-on-write).
     */
   @transient lazy val searchCache =
     new graft.search.SearchCache[(Long, String, String, Seq[String], Int, Double),
@@ -132,7 +151,8 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
 
   /** The CLI's unified "all" search (reference: cli_full.py:976-1072,
     * 1010-1026): run the regular search AND a chat-history-only search,
-    * merge, re-sort by the mode's score column, re-limit.
+    * merge (a chunk in both keeps its regular row), re-sort by the mode's
+    * score column, re-limit.
     */
   def searchAll(query: String, mode: String = "semantic", limit: Int = 10): DataFrame = {
     val regular = searchSimilar(query, mode, limit = limit)
@@ -142,17 +162,22 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
       case "diversified" => "mmr_score"
       case _ => "score"
     }
-    regular.unionByName(chat, allowMissingColumns = true)
-      .dropDuplicates("chunkId")
-      .orderBy(col(scoreCol).desc, col("chunkId").asc)
-      .limit(limit)
+    // two pages of at most `limit` rows: merged on the driver, where a union
+    // plan would start jobs even over two local relations
+    val page = (regular.collect() ++ chat.collect()).distinctBy(_.getAs[String]("chunkId"))
+      .sorted(graft.search.SearchSnapshot.ranked[Row](_.getAs[java.lang.Double](scoreCol), _.getAs[String]("chunkId")))
+    spark.createDataFrame(java.util.Arrays.asList(page.take(limit): _*), regular.schema)
   }
 
   /** Graph neighborhood read (reference MCP read_graph,
     * CLAUDE.md:159-199): modes `entities` (nodes mentioning the entity),
     * `relationships` (edges touching it), `smart` (both, summarized).
     */
-  def readGraph(entity: String, mode: String = "smart", limit: Int = 50): DataFrame = {
+  def readGraph(entity: String, mode: String = "smart", limit: Int = 50): DataFrame =
+    snapshot.fold(readGraphSpark(entity, mode, limit))(_.readGraph(spark, entity, mode, limit))
+
+  /** [[readGraph]] as a Spark plan: the path of a store too large to hold. */
+  private[graft] def readGraphSpark(entity: String, mode: String, limit: Int): DataFrame = {
     val rel = chunks.filter(col("chunkType") === "relation")
       .filter(col("entityName") === entity || col("relationTarget") === entity)
     mode match {

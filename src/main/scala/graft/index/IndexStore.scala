@@ -7,6 +7,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Parquet-backed chunk store (the Qdrant-collection analog, SURVEY.md
   * §7.1).
@@ -46,11 +50,34 @@ object IndexStore {
       if (stateFiles.isEmpty) None else Some(read(spark, "file_state", stateFiles))
     /** The table directory narrowed to `fs` by their unique names: one
       * listing, where over 32 paths would start a Spark job to list them.
+      * The schema is given, so the read starts no job to infer it.
       */
-    private def read(spark: SparkSession, table: String, fs: Seq[String]): DataFrame =
-      spark.read.option("pathGlobFilter", fs.map(f => f.substring(f.lastIndexOf('/') + 1))
-        .mkString("{", ",", "}")).parquet(s"$root/$table")
+    private def read(spark: SparkSession, table: String, fs: Seq[String]): DataFrame = {
+      val reader = spark.read.option("pathGlobFilter", fs.map(f => f.substring(f.lastIndexOf('/') + 1))
+        .mkString("{", ",", "}"))
+      fs.headOption.fold(reader)(f => reader.schema(fileSchema(spark, s"$root/$f", table == "chunks")))
+        .parquet(s"$root/$table")
+    }
   }
+
+  /** Schemas by data file, least recently read out first: a name is never
+    * reused, so an entry never goes stale.
+    */
+  private val schemas = new graft.search.SearchCache[String, StructType](4096)
+
+  /** The schema Spark wrote into `path`'s footer, read on the driver, plus
+    * the `chunkType` partition column (last, where inference puts it) for a
+    * chunk file.
+    */
+  private def fileSchema(spark: SparkSession, path: String, chunk: Boolean): StructType =
+    schemas.getOrElseUpdate(path) {
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
+      val written = try DataType.fromJson(in.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+      finally in.close()
+      if (chunk) written.add("chunkType", StringType) else written
+    }
 
   private def logDir(root: String): Path = Paths.get(root, "_log")
 

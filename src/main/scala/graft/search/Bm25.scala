@@ -44,6 +44,12 @@ object Bm25 {
     idf * (tf * lit(K1 + 1.0)) /
       (tf + lit(K1) * (lit(1.0 - B) + lit(B) * dl / avgdl))
 
+  /** THE Scala-side twin of [[contrib]], in its operation order, so a
+    * driver-side score equals the column's.
+    */
+  def contribScala(idf: Double, tf: Double, dl: Double, avgdl: Double): Double =
+    idf * (tf * (K1 + 1.0)) / (tf + K1 * ((1.0 - B) + B * dl / avgdl))
+
   /** Per-(doc, term) term frequencies + per-doc length. */
   def docTerms(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs

@@ -24,10 +24,11 @@ import graft.functions.VectorOps
   */
 object MmrRerank {
 
-  private def round6(x: Double): Double =
+  private[search] def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  private def cosine(a: Array[Double], b: Array[Double]): Double = {
+  /** `CosineSimilarity`'s loop, so a driver-side score equals the column's. */
+  private[search] def cosine(a: Array[Double], b: Array[Double]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     val n = math.min(a.length, b.length)
     while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }

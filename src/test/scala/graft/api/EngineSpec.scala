@@ -10,51 +10,7 @@ import graft.SparkSpec
   * incremental → delete cascade.
   */
 class EngineSpec extends SparkSpec {
-
-  private def writeFixture(root: String): Unit = {
-    def w(rel: String, content: String): Unit = {
-      val p = Paths.get(root, rel)
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, content)
-    }
-    w("foo.py",
-      """import os
-        |
-        |def add(x, y):
-        |    '''Add two numbers and return the sum.'''
-        |    return x + y
-        |
-        |class Calculator:
-        |    '''A tiny calculator.'''
-        |    def multiply(self, a, b):
-        |        return a * b
-        |""".stripMargin)
-    w("bar.py",
-      """from foo import add, Calculator
-        |
-        |def main():
-        |    '''Entry point calling add and multiply.'''
-        |    c = Calculator()
-        |    print(add(1, 2))
-        |    return c.multiply(3, 4)
-        |""".stripMargin)
-    w("utils/helpers.py",
-      """LOG_LEVEL = "INFO"
-        |
-        |def format_output(value):
-        |    '''Format a value for printing.'''
-        |    return f"[{LOG_LEVEL}] {value}"
-        |""".stripMargin)
-    w("README.md",
-      """# Sample project
-        |
-        |A tiny fixture project.
-        |
-        |## Usage
-        |
-        |Run main() from bar.py.
-        |""".stripMargin)
-  }
+  import EngineSpec.writeFixture
 
   private val root = Files.createTempDirectory("graft_repo").toString
   private val store = Files.createTempDirectory("graft_store").toString
@@ -458,5 +414,55 @@ class EngineSpec extends SparkSpec {
         .select("entityName").collect().map(_.getString(0))
       assert(hits.contains("quokka_ledger_sync"), s"preserveManual=$preserveManual: ${hits.toSeq}")
     }
+  }
+}
+
+object EngineSpec {
+  /** The temp_repo fixture: two Python modules calling each other, a helper
+    * module and a README.
+    */
+  def writeFixture(root: String): Unit = {
+    def w(rel: String, content: String): Unit = {
+      val p = Paths.get(root, rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, content)
+    }
+    w("foo.py",
+      """import os
+        |
+        |def add(x, y):
+        |    '''Add two numbers and return the sum.'''
+        |    return x + y
+        |
+        |class Calculator:
+        |    '''A tiny calculator.'''
+        |    def multiply(self, a, b):
+        |        return a * b
+        |""".stripMargin)
+    w("bar.py",
+      """from foo import add, Calculator
+        |
+        |def main():
+        |    '''Entry point calling add and multiply.'''
+        |    c = Calculator()
+        |    print(add(1, 2))
+        |    return c.multiply(3, 4)
+        |""".stripMargin)
+    w("utils/helpers.py",
+      """LOG_LEVEL = "INFO"
+        |
+        |def format_output(value):
+        |    '''Format a value for printing.'''
+        |    return f"[{LOG_LEVEL}] {value}"
+        |""".stripMargin)
+    w("README.md",
+      """# Sample project
+        |
+        |A tiny fixture project.
+        |
+        |## Usage
+        |
+        |Run main() from bar.py.
+        |""".stripMargin)
   }
 }
