@@ -11,14 +11,17 @@ import graft.search.{Bm25, Hybrid}
   * diversified), readGraph,
   * getImplementation, entitiesForFile, clearCollection.
   *
-  * Query shape: searches and `readGraph` answer from the engine's
-  * [[graft.search.SearchSnapshot]] of the newest store version, its
-  * `metadata` and `relation` partitions held on the driver, loaded by one
-  * Spark job per version and served with none. A store too large to hold
-  * keeps the Spark path: every search prunes to the `metadata` partition
-  * (progressive disclosure as partition pruning), scores inside whole-stage
-  * codegen and reduces via TakeOrderedAndProject; graph reads are joins on
-  * the relation partition. The other reads stay on Spark.
+  * Query shape: searches, `readGraph`, `getImplementation` and
+  * `entitiesForFile` answer from the engine's
+  * [[graft.search.SearchSnapshot]] of the newest store version, its chunks
+  * held on the driver, loaded by one Spark job per version and served with
+  * none. A store too large to hold keeps the Spark path: every search
+  * prunes to the `metadata` partition (progressive disclosure as partition
+  * pruning), scores inside whole-stage codegen and reduces via
+  * TakeOrderedAndProject; graph reads are joins on the relation partition.
+  * The multi-hop, ranking and store-wide reads (`readGraphBfs`,
+  * `rankEntities`, `suggestEntities`, `collectionInfo`, `allEntityNames`)
+  * stay on Spark.
   */
 case class GraftEngine(spark: SparkSession, storeDir: String,
                        embedder: Embedder = DeterministicEmbedder(),
@@ -263,7 +266,11 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     * the entity's impl chunks; `logical` adds same-file siblings;
     * `dependencies` adds direct call/import targets' impls.
     */
-  def getImplementation(name: String, scope: String = "minimal"): DataFrame = {
+  def getImplementation(name: String, scope: String = "minimal"): DataFrame =
+    snapshot.fold(getImplementationSpark(name, scope))(_.getImplementation(spark, name, scope))
+
+  /** [[getImplementation]] as a Spark plan: the path of a store too large to hold. */
+  private[graft] def getImplementationSpark(name: String, scope: String): DataFrame = {
     val impls = chunks.filter(col("chunkType") === "implementation")
     val own = impls.filter(col("entityName") === name)
     scope match {
@@ -294,6 +301,10 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     * (reference: storage/qdrant.py:1692-1845).
     */
   def entitiesForFile(path: String): DataFrame =
+    snapshot.fold(entitiesForFileSpark(path))(_.entitiesForFile(spark, path))
+
+  /** [[entitiesForFile]] as a Spark plan: the path of a store too large to hold. */
+  private[graft] def entitiesForFileSpark(path: String): DataFrame =
     chunks.filter(col("filePath") === path || col("entityName") === path)
       .groupBy(col("chunkType"))
       .agg(sort_array(collect_set(col("entityName"))).as("entities"))

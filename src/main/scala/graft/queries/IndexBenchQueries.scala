@@ -246,9 +246,9 @@ object IndexBenchQueries {
       val stageRows = graft.index.IndexPipeline.lastStageTimingsMs
         .map { case (k, v) => (s"t_${k}_ms", v) }
       val (searchHits, tSearch) =
-        ms(engine.searchSimilar("aggregating items total", "hybrid", limit = 5).count())
+        ms(engine.searchSimilar("aggregating items total", "hybrid", limit = 5).collect().length.toLong)
       val (graphRows, tGraph) =
-        ms(engine.readGraph("helper_5_a", "relationships", limit = 100).count())
+        ms(engine.readGraph("helper_5_a", "relationships", limit = 100).collect().length.toLong)
       val info = engine.collectionInfo().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       // structural counts are deterministic (the rows-only check's value);

@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.index.{Embedder, IndexStore}
 
-/** One store version's `metadata` and `relation` partitions held on the
-  * driver, so the engine's searches and graph reads run no Spark job: the
-  * paper's split, where batch indexing fits Spark and online serving does
-  * not. Loaded by one job per version ([[Holder]]); a store whose parquet
-  * would not fit ([[MaxHeapShare]]) stays on the engine's Spark path.
+/** One store version's chunks held on the driver, so the engine's
+  * searches, graph reads, `getImplementation` and `entitiesForFile` run no
+  * Spark job: the paper's split, where batch indexing fits Spark and online
+  * serving does not. Metadata rows keep every column; implementation and
+  * relation rows keep only what those reads use. Loaded by one job per
+  * version ([[Holder]]); a store whose parquet would not fit
+  * ([[MaxHeapShare]]) stays on the engine's Spark path.
   *
   * Answers equal the Spark path's, column for column: cosine is
   * `CosineSimilarity`'s loop, BM25 is [[Bm25.contribScala]] with N, avgdl
@@ -28,7 +30,9 @@ final class SearchSnapshot private (
     base: Array[IndexedSeq[Any]], // metadata rows in baseSchema
     dense: Array[Array[Double]],
     toks: Array[Array[String]], // Bm25.tokens; null as in Spark's size(null): no length
-    rel: Array[(String, String, String)]) { // relation rows: (entityName, relationType, relationTarget)
+    rel: Array[(String, String, String)], // relation rows: (entityName, relationType, relationTarget)
+    impl: Array[IndexedSeq[Any]], // implementation rows in ImplColumns
+    all: Array[(String, String, String)]) { // every chunk: (chunkType, entityName, filePath)
   import SearchSnapshot._
 
   private def column(n: String) = base.map(_(baseSchema.fieldIndex(n)).asInstanceOf[String])
@@ -43,6 +47,16 @@ final class SearchSnapshot private (
   private val postings: Map[String, Array[(Int, Int)]] = toks.indices
     .flatMap(i => Option(toks(i)).toSeq.flatMap(_.groupBy(identity).map { case (t, ts) => (t, (i, ts.length)) }))
     .groupMap(_._1)(_._2).map { case (t, ps) => t -> ps.toArray }
+
+  /** Row numbers by key; a null key is left out, as `=== null` matches nothing. */
+  private def index[A](rows: Array[A])(keys: A => Seq[String]): Map[String, Array[Int]] =
+    rows.indices.flatMap(i => keys(rows(i)).filter(_ != null).distinct.map(_ -> i))
+      .groupMap(_._1)(_._2).map { case (k, is) => k -> is.toArray }
+  private val edgesOf = index(rel) { case (from, _, to) => Seq(from, to) }
+  private val implsOf = index(impl)(r => Seq(r(0).asInstanceOf[String]))
+  private val implsIn = index(impl)(r => Seq(r(1).asInstanceOf[String]))
+  private val chunksOf = index(all) { case (_, name, file) => Seq(name, file) }
+  private def at(ix: Map[String, Array[Int]], key: String): Array[Int] = ix.getOrElse(key, Array.emptyIntArray)
 
   private def local(spark: SparkSession, schema: StructType, out: Seq[Seq[Any]]): DataFrame =
     spark.createDataFrame(out.map(Row.fromSeq).asJava, schema)
@@ -122,7 +136,7 @@ final class SearchSnapshot private (
   }
 
   def readGraph(spark: SparkSession, entity: String, mode: String, limit: Int): DataFrame = {
-    val edges = rel.filter { case (from, _, to) => from == entity || to == entity }
+    val edges = at(edgesOf, entity).map(rel(_))
     def str(n: String) = StructField(n, StringType)
     mode match {
       case "relationships" | "raw" =>
@@ -145,15 +159,54 @@ final class SearchSnapshot private (
           })
     }
   }
+
+  /** `orderBy("filePath", "lineNumber")` over ImplColumns rows: nulls first. */
+  private val place = Ordering.by((i: Int) => (impl(i)(1).asInstanceOf[String], Option(impl(i)(2)).map(_.asInstanceOf[Int])))(
+    Ordering.Tuple2(SparkStrings, Ordering.Option(Ordering.Int)))
+
+  def getImplementation(spark: SparkSession, name: String, scope: String): DataFrame = {
+    val own = at(implsOf, name)
+    val rows = scope match {
+      case "minimal" => own
+      case "logical" => own.map(impl(_)(1).asInstanceOf[String]).distinct.flatMap(at(implsIn, _)).sorted(place)
+      case "dependencies" =>
+        val deps = at(edgesOf, name).map(rel(_)).collect { case (from, t, to) if from == name && DependencyTypes(t) => to }
+        // dropDuplicates("entityName", "filePath", "lineNumber"): ImplColumns' first three
+        (own ++ deps.distinct.flatMap(at(implsOf, _))).distinctBy(i => impl(i).take(3)).sorted(place)
+      case other => throw new IllegalArgumentException(s"unknown scope: $other")
+    }
+    local(spark, StructType(ImplColumns.map(baseSchema(_))), rows.toSeq.map(impl(_)))
+  }
+
+  def entitiesForFile(spark: SparkSession, path: String): DataFrame =
+    local(spark, StructType(Seq(baseSchema("chunkType"),
+      StructField("entities", ArrayType(StringType, containsNull = false), nullable = false))),
+      at(chunksOf, path).toSeq.map(all(_)).groupBy(_._1).toSeq.sortBy(_._1)(SparkStrings).map { case (t, cs) =>
+        Seq(t, cs.map(_._2).filter(_ != null).distinct.sorted(SparkStrings))
+      })
 }
 
 object SearchSnapshot {
 
-  /** A store whose listed metadata and relation parquet bytes exceed this
-    * share of the driver's max heap stays on the Spark path: decoded rows,
-    * vectors and postings take several times their compressed bytes.
+  /** A store whose listed chunk parquet bytes exceed this share of the
+    * driver's max heap stays on the Spark path: decoded rows, vectors and
+    * postings take several times their compressed bytes.
     */
   val MaxHeapShare = 0.05
+
+  /** getImplementation's result columns. */
+  private val ImplColumns = Seq("entityName", "filePath", "lineNumber", "endLineNumber", "content")
+
+  /** The relation types `getImplementation(_, "dependencies")` follows. */
+  private val DependencyTypes = Set("calls", "imports", "uses")
+
+  /** The columns kept beyond metadata rows, which keep every column:
+    * entitiesForFile's on every chunk, and what each other chunk type's
+    * reads use.
+    */
+  private val Everywhere = Set("chunkType", "entityName", "filePath")
+  private val Kept = Map("relation" -> Set("relationType", "relationTarget"),
+    "implementation" -> ImplColumns.toSet)
 
   /** Spark's ascending string order: unsigned UTF-8 bytes, nulls first. */
   val SparkStrings: Ordering[String] = (a: String, b: String) =>
@@ -170,26 +223,28 @@ object SearchSnapshot {
     if (c != 0) c else SparkStrings.compare(id(a), id(b))
   }
 
-  private def files(snap: IndexStore.Snapshot) = snap.partition("metadata") ++ snap.partition("relation")
-
-  /** One job: every column of the version's metadata rows with their
-    * `Bm25.tokens`, and the edge columns of its relation rows.
+  /** One job over every chunk file of the version: every column of its
+    * metadata rows with their `Bm25.tokens`, and of the other rows only the
+    * columns their reads use (the rest null, `dense` included).
     */
   def load(spark: SparkSession, snap: IndexStore.Snapshot): SearchSnapshot = {
-    val schema = StructType(snap.chunks(spark).schema.filterNot(_.name == "dense"))
-    val edge = Set("chunkType", "entityName", "relationType", "relationTarget")
-    val rows = if (files(snap).isEmpty) Array.empty[Row] else {
-      val df = snap.chunks(spark, files(snap))
-      val isMeta = col("chunkType") === "metadata"
-      df.select(df.columns.toSeq.map(c => if (edge(c)) col(c) else when(isMeta, col(c)).as(c)) :+
-        when(isMeta, Bm25.tokens(col("contentBm25"))).as("_toks"): _*).collect()
-    }
-    val (meta, rel) = rows.partition(_.getAs[String]("chunkType") == "metadata")
-    new SearchSnapshot(schema, meta.map(r => schema.fieldNames.toIndexedSeq.map(n => r.getAs[Any](n))),
+    val df = snap.chunks(spark)
+    val schema = StructType(df.schema.filterNot(_.name == "dense"))
+    val t = col("chunkType")
+    def kept(c: String) = if (Everywhere(c)) col(c)
+      else when(t === "metadata" || t.isin(Kept.collect { case (pt, cs) if cs(c) => pt }.toSeq: _*), col(c)).as(c)
+    val got = df.select(df.columns.toSeq.map(kept) :+
+      when(t === "metadata", Bm25.tokens(col("contentBm25"))).as("_toks"): _*).collect()
+    val all = got.map(r => (r.getAs[String]("chunkType"), r.getAs[String]("entityName"), r.getAs[String]("filePath")))
+    val rows = got.groupBy(_.getAs[String]("chunkType")).withDefaultValue(Array.empty[Row])
+    def in(s: Seq[String], r: Row) = s.toIndexedSeq.map(r.getAs[Any](_))
+    val meta = rows("metadata")
+    new SearchSnapshot(schema, meta.map(in(schema.fieldNames.toSeq, _)),
       meta.map(r => Option(r.getAs[scala.collection.Seq[Any]]("dense"))
         .map(_.map { case f: Float => f.toDouble; case d: Double => d }.toArray).orNull),
       meta.map(r => Option(r.getAs[scala.collection.Seq[String]]("_toks")).map(_.toArray).orNull),
-      rel.map(r => (r.getAs[String]("entityName"), r.getAs[String]("relationType"), r.getAs[String]("relationTarget"))))
+      rows("relation").map(r => (r.getAs[String]("entityName"), r.getAs[String]("relationType"), r.getAs[String]("relationTarget"))),
+      rows("implementation").map(in(ImplColumns, _)), all)
   }
 
   /** An engine's one snapshot, of the newest version it read. Loaded under
@@ -202,7 +257,7 @@ object SearchSnapshot {
     def apply(spark: SparkSession, snap: IndexStore.Snapshot): Option[SearchSnapshot] = synchronized {
       if (!held.exists(_._1 == snap)) {
         held = None // the old version goes before the new one loads
-        val bytes = files(snap).map(f => Files.size(Paths.get(snap.root, f))).sum
+        val bytes = snap.chunkFiles.map(f => Files.size(Paths.get(snap.root, f))).sum
         held = Some(snap -> Option.when(snap.exists && bytes <= MaxHeapShare * Runtime.getRuntime.maxMemory)(
           load(spark, snap)))
       }

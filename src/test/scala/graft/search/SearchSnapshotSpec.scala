@@ -9,10 +9,10 @@ import graft.queries.IndexBenchQueries
 
 /** The in-process snapshot path against the engine's kept Spark path, over
   * EngineSpec's fixture store and q32's synthetic repo: every search mode
-  * with no filter, an entityTypes filter and a finite threshold, and every
-  * readGraph mode. Equal schemas and id order; cosine scores `==`; BM25 and
-  * RRF scores within 1e-12 relative (Spark sums a document's terms in no
-  * fixed order).
+  * with no filter, an entityTypes filter and a finite threshold, every
+  * readGraph mode, every getImplementation scope and entitiesForFile.
+  * Equal schemas and id order; cosine scores `==`; BM25 and RRF scores
+  * within 1e-12 relative (Spark sums a document's terms in no fixed order).
   */
 class SearchSnapshotSpec extends SparkSpec {
 
@@ -86,6 +86,40 @@ class SearchSnapshotSpec extends SparkSpec {
     }
   }
 
+  /** Equal schemas, keys in order, and rows as a bag: the Spark order leaves ties. */
+  private def sameRows(what: String, fast: DataFrame, slow: DataFrame, key: Row => Any): Unit = {
+    assert(fast.schema == slow.schema, s"$what: schema\n${fast.schema.treeString}\nvs\n${slow.schema.treeString}")
+    val (f, s) = (fast.collect(), slow.collect())
+    assert(f.map(key).toSeq == s.map(key).toSeq, what)
+    assert(f.map(_.toString).sorted.toSeq == s.map(_.toString).sorted.toSeq, what)
+  }
+
+  test("every getImplementation scope and entitiesForFile: the snapshot answers as the Spark path") {
+    for ((store, (e, _, entities)) <- stores) {
+      // a manual memory: a metadata chunk with filePath "" and no implementation
+      e.addManualMemory(s"$store-notes", "notes kept by hand")
+      for (name <- entities ++ Seq("no_such_entity", s"$store-notes")) {
+        sameRows(s"$store minimal $name", e.getImplementation(name), e.getImplementationSpark(name, "minimal"), _ => ())
+        for (scope <- Seq("logical", "dependencies"))
+          sameRows(s"$store $scope $name", e.getImplementation(name, scope), e.getImplementationSpark(name, scope),
+            r => (r.getAs[String]("filePath"), r.getAs[Any]("lineNumber")))
+      }
+      // the file entities (foo.py, mod007.py) are both a filePath and an entityName
+      for (path <- entities ++ Seq("no_such_entity", "", s"$store-notes"))
+        sameRows(s"$store entitiesForFile '$path'", e.entitiesForFile(path), e.entitiesForFileSpark(path), _.toString)
+    }
+    val (e, _, _) = stores.head._2
+    assert(e.entitiesForFile("").collect().map(_.getSeq[String](1)).exists(_.contains("fixture-notes")))
+    assert(e.getImplementation("add", "logical").collect().length > 1)
+    assert(e.getImplementation("main", "dependencies").collect().map(_.getString(0)).contains("add"))
+  }
+
+  test("an unknown scope throws on both paths") {
+    val (e, _, _) = stores.head._2
+    assert(intercept[IllegalArgumentException](e.getImplementation("add", "nope")).getMessage.contains("nope"))
+    assert(intercept[IllegalArgumentException](e.getImplementationSpark("add", "nope")).getMessage.contains("nope"))
+  }
+
   test("an absent store fails the same way on both paths") {
     val e = GraftEngine(spark, Files.createTempDirectory("graft_snap_absent").toString)
     val fast = Try(e.searchSimilar("add", "hybrid").collect()).failed.toOption.map(_.getClass)
@@ -94,5 +128,10 @@ class SearchSnapshotSpec extends SparkSpec {
       .failed.toOption.map(_.getClass))
     assert(Try(e.readGraph("add").collect()).failed.toOption.map(_.getClass) ==
       Try(e.readGraphSpark("add", "smart", 50).collect()).failed.toOption.map(_.getClass))
+    for (scope <- Seq("minimal", "logical", "dependencies"))
+      assert(Try(e.getImplementation("add", scope).collect()).failed.toOption.map(_.getClass) ==
+        Try(e.getImplementationSpark("add", scope).collect()).failed.toOption.map(_.getClass), scope)
+    assert(Try(e.entitiesForFile("foo.py").collect()).failed.toOption.map(_.getClass) ==
+      Try(e.entitiesForFileSpark("foo.py").collect()).failed.toOption.map(_.getClass))
   }
 }
