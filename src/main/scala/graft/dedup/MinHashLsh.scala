@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.search.Bm25
 
@@ -159,11 +160,13 @@ object MinHashLsh {
     candidatePairsFromSigs(signatures(docs, idCol, textCol))
 
   private[dedup] def candidatePairsFromSigs(sigs: DataFrame): DataFrame = {
-    // persist: signatures are 12 longs per doc — the band self-join must
-    // not recompute the shingle->md5->minhash pipeline for each side. The
-    // (small) pair output is materialized eagerly via localCheckpoint so
-    // the signature cache can be released before returning.
-    val bk = bandKeysFromSigs(sigs).persist()
+    // materialized eagerly, before the band self-join reads it twice: a
+    // lazy persist() let AQE start both sides' stages at once, and one
+    // side's task then held a slot, blocked on the other's cache block,
+    // for the whole shingle->md5->minhash pass. The (small) pair output is
+    // checkpointed eagerly too, so the band table's blocks can be released
+    // before returning.
+    val bk = bandKeysFromSigs(sigs).localCheckpoint(true)
     val a = bk.select(col("band"), col("band_key"), col("doc_id").as("doc_a"), col("sig").as("sig_a"))
     val b = bk.select(col("band"), col("band_key"), col("doc_id").as("doc_b"), col("sig").as("sig_b"))
     val pairs = a.join(b, Seq("band", "band_key"))
@@ -173,7 +176,8 @@ object MinHashLsh {
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
       .distinct()
       .localCheckpoint(true)
-    bk.unpersist()
+    // Dataset.unpersist does not release a checkpoint; its RDD's blocks do
+    bk.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
     pairs
   }
 

@@ -1,20 +1,55 @@
 package graft.functions
 
+import java.util.Locale
+
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Text-analysis primitives for the training-data pipeline: token counting,
-  * quality metrics, stopword/language profiles, content fingerprinting.
-  * All pure column expressions (codegen-friendly, no UDFs), each with an
-  * exact SQL analog for oracle parity.
+  * quality metrics, stopword/language profiles, content fingerprinting,
+  * each with an exact SQL analog for oracle parity. The word-based ones are
+  * UDFs over plain Scala that splits a document once in JIT'd code:
+  * `filter`/`aggregate` lambdas run interpreted per element, and no two
+  * calls can share one split. The rest are built-in column expressions.
   */
 object TextOps {
+
+  /** The words of `text` as Spark's `lower`, `split(_, '[^a-z0-9]+')` and
+    * dropping empty strings give them. The case mapping is `lower`'s: an
+    * all-ASCII string maps A–Z, any other goes through ICU's
+    * `UCharacter.toLowerCase`, the call `lower` makes. Calling ICU here
+    * skips `lower`'s one-time cost in a fresh JVM: its first non-ASCII
+    * string initializes Spark's `CollationAwareUTF8String`, which
+    * title-cases every Unicode code point (~2 s).
+    */
+  def wordsScala(text: String): Array[String] = {
+    val s = if (text.forall(_ < 0x80)) text.toLowerCase(Locale.ROOT) else UCharacter.toLowerCase(text)
+    NonWord.split(s).filter(_.nonEmpty)
+  }
+  private val NonWord = java.util.regex.Pattern.compile("[^a-z0-9]+")
+
+  def avgWordLenScala(w: Array[String]): Double =
+    if (w.isEmpty) 0.0 else w.iterator.map(_.length.toLong).sum.toDouble / w.length
+
+  /** A deterministic UDF `f(wordsScala(text))` of result type `dt`.
+    * A null text gives null, or `ifNull` (then the column is non-nullable).
+    */
+  private[graft] def perDoc(dt: DataType, ifNull: Any = null)(f: Array[String] => Any): UserDefinedFunction = {
+    val u = udf(new UDF1[String, Any] {
+      def call(s: String): Any = if (s == null) ifNull else f(wordsScala(s))
+    }, dt)
+    if (ifNull == null) u else u.asNonNullable()
+  }
 
   /** All lowercase alnum runs (length ≥ 1 — unlike Bm25.tokens this keeps
     * single-char words, needed for stopword ratios).
     */
-  def words(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 0)
+  def words(text: Column): Column = Words(text)
+  private val Words = perDoc(ArrayType(StringType, containsNull = false))(identity)
 
   /** Whitespace token count. The splitter is the EXPLICIT class
     * `[ \t\n\r\f]` — Java's `\s` additionally matches vertical tab \x0B
@@ -33,19 +68,14 @@ object TextOps {
   def bpeishTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"), lit(0)))
 
-  /** Mean token length. */
-  def avgWordLen(text: Column): Column = {
-    val w = words(text)
-    when(size(w) === 0, lit(0.0))
-      .otherwise(aggregate(w, lit(0L), (acc, t) => acc + length(t)).cast("double") / size(w))
-  }
+  /** Mean token length (0.0 for no tokens). */
+  def avgWordLen(text: Column): Column = AvgWordLen(text)
+  private val AvgWordLen = perDoc(DoubleType)(avgWordLenScala)
 
   /** Fraction of tokens that are stopwords. */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val w = words(text)
-    when(size(w) === 0, lit(0.0))
-      .otherwise(size(filter(w, t => t.isin(stopwords.map(lit(_)): _*)))
-        .cast("double") / size(w))
+    val stop = stopwords.toSet
+    perDoc(DoubleType)(w => if (w.isEmpty) 0.0 else w.count(stop).toDouble / w.length)(text)
   }
 
   /** Fraction of characters that are neither alnum nor whitespace. */
@@ -67,26 +97,23 @@ object TextOps {
 
   def langScore(text: Column, profile: Seq[String]): Column =
     if (profile.isEmpty) lit(0L)
-    else size(filter(words(text), t => t.isin(profile.map(lit(_)): _*))).cast("long")
+    else { val p = profile.toSet; perDoc(LongType)(_.count(p).toLong)(text) }
+
+  private val SortedProfiles = LangProfiles.sortBy(_._1).map { case (l, p) => l -> p.toSet }
 
   /** Argmax language with deterministic lexicographic tie-break: languages
     * are checked in sorted order and the first one ≥ all others wins.
     * All-zero scores → "unknown" (no profile evidence at all).
     */
-  def langGuess(text: Column): Column = {
-    // argmax via array_position: the first (lexicographically, since the
-    // array is sorted by language) index holding the max — exactly the old
-    // fold's "first language ≥ all others" winner, and all-zero still
-    // yields "unknown". The old form inlined every langScore tree into
-    // every other language's comparison (~n² tokenize+filter subtrees per
-    // row); here each score is evaluated once (r12; guide §1.2).
-    val ordered = LangProfiles.map { case (l, p) => l -> langScore(text, p) }.sortBy(_._1)
-    val arr = array(ordered.map(_._2): _*)
-    val names = array(ordered.map(o => lit(o._1)): _*)
-    when(array_max(arr) > 0,
-      element_at(names, array_position(arr, array_max(arr)).cast("int")))
-      .otherwise(lit("unknown"))
-  }
+  private def langGuessScala(w: Array[String]): String =
+    SortedProfiles.foldLeft(("unknown", 0)) { case (best, (l, p)) =>
+      val n = w.count(p)
+      if (n > best._2) (l, n) else best
+    }._1
+
+  /** The profile argmax above as a column; a null text is "unknown". */
+  def langGuess(text: Column): Column = LangGuess(text)
+  private val LangGuess = perDoc(StringType, "unknown")(langGuessScala)
 
   /** Within-document word-3-gram repetition ratio (the Gopher-family
     * repetition signal): 1 − distinct/total trigrams; 0 for docs under 3

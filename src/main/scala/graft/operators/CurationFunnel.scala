@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 import graft.dedup.{ExactDedup, NgramNovelty}
 import graft.functions.TextOps
 
@@ -16,7 +17,8 @@ import graft.functions.TextOps
   * counts as corpus-common), and the report is the funnel table every
   * curation run publishes: how much each rule costs, end to end.
   *
-  * Scale shape: stages 1–2 are codegen'd column predicates (narrow);
+  * Scale shape: stages 1–2 are narrow per-document predicates, each one
+  * JIT'd Scala pass over the document's words inside a UDF;
   * dedup elects survivors with `groupBy(hash).agg(min(id))` + semi-join —
   * the partial-agg shape that collapses a hot identical document map-side
   * (NOT a row_number window over the hash, which would put every copy of
@@ -26,13 +28,18 @@ import graft.functions.TextOps
   */
 object CurationFunnel {
 
-  /** The q41 quality composite as one reusable predicate. */
+  /** The q41 quality composite as one reusable predicate: 20–100,000
+    * words, a mean word length in [3, 10], punctuation under 10% and at
+    * least two distinct stopwords. Everything but the punctuation share
+    * (a codegen'd `regexp_replace`) is one JIT'd pass over the words.
+    */
   def qualityKeep(text: Column, stopwords: Seq[String]): Column = {
-    val w = TextOps.words(text)
-    size(w).between(20, 100000) &&
-      TextOps.avgWordLen(text).between(3.0, 10.0) &&
-      TextOps.punctRatio(text) < 0.1 &&
-      size(array_intersect(array_distinct(w), array(stopwords.map(lit(_)): _*))) >= 2
+    val stop = stopwords.toSet
+    TextOps.perDoc(BooleanType) { w =>
+      val awl = TextOps.avgWordLenScala(w)
+      w.length >= 20 && w.length <= 100000 && awl >= 3.0 && awl <= 10.0 &&
+        w.iterator.filter(stop).distinct.size >= 2
+    }(text) && TextOps.punctRatio(text) < 0.1
   }
 
   /** Funnel report: `(stage, filter, n_docs, share)` — share is of the
@@ -58,8 +65,8 @@ object CurationFunnel {
       .withColumn("_ok2", col("_ok1") && qualityKeep(col("text"), stopwords))
       // lazy-checkpointed: base feeds BOTH the dedup election subtree and
       // the tagged join's probe side — unchecked, the corpus was
-      // file-scanned twice and langGuess/quality (the two expensive
-      // codegen predicates) evaluated twice per doc (r13; guide §1.2
+      // file-scanned twice and langGuess/quality (the two per-document
+      // UDF predicates) evaluated twice per doc (r13; guide §1.2
       // "don't compute twice"). Lazy: materializes inside the single
       // count action, no extra driver barrier.
       .localCheckpoint(false)

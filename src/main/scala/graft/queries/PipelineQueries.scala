@@ -317,8 +317,8 @@ object PipelineQueries {
 
     // Gopher-style quality-rule composition: per-source keep counts and a
     // per-rule failure breakdown (length / mean-word-length / symbol ratio
-    // / stopword evidence). Each rule is a pure column expression shared
-    // with the q24 metrics, so the filter is a single codegen map pass.
+    // / stopword evidence). Each rule is built from the TextOps columns
+    // shared with the q24 metrics, so the filter is a single map pass.
     // End-to-end curation funnel: lang → quality → exact dedup → novelty,
     // each stage feeding the next, with survivor counts and input share —
     // the LLM-data analog of q32's code-memory e2e.

@@ -1,7 +1,10 @@
 package graft.dedup
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -38,6 +41,43 @@ class DedupSpec extends SparkSpec {
     assert(pairs((1L, 2L)) == 1.0)
     // doc 4 shares no shingles with doc 1 -> never a candidate
     assert(!pairs.contains((1L, 4L)))
+  }
+
+  test("minhash candidate pairs: one stage computes the band table, reading the corpus once") {
+    // a lazily persisted band table put both self-join sides' stages on
+    // its lineage at once: one computed it while the other held a task
+    // slot, blocked on the cache block, and then read the cache
+    val n = 3000L
+    val dir = java.nio.file.Files.createTempDirectory("minhash_once").resolve("docs").toString
+    spark.range(n).select(col("id").as("doc_id"), expr(
+        "concat_ws(' ', transform(sequence(1, 40), i -> concat('w', cast((id * 31 + i * i) % 997 as string))))")
+        .as("text"))
+      .coalesce(1).write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    // input records of the tasks of stages that scan a file, in this test's jobs
+    val tag = "graft.test.minhash_once"
+    val scanStages = ConcurrentHashMap.newKeySet[Int]()
+    val read = new AtomicLong
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null) &&
+            e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scanStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (scanStages.contains(e.stageId) && e.taskMetrics != null)
+          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // JobCount returns once the listener bus has delivered every event of the block
+      JobCount(spark) {
+        sc.setLocalProperty(tag, "1")
+        try MinHashLsh.candidatePairs(docs, "doc_id", "text").count()
+        finally sc.setLocalProperty(tag, null)
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(scanStages.size == 1)
+    assert(read.get == n)
   }
 
   test("incremental dedup: batch probes corpus only — no batch-batch or corpus-corpus pairs") {
