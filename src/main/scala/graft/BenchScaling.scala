@@ -37,8 +37,6 @@ object BenchScaling {
     "q80_salted_join" -> (("events", 1.0, true)),
     "q146_session_funnel" -> (("events", 1.0, true)),
     "q164_funnel_latency" -> (("events", 1.0, true)),
-    "q204_ewma_replay" -> (("events", 1.0, true)),
-    "q205_dgim_replay" -> (("events", 1.0, true)),
     // documents — linear map/agg shapes
     "q92_bpe_tokens" -> (("documents", 1.0, false)),
     "q102_inverted_index" -> (("documents", 1.0, false)),
@@ -117,15 +115,13 @@ object BenchScaling {
 
     // ===== wave 3 (r10): the round-10 fold/graph/grid additions =====
     "q231_session_native" -> (("events", 1.0, true)),
-    "q233_rate_replay" -> (("events", 1.0, true)),
     "q234_bucketed_join" -> (("lineitem", 1.0, true)), // incl. the layout write
     "q238_modularity" -> (("documents", 1.5, true)), // label-prop banded pairs; salted-docs sf1
     "q247_feature_mi" -> (("documents", 1.0, true)), // bounded 25x fan-out; salted-docs sf1
 
-    // ===== wave 4 (r11): the q223-q259 stats/drift gates ≥0.6 s at sf0.1
+    // ===== wave 4 (r11): the q225-q259 stats/drift gates ≥0.6 s at sf0.1
     // (r10 advisory: their decades were mostly unmeasured); the three
     // with join fan-out additionally take the synthesized sf1 decade
-    "q223_spearman" -> (("documents", 1.0, false)), // midranks on distinct-value grids
     "q225_power_iter" -> (("embeddings", 1.0, false)), // corpus once + 64^2 grid iters
     "q226_isotonic" -> (("documents", 1.0, false)), // PAV on the bounded bin grid
     "q232_enrich_replay" -> (("events", 1.0, true)), // stream-static equi-join replay
@@ -136,17 +132,16 @@ object BenchScaling {
     // ===== wave 5 (r11): the q260-q295 gates ≥0.6 s at sf0.1 =====
     "q270_ndcg" -> (("embeddings", 1.0, false)), // 3 fixed probes, k=10 folds
     "q271_dedup_weights" -> (("documents", 1.5, true)), // q36 banded components; salted-docs sf1
-    "q277_ordinal_assoc" -> (("documents", 1.5, false)), // bounded bin-grid pair join
     "q281_zipf_slope" -> (("documents", 1.0, false)), // token agg + top-100 grid
 
     // ===== wave 6 (r12): close the q302-q304 audit gap (VERDICT r11 #3)
     "q303_cube" -> (("lineitem", 1.0, true)), // ONE Expand + partial agg, all 4 grouping sets
     "q304_avg_precision" -> (("documents", 1.0, false)), // score-grid integer cumsums, PR fold
     "q306_ivf_recluster" -> (("embeddings", 1.0, false)) // broadcast-k argmax passes + one mean fold
-    // NOT audited: q32/q207-q209/q216-q219/q260-q262 run a FIXED-SIZE
+    // NOT audited: q32/q207-q209/q216-q219/q260/q262 run a FIXED-SIZE
     // synthetic repo and q305/q307 fixed synthetic media (no sf table
     // feeds them — growth is undefined);
-    // sub-second gates (the remaining q223-q295 rows, all ≤0.6 s at
+    // sub-second gates (the remaining q225-q295 rows, all ≤0.6 s at
     // sf0.1) carry more scheduler noise than signal.
   )
 

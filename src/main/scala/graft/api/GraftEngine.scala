@@ -28,7 +28,6 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
                        config: graft.core.GraftConfig = graft.core.GraftConfig()) {
 
   def index(projectDir: String): IndexPipeline.IndexingResult = {
-    searchCache.clear() // any write invalidates memoized results
     IndexPipeline.index(spark, projectDir, storeDir, embedder, config)
   }
 
@@ -125,31 +124,6 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     if (terms.isEmpty) hits.withColumn("snippet", lit(null).cast("string"))
     else hits.withColumn("snippet",
       graft.search.Snippets.extract(col("content"), terms))
-  }
-
-  /** Result-memoized search (reference: `storage/base.py:249-330`
-    * `CachingVectorStore`, an opt-in decorator — searchSimilar itself keeps
-    * no answers, only the version's snapshot it scores against). A repeat
-    * of the same (store version, query, mode, filters, limit, threshold)
-    * replays the collected top-k rows without scoring again, so a commit by
-    * any writer is a miss; a mutation through THIS engine also clears the
-    * memo (the reference's clear-on-write).
-    */
-  @transient lazy val searchCache =
-    new graft.search.SearchCache[(Long, String, String, Seq[String], Int, Double),
-      (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])](1000)
-
-  def searchSimilarCached(query: String, mode: String = "semantic",
-                          entityTypes: Seq[String] = Seq.empty,
-                          limit: Int = 10,
-                          threshold: Double = Double.NegativeInfinity): DataFrame = {
-    val (schema, rows) =
-      searchCache.getOrElseUpdate(
-        (IndexStore.version(storeDir), query, mode, entityTypes.toList, limit, threshold)) {
-        val df = searchSimilar(query, mode, entityTypes, limit, threshold)
-        (df.schema, df.collect())
-      }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** The CLI's unified "all" search (reference: cli_full.py:976-1072,
@@ -331,7 +305,6 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     */
   def addManualMemory(name: String, content: String, entityType: String = "documentation"): Unit = {
     import spark.implicits._
-    searchCache.clear()
     val chunkId = s"manual::$name::metadata"
     val chunk = graft.core.Model.Chunk(chunkId, "metadata", name, entityType, "",
       0, 0, content, s"$name $name $content", graft.core.Ids.sha256Hex(content),
@@ -353,7 +326,6 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     * reference: storage/qdrant.py:1303-1401).
     */
   def clearCollection(preserveManual: Boolean = true): Unit = {
-    searchCache.clear()
     // one commit: the manual chunks (or none) and no file_state, so the next
     // index is a full pass (which carries file-less chunks), not a diff
     // against files whose chunks were just deleted that parses nothing
@@ -427,7 +399,6 @@ case class GraftEngine(spark: SparkSession, storeDir: String,
     * freshly-written store is a fixed point (cleanup removes 0).
     */
   def cleanup(): Long = {
-    searchCache.clear()
     IndexStore.update(storeDir) { snap =>
       val all = snap.chunks(spark).cache()
       val names = all.filter(col("chunkType") =!= "relation")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.Dataset
   * each tick admits vs sheds. Running this over an access log is how a
   * 100 TB crawl plans per-host budgets before hammering anyone.
   *
-  * Scale story: the q205 fold discipline — state is TWO integers per key
+  * Scale story: a keyed fold — state is TWO integers per key
   * (token count, last tick), one `flatMapGroups` after a (key, tick)
   * partial agg; keys are sharded (e.g. host#week) so no group outgrows
   * its horizon. The fold is PURE integer arithmetic, so the

@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 
 /** Analytics-pipeline operators gated round 8: graph cores (q183),
-  * TextRank keyphrases (q184), readability (q185), EWMA smoothing
-  * (q186), fill-in-the-middle augmentation (q187), Benford audit
-  * (q188), l-diversity (q189), A/B hypothesis tests (q190), Kneser-Ney
-  * LM (q191), Markov attribution (q192), quantile normalization
-  * (q194), association rules (q195), Jaro-Winkler linkage (q196) and
-  * Mann-Whitney U (q200).
+  * TextRank keyphrases (q184), readability (q185), fill-in-the-middle
+  * augmentation (q187), Benford audit (q188), l-diversity (q189), A/B
+  * hypothesis tests (q190), Kneser-Ney LM (q191), Markov attribution
+  * (q192), quantile normalization (q194), association rules (q195) and
+  * Jaro-Winkler linkage (q196).
   *
   * Numeric discipline throughout: counts stay integer, distinct counts
   * are exact, float formulas are written in the SAME shape on both
@@ -52,12 +51,6 @@ object AnalyticsQueries {
         .select(col("doc_id"), col("n_words"), col("n_sentences"),
           col("n_syllables"), col("flesch"), col("fk_grade"))
         .orderBy(col("doc_id"))),
-
-    // α=1/2 EWMA of daily event counts per type, exact dyadic integers.
-    "q186_ewma" -> ((s, dir) =>
-      graft.operators.Ewma.dailyCounts(Tables.events(s, dir),
-          "event_type", "ts", window = 25)
-        .orderBy(col("event_type"))),
 
     // Deterministic PSM fill-in-the-middle transform per document.
     "q187_fim" -> ((s, dir) =>
@@ -177,32 +170,10 @@ object AnalyticsQueries {
           "p_partkey", "p_name", col("p_brand"))
         .orderBy(col("block"))),
 
-    // Mann-Whitney U between user-parity variants on event value.
-    "q200_mann_whitney" -> ((s, dir) =>
-      graft.operators.RankTests.mannWhitney(
-        Tables.events(s, dir).withColumn("g", col("user_id") % 2),
-        "g", "value")),
-
-    // Kendall τ-b rank correlation between doc length and token count per
-    // source (the monotone-association twin of q79's Pearson r). Metrics
-    // are BINNED first (n_chars÷64, tokens÷16) so the concordance pair
-    // join runs over the bounded cell grid, never raw doc pairs — the
-    // q200 grid discipline. Integer C/D/n counts hash exactly; τ is
-    // one division at the edge.
-    "q210_kendall_tau" -> ((s, dir) => {
-      val binned = Tables.documents(s, dir)
-        .select(col("source"),
-          expr("n_chars div 64").as("xb"),
-          graft.functions.TextOps.wsTokenCount(col("text")).cast("long").as("_y"))
-        .select(col("source"), col("xb"), expr("_y div 16").as("yb"))
-      graft.operators.RankTests.kendallTauB(binned, "source")
-        .orderBy(col("source"))
-    }),
-
     // Two-proportion z-test + Wilson 95% CIs: click share per user-parity
-    // variant — the categorical-outcome companion to q190's Welch t and
-    // q200's rank test. Sufficient statistics are four integers; the z
-    // and both CIs are closed-form float expressions at the edge.
+    // variant — the categorical-outcome companion to q190's Welch t.
+    // Sufficient statistics are four integers; the z and both CIs are
+    // closed-form float expressions at the edge.
     "q212_prop_ztest" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select((col("user_id") % 2).cast("long").as("variant"),
@@ -362,83 +333,6 @@ object AnalyticsQueries {
         .orderBy(col("event_type"), col("q"))
     }),
 
-    // The StreamEwma fold gated end-to-end: the distributed batch replay
-    // (flatMapGroups sharing the streaming closure's exact step) emits
-    // the full forecast-then-fold trajectory per event type over its
-    // daily counts; the oracle replays the same fold as a recursive CTE.
-    // α=1/2 keeps every operand dyadic, so the doubles agree bit-for-bit.
-    "q204_ewma_replay" -> ((s, dir) => {
-      import s.implicits._
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("event_type").as("key"), col("bucket"), col("n"))
-        .as[graft.streaming.StreamEwma.BucketCount]
-      graft.streaming.StreamEwma.batchForecastedDs(buckets).toDF()
-        .select(col("key"), col("bucket"), col("n"),
-          round(col("forecast"), 6).as("forecast"),
-          round(col("err"), 6).as("err"),
-          round(col("ewma"), 6).as("ewma"),
-          col("nSeen").as("n_seen"))
-        .orderBy(col("key"), col("bucket"))
-    }),
-
-    // The StreamRateAnomaly Welford fold gated end-to-end (q204's
-    // discipline for the rate-anomaly twin): per event_type, each daily
-    // count is scored against the running mean/sd of every PRIOR day —
-    // score BEFORE fold, so a burst never desensitizes the baseline that
-    // judges it. The oracle replays the identical Welford recurrence in a
-    // recursive CTE with the same operation order, so the doubles agree
-    // bit-for-bit; zero-variance baselines surface as signed Infinity on
-    // both engines and bypass rounding (ANSI round() would throw on Inf).
-    "q233_rate_replay" -> ((s, dir) => {
-      import s.implicits._
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("event_type").as("key"), col("bucket"), col("n"))
-        .as[graft.streaming.StreamRateAnomaly.BucketCount]
-      val inf = lit(Double.PositiveInfinity)
-      graft.streaming.StreamRateAnomaly.batchScoredDs(buckets).toDF()
-        .select(col("key"), col("bucket"), col("n"),
-          when(abs(col("z")) === inf, col("z"))
-            .otherwise(round(col("z"), 6)).as("z"),
-          round(col("baselineMean"), 6).as("baseline_mean"),
-          col("nBuckets").as("n_prior"))
-        .orderBy(col("key"), col("bucket"))
-    }),
-
-    // The StreamDgim fold gated end-to-end: per (event_type, ISO-week)
-    // key, the hour ticks that saw events stream through the DGIM
-    // insert/cascade/expire/estimate step (window = 48 hour-ticks); the
-    // oracle replays the identical bucket algebra in a recursive CTE
-    // with the cascade unrolled as lateral list rewrites. Integer-only —
-    // a bit-exact replay of approximate-counting state.
-    "q205_dgim_replay" -> ((s, dir) => {
-      import s.implicits._
-      val hits = Tables.events(s, dir)
-        .select(col("event_type"),
-          expr("unix_micros(ts) div 3600000000").as("t"))
-        .distinct()
-        .select(concat(col("event_type"), lit("#"),
-            expr("CAST(t div 168 AS string)")).as("key"),
-          col("t").as("time"))
-        .as[graft.streaming.StreamDgim.Hit]
-      graft.streaming.StreamDgim.batchCountedDs(hits, window = 48L).toDF()
-        .select(col("key"), col("time").as("t"),
-          col("estimate"), col("nBuckets").cast("long").as("n_buckets"))
-        .orderBy(col("key"), col("t"))
-    }),
-
-    // The StreamDedup keep-first fold gated end-to-end (q204/q205
-    // discipline): the distributed batch replay shares the streaming
-    // closure's sort + verdict, so per event-type bucket the earliest
-    // event (by millisecond, then id — getTime precision mirrored as
-    // epoch_us // 1000 in the oracle) is the keeper and every later
-    // arrival is flagged with its id. One bucket-keyed shuffle; state in
-    // the streaming form is ONE long per bucket.
     // STREAM-STATIC ENRICHMENT REPLAY: the events feed split into 3
     // single-file micro-batches (shard = event_id mod 3), streamed
     // through a real file source with maxFilesPerTrigger=1, each
@@ -497,6 +391,13 @@ object AnalyticsQueries {
         .orderBy(col("event_type"))
     }),
 
+    // The StreamDedup keep-first fold gated end-to-end: the distributed
+    // batch replay shares the streaming closure's sort + verdict, so per
+    // event-type bucket the earliest event (by millisecond, then id —
+    // getTime precision mirrored as epoch_us // 1000 in the oracle) is the
+    // keeper and every later arrival is flagged with its id. One
+    // bucket-keyed shuffle; state in the streaming form is ONE long per
+    // bucket.
     "q220_keepfirst_replay" -> ((s, dir) => {
       import s.implicits._
       val feed = Tables.events(s, dir)
@@ -544,18 +445,6 @@ object AnalyticsQueries {
         .select(col("shard"), col("token"), col("n"), col("n_shard"))
         .orderBy(col("shard"), col("token"))
     }),
-
-    // Spearman ρ per source between doc length and token count — the
-    // monotone-rank twin of q79 (Pearson) and q210 (Kendall): midranks
-    // from distinct-value grids, Pearson over ranks (exact ½-multiples,
-    // order-free sums).
-    "q223_spearman" -> ((s, dir) =>
-      graft.operators.RankTests.spearman(
-        Tables.documents(s, dir)
-          .select(col("source"), col("n_chars").as("x"),
-            graft.functions.TextOps.wsTokenCount(col("text")).cast("long").as("y")),
-        "source", "x", "y")
-        .orderBy(col("source"))),
 
     // Leading principal component of the embedding corpus (power
     // iteration, 3 unrolled steps) — the all-but-the-top / whitening
@@ -765,8 +654,8 @@ object AnalyticsQueries {
 
     // Token-bucket admission replay per (event_type, ISO-week) over hour
     // ticks (capacity 5, refill 1/tick) — the crawl-politeness budget
-    // simulator. PURE integer fold (two longs per key); the q205 shard
-    // keying bounds recursion depth for the CTE oracle.
+    // simulator. PURE integer fold (two longs per key); keying by ISO
+    // week bounds recursion depth for the CTE oracle.
     "q254_token_bucket" -> ((s, dir) => {
       import s.implicits._
       val ticks = Tables.events(s, dir)
@@ -808,22 +697,6 @@ object AnalyticsQueries {
         .orderBy(col("source"))
     }),
 
-    // ===== r11 wave 2: ordinal-association panel =====
-
-    // Ordinal-association panel (Goodman-Kruskal γ, Somers' D both
-    // directions, Stuart τ-c) per source over the SAME length×token bin
-    // grid as q210's τ-b — the tie-sensitivity spectrum on a grid where
-    // ties dominate. Integer pair counts; one division per statistic.
-    "q277_ordinal_assoc" -> ((s, dir) => {
-      val binned = Tables.documents(s, dir)
-        .select(col("source"),
-          expr("n_chars div 64").as("xb"),
-          graft.functions.TextOps.wsTokenCount(col("text")).cast("long").as("_y"))
-        .select(col("source"), col("xb"), expr("_y div 16").as("yb"))
-      graft.operators.RankTests.ordinalAssociation(binned, "source")
-        .orderBy(col("source"))
-    }),
-
     // ===== r11 wave 4: link prediction =====
 
     // Link prediction over the q183 synthetic follow graph: top-20
@@ -840,19 +713,6 @@ object AnalyticsQueries {
       graft.operators.LinkPredict.scores(
         e1.unionByName(e2).distinct(), "src", "dst", 20)
     }),
-
-    // Chatterjee's ξ per source between doc length and token count —
-    // the any-functional-dependence coefficient completing the
-    // correlation family (q79 Pearson, q223 Spearman, q210 Kendall).
-    // Integer rank walks; doc_id is the documented stable tie-break.
-    "q290_chatterjee_xi" -> ((s, dir) =>
-      graft.operators.RankTests.chatterjeeXi(
-        Tables.documents(s, dir)
-          .select(col("source"), col("n_chars").as("x"),
-            graft.functions.TextOps.wsTokenCount(col("text")).cast("long").as("y"),
-            col("doc_id")),
-        "source", "x", "y", "doc_id")
-        .orderBy(col("source"))),
 
     // ===== r11 wave 7: ranking evaluation =====
 
@@ -944,26 +804,6 @@ object AnalyticsQueries {
         |    round(0.39 * n_words / n_sentences
         |          + 11.8 * n_syllables / n_words - 15.59, 4) END AS fk_grade
         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q186_ewma" ->
-      """WITH d AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day, count(*) AS x
-        |  FROM events GROUP BY 1, 2
-        |), r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day DESC) AS rn
-        |  FROM d
-        |), w AS (
-        |  SELECT event_type, day, x,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY day) AS i
-        |  FROM r WHERE rn <= 25
-        |)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS m,
-        |       CAST(max(day) AS BIGINT) AS last_day,
-        |       round(CAST(sum(CASE WHEN i = 1 THEN 2 * x
-        |                           ELSE (1::BIGINT << (i - 1)) * x END) AS DOUBLE)
-        |             / CAST(1::BIGINT << CAST(max(i) AS INT) AS DOUBLE), 4) AS ewma,
-        |       round(CAST(sum(x) AS DOUBLE) / count(*), 4) AS mean_x
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "q187_fim" ->
       """WITH b AS (
@@ -1199,68 +1039,6 @@ object AnalyticsQueries {
         |       max(jw) AS max_jw
         |FROM s GROUP BY block ORDER BY block""".stripMargin,
 
-    "q200_mann_whitney" ->
-      """WITH r AS (SELECT CAST(user_id % 2 AS INT) AS g, value AS v FROM events),
-        |grid AS (
-        |  SELECT v, count(*) AS c,
-        |         sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS c1
-        |  FROM r GROUP BY v
-        |), rk AS (
-        |  SELECT v, c, c1,
-        |         coalesce(sum(c) OVER (ORDER BY v
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumBefore
-        |  FROM grid
-        |), m AS (
-        |  SELECT cumBefore + (c + 1.0) / 2 AS midrank, c, c1 FROM rk
-        |), a AS (
-        |  SELECT sum(c) AS nTot, sum(c1) AS n1, sum(midrank * c1) AS r1,
-        |         sum(c * c * c - c) AS tieSum
-        |  FROM m
-        |)
-        |, v AS (
-        |  SELECT *, CAST(nTot - n1 AS DOUBLE) * n1 / 12
-        |            * ((nTot + 1) - CAST(tieSum AS DOUBLE) / (nTot * (nTot - 1))) AS var
-        |  FROM a
-        |)
-        |SELECT CAST(nTot - n1 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
-        |       r1 AS rank_sum_1,
-        |       r1 - CAST(n1 AS DOUBLE) * (n1 + 1) / 2 AS u1,
-        |       CASE WHEN var > 0 THEN
-        |         round((r1 - CAST(n1 AS DOUBLE) * (n1 + 1) / 2
-        |                - CAST(nTot - n1 AS DOUBLE) * n1 / 2) / sqrt(var), 4) END AS z,
-        |       CASE WHEN nTot - n1 > 0 AND n1 > 0 THEN
-        |         round((r1 - CAST(n1 AS DOUBLE) * (n1 + 1) / 2)
-        |               / (CAST(nTot - n1 AS DOUBLE) * n1), 4) END AS effect
-        |FROM v""".stripMargin,
-
-    // same binned cell grid, same pair join, same integer counts
-    "q210_kendall_tau" ->
-      """WITH d AS (
-        |  SELECT source, n_chars // 64 AS xb,
-        |         len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) // 16 AS yb
-        |  FROM documents),
-        |cells AS (SELECT source, xb, yb, count(*) AS c FROM d GROUP BY 1, 2, 3),
-        |cd AS (
-        |  SELECT a.source,
-        |         sum(CASE WHEN (b.xb - a.xb) * (b.yb - a.yb) > 0 THEN a.c * b.c ELSE 0 END) AS nc,
-        |         sum(CASE WHEN (b.xb - a.xb) * (b.yb - a.yb) < 0 THEN a.c * b.c ELSE 0 END) AS nd
-        |  FROM cells a JOIN cells b ON a.source = b.source
-        |    AND (a.xb < b.xb OR (a.xb = b.xb AND a.yb < b.yb))
-        |  GROUP BY 1),
-        |tot AS (SELECT source, sum(c) AS n, sum(c) * (sum(c) - 1) // 2 AS n0 FROM cells GROUP BY 1),
-        |tx AS (SELECT source, sum(cx * (cx - 1) // 2) AS n1
-        |       FROM (SELECT source, xb, sum(c) AS cx FROM cells GROUP BY 1, 2) GROUP BY 1),
-        |ty AS (SELECT source, sum(cy * (cy - 1) // 2) AS n2
-        |       FROM (SELECT source, yb, sum(c) AS cy FROM cells GROUP BY 1, 2) GROUP BY 1)
-        |SELECT tot.source, CAST(n AS BIGINT) AS n,
-        |       CAST(coalesce(nc, 0) AS BIGINT) AS concordant,
-        |       CAST(coalesce(nd, 0) AS BIGINT) AS discordant,
-        |       CASE WHEN n0 > n1 AND n0 > n2 THEN
-        |         round(CAST(coalesce(nc, 0) - coalesce(nd, 0) AS DOUBLE)
-        |               / sqrt(CAST(n0 - n1 AS DOUBLE) * CAST(n0 - n2 AS DOUBLE)), 6) END AS tau_b
-        |FROM tot LEFT JOIN cd USING (source) JOIN tx USING (source) JOIN ty USING (source)
-        |ORDER BY tot.source""".stripMargin,
-
     // identical Wilson/z float shapes; z is the literal on both sides
     "q212_prop_ztest" ->
       """WITH e AS (
@@ -1326,76 +1104,6 @@ object AnalyticsQueries {
         |SELECT event_type, q, round(exact_v, 6) AS exact_q, TRUE AS bound_ok
         |FROM qq ORDER BY event_type, q""".stripMargin,
 
-    // Recursive-CTE replay of StreamEwma.step (the q92/q126 discipline):
-    // base row per key = empty state; each iteration advances every key
-    // one bucket through the SAME forecast-then-fold arithmetic. All
-    // operands are dyadic rationals, so DOUBLE agrees bit-for-bit.
-    "q204_ewma_replay" ->
-      """WITH RECURSIVE
-        |d AS (SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-        |             CAST(count(*) AS BIGINT) AS n
-        |      FROM events GROUP BY 1, 2),
-        |s AS (SELECT key, bucket, n,
-        |             row_number() OVER (PARTITION BY key ORDER BY bucket) AS rn
-        |      FROM d),
-        |f AS (
-        |  SELECT key, 0::BIGINT AS rn, CAST(0 AS DOUBLE) AS ewma,
-        |         0::BIGINT AS n_seen, 0::BIGINT AS bucket, 0::BIGINT AS n,
-        |         CAST(0 AS DOUBLE) AS forecast
-        |  FROM (SELECT DISTINCT key FROM s)
-        |  UNION ALL
-        |  SELECT s.key, s.rn,
-        |         CASE WHEN f.n_seen = 0 THEN CAST(s.n AS DOUBLE)
-        |              ELSE (s.n + f.ewma) / 2 END,
-        |         f.n_seen + 1, s.bucket, s.n,
-        |         CASE WHEN f.n_seen = 0 THEN CAST(s.n AS DOUBLE) ELSE f.ewma END
-        |  FROM f JOIN s ON s.key = f.key AND s.rn = f.rn + 1
-        |)
-        |SELECT key, bucket, n, round(forecast, 6) AS forecast,
-        |       round(n - forecast, 6) AS err, round(ewma, 6) AS ewma, n_seen
-        |FROM f WHERE rn >= 1 ORDER BY key, bucket""".stripMargin,
-
-    "q205_dgim_replay" -> dgimReplaySql,
-
-    // Welford recurrence replayed with the EXACT operation order of
-    // StreamRateAnomaly.fold/score: cnt+1; mean' = mean + (x-mean)/cnt';
-    // m2' = m2 + (x-mean)*(x-mean'). Score uses the PRIOR state (f.*).
-    "q233_rate_replay" ->
-      """WITH RECURSIVE
-        |d AS (SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-        |             CAST(count(*) AS BIGINT) AS n
-        |      FROM events GROUP BY 1, 2),
-        |s AS (SELECT key, bucket, n,
-        |             row_number() OVER (PARTITION BY key ORDER BY bucket) AS rn
-        |      FROM d),
-        |f AS (
-        |  SELECT key, 0::BIGINT AS rn, 0::BIGINT AS cnt,
-        |         CAST(0 AS DOUBLE) AS mean, CAST(0 AS DOUBLE) AS m2,
-        |         0::BIGINT AS bucket, 0::BIGINT AS n,
-        |         CAST(0 AS DOUBLE) AS z, CAST(0 AS DOUBLE) AS bmean,
-        |         0::BIGINT AS nprior
-        |  FROM (SELECT DISTINCT key FROM s)
-        |  UNION ALL
-        |  SELECT s.key, s.rn,
-        |         f.cnt + 1,
-        |         f.mean + (s.n - f.mean) / (f.cnt + 1),
-        |         f.m2 + (s.n - f.mean)
-        |              * (s.n - (f.mean + (s.n - f.mean) / (f.cnt + 1))),
-        |         s.bucket, s.n,
-        |         CASE WHEN f.cnt < 2 THEN CAST(0 AS DOUBLE)
-        |              WHEN sqrt(f.m2 / (f.cnt - 1)) = 0.0 THEN
-        |                CASE WHEN s.n = f.mean THEN CAST(0 AS DOUBLE)
-        |                     WHEN s.n > f.mean THEN CAST('Infinity' AS DOUBLE)
-        |                     ELSE CAST('-Infinity' AS DOUBLE) END
-        |              ELSE (s.n - f.mean) / sqrt(f.m2 / (f.cnt - 1)) END,
-        |         f.mean, f.cnt
-        |  FROM f JOIN s ON s.key = f.key AND s.rn = f.rn + 1
-        |)
-        |SELECT key, bucket, n,
-        |       CASE WHEN isinf(z) THEN z ELSE round(z, 6) END AS z,
-        |       round(bmean, 6) AS baseline_mean, nprior AS n_prior
-        |FROM f WHERE rn >= 1 ORDER BY key, bucket""".stripMargin,
-
     // batch identity = event_id % 3 (the shard rule that built the three
     // feed files); the dim drops the most frequent type on both sides
     "q232_enrich_replay" ->
@@ -1444,39 +1152,6 @@ object AnalyticsQueries {
         |FROM exact e JOIN tot t USING (shard)
         |WHERE e.n * 31 > t.n_shard
         |ORDER BY e.shard, e.token""".stripMargin,
-
-    // midranks from distinct-value grids (exact ½-multiples), Pearson
-    // over ranks with the identical expression shape
-    "q223_spearman" ->
-      """WITH d AS (
-        |  SELECT source AS g, n_chars AS x,
-        |         len(list_filter(string_split_regex(text, '\s+'),
-        |             t -> len(t) > 0)) AS y
-        |  FROM documents),
-        |rx AS (
-        |  SELECT g, x, CAST(cum - c AS DOUBLE) + CAST(c + 1 AS DOUBLE) / 2.0 AS rx
-        |  FROM (SELECT g, x, count(*) AS c,
-        |               sum(count(*)) OVER (PARTITION BY g ORDER BY x
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |        FROM d GROUP BY g, x)),
-        |ry AS (
-        |  SELECT g, y, CAST(cum - c AS DOUBLE) + CAST(c + 1 AS DOUBLE) / 2.0 AS ry
-        |  FROM (SELECT g, y, count(*) AS c,
-        |               sum(count(*)) OVER (PARTITION BY g ORDER BY y
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |        FROM d GROUP BY g, y)),
-        |j AS (SELECT d.g, rx.rx, ry.ry
-        |      FROM d JOIN rx ON d.g = rx.g AND d.x = rx.x
-        |             JOIN ry ON d.g = ry.g AND d.y = ry.y),
-        |s AS (SELECT g, CAST(count(*) AS BIGINT) AS n, sum(rx) AS sx, sum(ry) AS sy,
-        |             sum(rx * rx) AS sxx, sum(ry * ry) AS syy, sum(rx * ry) AS sxy
-        |      FROM j GROUP BY g)
-        |SELECT g AS source, n,
-        |       CASE WHEN n * sxx > sx * sx AND n * syy > sy * sy THEN
-        |         round((n * sxy - sx * sy)
-        |               / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 6) + 0.0
-        |       END AS rho
-        |FROM s ORDER BY source""".stripMargin,
 
     // covariance cells via the q214 in-row fan-out; 3 power steps
     // unrolled CTE-for-CTE; sign fixed on dim 1; Rayleigh λ at the edge
@@ -1586,45 +1261,6 @@ object AnalyticsQueries {
         |SELECT source, n_docs, round(p, 6) AS p_raw, round(w / z_all, 6) AS p_temp
         |FROM c ORDER BY source""".stripMargin,
 
-    // the q210 cell grid and pair join; four tie-treatment ratios at the
-    // edge, each sign-pinned with + 0.0
-    "q277_ordinal_assoc" ->
-      """WITH d AS (
-        |  SELECT source, n_chars // 64 AS xb,
-        |         len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) // 16 AS yb
-        |  FROM documents),
-        |cells AS (SELECT source, xb, yb, count(*) AS c FROM d GROUP BY 1, 2, 3),
-        |cd AS (
-        |  SELECT a.source,
-        |         sum(CASE WHEN (b.xb - a.xb) * (b.yb - a.yb) > 0 THEN a.c * b.c ELSE 0 END) AS nc,
-        |         sum(CASE WHEN (b.xb - a.xb) * (b.yb - a.yb) < 0 THEN a.c * b.c ELSE 0 END) AS nd
-        |  FROM cells a JOIN cells b ON a.source = b.source
-        |    AND (a.xb < b.xb OR (a.xb = b.xb AND a.yb < b.yb))
-        |  GROUP BY 1),
-        |tot AS (SELECT source, sum(c) AS n, sum(c) * (sum(c) - 1) // 2 AS n0,
-        |               count(DISTINCT xb) AS rx, count(DISTINCT yb) AS ry
-        |        FROM cells GROUP BY 1),
-        |tx AS (SELECT source, sum(cx * (cx - 1) // 2) AS n1
-        |       FROM (SELECT source, xb, sum(c) AS cx FROM cells GROUP BY 1, 2) GROUP BY 1),
-        |ty AS (SELECT source, sum(cy * (cy - 1) // 2) AS n2
-        |       FROM (SELECT source, yb, sum(c) AS cy FROM cells GROUP BY 1, 2) GROUP BY 1),
-        |j AS (SELECT tot.source AS source, n, n0, rx, ry, n1, n2,
-        |             coalesce(nc, 0) AS ncc, coalesce(nd, 0) AS ndd,
-        |             coalesce(nc, 0) - coalesce(nd, 0) AS s
-        |      FROM tot LEFT JOIN cd USING (source) JOIN tx USING (source) JOIN ty USING (source))
-        |SELECT source, CAST(n AS BIGINT) AS n,
-        |       CAST(ncc AS BIGINT) AS concordant, CAST(ndd AS BIGINT) AS discordant,
-        |       CASE WHEN ncc + ndd > 0 THEN
-        |         round(CAST(s AS DOUBLE) / (ncc + ndd), 6) + 0.0 END AS gamma,
-        |       CASE WHEN n0 > n1 THEN
-        |         round(CAST(s AS DOUBLE) / (n0 - n1), 6) + 0.0 END AS somers_dyx,
-        |       CASE WHEN n0 > n2 THEN
-        |         round(CAST(s AS DOUBLE) / (n0 - n2), 6) + 0.0 END AS somers_dxy,
-        |       CASE WHEN least(rx, ry) > 1 THEN
-        |         round(2.0 * least(rx, ry) * s
-        |               / (CAST(n AS DOUBLE) * n * (least(rx, ry) - 1)), 6) + 0.0 END AS tau_c
-        |FROM j ORDER BY source""".stripMargin,
-
     // the q183 symmetric graph; shared-neighbor candidates, anti-join
     // against existing edges, AA fold on the bounded degree grid
     "q288_link_predict" ->
@@ -1659,34 +1295,6 @@ object AnalyticsQueries {
         |              round(f2.aa, 6) AS adamic_adar
         |       FROM fin f2 JOIN deg du ON f2.u = du.node JOIN deg dw2 ON f2.w = dw2.node)
         |SELECT * FROM sc ORDER BY adamic_adar DESC, u, w LIMIT 20""".stripMargin,
-
-    // integer rank walk sorted by (x, doc_id); den/sd exact integers;
-    // n·Σd cast to double before multiplying
-    "q290_chatterjee_xi" ->
-      """WITH d AS (
-        |  SELECT source AS g, n_chars AS x,
-        |         len(list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)) AS y,
-        |         doc_id AS tb
-        |  FROM documents),
-        |cells AS (SELECT g, y, count(*) AS t FROM d GROUP BY 1, 2),
-        |rk AS (SELECT g, y, t,
-        |              sum(t) OVER (PARTITION BY g ORDER BY y
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS r
-        |       FROM cells),
-        |rk2 AS (SELECT g, y, t, r, max(r) OVER (PARTITION BY g) AS n FROM rk),
-        |rk3 AS (SELECT *, n - r + t AS l FROM rk2),
-        |dn AS (SELECT g, CAST(sum(2 * t * l * (n - l)) AS BIGINT) AS dnm,
-        |              CAST(max(n) AS BIGINT) AS n
-        |       FROM rk3 GROUP BY g),
-        |seq AS (SELECT d.g, d.x, d.tb, rk3.r FROM d JOIN rk3 ON d.g = rk3.g AND d.y = rk3.y),
-        |sd AS (SELECT g, CAST(sum(dnext) AS BIGINT) AS sd FROM (
-        |         SELECT g, abs(lead(r) OVER (PARTITION BY g ORDER BY x, tb) - r) AS dnext
-        |         FROM seq)
-        |       GROUP BY g)
-        |SELECT dn.g AS source, dn.n,
-        |       CASE WHEN dnm > 0 THEN
-        |         round(1.0 - CAST(dn.n AS DOUBLE) * sd / dnm, 6) + 0.0 END AS xi
-        |FROM dn JOIN sd USING (g) ORDER BY source""".stripMargin,
 
     // integer cumsums on the ordered distinct-score grid; F1 is one
     // integer ratio per row (argmax ties break to the highest score)
@@ -1860,62 +1468,5 @@ object AnalyticsQueries {
        |       coalesce(decision, 'continue') AS decision,
        |       CAST(cross_n AS BIGINT) AS cross_n
        |FROM fin LEFT JOIN cs USING (variant) ORDER BY fin.variant""".stripMargin
-  }
-
-  /** Max one-insert cascade depth the q205 oracle unrolls: a 48-tick
-    * window holds bucket sizes ≤32, so a single insert chains at most 6
-    * oldest-pair merges (1→2→4→8→16→32); 9 adds safety margin.
-    */
-  private val CascadeLevels = 9
-
-  /** Recursive-CTE replay of StreamDgim.step: state = (sizes, times)
-    * lists newest-first; each iteration prepends the size-1 bucket, then
-    * [[CascadeLevels]] lateral rewrites each apply ONE oldest-pair merge
-    * (exactly the Scala walk's restart-from-head semantics), then expiry
-    * keeps in-window buckets and the estimate counts full buckets plus
-    * half the oldest — integer-only, so the replay is bit-exact.
-    */
-  private lazy val dgimReplaySql: String = {
-    val cascade = new StringBuilder
-    var ps = "i0.s0"
-    var pt = "i0.t0"
-    for (lvl <- 1 to CascadeLevels) {
-      cascade.append(
-        s"""  CROSS JOIN LATERAL (SELECT list_filter(range(1, len($ps)-1),
-           |      i -> $ps[i] = $ps[i+1] AND $ps[i+1] = $ps[i+2])[1] AS idx) x$lvl
-           |  CROSS JOIN LATERAL (SELECT
-           |      CASE WHEN x$lvl.idx IS NULL THEN $ps
-           |           ELSE $ps[1:x$lvl.idx] || [2*$ps[x$lvl.idx+1]] || $ps[x$lvl.idx+3:] END AS s,
-           |      CASE WHEN x$lvl.idx IS NULL THEN $pt
-           |           ELSE $pt[1:x$lvl.idx] || [$pt[x$lvl.idx+1]] || $pt[x$lvl.idx+3:] END AS tm) c$lvl
-           |""".stripMargin)
-      ps = s"c$lvl.s"
-      pt = s"c$lvl.tm"
-    }
-    s"""WITH RECURSIVE
-       |h AS (SELECT key, t, row_number() OVER (PARTITION BY key ORDER BY t) AS rn
-       |      FROM (SELECT event_type || '#' || CAST(t // 168 AS VARCHAR) AS key, t
-       |            FROM (SELECT DISTINCT event_type, epoch_us(ts) // 3600000000 AS t
-       |                  FROM events))),
-       |f AS (
-       |  SELECT key, 0::BIGINT AS rn, []::BIGINT[] AS s, []::BIGINT[] AS tm,
-       |         0::BIGINT AS t, 0::BIGINT AS est, 0::BIGINT AS nb
-       |  FROM (SELECT DISTINCT key FROM h)
-       |  UNION ALL
-       |  SELECT f.key, h.rn, m.s2, m.tm2, h.t,
-       |         CAST(coalesce(list_sum(m.s2[1:len(m.s2)-1]), 0)
-       |              + (m.s2[len(m.s2)]+1)//2 AS BIGINT) AS est,
-       |         CAST(len(m.s2) AS BIGINT) AS nb
-       |  FROM f
-       |  JOIN h ON h.key = f.key AND h.rn = f.rn + 1
-       |  CROSS JOIN LATERAL (SELECT list_prepend(1::BIGINT, f.s) AS s0,
-       |                             list_prepend(h.t, f.tm) AS t0) i0
-       |$cascade  CROSS JOIN LATERAL (SELECT list_filter(range(1, len($ps)+1),
-       |      i -> $pt[i] > h.t - 48) AS kp) e0
-       |  CROSS JOIN LATERAL (SELECT list_transform(e0.kp, i -> $ps[i]) AS s2,
-       |                             list_transform(e0.kp, i -> $pt[i]) AS tm2) m
-       |)
-       |SELECT key, t, est AS estimate, nb AS n_buckets
-       |FROM f WHERE rn >= 1 ORDER BY key, t""".stripMargin
   }
 }

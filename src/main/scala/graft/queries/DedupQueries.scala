@@ -145,12 +145,12 @@ object DedupQueries {
         .orderBy(col("new_doc"))
     }),
 
-    // The STREAMING near-dup probe replayed as micro-batches (q204/q205
-    // discipline for a stateless stream-static op): the corpus band
-    // table — the state a streaming deployment keeps materialized — is
-    // built ONCE, then three disjoint ts-sliced micro-batches probe it
-    // independently through the same per-trigger body the stream runs
-    // (MinHashLsh.newVsCorpusBands) and union. Because the probe is
+    // The STREAMING near-dup probe replayed as micro-batches (a stateless
+    // stream-static op): the corpus band table — the state a streaming
+    // deployment keeps materialized — is built ONCE, then three disjoint
+    // ts-sliced micro-batches probe it independently through the same
+    // per-trigger body the stream runs (MinHashLsh.newVsCorpusBands) and
+    // union. Because the probe is
     // stateless in the batch, the union must equal one probe of the
     // whole feed — which is exactly what the oracle computes; any hidden
     // cross-batch dependence breaks the hash.

@@ -71,8 +71,8 @@ object IndexBenchQueries {
     * the store from three gates changes nothing about what is asserted —
     * q32 keeps its own fresh end-to-end run (it IS the timing gate).
     */
-  /** Byte-copy of a store directory — q261/q262 mutate (manual-memory
-    * upsert, compaction rewrite) and must not dirty the shared index.
+  /** Byte-copy of a store directory — q262 mutates (compaction rewrite)
+    * and must not dirty the shared index.
     */
   private def copyStore(src: String): String = {
     val dst = Files.createTempDirectory("graft_store_copy").toString
@@ -175,10 +175,9 @@ object IndexBenchQueries {
     }),
 
     // The LAST spec-only engine verbs, hash-gated over the shared
-    // deterministic store (r10 advisory #7): snippet search, cached
-    // search + invalidation-on-mutation, and store compaction. Golden-
-    // value oracles like q207-q209/q216-q219. q261/q262 mutate, so each
-    // works on its own copy of the store.
+    // deterministic store (r10 advisory #7): snippet search and store
+    // compaction. Golden-value oracles like q207-q209/q216-q219. q262
+    // mutates, so it works on its own copy of the store.
     "q260_search_snippets" -> ((s, _) => {
       import org.apache.spark.sql.functions._
       GraftEngine(s, indexedStore(s))
@@ -186,33 +185,6 @@ object IndexBenchQueries {
         .select(col("entityName").as("entity_name"),
           round(col("rrf_score"), 6).as("score"), col("snippet"))
         .orderBy(col("score").desc, col("entity_name"))
-    }),
-
-    "q261_search_cache" -> ((s, _) => {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val engine = GraftEngine(s, copyStore(indexedStore(s)))
-      val q = "aggregating items total"
-      def names(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.select(col("entityName")).collect().map(_.getString(0)).toSeq
-      val direct = names(engine.searchSimilar(q, "hybrid", limit = 5))
-      val c1 = names(engine.searchSimilarCached(q, "hybrid", limit = 5))
-      val c2 = names(engine.searchSimilarCached(q, "hybrid", limit = 5))
-      val hits = engine.searchCache.hits
-      val misses = engine.searchCache.misses
-      val sizeBefore = engine.searchCache.size.toLong
-      engine.addManualMemory("cache_note", "manual note that must clear the memo")
-      val sizeAfter = engine.searchCache.size.toLong
-      val rowsAfter = engine.searchSimilarCached(q, "hybrid", limit = 5).count()
-      Seq(
-        ("first_call_rows", c1.size.toLong),
-        ("replay_equals_direct", if (c1 == direct && c2 == c1) 1L else 0L),
-        ("hits_after_two_calls", hits),
-        ("misses_after_two_calls", misses),
-        ("size_before_mutation", sizeBefore),
-        ("size_after_mutation", sizeAfter),
-        ("rows_after_invalidation", rowsAfter)
-      ).toDF("metric", "value")
     }),
 
     "q262_compact_store" -> ((s, _) => {
@@ -324,17 +296,6 @@ object IndexBenchQueries {
         |  ('helper_1_b', CAST(0.008065 AS DOUBLE), 'function helper signature def helper items signature def helper items signature')
         |) t(entity_name, score, snippet)
         |ORDER BY score DESC, entity_name""".stripMargin,
-
-    "q261_search_cache" ->
-      """SELECT * FROM (VALUES
-        |  ('first_call_rows', CAST(5 AS BIGINT)),
-        |  ('replay_equals_direct', CAST(1 AS BIGINT)),
-        |  ('hits_after_two_calls', CAST(1 AS BIGINT)),
-        |  ('misses_after_two_calls', CAST(1 AS BIGINT)),
-        |  ('size_before_mutation', CAST(1 AS BIGINT)),
-        |  ('size_after_mutation', CAST(0 AS BIGINT)),
-        |  ('rows_after_invalidation', CAST(5 AS BIGINT))
-        |) t(metric, value)""".stripMargin,
 
     "q262_compact_store" ->
       """SELECT * FROM (VALUES

@@ -29,15 +29,15 @@ object Bm25 {
   def tokens(text: Column): Column =
     filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 1)
 
-  private val TokenPattern = java.util.regex.Pattern.compile("[^a-z0-9]+")
-
   /** THE Scala-side twin of [[tokens]] — every driver/executor-side
     * tokenization (query parsing, minhash/simhash signatures) must go
     * through this one definition so it can never drift from the column
-    * expression the oracles replay.
+    * expression the oracles replay. The case mapping is `lower`'s
+    * ([[graft.functions.TextOps.wordsScala]]), never the JVM default
+    * locale's: under `tr`, `toLowerCase` maps `I` to a dotless `ı`.
     */
   def tokenizeScala(text: String): Array[String] =
-    TokenPattern.split(text.toLowerCase).filter(_.length > 1)
+    graft.functions.TextOps.wordsScala(text).filter(_.length > 1)
 
   /** The BM25 term contribution of one (doc, term) posting. */
   def contrib(idf: Column, tf: Column, dl: Column, avgdl: Column): Column =

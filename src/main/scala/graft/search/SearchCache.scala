@@ -1,17 +1,9 @@
 package graft.search
 
-/** Driver-side bounded LRU memo for top-k search results (reference:
-  * `storage/base.py:249-330` `CachingVectorStore` — a decorator over the
-  * store, capped at `max_cache_size` entries, cleared on every mutation).
-  *
-  * Spark-first rationale: `df.cache()` memoizes the SCAN, which Spark
-  * already handles; what the reference caches is the final top-k RESULT of
-  * a repeated query. Those results are `limit`-bounded (tens of rows), so
-  * holding them on the driver is safe at any corpus scale — the cache cost
-  * is O(entries × limit), independent of table size. Unlike the
-  * reference's, it sees writers in other processes: the engine keys every
-  * entry on the store version, so after any commit older entries are never
-  * hit again and age out of the LRU.
+/** Driver-side bounded LRU memo with hit/miss counters. `IndexStore` keeps
+  * each data file's parquet footer schema in one, keyed by file name: data
+  * files are immutable, so an entry never goes stale, and the bound caps
+  * the driver memory it takes.
   */
 final class SearchCache[K, V](maxSize: Int) {
 
@@ -32,7 +24,6 @@ final class SearchCache[K, V](maxSize: Int) {
     }
   }
 
-  def clear(): Unit = synchronized(map.clear())
   def size: Int = synchronized(map.size())
   def hits: Long = synchronized(_hits)
   def misses: Long = synchronized(_misses)

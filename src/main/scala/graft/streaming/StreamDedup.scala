@@ -82,8 +82,8 @@ object StreamDedup {
     DedupVerdict(e.docId, bucket, kept = e.docId == first, first)
 
   /** DISTRIBUTED batch replay of [[keepFirstPerBucket]] — the backfill
-    * shape and the oracle surface (the q204/q205 discipline): one
-    * `flatMapGroups` per bucket applying the identical sort + verdict.
+    * shape and the oracle surface: one `flatMapGroups` per bucket
+    * applying the identical sort + verdict.
     * A backfill's "batch" is the whole history, so `first` is simply the
     * group head; state per bucket is ONE long, and the replay shuffles
     * the feed once on the bucket key.

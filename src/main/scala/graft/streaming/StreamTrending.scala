@@ -53,9 +53,8 @@ object StreamTrending {
   }
 
   /** DISTRIBUTED batch replay of the same fold — the backfill shape and
-    * the oracle surface (q204/q205 discipline): one `flatMapGroups` per
-    * shard folding that shard's tokens through the identical
-    * `MgAgg.reduce`. Tokens are sorted first so the fold is
+    * the oracle surface: one `flatMapGroups` per shard folding that
+    * shard's tokens through the identical `MgAgg.reduce`. Tokens are sorted first so the fold is
     * replay-stable whatever order the shuffle delivered; MG state stays
     * ≤ k counters per shard however large the shard's stream is.
     */

@@ -117,15 +117,4 @@ object WatchPipeline {
         processBatch(batch.sparkSession, batch, storeDir, embedder, config): Unit
       }
       .start()
-
-  /** Watermarked tumbling-window event-rate monitor (the streaming analog
-    * of q8; demonstrates real watermark semantics the reference never had,
-    * SURVEY.md §2.6 note).
-    */
-  def eventRate(events: DataFrame, tsCol: String, window: String, watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window), col("eventType"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("eventType"), col("n"))
 }

@@ -110,26 +110,4 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("Welford fold (streaming rate anomaly): baseline equals the prior arithmetic mean") {
-    import graft.streaming.StreamRateAnomaly.{batchScored, BucketCount}
-    val series = Gen.choose(3, 30).flatMap(n =>
-      Gen.listOfN(n, Gen.choose(0L, 1000000L)))
-    forSamples(series, 100) { xs =>
-      val buckets = xs.zipWithIndex.map { case (v, i) => BucketCount("k", i.toLong, v) }
-      val out = batchScored(buckets).sortBy(_.bucket)
-      assert(out.length == xs.length)
-      out.zipWithIndex.foreach { case (s, i) =>
-        assert(s.nBuckets == i.toLong, "baseline counts exactly the prior buckets")
-        if (i > 0) {
-          val priorMean = xs.take(i).map(_.toDouble).sum / i
-          assert(math.abs(s.baselineMean - priorMean)
-            <= 1e-6 * math.max(1.0, math.abs(priorMean)),
-            s"welford mean ${s.baselineMean} vs $priorMean at $i")
-        }
-        // fewer than two prior points can never be anomalous
-        if (i < 2) assert(s.z == 0.0)
-      }
-    }
-  }
-
 }

@@ -18,16 +18,17 @@ class ReadmeSyncSpec extends AnyFunSuite {
   /** Gate numbers deleted with their experiment-statistics operators
     * (bootstrap, seasonality, FDR control, rater agreement, serial
     * correlation, A/B variance reduction, k-sample tests, survival
-    * curves, contingency tests, robust location, inequality indices and
-    * their kin; none reached by an engine verb). Gate names key the
-    * CORRECTNESS/BENCH artifacts and PLANS.md, so the survivors keep their
-    * numbers and these stay retired, never reused.
+    * curves, contingency tests, robust location, inequality indices, rank
+    * tests and their kin), the events-stream EWMA/DGIM/Welford fold
+    * replays and the search-result memo; none reached by an engine verb.
+    * Gate names key the CORRECTNESS/BENCH artifacts and PLANS.md, so the
+    * survivors keep their numbers and these stay retired, never reused.
     */
-  private val Retired: Set[Int] = Set(193, 197, 198, 199, 201, 202, 224,
-    228, 235, 236, 237, 239, 240, 241, 242, 243, 244, 245, 248, 249, 250,
-    252, 263, 264, 265, 266, 267, 268, 269, 273, 274, 275, 276, 278, 279,
-    280, 284, 285, 286, 287, 289, 291, 292, 293, 294, 295, 296, 297, 298,
-    299, 300, 301, 302)
+  private val Retired: Set[Int] = Set(186, 193, 197, 198, 199, 200, 201,
+    202, 204, 205, 210, 223, 224, 228, 233, 235, 236, 237, 239, 240, 241,
+    242, 243, 244, 245, 248, 249, 250, 252, 261, 263, 264, 265, 266, 267,
+    268, 269, 273, 274, 275, 276, 277, 278, 279, 280, 284, 285, 286, 287,
+    289, 290, 291, 292, 293, 294, 295, 296, 297, 298, 299, 300, 301, 302)
 
   private lazy val numbers: Seq[Int] =
     SparkEntry.queries.keys.toSeq.map(_.drop(1).takeWhile(_.isDigit).toInt)
@@ -104,6 +105,19 @@ class ReadmeSyncSpec extends AnyFunSuite {
       raw"\b[A-Z]\w*Spec\b".r.findAllIn(r.stripSuffix("|").split('|').last)).distinct
     val noSpec = specs.filterNot(s => raw"\bclass\s+$s\b".r.findFirstIn(testSource).isDefined)
     assert(noSpec.isEmpty, s"README names specs absent from src/test: $noSpec")
+  }
+
+  // a deleted gate's row would otherwise fail only when BenchScaling runs
+  test("every BenchScaling audit entry names a registered query") {
+    val audited = BenchScaling.Audit.map(_._1) ++ BenchScaling.SinglePass
+    val stale = audited.filterNot(SparkEntry.queries.contains)
+    assert(stale.isEmpty, s"BenchScaling audits unregistered queries: $stale")
+  }
+
+  test("README names no retired gate") {
+    val named = raw"\bq(\d+)_\w".r.findAllMatchIn(readme).map(_.group(1).toInt).toSet
+    assert((named intersect Retired).isEmpty,
+      s"README names retired gates: ${(named intersect Retired).toSeq.sorted}")
   }
 
   test("query names are contiguous q1..qN with no gaps or dupes") {

@@ -264,29 +264,6 @@ class EngineSpec extends SparkSpec {
     }
   }
 
-  test("search-result cache: repeat query replays rows, mutation invalidates") {
-    engine.searchCache.clear()
-    val h0 = engine.searchCache.hits
-    val first = engine.searchSimilarCached("add numbers", "semantic", limit = 5).collect()
-    assert(engine.searchCache.size == 1 && engine.searchCache.hits == h0)
-    val second = engine.searchSimilarCached("add numbers", "semantic", limit = 5).collect()
-    assert(engine.searchCache.hits == h0 + 1) // served from the memo
-    assert(second.map(_.toString).toSeq == first.map(_.toString).toSeq)
-    // cached rows match the uncached search exactly
-    val direct = engine.searchSimilar("add numbers", "semantic", limit = 5).collect()
-    assert(first.map(_.toString).toSeq == direct.map(_.toString).toSeq)
-    // different parameters are a different entry, not a hit
-    engine.searchSimilarCached("add numbers", "keyword", limit = 5)
-    assert(engine.searchCache.size == 2 && engine.searchCache.hits == h0 + 1)
-    // any write through the engine clears the memo (reference policy)
-    engine.addManualMemory("cache_probe", "a manual memory about caching")
-    assert(engine.searchCache.size == 0)
-    // and the fresh result reflects the write when relevant
-    val after = engine.searchSimilarCached("a manual memory about caching", "keyword", limit = 5)
-      .select("entityName").collect().map(_.getString(0))
-    assert(after.contains("cache_probe"))
-  }
-
   test("searchWithSnippets: hits carry the first-hit window from their own content") {
     engine.index(root)
     val rows = engine.searchWithSnippets("add numbers sum", "keyword", limit = 5)
@@ -369,16 +346,6 @@ class EngineSpec extends SparkSpec {
     }
   }
 
-  test("search-result cache keys on the store version: a second engine's write is seen") {
-    val other = GraftEngine(spark, store)
-    val q = "platypus ledger reconciliation"
-    def names() = engine.searchSimilarCached(q, "keyword", limit = 5)
-      .select("entityName").collect().map(_.getString(0)).toSeq
-    assert(!names().contains("platypus-runbook"))
-    other.addManualMemory("platypus-runbook", "how the platypus ledger reconciliation runs")
-    assert(names().contains("platypus-runbook"), "the memo served a result older than the store")
-  }
-
   test("addManualMemory on a fresh store: keyword search finds it; the first index keeps it") {
     val tree = Files.createTempDirectory("graft_manual_tree").toString
     Files.writeString(Paths.get(tree, "planted.py"),
@@ -392,6 +359,20 @@ class EngineSpec extends SparkSpec {
     val names = e.chunks.filter(col("chunkType") === "metadata")
       .select("entityName").collect().map(_.getString(0)).toSet
     assert(Set("numbat-notes", "numbat_sync").subsetOf(names), names)
+  }
+
+  test("keyword search lowercases the query by lower's rule, not the default locale's") {
+    val prev = java.util.Locale.getDefault
+    // under tr, "ID".toLowerCase is "ıd" (dotless ı), which no stored "id" matches
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      assert(graft.search.Bm25.tokenizeScala("WOMBAT ID").toSeq == Seq("wombat", "id"))
+      val e = GraftEngine(spark, Files.createTempDirectory("graft_locale").toString)
+      e.addManualMemory("wombat-keys", "The wombat table keys every row by its id")
+      val hits = e.searchSimilar("ID", "keyword", limit = 3)
+        .select("entityName").collect().map(_.getString(0))
+      assert(hits.contains("wombat-keys"), hits.toSeq)
+    } finally java.util.Locale.setDefault(prev)
   }
 
   test("clearCollection with nothing to keep: the next index rebuilds the store like a fresh one") {

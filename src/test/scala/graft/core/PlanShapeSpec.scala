@@ -293,14 +293,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(shuffles(ns) <= 2)
   }
 
-  test("q233_rate_replay: one key shuffle feeds the fold, zero joins") {
-    val ns = nodes("q233_rate_replay")
-    assert(count(ns) { case _: BaseJoinExec => () } == 0)
-    assert(quadratic(ns) == 0)
-    // (key,bucket) partial agg + groupByKey fold + presentation sort
-    assert(shuffles(ns) <= 3)
-  }
-
   test("q234_bucketed_join: co-bucketed SMJ with no Exchange under the join") {
     val df = SparkEntry.queries("q234_bucketed_join")(spark, dir)
     df.collect()

@@ -4,21 +4,24 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Measured Python-parser coverage over the reference's OWN codebase
-  * (VERDICT r11 task 5): the last substantive `partial` row in SURVEY
-  * §2.1 becomes a number. Ground truth is an INDEPENDENT line-regex
-  * census of every `.py` file under /root/reference (defs, classes,
-  * module-level assignments); coverage is name-level recall — the
-  * fraction of census names the structural parser extracts as entities.
-  * The reference's README (/root/reference/README.md:169) claims "95.3%
-  * variable coverage" for its own tree-sitter+Jedi parser; the floors
-  * pinned here are what OUR regex-structural parser measures on the
-  * same kind of corpus (the reference's ~23k-LoC source + tests),
-  * minus a 1-point safety margin so fixture drift can't flake the suite.
+/** Measured Python-parser coverage (VERDICT r11 task 5): the last
+  * substantive `partial` row in SURVEY §2.1 becomes a number. Ground truth
+  * is an INDEPENDENT line-regex census of every `.py` file of the
+  * hand-written fixture corpus under `src/test/resources/python_coverage`
+  * (defs, classes, module-level assignments); coverage is name-level
+  * recall — the fraction of census names the structural parser extracts
+  * as entities. The corpus (a small package plus its pytest tests) holds
+  * every census pattern: `async def`, decorated and nested methods, nested
+  * classes, plain and annotated module variables, and `def`/`class` lines
+  * inside docstrings that the census must not count. The reference's
+  * README claims "95.3% variable coverage" for its own tree-sitter+Jedi
+  * parser; the floors pinned here are what OUR regex-structural parser
+  * measured on the reference's ~23k-LoC source + tests, minus a 1-point
+  * safety margin.
   */
 class PythonCoverageSpec extends AnyFunSuite {
 
-  private val Root = Paths.get("/root/reference")
+  private val Root = Paths.get(getClass.getResource("/python_coverage").toURI)
 
   private def pyFiles(under: String): Seq[Path] = {
     val base = Root.resolve(under)
@@ -88,19 +91,19 @@ class PythonCoverageSpec extends AnyFunSuite {
     (fc, cc, vc, parsed)
   }
 
-  test("measured coverage over the reference source + tests, floors pinned") {
-    val files = pyFiles("claude_indexer") ++ pyFiles("tests")
-    assume(files.nonEmpty, "reference corpus not present")
+  test("measured coverage over the fixture package + tests, floors pinned") {
+    val files = pyFiles("ledger") ++ pyFiles("tests")
+    assert(files.size == 8, files)
     val (fc, cc, vc, parsed) = coverageOver(files)
     info(f"files parsed clean: $parsed/${files.size}")
     info(f"function/method recall: ${fc.hit}/${fc.total} = ${fc.ratio}%.3f")
     info(f"class recall:           ${cc.hit}/${cc.total} = ${cc.ratio}%.3f")
     info(f"module-var recall:      ${vc.hit}/${vc.total} = ${vc.ratio}%.3f")
-    assert(parsed == files.size, "every reference file must parse without errors")
-    // floors: measured 1.000 / 1.000 / 1.000 over 65 files (781 defs,
-    // 126 classes, 30 module vars) at pin time (r12), minus ~1 point so
-    // fixture drift can't flake the suite. SURVEY §2.1 cites these
-    // numbers for the Python-source row.
+    assert(parsed == files.size, "every fixture file must parse without errors")
+    // floors: measured 1.000 / 1.000 / 1.000 over the reference's 65 files
+    // (781 defs, 126 classes, 30 module vars) at pin time (r12), minus ~1
+    // point; SURVEY §2.1 cites these numbers for the Python-source row.
+    // The fixture corpus measures 55/55, 14/14 and 19/19.
     assert(fc.ratio >= 0.99, f"function recall regressed: ${fc.ratio}%.3f")
     assert(cc.ratio >= 0.99, f"class recall regressed: ${cc.ratio}%.3f")
     assert(vc.ratio >= 0.96, f"variable recall regressed: ${vc.ratio}%.3f")

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
 
-/** Statistical-invariant checks over the r9 stats/sketch gates (q210-
+/** Statistical-invariant checks over the r9 stats/sketch gates (q211-
   * q213) at sf0.001 — the oracle proves cross-engine equality; these
   * prove the STATISTICS behave: bounds hold, estimates track exact
   * values, intervals contain their point estimates.
@@ -11,18 +11,6 @@ class StatGatesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private def rows(q: String) = SparkEntry.queries(q)(spark, dir).collect()
-
-  test("q210: tau_b stays in [-1, 1] and the pair ledger adds up") {
-    val rs = rows("q210_kendall_tau")
-    assert(rs.nonEmpty)
-    rs.foreach { r =>
-      val t = r.getAs[Double]("tau_b")
-      assert(t >= -1.0 && t <= 1.0, s"tau_b $t out of range")
-      val n = r.getAs[Long]("n")
-      assert(r.getAs[Long]("concordant") + r.getAs[Long]("discordant")
-        <= n * (n - 1) / 2)
-    }
-  }
 
   test("q211: HLL overlap estimates track the exact Jaccard") {
     val rs = rows("q211_hll_overlap")

@@ -218,21 +218,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("watermarked windowed event rate compiles against a stream") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val df = mem.toDF().toDF("ts", "eventType")
-    val agg = WatchPipeline.eventRate(df, "ts", "10 minutes", "5 minutes")
-    val q = agg.writeStream.outputMode("append").format("memory").queryName("rates").start()
-    try {
-      mem.addData((java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "created"))
-      mem.addData((java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), "created")) // advances watermark
-      q.processAllAvailable()
-      // first window is closed by the watermark advance and emitted
-      assert(spark.table("rates").count() >= 1)
-    } finally q.stop()
-  }
-
   test("streaming near-dup: each micro-batch probes the indexed corpus bands") {
     // the production ingest shape: a static already-indexed corpus, a
     // stream of new docs, and per-batch MinHashLsh.newVsCorpus inside
