@@ -35,8 +35,6 @@ object BenchScaling {
     "q33_salted_agg" -> (("events", 1.0, true)),
     "q47_asof_join" -> (("events", 1.0, true)),
     "q80_salted_join" -> (("events", 1.0, true)),
-    "q146_session_funnel" -> (("events", 1.0, true)),
-    "q164_funnel_latency" -> (("events", 1.0, true)),
     // documents — linear map/agg shapes
     "q92_bpe_tokens" -> (("documents", 1.0, false)),
     "q102_inverted_index" -> (("documents", 1.0, false)),
@@ -101,11 +99,9 @@ object BenchScaling {
     // events — linear shapes, three decades via the replicated sf1
     "q67_pagerank" -> (("events", 1.0, true)),
     "q136_ppr" -> (("events", 1.0, true)),
-    "q159_value_mad" -> (("events", 1.0, true)),
     "q182_covisitation" -> (("events", 1.5, true)), // per-user item-pair fan-out
     "q183_kcore" -> (("events", 1.0, true)),
     "q195_assoc_rules" -> (("events", 1.5, true)), // per-basket pair fan-out
-    "q215_sprt" -> (("events", 1.0, true)),
     "q220_keepfirst_replay" -> (("events", 1.0, true)),
     // embeddings — linear (fixed probe counts / fixed K)
     "q37_kmeans" -> (("embeddings", 1.0, false)),

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.Locale
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -103,7 +104,7 @@ object Profile {
     case s: String => "'" + s.replace("'", "''") + "'"
     case l: Long => s"CAST($l AS BIGINT)"
     case d: Double => s"CAST($d AS DOUBLE)"
-    case b: Boolean => b.toString.toUpperCase
+    case b: Boolean => b.toString.toUpperCase(Locale.ROOT)
     case x => String.valueOf(x)
   }
 

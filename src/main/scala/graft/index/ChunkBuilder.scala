@@ -1,5 +1,6 @@
 package graft.index
 
+import java.util.Locale
 import graft.core.Ids
 import graft.core.Model._
 
@@ -32,7 +33,7 @@ object ChunkBuilder {
   /** camelCase / snake_case name split (entities.py:156-170). */
   def splitName(name: String): String =
     name.replaceAll("([a-z0-9])([A-Z])", "$1 $2")
-      .replace("_", " ").replace(".", " ").toLowerCase
+      .replace("_", " ").replace(".", " ").toLowerCase(Locale.ROOT)
 
   def bm25Content(e: Entity): String = {
     val fileName = e.filePath.split('/').last

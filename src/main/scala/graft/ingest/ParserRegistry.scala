@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.util.Locale
 import graft.core.Model._
 
 /** Extension → parser dispatch (reference: analysis/parser.py:2109-2267).
@@ -42,7 +43,7 @@ object ParserRegistry {
   def extensionOf(relPath: String): String = {
     val name = relPath.split('/').last
     val dot = name.lastIndexOf('.')
-    if (dot < 0) "" else name.substring(dot + 1).toLowerCase
+    if (dot < 0) "" else name.substring(dot + 1).toLowerCase(Locale.ROOT)
   }
 
   def parse(relPath: String, content: String): ParserResult =

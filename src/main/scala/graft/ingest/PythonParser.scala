@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.util.Locale
 import scala.collection.mutable.ArrayBuffer
 import graft.core.Ids
 import graft.core.Model._
@@ -239,14 +240,14 @@ object PythonParser {
       else out += "documents exceptions"
     }
     if ("""(?i)Examples?:""".r.findFirstIn(doc).isDefined) out += "has usage examples"
-    val behaviors = DocBehaviorRe.findAllMatchIn(doc.toLowerCase).map(_.group(1)).toSeq.distinct.sorted.take(3)
+    val behaviors = DocBehaviorRe.findAllMatchIn(doc.toLowerCase(Locale.ROOT)).map(_.group(1)).toSeq.distinct.sorted.take(3)
     if (behaviors.nonEmpty) out += s"behaviors: ${behaviors.mkString(", ")}"
     out.toSeq
   }
 
   /** Framework usage observations (reference: observation_extractor.py:909-991). */
   private[ingest] def frameworkObs(body: String): Seq[String] = {
-    val lc = body.toLowerCase
+    val lc = body.toLowerCase(Locale.ROOT)
     FrameworkChecks.collect { case (fw, tokens) if tokens.exists(lc.contains) => fw }
   }
 
@@ -491,7 +492,7 @@ object PythonParser {
           Seq("Factory", "Builder", "Singleton", "Adapter", "Observer",
             "Strategy", "Visitor", "Proxy", "Decorator", "Facade")
             .find(p => name.endsWith(p))
-            .foreach(p => obs += s"design pattern: ${p.toLowerCase}")
+            .foreach(p => obs += s"design pattern: ${p.toLowerCase(Locale.ROOT)}")
           // instance attributes (<=3), reference family:
           // observation_extractor.py:124-168
           val attrs = """self\.([A-Za-z_]\w*)\s*=""".r
@@ -586,7 +587,7 @@ object PythonParser {
                   else AnnotAssignRe.findFirstMatchIn(line).map(_.group(1))
                     .orElse(inferRhsType(line.substring(line.indexOf('=') + 1).trim))
                 names.foreach { n =>
-                  val t = if (n.toUpperCase == n) "constant" else "variable"
+                  val t = if (n.toUpperCase(Locale.ROOT) == n) "constant" else "variable"
                   entities += Entity(n, t, relPath, i + 1, i + 1,
                     Seq(s"$t: $n") ++ inferred.map(ty => s"type: $ty"), "", line.trim.take(80))
                   relations += Relation(relPath, n, "contains", "", "", 1.0)

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.util.Locale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,7 +38,7 @@ object RobotsTxt {
     * 0; no matching group → everything allowed.
     */
   def selectGroup(body: String, userAgent: String): RobotsGroup = {
-    val ua = userAgent.toLowerCase
+    val ua = userAgent.toLowerCase(Locale.ROOT)
     // group = consecutive User-agent lines + the rules until the next
     // User-agent line that starts a NEW group (per RFC: a rule line ends
     // the UA-collecting state)
@@ -50,12 +51,12 @@ object RobotsTxt {
       val line = raw.takeWhile(_ != '#').trim
       val idx = line.indexOf(':')
       if (idx > 0) {
-        val key = line.substring(0, idx).trim.toLowerCase
+        val key = line.substring(0, idx).trim.toLowerCase(Locale.ROOT)
         val value = line.substring(idx + 1).trim
         key match {
           case "user-agent" =>
             if (!collectingAgents) { flush(); collectingAgents = true }
-            cur = cur.copy(agents = value.toLowerCase :: cur.agents)
+            cur = cur.copy(agents = value.toLowerCase(Locale.ROOT) :: cur.agents)
           case "allow" | "disallow" =>
             collectingAgents = false
             // empty Disallow means "allow all" — representable as no rule

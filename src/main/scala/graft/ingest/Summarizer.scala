@@ -28,7 +28,7 @@ case class DeterministicSummarizer(summaryChars: Int = 200, topicCount: Int = 3)
     extends Summarizer {
 
   override def summarize(sessionId: String, transcript: String): SessionSummary = {
-    val toks = transcript.toLowerCase.split("[^a-z0-9]+")
+    val toks = graft.functions.TextOps.wordsScala(transcript)
       .filter(t => t.length > 3 && !DeterministicSummarizer.Stopwords.contains(t))
     val topics = toks.groupBy(identity).map { case (t, g) => (t, g.length) }.toSeq
       .sortBy { case (t, n) => (-n, t) }

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.util.Locale
 import scala.collection.mutable.ArrayBuffer
 
 /** WARC (ISO 28500 / Common Crawl) container parsing — the standard
@@ -139,7 +140,7 @@ object WarcParser {
               val line = new String(bytes, hPos, he - hPos, "US-ASCII")
               val ci = line.indexOf(':')
               if (ci > 0)
-                headers += (line.substring(0, ci).trim.toLowerCase ->
+                headers += (line.substring(0, ci).trim.toLowerCase(Locale.ROOT) ->
                   line.substring(ci + 1).trim)
               hPos = he + 2
             }

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.util.Locale
 import scala.collection.mutable.ArrayBuffer
 import graft.core.Ids
 import graft.core.Model._
@@ -338,7 +339,7 @@ object JsParser {
               case None => VarRe.findFirstMatchIn(line) match {
                 case Some(m) if depthBefore == 0 && includeVar(m.group(1)) =>
                   val name = m.group(1)
-                  val t = if (name.toUpperCase == name) "constant" else "variable"
+                  val t = if (name.toUpperCase(Locale.ROOT) == name) "constant" else "variable"
                   entities += Entity(name, t, relPath, i + 1, i + 1,
                     Seq(s"$t: $name"), "", line.trim.take(80))
                   relations += Relation(relPath, name, "contains", "", "", 1.0)

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * per-source rank window (the q137 winsorize class), a global
   * DISTINCT-VALUE cumulative grid (integer cumsum over the bounded value
   * grid in a single-task window — raw rows are never globally sorted,
-  * the q159 discipline), broadcast-joined back by position range; corpus
+  * only distinct values), broadcast-joined back by position range; corpus
   * totals ride a 1-row broadcast.
   */
 object QuantileNorm {

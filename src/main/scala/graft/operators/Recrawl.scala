@@ -5,9 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Recrawl scheduling from observed event inter-arrivals — the crawler's
-  * "how often does this source change, when is it due" planner (the
-  * politeness/fairness counterpart of the q116 rate-anomaly detector:
-  * q116 flags bursts, this sets the steady-state revisit cadence).
+  * "how often does this source change, when is it due" planner: it sets
+  * the steady-state revisit cadence per source.
   *
   * Inter-arrival gaps need an ordered neighbor (lag), so the ONE window in
   * this operator is partitioned by (entity, key) — at 100 TB that is

@@ -6,10 +6,10 @@ import graft.core.Tables
 
 /** Analytics-pipeline operators gated round 8: graph cores (q183),
   * TextRank keyphrases (q184), readability (q185), fill-in-the-middle
-  * augmentation (q187), Benford audit (q188), l-diversity (q189), A/B
-  * hypothesis tests (q190), Kneser-Ney LM (q191), Markov attribution
-  * (q192), quantile normalization (q194), association rules (q195) and
-  * Jaro-Winkler linkage (q196).
+  * augmentation (q187), Benford audit (q188), l-diversity (q189),
+  * Kneser-Ney LM (q191), quantile normalization (q194), association rules
+  * (q195) and Jaro-Winkler linkage (q196), plus later gates over the same
+  * tables.
   *
   * Numeric discipline throughout: counts stay integer, distinct counts
   * are exact, float formulas are written in the SAME shape on both
@@ -80,72 +80,11 @@ object AnalyticsQueries {
         .orderBy(col("c_mktsegment"))
     }),
 
-    // A/B test harness: users split by id parity; conversion = any
-    // HIGH-VALUE purchase (value > 150 — plain "any purchase" is
-    // degenerate here, every user converts and the pooled-variance z
-    // denominator is exactly 0, which ANSI mode turns into a
-    // DIVIDE_BY_ZERO even for doubles). Two-proportion z on conversion
-    // + Welch's t on per-user event counts, all from exact integer
-    // sufficient statistics (Σx, Σx² as int64 — no Welford fold, no
-    // order dependence), formulas applied once at the output edge.
-    "q190_abtest" -> ((s, dir) => {
-      val u = Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_ev"),
-          max(when(col("event_type") === "purchase" && col("value") > 150, 1L)
-            .otherwise(0L)).as("conv"))
-        .withColumn("v", col("user_id") % 2)
-      val a = u.agg(
-        sum(when(col("v") === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("v") === 1, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("v") === 0, col("conv")).otherwise(0L)).as("c0"),
-        sum(when(col("v") === 1, col("conv")).otherwise(0L)).as("c1"),
-        sum(when(col("v") === 0, col("n_ev")).otherwise(0L)).as("s0"),
-        sum(when(col("v") === 1, col("n_ev")).otherwise(0L)).as("s1"),
-        sum(when(col("v") === 0, col("n_ev") * col("n_ev")).otherwise(0L)).as("q0"),
-        sum(when(col("v") === 1, col("n_ev") * col("n_ev")).otherwise(0L)).as("q1"))
-      // every ratio is an explicit DOUBLE division — under ANSI mode a
-      // bare long/long `/` is INTEGRAL division (and the statistics
-      // would silently floor to 0)
-      a.select(col("n0"), col("n1"),
-          (col("c0").cast("double") / col("n0")).as("p0d"),
-          (col("c1").cast("double") / col("n1")).as("p1d"),
-          ((col("c0") + col("c1")).cast("double") / (col("n0") + col("n1"))).as("pp"),
-          (col("s0").cast("double") / col("n0")).as("m0d"),
-          (col("s1").cast("double") / col("n1")).as("m1d"),
-          ((col("q0") - col("s0").cast("double") * col("s0") / col("n0"))
-            / (col("n0") - 1)).as("v0"),
-          ((col("q1") - col("s1").cast("double") * col("s1") / col("n1"))
-            / (col("n1") - 1)).as("v1"))
-        .select(col("n0"), col("n1"),
-          round(col("p0d"), 4).as("p0"),
-          round(col("p1d"), 4).as("p1"),
-          round((col("p1d") - col("p0d"))
-            / sqrt(col("pp") * (lit(1.0) - col("pp"))
-              * (lit(1.0) / col("n0") + lit(1.0) / col("n1"))), 4).as("z_conv"),
-          round(col("m0d"), 4).as("m0"),
-          round(col("m1d"), 4).as("m1"),
-          round((col("m1d") - col("m0d"))
-            / sqrt(col("v0") / col("n0") + col("v1") / col("n1")), 4).as("t_welch"),
-          round(pow(col("v0") / col("n0") + col("v1") / col("n1"), 2)
-            / (pow(col("v0") / col("n0"), 2) / (col("n0") - 1)
-              + pow(col("v1") / col("n1"), 2) / (col("n1") - 1)), 2).as("df_welch"))
-    }),
-
     // Kneser-Ney smoothed bigram LM: top-25 bigrams with interpolated
     // continuation-count probabilities.
     "q191_kneser_ney" -> ((s, dir) =>
       graft.functions.KneserNey.bigramProbs(
         Tables.documents(s, dir), "text", k = 25)),
-
-    // Markov removal-effect attribution over user journeys (absorb at
-    // first purchase; 12 fixed propagation rounds, oracle-unrolled).
-    "q192_attribution" -> ((s, dir) => {
-      val trans = graft.operators.MarkovAttribution.transitions(
-        Tables.events(s, dir), "user_id", "ts", "event_id",
-        "event_type", convType = "purchase")
-      graft.operators.MarkovAttribution.removalEffects(s, trans)
-    }),
 
     // Cross-source quantile normalization of document length onto the
     // pooled corpus distribution, integer-exact positions.
@@ -169,47 +108,6 @@ object AnalyticsQueries {
       graft.dedup.JaroLinkage.report(Tables.part(s, dir),
           "p_partkey", "p_name", col("p_brand"))
         .orderBy(col("block"))),
-
-    // Two-proportion z-test + Wilson 95% CIs: click share per user-parity
-    // variant — the categorical-outcome companion to q190's Welch t.
-    // Sufficient statistics are four integers; the z and both CIs are
-    // closed-form float expressions at the edge.
-    "q212_prop_ztest" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select((col("user_id") % 2).cast("long").as("variant"),
-          when(col("event_type") === "click", 1L).otherwise(0L).as("hit"))
-      val g = ev.groupBy(col("variant"))
-        .agg(count(lit(1)).as("n"), sum(col("hit")).as("k"))
-      // z written as the literal (never sqrt(z²) — a 1-ulp cross-engine
-      // trap); every float expression mirrors the oracle's shape exactly
-      val zl = lit(1.959963984540054)
-      val z2 = zl * zl
-      def phat = col("k").cast("double") / col("n")
-      def halfW = zl * sqrt(phat * (lit(1.0) - phat) / col("n")
-        + z2 / (lit(4.0) * col("n") * col("n")))
-      def center(sign: Double) =
-        round(((col("k") + z2 / 2) / col("n") + lit(sign) * halfW)
-          / (lit(1.0) + z2 / col("n")), 6)
-      val wils = g.select(col("variant"), col("n"), col("k"),
-          round(phat, 6).as("p"),
-          // Wilson score interval: (p̂ + z²/2n ± z·sqrt(p̂(1−p̂)/n + z²/4n²)) / (1 + z²/n)
-          center(-1.0).as("wilson_lo"),
-          center(1.0).as("wilson_hi"))
-      val a = wils.filter(col("variant") === 0).select(
-        col("n").as("n0"), col("k").as("k0"), col("p").as("p0"),
-        col("wilson_lo").as("lo0"), col("wilson_hi").as("hi0"))
-      val b = wils.filter(col("variant") === 1).select(
-        col("n").as("n1"), col("k").as("k1"), col("p").as("p1"),
-        col("wilson_lo").as("lo1"), col("wilson_hi").as("hi1"))
-      a.crossJoin(b) // 1 row × 1 row
-        .withColumn("_pp", (col("k0") + col("k1")).cast("double") / (col("n0") + col("n1")))
-        .select(col("n0"), col("k0"), col("p0"), col("lo0"), col("hi0"),
-          col("n1"), col("k1"), col("p1"), col("lo1"), col("hi1"),
-          when(col("_pp") > 0 && col("_pp") < 1,
-            round((col("k1").cast("double") / col("n1") - col("k0").cast("double") / col("n0"))
-              / sqrt(col("_pp") * (lit(1.0) - col("_pp"))
-                * (lit(1.0) / col("n0") + lit(1.0) / col("n1"))), 4)).as("z"))
-    }),
 
     // Embedding dimension-correlation audit — the redundancy report a
     // vector pipeline reads before whitening or Matryoshka truncation
@@ -244,48 +142,6 @@ object AnalyticsQueries {
         .select((col("i") + 1).cast("long").as("dim_i"),
           (col("j") + 1).cast("long").as("dim_j"), col("r"))
         .orderBy(col("dim_i"), col("dim_j"))
-    }),
-
-    // Wald SPRT (Sequential Probability Ratio Test, Wald 1945) on the
-    // click rate per user-parity variant: H0 p=0.4 vs H1 p=0.6,
-    // α=β=0.05. The LLR after n events is k·ln(p1/p0)+(n−k)·ln(q1/q0) —
-    // integer cumsums per variant (one window each), constants baked as
-    // IDENTICAL decimal literals on both sides (libm ln can differ by
-    // 1 ulp between engines), so the first-crossing index is exact.
-    "q215_sprt" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val c1 = math.log(0.6 / 0.4) // ln(p1/p0)
-      val c2 = math.log(0.4 / 0.6) // ln((1-p1)/(1-p0))
-      val a = math.log(19.0) // ln((1-β)/α), α=β=0.05
-      val ev = Tables.events(s, dir)
-        .select((col("user_id") % 2).cast("long").as("variant"),
-          expr("unix_micros(ts)").as("us"), col("event_id"),
-          when(col("event_type") === "click", 1L).otherwise(0L).as("hit"))
-      val w = Window.partitionBy(col("variant"))
-        .orderBy(col("us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val walk = ev
-        .withColumn("n", count(lit(1)).over(w))
-        .withColumn("k", sum(col("hit")).over(w))
-        .withColumn("llr", col("k") * lit(c1) + (col("n") - col("k")) * lit(c2))
-      // final state AND first crossing in ONE partial agg over the walk:
-      // min(struct(n, decision)) picks the earliest crossing row (n is
-      // unique per variant, so the struct order is total), max(struct(n,
-      // llr)) the final LLR. The r9 draft re-derived `walk` three times
-      // (filter + two joins) — 3 WindowExecs and 2 joins for values one
-      // agg already holds; at 100 TB that is 3 window shuffles of the
-      // event horizon instead of 1 (r10 plan fix, PlanShapeSpec-asserted).
-      walk.groupBy(col("variant"))
-        .agg(max(col("n")).as("n"), max(col("k")).as("k"),
-          round(max(struct(col("n"), col("llr"))).getField("llr"), 4).as("llr_final"),
-          min(when(col("llr") >= a || col("llr") <= -a,
-            struct(col("n").as("cn"),
-              when(col("llr") >= a, "reject_h0").otherwise("accept_h0").as("d"))))
-            .as("_cross"))
-        .select(col("variant"), col("n"), col("k"), col("llr_final"),
-          coalesce(col("_cross.d"), lit("continue")).as("decision"),
-          col("_cross.cn").as("cross_n"))
-        .orderBy(col("variant"))
     }),
 
     // T-digest bounded-error gate: the digest's centroid layout depends
@@ -553,76 +409,6 @@ object AnalyticsQueries {
       graft.search.MmdRff.twoSample(
         Tables.embeddings(s, dir), "embedding", col("label") === 0)),
 
-    // Simpson's-paradox audit: does any day-of-week stratum's click-rate
-    // direction (variant 1 vs 0) CONTRADICT the pooled direction? The
-    // classic trap before shipping a pooled A/B read. Directions are
-    // integer cross-multiplication signs (k1·n0 vs k0·n1) — no division
-    // anywhere, so the flip flag is exact.
-    "q256_simpson" -> ((s, dir) => {
-      val e = Tables.events(s, dir).select(
-        dayofweek(col("ts")).cast("long").as("dow"),
-        pmod(col("user_id"), lit(2)).as("v"),
-        when(col("event_type") === "click", 1L).otherwise(0L).as("hit"))
-      val strata = e.groupBy(col("dow")).agg(
-        sum(when(col("v") === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("v") === 0, col("hit")).otherwise(0L)).as("k0"),
-        sum(when(col("v") === 1, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("v") === 1, col("hit")).otherwise(0L)).as("k1"))
-      val pooled = strata.agg(sum(col("n0")).as("pn0"), sum(col("k0")).as("pk0"),
-        sum(col("n1")).as("pn1"), sum(col("k1")).as("pk1"))
-      def sign(k1: org.apache.spark.sql.Column, n0: org.apache.spark.sql.Column,
-               k0: org.apache.spark.sql.Column, n1: org.apache.spark.sql.Column) =
-        when(k1 * n0 > k0 * n1, 1L).when(k1 * n0 < k0 * n1, -1L).otherwise(0L)
-      strata.crossJoin(broadcast(pooled))
-        .select(col("dow"), col("n0"), col("k0"), col("n1"), col("k1"),
-          sign(col("k1"), col("n0"), col("k0"), col("n1")).as("dir_stratum"),
-          sign(col("pk1"), col("pn0"), col("pk0"), col("pn1")).as("dir_pooled"),
-          (sign(col("k1"), col("n0"), col("k0"), col("n1"))
-            * sign(col("pk1"), col("pn0"), col("pk0"), col("pn1")) === -1)
-            .as("flipped"))
-        .orderBy(col("dow"))
-    }),
-
-    // Group-sequential monitoring (O'Brien-Fleming, 3 looks): the z at
-    // each calendar-third cut against the published OBF boundaries —
-    // peeking with integrity, the SPRT's fixed-schedule sibling. Each
-    // look's counts are cumulative integer sums from ONE scan; cuts are
-    // integer µs thirds of the corpus span.
-    "q257_group_sequential" -> ((s, dir) => {
-      val e = Tables.events(s, dir).select(unix_micros(col("ts")).as("us"),
-        pmod(col("user_id"), lit(2)).as("v"),
-        when(col("event_type") === "click", 1L).otherwise(0L).as("hit"))
-      val span = e.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-        .selectExpr("mn", "(mx - mn) AS w")
-        .selectExpr("mn + (w div 3) AS c1", "mn + ((2 * w) div 3) AS c2",
-          "mn + w AS c3")
-      val sums = (1 to 3).flatMap { i =>
-        val cut = col(s"c$i")
-        Seq(
-          sum(when(col("us") <= cut && col("v") === 0, 1L).otherwise(0L)).as(s"n0_$i"),
-          sum(when(col("us") <= cut && col("v") === 0, col("hit")).otherwise(0L)).as(s"k0_$i"),
-          sum(when(col("us") <= cut && col("v") === 1, 1L).otherwise(0L)).as(s"n1_$i"),
-          sum(when(col("us") <= cut && col("v") === 1, col("hit")).otherwise(0L)).as(s"k1_$i"))
-      }
-      val cum = e.crossJoin(broadcast(span)).agg(sums.head, sums.tail: _*)
-      val bounds = Map(1 -> 3.471, 2 -> 2.454, 3 -> 2.004)
-      // ONE corpus agg, the three looks exploded from its single row — a
-      // per-look select would re-run the 12-sum scan three times
-      val looks = cum.select(explode(array((1 to 3).map { i =>
-        struct(lit(i.toLong).as("look"), col(s"n0_$i").as("n0"),
-          col(s"k0_$i").as("k0"), col(s"n1_$i").as("n1"),
-          col(s"k1_$i").as("k1"), lit(bounds(i)).as("obf_bound"))
-      }: _*)).as("l")).select(col("l.*"))
-      val (n0, k0, n1, k1) = (col("n0"), col("k0"), col("n1"), col("k1"))
-      val pp = (k0 + k1).cast("double") / (n0 + n1)
-      val z = (k1.cast("double") / n1 - k0.cast("double") / n0) /
-        sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / n0 + lit(1.0) / n1))
-      looks.select(col("look"), n0, k0, n1, k1, round(z, 4).as("z"),
-          col("obf_bound"),
-          (abs(round(z, 4)) >= col("obf_bound")).as("crossed"))
-        .orderBy(col("look"))
-    }),
-
     // Decile lift/gain table for a ranking score (here n_chars ranking
     // lang='en'): the eval every curation-classifier ships with. Decile
     // membership is an exact integer order statistic (rank·10 div n);
@@ -640,6 +426,7 @@ object AnalyticsQueries {
         .groupBy(col("decile"))
         .agg(count(lit(1)).as("n_d"), sum(col("y")).as("k_d"),
           max(col("n")).as("n"), max(col("kk")).as("kk"))
+      // unpartitioned, so one task: bounded by the ten decile rows
       val cw = Window.orderBy(col("decile"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       deciles
@@ -650,26 +437,6 @@ object AnalyticsQueries {
           col("cum_k"),
           round(col("cum_k").cast("double") / col("kk"), 4).as("cum_gain"))
         .orderBy(col("decile"))
-    }),
-
-    // Token-bucket admission replay per (event_type, ISO-week) over hour
-    // ticks (capacity 5, refill 1/tick) — the crawl-politeness budget
-    // simulator. PURE integer fold (two longs per key); keying by ISO
-    // week bounds recursion depth for the CTE oracle.
-    "q254_token_bucket" -> ((s, dir) => {
-      import s.implicits._
-      val ticks = Tables.events(s, dir)
-        .select(col("event_type"),
-          expr("unix_micros(ts) div 3600000000").as("t"))
-        .groupBy(concat(col("event_type"), lit("#"),
-          expr("CAST(t div 168 AS string)")).as("key"), col("t"))
-        .agg(count(lit(1)).as("n"))
-        .as[graft.operators.TokenBucket.Tick]
-      graft.operators.TokenBucket.admitDs(ticks, capacity = 5L,
-        refillPerTick = 1L).toDF()
-        .select(col("key"), col("t"), col("n"), col("admitted"),
-          col("rejected"), col("tokensAfter").as("tokens_after"))
-        .orderBy(col("key"), col("t"))
     }),
 
     // ===== r11 wave: mixture temperature =====
@@ -684,6 +451,7 @@ object AnalyticsQueries {
       val g = Tables.documents(s, dir).groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"))
       val tot = g.agg(sum(col("n_docs")).as("nn"))
+      // both windows unpartitioned, so one task: bounded by one row per source
       val w = Window.orderBy(col("source"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val allW = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -857,41 +625,6 @@ object AnalyticsQueries {
         |       CAST(sum(CASE WHEN l < 3 THEN k ELSE 0 END) AS BIGINT) AS n_rows_weak
         |FROM g GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
 
-    "q190_abtest" ->
-      """WITH u AS (
-        |  SELECT user_id, count(*) AS n_ev,
-        |         max(CASE WHEN event_type = 'purchase' AND value > 150 THEN 1 ELSE 0 END) AS conv,
-        |         user_id % 2 AS v
-        |  FROM events GROUP BY user_id
-        |), a AS (
-        |  SELECT
-        |    sum(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS n0,
-        |    sum(CASE WHEN v = 1 THEN 1 ELSE 0 END) AS n1,
-        |    sum(CASE WHEN v = 0 THEN conv ELSE 0 END) AS c0,
-        |    sum(CASE WHEN v = 1 THEN conv ELSE 0 END) AS c1,
-        |    sum(CASE WHEN v = 0 THEN n_ev ELSE 0 END) AS s0,
-        |    sum(CASE WHEN v = 1 THEN n_ev ELSE 0 END) AS s1,
-        |    sum(CASE WHEN v = 0 THEN n_ev * n_ev ELSE 0 END) AS q0,
-        |    sum(CASE WHEN v = 1 THEN n_ev * n_ev ELSE 0 END) AS q1
-        |  FROM u
-        |), m AS (
-        |  SELECT n0, n1,
-        |         CAST(c0 AS DOUBLE) / n0 AS p0d, CAST(c1 AS DOUBLE) / n1 AS p1d,
-        |         CAST(c0 + c1 AS DOUBLE) / (n0 + n1) AS pp,
-        |         CAST(s0 AS DOUBLE) / n0 AS m0d, CAST(s1 AS DOUBLE) / n1 AS m1d,
-        |         (q0 - CAST(s0 AS DOUBLE) * s0 / n0) / (n0 - 1) AS v0,
-        |         (q1 - CAST(s1 AS DOUBLE) * s1 / n1) / (n1 - 1) AS v1
-        |  FROM a
-        |)
-        |SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
-        |       round(p0d, 4) AS p0, round(p1d, 4) AS p1,
-        |       round((p1d - p0d) / sqrt(pp * (1.0 - pp) * (1.0 / n0 + 1.0 / n1)), 4) AS z_conv,
-        |       round(m0d, 4) AS m0, round(m1d, 4) AS m1,
-        |       round((m1d - m0d) / sqrt(v0 / n0 + v1 / n1), 4) AS t_welch,
-        |       round(pow(v0 / n0 + v1 / n1, 2)
-        |             / (pow(v0 / n0, 2) / (n0 - 1) + pow(v1 / n1, 2) / (n1 - 1)), 2) AS df_welch
-        |FROM m""".stripMargin,
-
     "q191_kneser_ney" ->
       """WITH toks AS (
         |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 1) AS t
@@ -910,63 +643,6 @@ object AnalyticsQueries {
         |             + 0.75 * ctx.n1r / ctx.ca * (CAST(cont.n1l AS DOUBLE) / ty.tt), 6) AS pkn
         |FROM cab JOIN ctx USING (a) JOIN cont USING (b) CROSS JOIN ty
         |ORDER BY cab DESC, a, b LIMIT 25""".stripMargin,
-
-    "q192_attribution" -> {
-      // the q183/q67 unrolling discipline: 12 fixed mass-propagation
-      // rounds per chain (base + one removal chain per channel), CTEs
-      // generated mechanically
-      val prolog =
-        """WITH e AS (
-          |  SELECT user_id, event_type, event_id,
-          |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-          |  FROM events
-          |), c AS (
-          |  SELECT *, min(CASE WHEN event_type = 'purchase' THEN rn END)
-          |              OVER (PARTITION BY user_id) AS cvrn
-          |  FROM e
-          |), k AS (
-          |  SELECT user_id, rn, cvrn,
-          |         CASE WHEN rn = cvrn THEN 'CONV' ELSE event_type END AS state,
-          |         max(rn) OVER (PARTITION BY user_id) AS lastrn
-          |  FROM c WHERE cvrn IS NULL OR rn <= cvrn
-          |), st AS (
-          |  SELECT coalesce(lag(state) OVER (PARTITION BY user_id ORDER BY rn), 'START') AS src,
-          |         state AS dst
-          |  FROM k
-          |  UNION ALL
-          |  SELECT state, 'NULL' FROM k WHERE cvrn IS NULL AND rn = lastrn
-          |), tc AS (SELECT src, dst, count(*) AS n FROM st GROUP BY 1, 2),
-          |tp AS (SELECT src, dst, CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY src) AS p FROM tc),
-          |tb AS (SELECT src, dst, p FROM tp
-          |       UNION ALL SELECT 'CONV', 'CONV', 1.0 UNION ALL SELECT 'NULL', 'NULL', 1.0)""".stripMargin
-      def chain(tag: String, table: String): String =
-        s", m${tag}0 AS (SELECT 'START' AS state, 1.0 AS m)" +
-          (1 to 12).map(i =>
-            s", m$tag$i AS (SELECT t.dst AS state, sum(m.m * t.p) AS m" +
-              s" FROM m$tag${i - 1} m JOIN $table t ON t.src = m.state GROUP BY t.dst)").mkString
-      // COUPLING: the Spark side derives the channel set from the observed
-      // transition matrix; SQL can't unroll a removal chain per unknown
-      // channel, so the oracle pins the generator's current event_type
-      // domain. A regenerated dataset with a new/removed event_type will
-      // (correctly) break this gate — update this list alongside it.
-      val channels = Seq("click", "error", "signup", "view")
-      val removals = channels.zipWithIndex.map { case (ch, i) =>
-        s""", t$i AS (SELECT src, CASE WHEN dst = '$ch' THEN 'NULL' ELSE dst END AS dst,
-           |          sum(p) AS p FROM tp WHERE src <> '$ch' GROUP BY 1, 2),
-           |tb$i AS (SELECT src, dst, p FROM t$i
-           |         UNION ALL SELECT 'CONV', 'CONV', 1.0 UNION ALL SELECT 'NULL', 'NULL', 1.0)""".stripMargin +
-          chain(s"r$i", s"tb$i")
-      }.mkString
-      val finals = channels.zipWithIndex.map { case (ch, i) =>
-        s"""SELECT '$ch' AS channel,
-           |  round((SELECT m FROM mb12 WHERE state = 'CONV'), 6) AS p_conv,
-           |  round(coalesce((SELECT m FROM mr${i}12 WHERE state = 'CONV'), 0), 6) AS p_removed,
-           |  round(((SELECT m FROM mb12 WHERE state = 'CONV')
-           |         - coalesce((SELECT m FROM mr${i}12 WHERE state = 'CONV'), 0))
-           |        / (SELECT m FROM mb12 WHERE state = 'CONV'), 6) AS removal_effect""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      prolog + chain("b", "tb") + removals + "\n" + finals + "\nORDER BY channel"
-    },
 
     "q194_quantile_norm" ->
       """WITH rws AS (SELECT source, doc_id, n_chars FROM documents),
@@ -1039,33 +715,6 @@ object AnalyticsQueries {
         |       max(jw) AS max_jw
         |FROM s GROUP BY block ORDER BY block""".stripMargin,
 
-    // identical Wilson/z float shapes; z is the literal on both sides
-    "q212_prop_ztest" ->
-      """WITH e AS (
-        |  SELECT user_id % 2 AS variant,
-        |         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS hit
-        |  FROM events),
-        |g AS (SELECT variant, CAST(count(*) AS BIGINT) AS n, CAST(sum(hit) AS BIGINT) AS k
-        |      FROM e GROUP BY 1),
-        |w AS (SELECT variant, n, k,
-        |        round(CAST(k AS DOUBLE) / n, 6) AS p,
-        |        round(((k + 1.959963984540054*1.959963984540054/2) / n
-        |          + (-1.0) * (1.959963984540054 * sqrt(CAST(k AS DOUBLE)/n * (1.0 - CAST(k AS DOUBLE)/n) / n
-        |              + 1.959963984540054*1.959963984540054 / (4.0 * n * n))))
-        |          / (1.0 + 1.959963984540054*1.959963984540054 / n), 6) AS wilson_lo,
-        |        round(((k + 1.959963984540054*1.959963984540054/2) / n
-        |          + 1.0 * (1.959963984540054 * sqrt(CAST(k AS DOUBLE)/n * (1.0 - CAST(k AS DOUBLE)/n) / n
-        |              + 1.959963984540054*1.959963984540054 / (4.0 * n * n))))
-        |          / (1.0 + 1.959963984540054*1.959963984540054 / n), 6) AS wilson_hi
-        |      FROM g),
-        |a AS (SELECT n AS n0, k AS k0, p AS p0, wilson_lo AS lo0, wilson_hi AS hi0 FROM w WHERE variant = 0),
-        |b AS (SELECT n AS n1, k AS k1, p AS p1, wilson_lo AS lo1, wilson_hi AS hi1 FROM w WHERE variant = 1)
-        |SELECT n0, k0, p0, lo0, hi0, n1, k1, p1, lo1, hi1,
-        |       CASE WHEN pp > 0 AND pp < 1 THEN
-        |         round((CAST(k1 AS DOUBLE)/n1 - CAST(k0 AS DOUBLE)/n0)
-        |               / sqrt(pp * (1.0 - pp) * (1.0/n0 + 1.0/n1)), 4) END AS z
-        |FROM (SELECT *, CAST(k0 + k1 AS DOUBLE) / (n0 + n1) AS pp FROM a, b)""".stripMargin,
-
     // same (i, j)-keyed sufficient statistics, pairs built in-row from the
     // doubly-unnested array (dims 1-based); ALL 2016 pairs emitted
     "q214_dim_corr" ->
@@ -1088,8 +737,6 @@ object AnalyticsQueries {
         |             / (sqrt(n * sii - si * si) * sqrt(n * sjj - sj * sj)), 6) + 0.0 AS r
         |FROM s
         |ORDER BY dim_i, dim_j""".stripMargin,
-
-    "q215_sprt" -> sprtSql,
 
     // exact quantiles only (type-7 interpolation = Spark `percentile`);
     // bound_ok is pinned TRUE — the Spark side computes the digest's rank
@@ -1322,68 +969,6 @@ object AnalyticsQueries {
         |       best_f1, best_f1_score
         |FROM fin, bt""".stripMargin,
 
-    // DuckDB dayofweek is 0-based (Sunday=0); Spark's is 1-based — shift.
-    // Directions via integer cross-multiplication: division-free.
-    "q256_simpson" ->
-      """WITH e AS (SELECT dayofweek(ts) + 1 AS dow, user_id % 2 AS v,
-        |                  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS hit
-        |           FROM events),
-        |g AS (SELECT dow,
-        |             CAST(sum(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |             CAST(sum(CASE WHEN v = 0 THEN hit ELSE 0 END) AS BIGINT) AS k0,
-        |             CAST(sum(CASE WHEN v = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |             CAST(sum(CASE WHEN v = 1 THEN hit ELSE 0 END) AS BIGINT) AS k1
-        |      FROM e GROUP BY 1),
-        |t AS (SELECT sum(n0) AS pn0, sum(k0) AS pk0, sum(n1) AS pn1, sum(k1) AS pk1 FROM g),
-        |s AS (SELECT *,
-        |        CAST(CASE WHEN k1 * n0 > k0 * n1 THEN 1
-        |                  WHEN k1 * n0 < k0 * n1 THEN -1 ELSE 0 END AS BIGINT) AS dir_stratum,
-        |        CAST(CASE WHEN pk1 * pn0 > pk0 * pn1 THEN 1
-        |                  WHEN pk1 * pn0 < pk0 * pn1 THEN -1 ELSE 0 END AS BIGINT) AS dir_pooled
-        |      FROM g, t)
-        |SELECT CAST(dow AS BIGINT) AS dow, n0, k0, n1, k1, dir_stratum, dir_pooled,
-        |       dir_stratum * dir_pooled = -1 AS flipped
-        |FROM s ORDER BY dow""".stripMargin,
-
-    // cumulative-look z against the published OBF boundaries; cuts are
-    // integer thirds of the span
-    "q257_group_sequential" ->
-      """WITH sp AS (SELECT min(epoch_us(ts)) AS mn, max(epoch_us(ts)) AS mx FROM events),
-        |cts AS (SELECT mn + (mx - mn) // 3 AS c1,
-        |               mn + (2 * (mx - mn)) // 3 AS c2,
-        |               mn + (mx - mn) AS c3 FROM sp),
-        |e AS (SELECT epoch_us(ts) AS us, user_id % 2 AS v,
-        |             CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS hit
-        |      FROM events),
-        |g AS (SELECT
-        |  CAST(sum(CASE WHEN us <= c1 AND v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0_1,
-        |  CAST(sum(CASE WHEN us <= c1 AND v = 0 THEN hit ELSE 0 END) AS BIGINT) AS k0_1,
-        |  CAST(sum(CASE WHEN us <= c1 AND v = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1_1,
-        |  CAST(sum(CASE WHEN us <= c1 AND v = 1 THEN hit ELSE 0 END) AS BIGINT) AS k1_1,
-        |  CAST(sum(CASE WHEN us <= c2 AND v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0_2,
-        |  CAST(sum(CASE WHEN us <= c2 AND v = 0 THEN hit ELSE 0 END) AS BIGINT) AS k0_2,
-        |  CAST(sum(CASE WHEN us <= c2 AND v = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1_2,
-        |  CAST(sum(CASE WHEN us <= c2 AND v = 1 THEN hit ELSE 0 END) AS BIGINT) AS k1_2,
-        |  CAST(sum(CASE WHEN us <= c3 AND v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0_3,
-        |  CAST(sum(CASE WHEN us <= c3 AND v = 0 THEN hit ELSE 0 END) AS BIGINT) AS k0_3,
-        |  CAST(sum(CASE WHEN us <= c3 AND v = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1_3,
-        |  CAST(sum(CASE WHEN us <= c3 AND v = 1 THEN hit ELSE 0 END) AS BIGINT) AS k1_3
-        | FROM e, cts),
-        |l AS (
-        |  SELECT 1::BIGINT AS look, n0_1 AS n0, k0_1 AS k0, n1_1 AS n1, k1_1 AS k1, 3.471 AS obf_bound FROM g
-        |  UNION ALL
-        |  SELECT 2::BIGINT, n0_2, k0_2, n1_2, k1_2, 2.454 FROM g
-        |  UNION ALL
-        |  SELECT 3::BIGINT, n0_3, k0_3, n1_3, k1_3, 2.004 FROM g),
-        |z AS (SELECT *,
-        |        round((CAST(k1 AS DOUBLE) / n1 - CAST(k0 AS DOUBLE) / n0)
-        |          / sqrt((CAST(k0 + k1 AS DOUBLE) / (n0 + n1))
-        |                 * (1.0 - CAST(k0 + k1 AS DOUBLE) / (n0 + n1))
-        |                 * (1.0 / n0 + 1.0 / n1)), 4) AS z
-        |      FROM l)
-        |SELECT look, n0, k0, n1, k1, z, obf_bound, abs(z) >= obf_bound AS crossed
-        |FROM z ORDER BY look""".stripMargin,
-
     // decile = exact integer order statistic ((rk-1)*10 div n);
     // lift/gain divide integer counts once at the edge
     "q258_decile_lift" ->
@@ -1405,68 +990,5 @@ object AnalyticsQueries {
         |       CAST(cum_k AS BIGINT) AS cum_k,
         |       round(CAST(cum_k AS DOUBLE) / kk, 4) AS cum_gain
         |FROM cw ORDER BY decile""".stripMargin,
-
-    // pure integer bucket algebra: refill by the tick gap (clamped at
-    // capacity 5), admit min(n, tokens); first row of each key sees dt=0
-    "q254_token_bucket" ->
-      """WITH RECURSIVE
-        |d AS (SELECT event_type || '#' ||
-        |             CAST((epoch_us(ts) // 3600000000) // 168 AS VARCHAR) AS key,
-        |             epoch_us(ts) // 3600000000 AS t, CAST(count(*) AS BIGINT) AS n
-        |      FROM events GROUP BY 1, 2),
-        |s AS (SELECT key, t, n, row_number() OVER (PARTITION BY key ORDER BY t) AS rn
-        |      FROM d),
-        |f AS (
-        |  SELECT key, 0::BIGINT AS rn, 5::BIGINT AS tokens, 0::BIGINT AS t_prev,
-        |         0::BIGINT AS t, 0::BIGINT AS n,
-        |         0::BIGINT AS admitted, 0::BIGINT AS rejected
-        |  FROM (SELECT DISTINCT key FROM s)
-        |  UNION ALL
-        |  SELECT s.key, s.rn,
-        |         least(5, f.tokens + CASE WHEN f.rn = 0 THEN 0 ELSE s.t - f.t_prev END)
-        |           - least(s.n, least(5, f.tokens + CASE WHEN f.rn = 0 THEN 0 ELSE s.t - f.t_prev END)),
-        |         s.t, s.t, s.n,
-        |         least(s.n, least(5, f.tokens + CASE WHEN f.rn = 0 THEN 0 ELSE s.t - f.t_prev END)),
-        |         s.n - least(s.n, least(5, f.tokens + CASE WHEN f.rn = 0 THEN 0 ELSE s.t - f.t_prev END))
-        |  FROM f JOIN s ON s.key = f.key AND s.rn = f.rn + 1
-        |)
-        |SELECT key, t, n, admitted, rejected, tokens AS tokens_after
-        |FROM f WHERE rn >= 1 ORDER BY key, t""".stripMargin
   )
-
-  /** The q215 oracle with the SPRT constants rendered from the SAME
-    * Scala doubles the gate uses (shortest round-trip decimal — DuckDB
-    * parses back to the identical bits; computing ln() in each engine
-    * could differ by 1 ulp and shift the crossing index).
-    */
-  private lazy val sprtSql: String = {
-    val c1 = math.log(0.6 / 0.4)
-    val c2 = math.log(0.4 / 0.6)
-    val a = math.log(19.0)
-    s"""WITH ev AS (
-       |  SELECT user_id % 2 AS variant, epoch_us(ts) AS us, event_id,
-       |         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS hit
-       |  FROM events),
-       |w AS (
-       |  SELECT variant,
-       |         count(*) OVER win AS n, sum(hit) OVER win AS k
-       |  FROM ev
-       |  WINDOW win AS (PARTITION BY variant ORDER BY us, event_id
-       |                 ROWS UNBOUNDED PRECEDING)),
-       |walk AS (SELECT variant, n, k, k * $c1 + (n - k) * $c2 AS llr FROM w),
-       |crossed AS (SELECT variant, min(n) AS cross_n FROM walk
-       |            WHERE llr >= $a OR llr <= -$a GROUP BY variant),
-       |cs AS (SELECT walk.variant, cross_n,
-       |              CASE WHEN llr >= $a THEN 'reject_h0' ELSE 'accept_h0' END AS decision
-       |       FROM walk JOIN crossed
-       |         ON walk.variant = crossed.variant AND walk.n = crossed.cross_n),
-       |fin AS (SELECT variant, CAST(max(n) AS BIGINT) AS n,
-       |               CAST(max(k) AS BIGINT) AS k,
-       |               round(max_by(llr, n), 4) AS llr_final
-       |        FROM walk GROUP BY variant)
-       |SELECT fin.variant, n, k, llr_final,
-       |       coalesce(decision, 'continue') AS decision,
-       |       CAST(cross_n AS BIGINT) AS cross_n
-       |FROM fin LEFT JOIN cs USING (variant) ORDER BY fin.variant""".stripMargin
-  }
 }

@@ -217,6 +217,7 @@ object CorpusQueries {
         .withColumn("base", floor(col("target")).cast("long"))
         .withColumn("rem", round(col("target") - col("base"), 6))
       val totBase = t.agg(sum(col("base")).as("tb"))
+      // unpartitioned, so one task: bounded by one row per source
       val w = Window.orderBy(col("rem").desc, col("source"))
       t.crossJoin(broadcast(totBase))
         .withColumn("rk", row_number().over(w))

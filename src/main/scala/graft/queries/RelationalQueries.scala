@@ -43,94 +43,7 @@ object RelationalQueries {
     sz(new java.io.File(path))
   }
 
-  /** Per-session ordered-step times (t_view → t_click → t_purchase) —
-    * the funnel table shared by q146 (counts) and q164 (latency).
-    */
-  private def funnelSteps(s: SparkSession, dir: String): DataFrame = {
-    val sess = Sessionize.assignSessions(
-      Tables.events(s, dir), "user_id", "ts", "event_id", 1800L)
-    val key = Seq("user_id", "session_id")
-    val s1 = sess.groupBy(key.map(col): _*)
-      .agg(min(when(col("event_type") === "view", col("ts"))).as("t_view"))
-    val s2 = sess.join(s1, key)
-      .groupBy(key.map(col): _*)
-      .agg(min(when(col("event_type") === "click"
-        && col("ts") >= col("t_view"), col("ts"))).as("t_click"),
-        first(col("t_view")).as("t_view"))
-    sess.join(s2, key)
-      .groupBy(key.map(col): _*)
-      .agg(min(when(col("event_type") === "purchase"
-        && col("ts") >= col("t_click"), col("ts"))).as("t_purchase"),
-        first(col("t_view")).as("t_view"), first(col("t_click")).as("t_click"))
-  }
-
   def defs: Map[String, Q] = Map(
-    // Weekly cohort retention triangle: users keyed by first-active week,
-    // activity counted per (cohort, week offset). Epoch-week integers —
-    // no timezone/week-start convention to disagree on. Two partial-agg
-    // shuffles on user_id, one on the tiny (cohort, offset) grid.
-    "q158_retention" -> ((s, dir) => {
-      val uw = Tables.events(s, dir)
-        .select(col("user_id"), expr("unix_micros(ts) div 604800000000").as("week"))
-        .distinct()
-      val cohort = uw.groupBy(col("user_id")).agg(min(col("week")).as("cohort"))
-      uw.join(cohort, Seq("user_id"))
-        .groupBy(col("cohort"), (col("week") - col("cohort")).as("offset"))
-        .agg(count_distinct(col("user_id")).as("n_users"))
-        .orderBy(col("cohort"), col("offset"))
-    }),
-
-    // Robust outlier report: per event_type lower-median and MAD computed
-    // from the DISTINCT-VALUE count table (the q118 discipline — windows
-    // walk distinct values, never raw rows), outliers = |v − med| beyond
-    // 4.4478·MAD (3σ-equivalent under normality). Pure integer ranks, no
-    // interpolation — replays exactly in any engine.
-    "q159_value_mad" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir).select(col("event_type"), col("value"))
-      val counts = ev.groupBy(col("event_type"), col("value")).agg(count(lit(1)).as("c"))
-        .localCheckpoint(false) // lazy (r13)
-      val tot = counts.groupBy(col("event_type")).agg(sum(col("c")).as("n"))
-      def lowerMedian(t: DataFrame, vCol: String, out: String): DataFrame = {
-        val w = Window.partitionBy(col("event_type")).orderBy(col(vCol))
-        t.withColumn("cum", sum(col("c")).over(w))
-          .join(broadcast(tot), Seq("event_type"))
-          .filter(col("cum") >= expr("(n + 1) div 2"))
-          .groupBy(col("event_type")).agg(min(col(vCol)).as(out))
-      }
-      val med = lowerMedian(counts, "value", "med")
-      val dev = counts.join(broadcast(med), Seq("event_type"))
-        .groupBy(col("event_type"), abs(col("value") - col("med")).as("adev"))
-        .agg(sum(col("c")).as("c"))
-      val mad = lowerMedian(dev, "adev", "mad")
-      dev.join(broadcast(mad), Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("c")).as("n"),
-          sum(when(col("adev") > col("mad") * 4.4478, col("c")).otherwise(0L)).as("n_outliers"))
-        .join(broadcast(med), Seq("event_type"))
-        .join(broadcast(mad), Seq("event_type"))
-        .select(col("event_type"), col("n"), round(col("med"), 6).as("med"),
-          round(col("mad"), 6).as("mad"), col("n_outliers"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Hour-of-day seasonality profile per event_type: volume, share of
-    // the type's traffic, and peak flag — the baseline the q116 anomaly
-    // z-scores deviate from. One partial agg on the 24×types grid; the
-    // per-type max arrives by a broadcast join, not a window over rows.
-    "q160_seasonality" -> ((s, dir) => {
-      val hours = Tables.events(s, dir)
-        .groupBy(col("event_type"), hour(col("ts")).cast("long").as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val perType = hours.groupBy(col("event_type"))
-        .agg(sum(col("n")).as("tot"), max(col("n")).as("peak"))
-      hours.join(broadcast(perType), Seq("event_type"))
-        .select(col("event_type"), col("hr"), col("n"),
-          round(col("n") / col("tot"), 6).as("share"),
-          (col("n") === col("peak")).as("is_peak"))
-        .orderBy(col("event_type"), col("hr"))
-    }),
-
     // TPC-H Q5-shaped local-supplier volume: revenue where the customer
     // and supplier sit in the SAME nation. Two independent dim paths onto
     // the fact row (order→customer→nation vs suppkey→supplier); all dims
@@ -150,19 +63,6 @@ object RelationalQueries {
         .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    // Rolling engagement: daily active users + 7-day trailing mean DAU.
-    // Raw rows collapse to the ~30-row day grid FIRST; the rolling window
-    // walks only that grid.
-    "q162_rolling_dau" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val daily = Tables.events(s, dir)
-        .select(expr("unix_micros(ts) div 86400000000").as("day"), col("user_id"))
-        .groupBy(col("day")).agg(count_distinct(col("user_id")).as("dau"))
-      val w = Window.orderBy(col("day")).rowsBetween(-6, 0)
-      daily.withColumn("avg7", round(avg(col("dau")).over(w), 4))
-        .orderBy(col("day"))
     }),
 
     // §2.4 broadcast-dim join chain: fact table joins up a snowflake. At
@@ -252,50 +152,6 @@ object RelationalQueries {
       Sessionize.sessionSummaries(Tables.events(s, dir), "user_id", "ts", "event_id", 1800L)
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("sess_start"), col("sess_end"))),
-
-    // Sessionized ORDERED-step funnel (view → click-after-view →
-    // purchase-after-click within one gap session): the product-analytics
-    // twin of q87's corpus funnel. Step times are conditional mins per
-    // (user, session) — three partial-agg passes chained by equi-joins on
-    // the session key, no window over raw events beyond the q9
-    // sessionizer itself; per-decade user cohorts roll up bounded rows.
-    "q146_session_funnel" -> ((s, dir) =>
-      funnelSteps(s, dir).groupBy((col("user_id") % 10).as("cohort"))
-        .agg(count(lit(1)).as("n_sessions"),
-          count(col("t_view")).as("n_view"),
-          count(col("t_click")).as("n_click"),
-          count(col("t_purchase")).as("n_purchase"))
-        .orderBy(col("cohort"))),
-
-    // Funnel conversion latency: per cohort, lower-median and lower-p90
-    // view→click lag over sessions that converted that step — rank walks
-    // over the distinct-lag count table (the q159 discipline), never raw
-    // sessions. (view→purchase never completes in this corpus — q146
-    // shows n_purchase = 0 — so the first funnel edge is the gate.)
-    "q164_funnel_latency" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val conv = funnelSteps(s, dir)
-        .filter(col("t_click").isNotNull)
-        .select((col("user_id") % 10).as("cohort"),
-          ((unix_micros(col("t_click")) - unix_micros(col("t_view"))) / 1000000L)
-            .cast("long").as("lag_s"))
-      val counts = conv.groupBy(col("cohort"), col("lag_s")).agg(count(lit(1)).as("c"))
-      val tot = counts.groupBy(col("cohort")).agg(sum(col("c")).as("n"))
-      val w = Window.partitionBy(col("cohort")).orderBy(col("lag_s"))
-      val cum = counts.withColumn("cum", sum(col("c")).over(w))
-        .join(broadcast(tot), Seq("cohort"))
-      // med and p90 in ONE conditional aggregate over ONE cum evaluation
-      // (was two filter+agg branches that each re-derived the funnel
-      // window pipeline — r12, guide §1.2; min-over-filtered-set ≡
-      // min(when(...)) so values are unchanged)
-      cum.groupBy(col("cohort"))
-        .agg(max(col("n")).as("n_conversions"), // n constant per cohort
-          min(when(col("cum") >= expr("(n + 1) div 2"), col("lag_s"))).as("med_lag_s"),
-          min(when(col("cum") * 10 >= col("n") * 9, col("lag_s"))).as("p90_lag_s"))
-        .select(col("cohort"), col("n_conversions"),
-          col("med_lag_s"), col("p90_lag_s"))
-        .orderBy(col("cohort"))
-    }),
 
     // §2.5 diff sketch (diff_layers.py:11-77): old/new snapshot full-outer
     // join → added/removed/modified/unchanged. Content compared as exact
@@ -466,65 +322,6 @@ object RelationalQueries {
             lit(4.0)), 6).as("fpr_theory"))
     }),
 
-    // Per-type OLS trend of event value over time — the q79 discipline
-    // (EXACT integer sufficient statistics, double formula only at the
-    // end): x = whole seconds since the corpus start (integer division,
-    // never float-truncated), y = milli-quantized value, so the five
-    // sums are partition-order-independent longs and slope/intercept are
-    // bit-deterministic. One partial-agg shuffle of five longs per key.
-    "q111_ols_trend" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("value").isNotNull)
-        .select(col("event_type"), unix_micros(col("ts")).as("us"), col("value"))
-      val t0 = ev.agg(min(col("us")).as("t0"))
-      val d = ev.crossJoin(broadcast(t0))
-        .withColumn("_d", col("us") - col("t0"))
-        .select(col("event_type"),
-          ((col("_d") - col("_d") % 1000000L) / 1000000L).cast("long").as("x"),
-          round(col("value") * 1000, 0).cast("long").as("y"))
-      d.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("x") * col("y")).as("sxy"))
-        .select(col("event_type"), col("n"),
-          // `+ 0.0` pins a cancellation-zero numerator to +0.0 (q176 class)
-          (round((col("n").cast("double") * col("sxy") - col("sx").cast("double") * col("sy")) /
-            (col("n").cast("double") * col("sxx") - col("sx").cast("double") * col("sx")), 6) + lit(0.0)).as("slope"),
-          (round((col("sy").cast("double") * col("sxx") - col("sx").cast("double") * col("sxy")) /
-            (col("n").cast("double") * col("sxx") - col("sx").cast("double") * col("sx")), 6) + lit(0.0)).as("intercept"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Rate-anomaly detection: per-type 6-hour event counts z-scored
-    // against the 4 preceding buckets' trailing mean/std (the monitoring
-    // primitive over any event stream). Counts are exact longs; the
-    // trailing moments ride ONE bounded window per type (a time series
-    // has one row per bucket — no skew surface); z only goes float in
-    // the final projection. Flagged rows only (|z| ≥ 2, std > 0).
-    "q116_rate_anomaly" -> ((s, dir) => {
-      val bucketUs = 6L * 3600 * 1000000
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), unix_micros(col("ts")).as("us"))
-        .withColumn("bucket", ((col("us") - col("us") % bucketUs) / bucketUs).cast("long"))
-      val counts = ev.groupBy(col("event_type"), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
-        .rowsBetween(-4, -1)
-      counts
-        .withColumn("k", count(col("n")).over(w))
-        .withColumn("sx", sum(col("n")).over(w))
-        .withColumn("sxx", sum(col("n") * col("n")).over(w))
-        .filter(col("k") === 4)
-        .withColumn("mean", col("sx").cast("double") / col("k"))
-        .withColumn("var",
-          (col("sxx").cast("double") - col("sx").cast("double") * col("sx") / col("k")) / col("k"))
-        .filter(col("var") > 0)
-        .withColumn("z", (col("n").cast("double") - col("mean")) / sqrt(col("var")))
-        .filter(abs(col("z")) >= 2)
-        .select(col("event_type"), col("bucket"), col("n"), round(col("z"), 6).as("z"))
-        .orderBy(col("event_type"), col("bucket"))
-    }),
-
     // TPC-H Q5 shape: the canonical star-schema revenue rollup — fact
     // table joins region-filtered snowflake dims, with the co-located
     // supplier-nation = customer-nation condition. All dims broadcast
@@ -646,22 +443,6 @@ object RelationalQueries {
         .orderBy(col("c_mktsegment"))
     }),
 
-    // Event-transition matrix: per user (time-ordered, event_id
-    // tie-break), count consecutive event_type bigrams — the Markov
-    // transition statistic behind behavior modeling and bot detection.
-    // One lag window per user (q9 sessionize class — bounded by a
-    // user's history) + one partial-agg rollup.
-    "q120_transitions" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir)
-        .withColumn("prev", lag(col("event_type"), 1).over(w))
-        .filter(col("prev").isNotNull)
-        .groupBy(col("prev"), col("event_type").as("next"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("prev"), col("next"))
-    }),
-
     // ROLLUP grouping sets with grouping_id — the multi-level report in
     // ONE pass instead of three unions (Spark plans a single Expand +
     // partial agg; at 100 TB that's one corpus scan for all levels).
@@ -691,50 +472,7 @@ object RelationalQueries {
         .orderBy(col("gid"), col("l_returnflag"), col("l_linestatus")))
   )
 
-  /** The q9 sessionizer + ordered-step CTE chain shared by the q146 and
-    * q164 oracles (mirrors [[funnelSteps]]).
-    */
-  private val funnelCtes: String =
-    """flagged AS (
-      |  SELECT user_id, ts, event_id, event_type,
-      |         CASE WHEN lag(ts) OVER w IS NULL
-      |                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-      |              THEN 1 ELSE 0 END AS new_sess
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      |), sess AS (
-      |  SELECT user_id, ts, event_type,
-      |         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) - 1 AS session_id
-      |  FROM flagged
-      |), s1 AS (
-      |  SELECT user_id, session_id,
-      |         min(CASE WHEN event_type = 'view' THEN ts END) AS t_view
-      |  FROM sess GROUP BY user_id, session_id
-      |), s2 AS (
-      |  SELECT sess.user_id, sess.session_id,
-      |         min(CASE WHEN event_type = 'click' AND ts >= t_view THEN ts END) AS t_click,
-      |         any_value(t_view) AS t_view
-      |  FROM sess JOIN s1 USING (user_id, session_id)
-      |  GROUP BY sess.user_id, sess.session_id
-      |), s3 AS (
-      |  SELECT sess.user_id, sess.session_id,
-      |         min(CASE WHEN event_type = 'purchase' AND ts >= t_click THEN ts END) AS t_purchase,
-      |         any_value(t_view) AS t_view, any_value(t_click) AS t_click
-      |  FROM sess JOIN s2 USING (user_id, session_id)
-      |  GROUP BY sess.user_id, sess.session_id
-      |)""".stripMargin
-
   def oracles: Map[String, String] = Map(
-    "q160_seasonality" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(extract(hour FROM ts) AS BIGINT) AS hr, count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), t AS (SELECT event_type, sum(n) AS tot, max(n) AS peak FROM h GROUP BY 1)
-        |SELECT h.event_type, hr, CAST(n AS BIGINT) AS n,
-        |       round(n / tot, 6) AS share, (n = peak) AS is_peak
-        |FROM h JOIN t USING (event_type)
-        |ORDER BY h.event_type, hr""".stripMargin,
-
     "q161_local_supplier" ->
       """SELECT n_name,
         |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
@@ -746,52 +484,6 @@ object RelationalQueries {
         |JOIN nation   ON c_nationkey = n_nationkey
         |GROUP BY n_name
         |ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q162_rolling_dau" ->
-      """WITH d AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS day, count(DISTINCT user_id) AS dau
-        |  FROM events GROUP BY 1
-        |)
-        |SELECT day, CAST(dau AS BIGINT) AS dau,
-        |       round(avg(dau) OVER (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS avg7
-        |FROM d ORDER BY day""".stripMargin,
-
-    "q158_retention" ->
-      """WITH uw AS (
-        |  SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS week FROM events
-        |), cohort AS (
-        |  SELECT user_id, min(week) AS cohort FROM uw GROUP BY user_id
-        |)
-        |SELECT cohort, week - cohort AS "offset",
-        |       CAST(count(DISTINCT uw.user_id) AS BIGINT) AS n_users
-        |FROM uw JOIN cohort USING (user_id)
-        |GROUP BY 1, 2 ORDER BY cohort, "offset"""".stripMargin,
-
-    "q159_value_mad" ->
-      """WITH counts AS (
-        |  SELECT event_type, value, count(*) AS c FROM events GROUP BY 1, 2
-        |), tot AS (SELECT event_type, sum(c) AS n FROM counts GROUP BY 1),
-        |med AS (
-        |  SELECT event_type, min(value) AS med FROM (
-        |    SELECT c.event_type, c.value,
-        |           sum(c.c) OVER (PARTITION BY c.event_type ORDER BY c.value) AS cum, t.n
-        |    FROM counts c JOIN tot t USING (event_type))
-        |  WHERE cum >= (n + 1) // 2 GROUP BY event_type
-        |), dev AS (
-        |  SELECT c.event_type, abs(c.value - m.med) AS adev, sum(c.c) AS c
-        |  FROM counts c JOIN med m USING (event_type) GROUP BY 1, 2
-        |), mad AS (
-        |  SELECT event_type, min(adev) AS mad FROM (
-        |    SELECT d.event_type, d.adev,
-        |           sum(d.c) OVER (PARTITION BY d.event_type ORDER BY d.adev) AS cum, t.n
-        |    FROM dev d JOIN tot t USING (event_type))
-        |  WHERE cum >= (n + 1) // 2 GROUP BY event_type
-        |)
-        |SELECT d.event_type, CAST(sum(d.c) AS BIGINT) AS n,
-        |       round(max(m.med), 6) AS med, round(max(x.mad), 6) AS mad,
-        |       CAST(sum(CASE WHEN d.adev > x.mad * 4.4478 THEN d.c ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM dev d JOIN med m USING (event_type) JOIN mad x USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
 
     "q2_join_dim" ->
       """SELECT r_name, n_name,
@@ -874,36 +566,6 @@ object RelationalQueries {
         |SELECT user_id, session_id, count(*) AS n_events,
         |       min(ts) AS sess_start, max(ts) AS sess_end
         |FROM sess GROUP BY user_id, session_id""".stripMargin,
-
-    // same q9 session replay, then the three chained conditional-min steps
-    "q146_session_funnel" ->
-      s"""WITH $funnelCtes
-         |SELECT user_id % 10 AS cohort,
-         |       CAST(count(*) AS BIGINT) AS n_sessions,
-         |       CAST(count(t_view) AS BIGINT) AS n_view,
-         |       CAST(count(t_click) AS BIGINT) AS n_click,
-         |       CAST(count(t_purchase) AS BIGINT) AS n_purchase
-         |FROM s3 GROUP BY cohort ORDER BY cohort""".stripMargin,
-
-    "q164_funnel_latency" ->
-      s"""WITH $funnelCtes,
-         |conv AS (
-         |  SELECT user_id % 10 AS cohort,
-         |         CAST((epoch_us(t_click) - epoch_us(t_view)) // 1000000 AS BIGINT) AS lag_s
-         |  FROM s3 WHERE t_click IS NOT NULL
-         |), counts AS (SELECT cohort, lag_s, count(*) AS c FROM conv GROUP BY 1, 2),
-         |tot AS (SELECT cohort, sum(c) AS n FROM counts GROUP BY 1),
-         |cum AS (
-         |  SELECT c.cohort, c.lag_s,
-         |         sum(c.c) OVER (PARTITION BY c.cohort ORDER BY c.lag_s) AS cum, t.n
-         |  FROM counts c JOIN tot t USING (cohort)
-         |), med AS (SELECT cohort, min(lag_s) AS med_lag_s FROM cum
-         |           WHERE cum >= (n + 1) // 2 GROUP BY 1),
-         |p90 AS (SELECT cohort, min(lag_s) AS p90_lag_s FROM cum
-         |        WHERE cum * 10 >= n * 9 GROUP BY 1)
-         |SELECT t.cohort, CAST(n AS BIGINT) AS n_conversions, med_lag_s, p90_lag_s
-         |FROM tot t JOIN med USING (cohort) JOIN p90 USING (cohort)
-         |ORDER BY t.cohort""".stripMargin,
 
     "q10_diff" ->
       """WITH old_snap AS (
@@ -1028,38 +690,6 @@ object RelationalQueries {
         |       round(pow(1.0 - exp(-4.0 * n_keys / 1024.0), 4.0), 6) AS fpr_theory
         |FROM a, k""".stripMargin,
 
-    "q111_ols_trend" ->
-      """WITH m AS (SELECT min(epoch_us(ts)) AS t0 FROM events WHERE value IS NOT NULL),
-        |d AS (SELECT event_type, (epoch_us(ts) - t0) // 1000000 AS x,
-        |             CAST(round(value * 1000, 0) AS BIGINT) AS y
-        |      FROM events, m WHERE value IS NOT NULL),
-        |s AS (SELECT event_type, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |             sum(x*x) AS sxx, sum(x*y) AS sxy
-        |      FROM d GROUP BY event_type)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |       round((CAST(n AS DOUBLE)*sxy - CAST(sx AS DOUBLE)*sy)
-        |             / (CAST(n AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sx), 6) + 0.0 AS slope,
-        |       round((CAST(sy AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sxy)
-        |             / (CAST(n AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sx), 6) + 0.0 AS intercept
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q116_rate_anomaly" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) AS us FROM events),
-        |b AS (SELECT event_type, (us - us % 21600000000) // 21600000000 AS bucket FROM e),
-        |c AS (SELECT event_type, bucket, count(*) AS n FROM b GROUP BY 1, 2),
-        |wd AS (SELECT event_type, bucket, n,
-        |              count(n) OVER w AS k, sum(n) OVER w AS sx, sum(n*n) OVER w AS sxx
-        |       FROM c WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-        |                           ROWS BETWEEN 4 PRECEDING AND 1 PRECEDING)),
-        |z AS (SELECT event_type, bucket, n,
-        |             (CAST(n AS DOUBLE) - CAST(sx AS DOUBLE)/k)
-        |             / sqrt((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*sx/k)/k) AS z
-        |      FROM wd
-        |      WHERE k = 4 AND (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*sx/k)/k > 0)
-        |SELECT event_type, CAST(bucket AS BIGINT) AS bucket, CAST(n AS BIGINT) AS n,
-        |       round(z, 6) AS z
-        |FROM z WHERE abs(z) >= 2 ORDER BY event_type, bucket""".stripMargin,
-
     "q234_bucketed_join" ->
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cnt,
         |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
@@ -1101,15 +731,6 @@ object RelationalQueries {
         |       CAST(sum(CASE WHEN gn < 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_risky_groups,
         |       CAST(sum(CASE WHEN gn < 10 THEN gn ELSE 0 END) AS BIGINT) AS n_rows_at_risk
         |FROM g GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q120_transitions" ->
-      """WITH t AS (
-        |  SELECT event_type,
-        |         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events)
-        |SELECT prev, event_type AS next, CAST(count(*) AS BIGINT) AS n
-        |FROM t WHERE prev IS NOT NULL
-        |GROUP BY prev, next ORDER BY prev, next""".stripMargin,
 
     // GROUPING() bit order matches Spark's grouping_id (first col = MSB)
     "q283_grouping_sets" ->

@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** BM25 sparse retrieval as pure DataFrame jobs (SURVEY.md §2.3: corpus fit →
   * vocab/df/idf model table; §2.4: explode-join-agg scorer). [[search]] is
@@ -24,20 +25,23 @@ object Bm25 {
   val B = 0.75
 
   /** Reference tokenizer (embeddings/bm25.py:163-180): lowercase,
-    * `[a-z0-9]` runs, length > 1.
-    */
-  def tokens(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 1)
-
-  /** THE Scala-side twin of [[tokens]] — every driver/executor-side
-    * tokenization (query parsing, minhash/simhash signatures) must go
-    * through this one definition so it can never drift from the column
-    * expression the oracles replay. The case mapping is `lower`'s
-    * ([[graft.functions.TextOps.wordsScala]]), never the JVM default
-    * locale's: under `tr`, `toLowerCase` maps `I` to a dotless `ı`.
+    * `[a-z0-9]` runs, length > 1 — the words of
+    * [[graft.functions.TextOps.wordsScala]] longer than one character, so
+    * the case mapping is Spark `lower`'s, never the JVM default locale's
+    * (under `tr`, `toLowerCase` maps `I` to a dotless `ı`). DuckDB oracles
+    * replay it as `lower`, `string_split_regex` and a length filter.
     */
   def tokenizeScala(text: String): Array[String] =
-    graft.functions.TextOps.wordsScala(text).filter(_.length > 1)
+    longWords(graft.functions.TextOps.wordsScala(text))
+  private def longWords(w: Array[String]): Array[String] = w.filter(_.length > 1)
+
+  /** [[tokenizeScala]] as a column: an `array<string>` of non-null tokens,
+    * null for a null text. One definition serves the driver (query
+    * parsing, minhash/simhash signatures) and every column.
+    */
+  def tokens(text: Column): Column = Tokens(text)
+  private val Tokens =
+    graft.functions.TextOps.perDoc(ArrayType(StringType, containsNull = false))(longWords)
 
   /** The BM25 term contribution of one (doc, term) posting. */
   def contrib(idf: Column, tf: Column, dl: Column, avgdl: Column): Column =

@@ -5,16 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** Maximum Mean Discrepancy between two embedding populations via random
   * Fourier features (Gretton et al. 2012; Rahimi-Recht 2007): the
-  * embedding-space drift statistic — q239's energy distance sees scalar
-  * drift; this sees DISTRIBUTIONAL drift in the vector space itself
-  * (did this month's embeddings move?) without any pairwise kernel.
+  * embedding-space drift statistic: it sees DISTRIBUTIONAL drift in the
+  * vector space itself (did this month's embeddings move?) without any
+  * pairwise kernel.
   *
   * MMD̂² = ‖ μ̂_X − μ̂_Y ‖² over D features z_j(x) = √(2/D)·cos(w_j·x+b_j),
   * w ~ N(0, 1/σ²)ᵈ, b ~ U[0, 2π) — O(n·D·d), one corpus pass, one agg.
   *
   * Determinism ladder: (w, b) are derived ONCE from md5 in driver Scala
   * and injected as shortest-round-trip decimal literals into BOTH
-  * engines (the q215 SPRT-constant discipline); each per-row dot product
+  * engines (neither engine recomputes them); each per-row dot product
   * is an explicit left-associated 64-term chain so the expression tree
   * is identical; features are ROUNDED to 6dp before aggregation, so the
   * group sums are exact in double (≤20 fractional bits × n ≪ 2⁵³) and

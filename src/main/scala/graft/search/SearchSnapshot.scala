@@ -29,7 +29,7 @@ final class SearchSnapshot private (
     baseSchema: StructType, // the chunk schema without `dense`: the result columns
     base: Array[IndexedSeq[Any]], // metadata rows in baseSchema
     dense: Array[Array[Double]],
-    toks: Array[Array[String]], // Bm25.tokens; null as in Spark's size(null): no length
+    toks: Array[Array[String]], // Bm25.tokenizeScala of contentBm25; null for a null text: no length
     rel: Array[(String, String, String)], // relation rows: (entityName, relationType, relationTarget)
     impl: Array[IndexedSeq[Any]], // implementation rows in ImplColumns
     all: Array[(String, String, String)]) { // every chunk: (chunkType, entityName, filePath)

@@ -20,15 +20,20 @@ class ReadmeSyncSpec extends AnyFunSuite {
     * correlation, A/B variance reduction, k-sample tests, survival
     * curves, contingency tests, robust location, inequality indices, rank
     * tests and their kin), the events-stream EWMA/DGIM/Welford fold
-    * replays and the search-result memo; none reached by an engine verb.
-    * Gate names key the CORRECTNESS/BENCH artifacts and PLANS.md, so the
-    * survivors keep their numbers and these stay retired, never reused.
+    * replays, the search-result memo, and the clickstream readouts over
+    * `events` (A/B and sequential tests, channel attribution, token-bucket
+    * replay, retention, funnels, trend and seasonality reports); none
+    * reached by an engine verb. Gate names key the CORRECTNESS/BENCH
+    * artifacts and PLANS.md, so the survivors keep their numbers and these
+    * stay retired, never reused.
     */
-  private val Retired: Set[Int] = Set(186, 193, 197, 198, 199, 200, 201,
-    202, 204, 205, 210, 223, 224, 228, 233, 235, 236, 237, 239, 240, 241,
-    242, 243, 244, 245, 248, 249, 250, 252, 261, 263, 264, 265, 266, 267,
-    268, 269, 273, 274, 275, 276, 277, 278, 279, 280, 284, 285, 286, 287,
-    289, 290, 291, 292, 293, 294, 295, 296, 297, 298, 299, 300, 301, 302)
+  private val Retired: Set[Int] = Set(111, 116, 120, 146, 158, 159, 160,
+    162, 164, 186, 190, 192, 193, 197, 198, 199, 200, 201, 202, 204, 205,
+    210, 212, 215, 223, 224, 228, 233, 235, 236, 237, 239, 240, 241, 242,
+    243, 244, 245, 248, 249, 250, 252, 254, 256, 257, 261, 263, 264, 265,
+    266, 267, 268, 269, 273, 274, 275, 276, 277, 278, 279, 280, 284, 285,
+    286, 287, 289, 290, 291, 292, 293, 294, 295, 296, 297, 298, 299, 300,
+    301, 302)
 
   private lazy val numbers: Seq[Int] =
     SparkEntry.queries.keys.toSeq.map(_.drop(1).takeWhile(_.isDigit).toInt)
@@ -66,15 +71,26 @@ class ReadmeSyncSpec extends AnyFunSuite {
       s"README claims ${hash.group(1)} hash-match; ${SparkEntry.oracleSql.size} queries have oracles")
   }
 
+  private lazy val planSpec = new String(Files.readAllBytes(
+    Paths.get("src/test/scala/graft/core/PlanShapeSpec.scala")), "UTF-8")
+
   test("README plan-assertion count matches PlanShapeSpec") {
-    val spec = new String(Files.readAllBytes(
-      Paths.get("src/test/scala/graft/core/PlanShapeSpec.scala")), "UTF-8")
-    val actual = raw"""\n  test\("""".r.findAllIn(spec).size
+    val actual = raw"""\n  test\("""".r.findAllIn(planSpec).size
     val claimed = raw"plus (\d+) machine-asserted".r
       .findFirstMatchIn(readme)
       .getOrElse(fail("README no longer states the machine-asserted plan count"))
     assert(claimed.group(1).toInt == actual,
       s"README claims ${claimed.group(1)} plan assertions; PlanShapeSpec has $actual")
+  }
+
+  // a deleted gate's plan section would otherwise outlive its assertion
+  test("PLANS.md has one section per gate PlanShapeSpec plans") {
+    val plans = new String(Files.readAllBytes(Paths.get("PLANS.md")), "UTF-8")
+    val sections = raw"(?m)^## (q\d+_\w+)\s*$$".r.findAllMatchIn(plans).map(_.group(1)).toSet
+    val planned = "\"(q\\d+_\\w+)\"".r.findAllMatchIn(planSpec).map(_.group(1)).toSet
+    assert(planned.nonEmpty, "PlanShapeSpec names no gate")
+    assert(sections == planned,
+      s"PLANS.md only: ${(sections -- planned).toSeq.sorted}; PlanShapeSpec only: ${(planned -- sections).toSeq.sorted}")
   }
 
   // a deleted operator's table row would otherwise outlive its code

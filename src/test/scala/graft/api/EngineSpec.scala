@@ -367,6 +367,9 @@ class EngineSpec extends SparkSpec {
     java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
     try {
       assert(graft.search.Bm25.tokenizeScala("WOMBAT ID").toSeq == Seq("wombat", "id"))
+      // the stored BM25 text and the parser dispatch map case the same way
+      assert(graft.index.ChunkBuilder.splitName("getID") == "get id")
+      assert(graft.ingest.ParserRegistry.extensionOf("CONFIG.INI") == "ini")
       val e = GraftEngine(spark, Files.createTempDirectory("graft_locale").toString)
       e.addManualMemory("wombat-keys", "The wombat table keys every row by its id")
       val hits = e.searchSimilar("ID", "keyword", limit = 3)

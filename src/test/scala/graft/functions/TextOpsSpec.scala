@@ -21,6 +21,8 @@ class TextOpsSpec extends SparkSpec {
   private object Lambda {
     def words(text: Column): Column =
       filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 0)
+    def bm25Tokens(text: Column): Column =
+      filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 1)
     def avgWordLen(text: Column): Column = {
       val w = words(text)
       when(size(w) === 0, lit(0.0))
@@ -58,6 +60,7 @@ class TextOpsSpec extends SparkSpec {
   private def pairs(t: Column): Seq[(String, Column, Column)] =
     Seq(
       ("words", TextOps.words(t), Lambda.words(t)),
+      ("bm25_tokens", graft.search.Bm25.tokens(t), Lambda.bm25Tokens(t)),
       ("avg_word_len", TextOps.avgWordLen(t), Lambda.avgWordLen(t)),
       ("stopword_ratio", TextOps.stopwordRatio(t, stop), Lambda.stopwordRatio(t, stop)),
       ("lang_guess", TextOps.langGuess(t), Lambda.langGuess(t)),

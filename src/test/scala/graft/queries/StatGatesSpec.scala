@@ -2,10 +2,10 @@ package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
 
-/** Statistical-invariant checks over the r9 stats/sketch gates (q211-
-  * q213) at sf0.001 — the oracle proves cross-engine equality; these
-  * prove the STATISTICS behave: bounds hold, estimates track exact
-  * values, intervals contain their point estimates.
+/** Statistical-invariant checks over the stats/sketch gates (q211, q213,
+  * q214, q227, q230 and q258) at sf0.001 — the oracle proves cross-engine
+  * equality; these prove the STATISTICS behave: bounds hold, estimates
+  * track exact values, weights and gains stay in range.
   */
 class StatGatesSpec extends SparkSpec {
 
@@ -25,18 +25,6 @@ class StatGatesSpec extends SparkSpec {
         f"pair ${r.getString(0)}/${r.getString(1)}: est $estJ%.3f vs exact $exactJ%.3f")
       assert(r.getAs[Double]("est_union") > 0)
     }
-  }
-
-  test("q212: Wilson intervals contain their point estimates, z is finite") {
-    val r = rows("q212_prop_ztest").head
-    assert(r.getAs[Double]("lo0") < r.getAs[Double]("p0"))
-    assert(r.getAs[Double]("p0") < r.getAs[Double]("hi0"))
-    assert(r.getAs[Double]("lo1") < r.getAs[Double]("p1"))
-    assert(r.getAs[Double]("p1") < r.getAs[Double]("hi1"))
-    assert(!r.isNullAt(r.fieldIndex("z")) && !r.getAs[Double]("z").isNaN)
-    // Wilson never leaves [0, 1] — the property that beats the Wald CI
-    Seq("lo0", "lo1").foreach(c => assert(r.getAs[Double](c) >= 0.0))
-    Seq("hi0", "hi1").foreach(c => assert(r.getAs[Double](c) <= 1.0))
   }
 
   test("q213: JSD is bounded by ln 2 and nonnegative") {
@@ -102,49 +90,6 @@ class StatGatesSpec extends SparkSpec {
         assert(w(0).getAs[Double]("w_raw") >= w(1).getAs[Double]("w_raw"),
           "raw weight must be non-increasing in class size")
     }
-  }
-
-  test("q215: SPRT walk state is consistent and crossings are honest") {
-    val rs = rows("q215_sprt")
-    assert(rs.length == 2, "one row per variant")
-    rs.foreach { r =>
-      assert(r.getAs[Long]("k") <= r.getAs[Long]("n"))
-      val d = r.getAs[String]("decision")
-      if (d == "continue") assert(r.isNullAt(r.fieldIndex("cross_n")))
-      else {
-        assert(Set("reject_h0", "accept_h0")(d))
-        val cn = r.getAs[Long]("cross_n")
-        assert(cn >= 1 && cn <= r.getAs[Long]("n"),
-          s"crossing index $cn outside the walk")
-      }
-    }
-    // the synthetic click rate sits near 0.25 < p0=0.4, so both parity
-    // variants must accept H0 once enough events accumulate
-    assert(rs.forall(_.getAs[String]("decision") == "accept_h0"))
-  }
-
-  test("q256: a flip only ever fires when both directions are nonzero and opposed") {
-    val rs = rows("q256_simpson")
-    assert(rs.length == 7) // one row per day of week
-    rs.foreach { r =>
-      val (ds, dp) = (r.getAs[Long]("dir_stratum"), r.getAs[Long]("dir_pooled"))
-      assert(Set(-1L, 0L, 1L)(ds) && Set(-1L, 0L, 1L)(dp))
-      assert(r.getAs[Boolean]("flipped") == (ds * dp == -1L))
-      // integer cross-multiplication agrees with the rate comparison
-      val pr0 = r.getAs[Long]("k0").toDouble / r.getAs[Long]("n0")
-      val pr1 = r.getAs[Long]("k1").toDouble / r.getAs[Long]("n1")
-      assert(ds == math.signum(pr1 - pr0).toLong)
-    }
-  }
-
-  test("q257: looks are cumulative and the OBF boundary ladder descends") {
-    val rs = rows("q257_group_sequential").sortBy(_.getAs[Long]("look"))
-    assert(rs.map(_.getAs[Long]("n0")).toSeq == rs.map(_.getAs[Long]("n0")).sorted.toSeq)
-    assert(rs.map(_.getAs[Long]("k1")).toSeq == rs.map(_.getAs[Long]("k1")).sorted.toSeq)
-    assert(rs.map(_.getAs[Double]("obf_bound")).toSeq == Seq(3.471, 2.454, 2.004))
-    // the final look covers every event: n0+n1 == |events|
-    val total = rs.last.getAs[Long]("n0") + rs.last.getAs[Long]("n1")
-    assert(total == spark.read.parquet(s"$dir/events.parquet").count())
   }
 
   test("q258: deciles tile the corpus, gains are monotone and end at 1") {
