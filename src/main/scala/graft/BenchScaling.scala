@@ -99,9 +99,6 @@ object BenchScaling {
     // events — linear shapes, three decades via the replicated sf1
     "q67_pagerank" -> (("events", 1.0, true)),
     "q136_ppr" -> (("events", 1.0, true)),
-    "q182_covisitation" -> (("events", 1.5, true)), // per-user item-pair fan-out
-    "q183_kcore" -> (("events", 1.0, true)),
-    "q195_assoc_rules" -> (("events", 1.5, true)), // per-basket pair fan-out
     "q220_keepfirst_replay" -> (("events", 1.0, true)),
     // embeddings — linear (fixed probe counts / fixed K)
     "q37_kmeans" -> (("embeddings", 1.0, false)),

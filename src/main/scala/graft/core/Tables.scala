@@ -77,15 +77,6 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTimestamp(table(spark, sfDir, "events"), "ts")
   }
-  /** Null-safe integer extraction from the events `props` JSON-ish
-    * field: no-match/malformed → NULL instead of the ANSI
-    * `cast('' AS BIGINT)` exception — on a 100 TB feed malformed
-    * props are a certainty, and one row must not kill the job.
-    */
-  def extractLongProp(props: org.apache.spark.sql.Column, key: String): org.apache.spark.sql.Column =
-    // \s* around the colon: compact writers emit {"k":7} with no space,
-    // and a whitespace-exact pattern would silently NULL every row
-    nullif(regexp_extract(props, "\"" + key + "\"\\s*:\\s*(\\d+)", 1), lit("")).cast("long")
 
   def documents(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "documents")
 

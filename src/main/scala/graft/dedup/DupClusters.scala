@@ -9,18 +9,17 @@ import org.apache.spark.sql.functions._
   * in the component" — the same convention the oracle's recursive CTE
   * computes, so the fixpoint is engine-independent by construction).
   *
-  * Algorithm: iterative min-label propagation. Each node starts labeled
-  * with itself; every round each node takes the min of its own label and
-  * its neighbors' labels; convergence (no label changed) is the exact
-  * component minimum. Rounds needed = graph diameter — duplicate families
-  * are short-diameter blobs, so this converges in a handful of joins.
+  * Algorithm: min-label propagation with pointer jumping. Each node starts
+  * labeled with itself; every round each node takes the min of its own
+  * label and its neighbors' labels, then jumps to its label's label. The
+  * jump halves chain lengths, so a component of diameter d settles in
+  * O(log d) rounds, not d. Convergence (no label changed) is the exact
+  * component minimum.
   *
-  * Scale shape: one join + one groupBy per round over the EDGE list (not
-  * the corpus); edges from LSH banding are sparse by construction. Each
-  * round's labels are persisted and the previous round freed, so the plan
-  * doesn't grow with iterations. For adversarial long-chain graphs swap in
-  * the large-star/small-star variant (O(log n) rounds) — same per-round
-  * primitives.
+  * Scale shape: per round, one edge join, one groupBy and one label
+  * self-join over the EDGE list (not the corpus); edges from LSH banding
+  * are sparse by construction. Each round's labels are checkpointed, so
+  * the plan doesn't grow with iterations.
   */
 object DupClusters {
 

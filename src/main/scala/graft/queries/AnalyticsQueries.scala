@@ -4,12 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
-/** Analytics-pipeline operators gated round 8: graph cores (q183),
-  * TextRank keyphrases (q184), readability (q185), fill-in-the-middle
-  * augmentation (q187), Benford audit (q188), l-diversity (q189),
-  * Kneser-Ney LM (q191), quantile normalization (q194), association rules
-  * (q195) and Jaro-Winkler linkage (q196), plus later gates over the same
-  * tables.
+/** Analytics-pipeline operators gated round 8: TextRank keyphrases
+  * (q184), readability (q185), fill-in-the-middle augmentation (q187),
+  * l-diversity (q189), Kneser-Ney LM (q191), quantile normalization (q194)
+  * and Jaro-Winkler linkage (q196), plus later gates over the same tables.
   *
   * Numeric discipline throughout: counts stay integer, distinct counts
   * are exact, float formulas are written in the SAME shape on both
@@ -20,25 +18,6 @@ object AnalyticsQueries {
   type Q = (SparkSession, String) => DataFrame
 
   def defs: Map[String, Q] = Map(
-    // K-core of a skew-degree synthetic follow graph (quadratic/cubic
-    // successors give the degree variance peeling needs — the q67 affine
-    // graph is degree-regular and peels trivially): 6 fixed rounds at
-    // k=3, then survivors with residual degree. At sf0.01 the shell of
-    // 17 degree-2 nodes cascades out and 30 of 57 nodes keep the core.
-    "q183_kcore" -> ((s, dir) => {
-      // reduce mod 60 BEFORE squaring/cubing: (u² + 7) % 60 ≡ ((u%60)² + 7)
-      // % 60, and the reduced form cannot ANSI-overflow on the synthesized
-      // sf1's replica-offset ids (~9·10⁹, whose square exceeds Long.Max)
-      val ev = Tables.events(s, dir).select((col("user_id") % 60).as("u"))
-      val e1 = ev.select(col("u").as("src"),
-        ((col("u") * col("u") + 7) % 60).as("dst"))
-      val e2 = ev.select(col("u").as("src"),
-        ((col("u") * col("u") * col("u") + 11) % 60).as("dst"))
-      graft.operators.KCore.peel(e1.unionByName(e2).distinct(),
-          "src", "dst", k = 3, rounds = 6)
-        .orderBy(col("node"))
-    }),
-
     // TextRank: top-25 corpus keyphrases by 3-iteration PageRank over
     // the adjacent-token co-occurrence graph of documents.
     "q184_textrank" -> ((s, dir) =>
@@ -56,12 +35,6 @@ object AnalyticsQueries {
     "q187_fim" -> ((s, dir) =>
       graft.functions.Augment.fim(Tables.documents(s, dir), "doc_id", "text")
         .orderBy(col("doc_id"))),
-
-    // Benford first-digit audit of extendedprice per returnflag.
-    "q188_benford" -> ((s, dir) =>
-      graft.functions.Benford.digitAudit(Tables.lineitem(s, dir),
-          "l_returnflag", "l_extendedprice")
-        .orderBy(col("l_returnflag"), col("digit"))),
 
     // l-diversity over the q119 quasi-identifier groups: the sensitive
     // attribute is the account-balance thousand-bucket; a group is weak
@@ -92,15 +65,6 @@ object AnalyticsQueries {
       graft.operators.QuantileNorm.normalize(Tables.documents(s, dir),
           "source", "doc_id", "n_chars")
         .orderBy(col("doc_id"))),
-
-    // Directed association rules (confidence + lift) over the q182
-    // session baskets — min co-session support 2, top-40 by lift.
-    "q195_assoc_rules" -> ((s, dir) =>
-      graft.operators.AssociationRules.rules(
-        Tables.events(s, dir)
-          .withColumn("item", Tables.extractLongProp(col("props"), "k")),
-        "user_id", "ts", "event_id", "item",
-        gapSec = 1800L, minSupport = 2L, k = 40)),
 
     // Jaro-Winkler record linkage over part names blocked by brand —
     // the native codegen comparator vs DuckDB's built-in.
@@ -142,51 +106,6 @@ object AnalyticsQueries {
         .select((col("i") + 1).cast("long").as("dim_i"),
           (col("j") + 1).cast("long").as("dim_j"), col("r"))
         .orderBy(col("dim_i"), col("dim_j"))
-    }),
-
-    // T-digest bounded-error gate: the digest's centroid layout depends
-    // on Spark's partition merge order (documented t-digest property), so
-    // no value-replay oracle exists — instead BOTH engines compute the
-    // exact per-type quantiles (the hash-matched half) and the Spark side
-    // additionally checks its digest estimate's RANK error against the k1
-    // envelope (one centroid span, 2π·sqrt(q(1−q))/δ, + interpolation
-    // slack). The oracle pins bound_ok=TRUE, so an envelope violation
-    // hash-mismatches the gate. The exact percentile here is the gate's
-    // validation half (q108 discipline) — the operator under test is the
-    // mergeable sketch.
-    "q206_tdigest_bound" -> ((s, dir) => {
-      import graft.functions.TDigestSketch
-      val qsSeq = Seq(0.05, 0.25, 0.5, 0.75, 0.95)
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), col("value").cast("double").as("v"))
-      val digests = TDigestSketch.sketch(ev, "event_type", "v")
-      val qs = s.createDataFrame(qsSeq.map(Tuple1.apply)).toDF("q")
-      // 4 groups × 5 quantiles — the digest read is 20 tiny rows, far off
-      // the hot path, so a scalar udf over the sketch array is fine here
-      val qfn = udf((d: Seq[Double], q: Double) =>
-        TDigestSketch.quantile(d.toArray, q))
-      val est = digests.crossJoin(broadcast(qs))
-        .select(col("grp").as("event_type"), col("q"),
-          qfn(col("digest"), col("q")).as("est"))
-      val cdf = ev.join(broadcast(est), "event_type")
-        .groupBy(col("event_type"), col("q"), col("est"))
-        .agg((sum(when(col("v") < col("est"), 1L).otherwise(0L))
-            .cast("double") / count(lit(1))).as("lo"),
-          (sum(when(col("v") <= col("est"), 1L).otherwise(0L))
-            .cast("double") / count(lit(1))).as("hi"))
-      val exact = ev.groupBy(col("event_type"))
-        .agg(expr(s"percentile(v, array(${qsSeq.mkString(",")}))").as("_eq"))
-        .select(col("event_type"), posexplode(col("_eq")).as(Seq("_i", "exact_v")))
-        .select(col("event_type"),
-          element_at(typedLit(qsSeq), col("_i") + 1).as("q"), col("exact_v"))
-      cdf.join(exact, Seq("event_type", "q"))
-        .select(col("event_type"), col("q"),
-          round(col("exact_v"), 6).as("exact_q"),
-          (when(col("q").between(col("lo"), col("hi")), 0.0)
-            .otherwise(least(abs(col("q") - col("lo")), abs(col("q") - col("hi"))))
-            <= lit(2.0 * math.Pi) * sqrt(col("q") * (lit(1.0) - col("q")))
-                 / TDigestSketch.Compression + lit(0.005)).as("bound_ok"))
-        .orderBy(col("event_type"), col("q"))
     }),
 
     // STREAM-STATIC ENRICHMENT REPLAY: the events feed split into 3
@@ -269,8 +188,9 @@ object AnalyticsQueries {
     }),
 
     // The StreamTrending sharded Misra-Gries state gated by its
-    // GUARANTEE (the q206 bound_ok discipline — the MG fold itself is
-    // order-dependent and not SQL-replayable per event): every token
+    // GUARANTEE, not its values (the MG fold is order-dependent and not
+    // SQL-replayable per event, so the gate emits only what the bound
+    // promises and both engines compute exactly): every token
     // whose exact count exceeds n_shard/(k+1) MUST survive its shard's
     // summary, so the gate emits guarantee-set tokens semi-joined
     // against the fold's candidates — a dropped heavy hitter loses a row
@@ -465,23 +385,6 @@ object AnalyticsQueries {
         .orderBy(col("source"))
     }),
 
-    // ===== r11 wave 4: link prediction =====
-
-    // Link prediction over the q183 synthetic follow graph: top-20
-    // non-adjacent pairs by Adamic-Adar, with common-neighbor/Jaccard/
-    // preferential-attachment companions. Candidates from the
-    // shared-neighbor equi-join (never all-pairs); the Σ1/ln(deg) fold
-    // is regrouped onto the bounded degree grid.
-    "q288_link_predict" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select((col("user_id") % 60).as("u"))
-      val e1 = ev.select(col("u").as("src"),
-        ((col("u") * col("u") + 7) % 60).as("dst"))
-      val e2 = ev.select(col("u").as("src"),
-        ((col("u") * col("u") * col("u") + 11) % 60).as("dst"))
-      graft.operators.LinkPredict.scores(
-        e1.unionByName(e2).distinct(), "src", "dst", 20)
-    }),
-
     // ===== r11 wave 7: ranking evaluation =====
 
     // Average precision + best-F1 of the binned token count ranking the
@@ -504,26 +407,6 @@ object AnalyticsQueries {
   )
 
   def oracles: Map[String, String] = Map(
-    "q183_kcore" -> {
-      val base =
-        """WITH f AS (
-          |  SELECT DISTINCT user_id % 60 AS a, (user_id * user_id + 7) % 60 AS b FROM events
-          |  UNION SELECT DISTINCT user_id % 60, (user_id * user_id * user_id + 11) % 60 FROM events
-          |), e0 AS (
-          |  SELECT a, b FROM f WHERE a <> b
-          |  UNION SELECT b, a FROM f WHERE a <> b
-          |)""".stripMargin
-      val rounds = (1 to 6).map { r =>
-        s""", k$r AS (SELECT a FROM e${r - 1} GROUP BY a HAVING count(*) >= 3)
-           |, e$r AS (SELECT e.a, e.b FROM e${r - 1} e
-           |          JOIN k$r x ON e.a = x.a JOIN k$r y ON e.b = y.a)""".stripMargin
-      }.mkString("\n")
-      base + rounds +
-        """
-          |SELECT a AS node, CAST(count(*) AS BIGINT) AS deg
-          |FROM e6 GROUP BY a HAVING count(*) >= 3 ORDER BY node""".stripMargin
-    },
-
     "q184_textrank" -> {
       // 3 unrolled PageRank iterations over the adjacent-token graph —
       // the q67 unrolling discipline applied to a text-derived edge set.
@@ -591,28 +474,6 @@ object AnalyticsQueries {
         |       '<MID>' || substr(text, sp1, sp2 - sp1) AS fim
         |FROM p ORDER BY doc_id""".stripMargin,
 
-    "q188_benford" ->
-      """WITH c AS (
-        |  SELECT l_returnflag,
-        |         CAST(substr(CAST(CAST(floor(l_extendedprice) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit,
-        |         count(*) AS obs
-        |  FROM lineitem WHERE l_extendedprice >= 1
-        |  GROUP BY 1, 2
-        |), t AS (SELECT l_returnflag, sum(obs) AS n FROM c GROUP BY 1),
-        |dg AS (SELECT unnest(generate_series(1, 9)) AS digit),
-        |dense AS (
-        |  SELECT t.l_returnflag, dg.digit, t.n, coalesce(c.obs, 0) AS obs
-        |  FROM t CROSS JOIN dg
-        |  LEFT JOIN c ON c.l_returnflag = t.l_returnflag AND c.digit = dg.digit
-        |)
-        |SELECT l_returnflag, digit, CAST(obs AS BIGINT) AS obs,
-        |       round(obs / n, 4) AS share_obs,
-        |       round(log10(1.0 + 1.0 / digit), 4) AS share_exp,
-        |       round(pow(obs - n * log10(1.0 + 1.0 / digit), 2)
-        |             / (n * log10(1.0 + 1.0 / digit)), 6) AS chi2_part
-        |FROM dense
-        |ORDER BY l_returnflag, digit""".stripMargin,
-
     "q189_ldiversity" ->
       """WITH g AS (
         |  SELECT c_mktsegment, c_nationkey, count(*) AS k,
@@ -663,40 +524,6 @@ object AnalyticsQueries {
         |FROM p JOIN g2 ON p.p >= g2.cum_lo AND p.p <= g2.cum_hi
         |ORDER BY doc_id""".stripMargin,
 
-    "q195_assoc_rules" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id,
-        |         CAST(epoch_us(ts) // 1000000 AS BIGINT) AS s,
-        |         TRY_CAST(NULLIF(regexp_extract(props, '"k"\s*:\s*(\d+)', 1), '') AS BIGINT) AS item
-        |  FROM events
-        |), g AS (
-        |  SELECT user_id, event_id, item, s,
-        |         CASE WHEN lag(s) OVER w IS NULL OR s - lag(s) OVER w > 1800
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY s, event_id)
-        |), sn AS (
-        |  SELECT user_id, item,
-        |         sum(new_sess) OVER (PARTITION BY user_id ORDER BY s, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
-        |  FROM g
-        |), si AS (
-        |  SELECT DISTINCT user_id || '#' || sess_no AS sid, item FROM sn
-        |), isup AS (SELECT item, count(*) AS n_item FROM si GROUP BY 1),
-        |tot AS (SELECT count(DISTINCT sid) AS n_total FROM si),
-        |pr AS (
-        |  SELECT a.item AS antecedent, b.item AS consequent, count(*) AS n_ab
-        |  FROM si a JOIN si b ON a.sid = b.sid AND a.item <> b.item
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |)
-        |SELECT pr.antecedent, pr.consequent, CAST(pr.n_ab AS BIGINT) AS n_ab,
-        |       CAST(ia.n_item AS BIGINT) AS n_a, CAST(ib.n_item AS BIGINT) AS n_b,
-        |       CAST(tot.n_total AS BIGINT) AS n_total,
-        |       round(CAST(pr.n_ab AS DOUBLE) / ia.n_item, 6) AS confidence,
-        |       round(CAST(pr.n_ab AS DOUBLE) * tot.n_total / (ia.n_item * ib.n_item), 6) AS lift
-        |FROM pr JOIN isup ia ON pr.antecedent = ia.item
-        |        JOIN isup ib ON pr.consequent = ib.item CROSS JOIN tot
-        |ORDER BY lift DESC, confidence DESC, antecedent, consequent LIMIT 40""".stripMargin,
-
     "q196_jaro_linkage" ->
       """WITH x AS (
         |  SELECT p_brand AS block, p_partkey, p_name,
@@ -737,19 +564,6 @@ object AnalyticsQueries {
         |             / (sqrt(n * sii - si * si) * sqrt(n * sjj - sj * sj)), 6) + 0.0 AS r
         |FROM s
         |ORDER BY dim_i, dim_j""".stripMargin,
-
-    // exact quantiles only (type-7 interpolation = Spark `percentile`);
-    // bound_ok is pinned TRUE — the Spark side computes the digest's rank
-    // error, and a violation breaks the hash.
-    "q206_tdigest_bound" ->
-      """WITH qq AS (
-        |  SELECT event_type,
-        |         unnest([0.05, 0.25, 0.5, 0.75, 0.95]) AS q,
-        |         unnest(quantile_cont(value, [0.05, 0.25, 0.5, 0.75, 0.95])) AS exact_v
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT event_type, q, round(exact_v, 6) AS exact_q, TRUE AS bound_ok
-        |FROM qq ORDER BY event_type, q""".stripMargin,
 
     // batch identity = event_id % 3 (the shard rule that built the three
     // feed files); the dim drops the most frequent type on both sides
@@ -907,41 +721,6 @@ object AnalyticsQueries {
         |c AS (SELECT *, max(z) OVER () AS z_all FROM b)
         |SELECT source, n_docs, round(p, 6) AS p_raw, round(w / z_all, 6) AS p_temp
         |FROM c ORDER BY source""".stripMargin,
-
-    // the q183 symmetric graph; shared-neighbor candidates, anti-join
-    // against existing edges, AA fold on the bounded degree grid
-    "q288_link_predict" ->
-      """WITH f AS (
-        |  SELECT DISTINCT user_id % 60 AS a, (user_id * user_id + 7) % 60 AS b FROM events
-        |  UNION SELECT DISTINCT user_id % 60, (user_id * user_id * user_id + 11) % 60 FROM events
-        |), e0 AS (
-        |  SELECT a, b FROM f WHERE a <> b
-        |  UNION SELECT b, a FROM f WHERE a <> b
-        |),
-        |deg AS (SELECT a AS node, CAST(count(*) AS BIGINT) AS deg FROM e0 GROUP BY 1),
-        |thr AS (SELECT x.a AS u, y.a AS w, x.b AS n FROM e0 x JOIN e0 y ON x.b = y.b AND x.a < y.a),
-        |cand AS (SELECT t.u, t.w, t.n FROM thr t
-        |         LEFT JOIN e0 adj ON adj.a = t.u AND adj.b = t.w
-        |         WHERE adj.a IS NULL),
-        |wd AS (SELECT c.u, c.w, d.deg AS deg_n FROM cand c JOIN deg d ON c.n = d.node),
-        |perdeg AS (SELECT u, w, deg_n, CAST(count(*) AS BIGINT) AS c FROM wd GROUP BY 1, 2, 3),
-        |acc AS (SELECT u, w, deg_n,
-        |               sum(c) OVER (PARTITION BY u, w) AS cn,
-        |               sum(CAST(c AS DOUBLE) / ln(CAST(deg_n AS DOUBLE)))
-        |                 OVER (PARTITION BY u, w ORDER BY deg_n
-        |                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS aa_acc,
-        |               max(deg_n) OVER (PARTITION BY u, w) AS maxdeg
-        |        FROM perdeg),
-        |one AS (SELECT u, w, cn, deg_n, maxdeg,
-        |               max(aa_acc) OVER (PARTITION BY u, w) AS aa
-        |        FROM acc),
-        |fin AS (SELECT u, w, cn, aa FROM one WHERE deg_n = maxdeg),
-        |sc AS (SELECT f2.u, f2.w, CAST(f2.cn AS BIGINT) AS cn,
-        |              round(CAST(f2.cn AS DOUBLE) / (du.deg + dw2.deg - f2.cn), 6) AS jaccard,
-        |              CAST(du.deg * dw2.deg AS BIGINT) AS pref_attach,
-        |              round(f2.aa, 6) AS adamic_adar
-        |       FROM fin f2 JOIN deg du ON f2.u = du.node JOIN deg dw2 ON f2.w = dw2.node)
-        |SELECT * FROM sc ORDER BY adamic_adar DESC, u, w LIMIT 20""".stripMargin,
 
     // integer cumsums on the ordered distinct-score grid; F1 is one
     // integer ratio per row (argmax ties break to the highest score)

@@ -186,9 +186,11 @@ object RelationalQueries {
 
     // §2.1 JSON payload extraction (the schemaless-payload column of the
     // reference's point store): typed value out of a JSON string column.
+    // A malformed payload or a non-integer `k` counts as NULL: under ANSI a
+    // plain cast would throw on it and fail the whole job.
     "q31_props_extract" -> ((s, dir) =>
       Tables.events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
+        .withColumn("k", get_json_object(col("props"), "$.k").try_cast("long"))
         .groupBy(col("event_type"))
         .agg(count(col("k")).as("n"),
           sum(col("k")).as("sum_k"),
@@ -596,11 +598,15 @@ object RelationalQueries {
         |                    WHERE p_partkey = l_partkey AND p_size > 10)
         |) GROUP BY reason""".stripMargin,
 
+    // json_extract_string throws on malformed JSON, and TRY_CAST rounds
+    // '1.5' to 2 where Spark's try_cast gives NULL: guard both
     "q31_props_extract" ->
       """SELECT event_type, count(k) AS n, CAST(sum(k) AS BIGINT) AS sum_k, round(avg(k), 4) AS avg_k
         |FROM (SELECT event_type,
-        |             CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |      FROM events)
+        |             CASE WHEN regexp_full_match(ks, '\s*[+-]?[0-9]+\s*') THEN TRY_CAST(ks AS BIGINT) END AS k
+        |      FROM (SELECT event_type,
+        |                   json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS ks
+        |            FROM events))
         |GROUP BY event_type""".stripMargin,
 
     "q33_salted_agg" ->

@@ -47,16 +47,6 @@ object TemporalQueries {
         "event_type", "user_id", "ts")
         .orderBy(col("event_type"))),
 
-    // Session co-visitation: items (the props k-value) seen together in
-    // one 30-min-gap session, support = distinct sessions per unordered
-    // pair. Sessionize window partitions per user; the pair self-join
-    // keys on session id with fan-out bounded by session size².
-    "q182_covisitation" -> ((s, dir) =>
-      graft.operators.Covisitation.topPairs(
-        Tables.events(s, dir)
-          .withColumn("item", Tables.extractLongProp(col("props"), "k")),
-        "user_id", "ts", "event_id", "item", gapSec = 1800L, k = 25)),
-
     // Native session_window in BATCH — the identical Catalyst operator the
     // streaming sessionizer runs (Sessionize.streamingSessions), so this
     // gate pins the operator semantics the stream relies on: sessions
@@ -72,20 +62,7 @@ object TemporalQueries {
           unix_micros(col("session_window.start")).as("start_us"),
           unix_micros(col("session_window.end")).as("end_us"),
           col("n_events"))
-        .orderBy(col("user_id"), col("start_us"))),
-
-    // SCD2 dimension build: the events log compressed to per-user state
-    // runs with [valid_from, valid_to) validity. Validity bounds surface
-    // as integer epoch-µs so the hash compare never touches float/zone
-    // timestamp formatting (the q47 gap_us discipline).
-    "q167_scd2" -> ((s, dir) =>
-      graft.operators.Scd2.build(Tables.events(s, dir),
-          "user_id", "event_type", "ts", "event_id")
-        .select(col("user_id"), col("event_type").as("state"),
-          unix_micros(col("valid_from")).as("from_us"),
-          unix_micros(col("valid_to")).as("to_us"),
-          col("version"), col("is_current"))
-        .orderBy(col("user_id"), col("version")))
+        .orderBy(col("user_id"), col("start_us")))
   )
 
   def oracles: Map[String, String] = Map(
@@ -125,31 +102,6 @@ object TemporalQueries {
         |       CAST(max(s) + ceil(round(avg(gap), 4)) AS BIGINT) AS next_due_s
         |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
 
-    "q182_covisitation" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id,
-        |         CAST(epoch_us(ts) // 1000000 AS BIGINT) AS s,
-        |         TRY_CAST(NULLIF(regexp_extract(props, '"k"\s*:\s*(\d+)', 1), '') AS BIGINT) AS item
-        |  FROM events
-        |), g AS (
-        |  SELECT user_id, event_id, item, s,
-        |         CASE WHEN lag(s) OVER w IS NULL OR s - lag(s) OVER w > 1800
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY s, event_id)
-        |), sn AS (
-        |  SELECT user_id, item,
-        |         sum(new_sess) OVER (PARTITION BY user_id ORDER BY s, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
-        |  FROM g
-        |), si AS (
-        |  SELECT DISTINCT user_id || '#' || sess_no AS sid, item FROM sn
-        |)
-        |SELECT a.item AS item_a, b.item AS item_b,
-        |       CAST(count(*) AS BIGINT) AS n_sessions
-        |FROM si a JOIN si b ON a.sid = b.sid AND a.item < b.item
-        |GROUP BY 1, 2
-        |ORDER BY n_sessions DESC, item_a, item_b LIMIT 25""".stripMargin,
-
     // new session when the µs gap is >= 30 min: session_window intervals
     // [t, t+gap) merge only while they OVERLAP, i.e. diff < gap strictly
     "q231_session_native" ->
@@ -167,24 +119,6 @@ object TemporalQueries {
         |       CAST(max(us) + 1800000000 AS BIGINT) AS end_us,
         |       CAST(count(*) AS BIGINT) AS n_events
         |FROM sn GROUP BY user_id, sid
-        |ORDER BY user_id, start_us""".stripMargin,
-
-    "q167_scd2" ->
-      """WITH c AS (
-        |  SELECT user_id, event_type, ts, event_id,
-        |         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |), chg AS (
-        |  SELECT user_id, event_type, ts, event_id
-        |  FROM c WHERE prev IS NULL OR prev <> event_type
-        |)
-        |SELECT user_id, event_type AS state,
-        |       CAST(epoch_us(ts) AS BIGINT) AS from_us,
-        |       CAST(epoch_us(lead(ts) OVER w) AS BIGINT) AS to_us,
-        |       CAST(row_number() OVER w AS BIGINT) AS version,
-        |       (lead(ts) OVER w IS NULL) AS is_current
-        |FROM chg
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, version""".stripMargin
+        |ORDER BY user_id, start_us""".stripMargin
   )
 }

@@ -51,24 +51,25 @@ class EdgeInputSpec extends SparkSpec {
   }
 
   test("malformed props JSON yields null items, not an ANSI cast error") {
-    val ev = Seq(
-      (1L, 1L, "{\"k\": 7}"),
-      (2L, 2L, "not json at all"),
-      (3L, 3L, ""),
-      (4L, 4L, "{\"k\": }"),
-      (5L, 5L, "{\"k\":42}") // compact serialization, no space after colon
-    ).toDF("user_id", "event_id", "props")
-      .select(col("user_id"), col("event_id"),
-        timestamp_micros(col("event_id") * 1000000L).as("ts"), col("props"))
-      .withColumn("item", graft.core.Tables.extractLongProp(col("props"), "k"))
-    // the extraction itself must not throw under ANSI...
-    val items = ev.select(col("item")).collect().map(r =>
-      if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)))
-    assert(items.toSeq == Seq(7L, null, null, null, 42L))
-    // ...and the downstream basket operators must tolerate the nulls
-    val pairs = graft.operators.Covisitation.topPairs(ev, "user_id", "ts",
-      "event_id", "item", gapSec = 1800L, k = 10).collect()
-    assert(pairs.length >= 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_props").toString
+    Seq(
+      (1L, "a", "{\"k\": \"x\"}"),
+      (2L, "a", "{\"k\": 1.5}"),
+      (3L, "a", "not json at all"),
+      (4L, "a", "{\"k\":42}"), // compact serialization, no space after colon
+      (5L, "b", "{\"k\": 7}"),
+      (6L, "b", "{\"k\": }")
+    ).toDF("event_id", "event_type", "props")
+      .select(col("event_id"),
+        timestamp_micros(col("event_id") * 1000000L).as("ts"),
+        col("event_id").as("user_id"), col("event_type"),
+        lit(1.0).as("value"), col("props"))
+      .write.parquet(s"$dir/events.parquet")
+    // the gate reads the table end to end; only the integer k values count
+    val rows = SparkEntry.queries("q31_props_extract")(spark, dir)
+      .orderBy(col("event_type")).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    assert(rows.toSeq == Seq(("a", 1L, 42L, 42.0), ("b", 1L, 7L, 7.0)))
   }
 
   test("jaro-winkler expression survives nulls and emoji") {

@@ -20,20 +20,22 @@ class ReadmeSyncSpec extends AnyFunSuite {
     * correlation, A/B variance reduction, k-sample tests, survival
     * curves, contingency tests, robust location, inequality indices, rank
     * tests and their kin), the events-stream EWMA/DGIM/Welford fold
-    * replays, the search-result memo, and the clickstream readouts over
+    * replays, the search-result memo, the clickstream readouts over
     * `events` (A/B and sequential tests, channel attribution, token-bucket
-    * replay, retention, funnels, trend and seasonality reports); none
-    * reached by an engine verb. Gate names key the CORRECTNESS/BENCH
-    * artifacts and PLANS.md, so the survivors keep their numbers and these
-    * stay retired, never reused.
+    * replay, retention, funnels, trend and seasonality reports), and the
+    * clickstream graph mining, recommender and ledger-audit gates (k-core,
+    * link prediction, co-visitation, association rules, SCD2 versions, a
+    * first-digit audit and a t-digest); none reached by an engine verb.
+    * Gate names key the CORRECTNESS/BENCH artifacts and PLANS.md, so the
+    * survivors keep their numbers and these stay retired, never reused.
     */
   private val Retired: Set[Int] = Set(111, 116, 120, 146, 158, 159, 160,
-    162, 164, 186, 190, 192, 193, 197, 198, 199, 200, 201, 202, 204, 205,
-    210, 212, 215, 223, 224, 228, 233, 235, 236, 237, 239, 240, 241, 242,
-    243, 244, 245, 248, 249, 250, 252, 254, 256, 257, 261, 263, 264, 265,
-    266, 267, 268, 269, 273, 274, 275, 276, 277, 278, 279, 280, 284, 285,
-    286, 287, 289, 290, 291, 292, 293, 294, 295, 296, 297, 298, 299, 300,
-    301, 302)
+    162, 164, 167, 182, 183, 186, 188, 190, 192, 193, 195, 197, 198, 199,
+    200, 201, 202, 204, 205, 206, 210, 212, 215, 223, 224, 228, 233, 235,
+    236, 237, 239, 240, 241, 242, 243, 244, 245, 248, 249, 250, 252, 254,
+    256, 257, 261, 263, 264, 265, 266, 267, 268, 269, 273, 274, 275, 276,
+    277, 278, 279, 280, 284, 285, 286, 287, 288, 289, 290, 291, 292, 293,
+    294, 295, 296, 297, 298, 299, 300, 301, 302)
 
   private lazy val numbers: Seq[Int] =
     SparkEntry.queries.keys.toSeq.map(_.drop(1).takeWhile(_.isDigit).toInt)
@@ -134,6 +136,17 @@ class ReadmeSyncSpec extends AnyFunSuite {
     val named = raw"\bq(\d+)_\w".r.findAllMatchIn(readme).map(_.group(1).toInt).toSet
     assert((named intersect Retired).isEmpty,
       s"README names retired gates: ${(named intersect Retired).toSeq.sorted}")
+  }
+
+  // SURVEY.md's §2 tables are what every gate claims to exercise; a
+  // retired gate's row would otherwise outlive its operator and spec
+  test("SURVEY.md tables name no retired gate") {
+    val survey = new String(Files.readAllBytes(Paths.get("SURVEY.md")), "UTF-8")
+    val named = survey.linesIterator.filter(_.startsWith("|"))
+      .flatMap(raw"\bq(\d+)".r.findAllMatchIn(_)).map(_.group(1).toInt).toSet
+    assert(named.nonEmpty, "SURVEY.md tables name no gate")
+    assert((named intersect Retired).isEmpty,
+      s"SURVEY.md names retired gates: ${(named intersect Retired).toSeq.sorted}")
   }
 
   test("query names are contiguous q1..qN with no gaps or dupes") {

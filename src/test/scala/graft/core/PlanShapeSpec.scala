@@ -341,12 +341,4 @@ class PlanShapeSpec extends SparkSpec {
     assert(df.queryExecution.executedPlan.toString.contains("might_contain"),
       "the 1024-bit mask must evaluate as a literal predicate over the scan")
   }
-
-  test("q288_link_predict: candidates via equi-joins only — never all-pairs") {
-    val ns = nodes("q288_link_predict")
-    assert(quadratic(ns) == 0,
-      "shared-neighbor candidates and the adjacency anti-join must stay equi")
-    assert(count(ns) { case _: BaseJoinExec => () } >= 3,
-      "neighbor self-join + anti-join + two degree attachments")
-  }
 }
