@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** N-GRAM NOVELTY — per-document share of word n-grams that occur in NO
@@ -11,14 +12,15 @@ import org.apache.spark.sql.functions._
   * document-frequency table doubles as the memorization-risk profile
   * (grams repeated across thousands of docs are what models memorize).
   *
-  * Scale shape: gram document-frequency is ONE partial-aggregated
-  * groupBy on the 31-bit gram hash, and per-doc scoring is a join back
-  * KEYED BY GRAM — never a doc×doc comparison. The df table partitions
-  * by gram hash at 100 TB (uniform by construction), is reusable across
-  * scoring runs, and the hot-gram skew this operator exists to find is
-  * absorbed by map-side combine in both aggregations (count(distinct
-  * doc) per gram collapses per-partition; the per-doc roll-up keys on
-  * doc_id, which no gram skew touches).
+  * Scale shape: the grams are derived once and shuffled once, on the
+  * 31-bit gram hash; a count over each gram's partition tags every (doc,
+  * gram) row with the gram's document frequency, and the per-doc roll-up
+  * is one partial-aggregated groupBy on doc_id — never a doc×doc
+  * comparison and no join back. The gram shuffle partitions by gram hash
+  * at 100 TB (uniform by construction); a hot gram's rows meet in one
+  * window partition, as they met on the gram side of a join back, and the
+  * window buffer spills. The roll-up keys on doc_id, which no gram skew
+  * touches.
   *
   * Gram derivation is [[Decontamination.docGrams]] (tokenize → distinct
   * word n-gram md5-31 hashes), so the DuckDB oracle replays it exactly.
@@ -29,17 +31,18 @@ object NgramNovelty {
     * many of them appear in no other document, and the unique share.
     * Documents with fewer than n tokens carry no grams and are absent.
     */
-  def docNovelty(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val grams = Decontamination.docGrams(docs, idCol, textCol, n)
+  def docNovelty(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     // df counts DOCUMENTS per gram; docGrams already emits each (doc, gram)
-    // once, so a plain count is the document frequency.
-    val df = grams.groupBy(col("gram")).agg(count(lit(1)).as("_df"))
-    grams.join(df, Seq("gram"))
+    // once, so a plain count is the document frequency. Counting over the
+    // gram's window keeps the doc ids a df aggregate would drop, so the
+    // grams (tokenize, slide, md5 per gram) are derived once; a df table
+    // joined back to them would derive them once per branch.
+    Decontamination.docGrams(docs, idCol, textCol, n)
+      .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("gram"))))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         count(when(col("_df") === 1, 1)).as("n_unique"))
       .withColumn("novelty", col("n_unique") / col("n_grams"))
-  }
 
   /** Per-group novelty profile: document count, mean/min novelty, and how
     * many documents fall at or under `flagBelow` (the boilerplate flag).
